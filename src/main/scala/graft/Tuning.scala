@@ -27,23 +27,8 @@ import org.apache.spark.sql.SparkSession
   * hook (the session then runs exactly as the caller built it). */
 object Tuning {
 
-  /** Row-count ceiling under which a MEASURED node-sized frame may be
-    * broadcast-hinted by the iterative graph loops (guide §3.1: hint
-    * explicitly when you KNOW a side is small — these loops have just
-    * counted it). DEFAULT 0 = hints off: same-window A/B measured the
-    * hinted plans ~0.2 s/query SLOWER locally (pagerank 1.66 vs 1.44,
-    * hits 1.46 vs 1.28, authority 1.79 vs 1.53) — each broadcast build is
-    * a serialized driver step, while the unhinted exchanges of the
-    * compacted 1-partition frames are trivial and AQE-pipelined. On a
-    * cluster where the node side genuinely fits (≤ ~100 MB framed at 1M
-    * rows) the hint saves re-shuffling the edge-sized side every round —
-    * enable it there via GRAFT_BROADCAST_NODE_LIMIT; the loops only apply
-    * it when the measured count is under the limit. */
-  val broadcastNodeLimit: Long =
-    sys.env.getOrElse("GRAFT_BROADCAST_NODE_LIMIT", "0").toLong
-
-  /** Size-adaptive narrow compaction of an already-materialized (pinned or
-    * persisted) frame. AQE cannot re-coalesce a cached plan's output
+  /** Size-adaptive narrow compaction of an already-materialized (persisted
+    * and computed) frame. AQE cannot re-coalesce a cached plan's output
     * partitioning (`canChangeCachedPlanOutputPartitioning` is off by
     * default, and flipping it would also re-partition the float-path
     * model-induction inputs, which are partition-order-sensitive), so a
@@ -54,22 +39,19 @@ object Tuning {
     * production row counts the target meets/exceeds the current partition
     * count and the frame is returned UNCHANGED. Callers restrict this to
     * integer-exact consumers (graph lattice, counting aggs), whose results
-    * are partitioning-invariant by spec'd contract. */
+    * are partitioning-invariant by spec'd contract.
+    *
+    * The current partition count is read from the persisted frame's loaded
+    * cache, never by planning the frame (`ds.rdd` re-plans and, under AQE,
+    * can run stages); a frame that is not materialized is rejected. */
   def compact[T](ds: org.apache.spark.sql.Dataset[T], rows: Long,
                  rowsPerTask: Long = 262144L): org.apache.spark.sql.Dataset[T] = {
-    val cur = ds.rdd.getNumPartitions
+    val cur = org.apache.spark.sql.graft.PinnedPlans.materializedPartitions(ds.toDF())
+      .getOrElse(throw new IllegalArgumentException(
+        "Tuning.compact needs a persisted frame after its first action"))
     val want = math.max(1L, math.min(cur.toLong, (rows + rowsPerTask - 1) / rowsPerTask)).toInt
     if (want < cur) ds.coalesce(want) else ds
   }
-
-  /** Broadcast-hint a MEASURED node-sized join side when the count is under
-    * [[broadcastNodeLimit]] — the one gate shared by the iterative graph
-    * loops (pageRank / personalizedPageRank / hits), so the gating rule
-    * cannot silently diverge between them. */
-  def maybeBroadcastNodes(df: org.apache.spark.sql.DataFrame,
-                          measuredRows: Long): org.apache.spark.sql.DataFrame =
-    if (broadcastNodeLimit > 0 && measuredRows <= broadcastNodeLimit)
-      df.hint("broadcast") else df
 
   private val applied =
     java.util.Collections.newSetFromMap(

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.Pinned
-import graft.Tuning
 
 /** Knowledge-graph analytics over an edge frame `(src, dst, w)` — the
   * graph-side consumers of the triple/co-occurrence outputs the pipeline
@@ -27,12 +26,18 @@ import graft.Tuning
   *    each round's node-sized rank frame pinned and the previous round
   *    freed deterministically — at most two rank copies live, same
   *    discipline as Dedup.connectedComponents. Work per round is one
-  *    shuffle on dst plus a node-sized join; rounds are a fixed constant.
+  *    edge join plus one aggregation on dst; rounds are a fixed constant.
+  *    When the pinned edge set is one partition that fits
+  *    `spark.sql.maxSinglePartitionBytes` (every KB-sized graph),
+  *    `Pinned.rounds` plans each round with no exchange and no broadcast,
+  *    so a round is one job: its pin.
   *  - `reach` is the semi-naive bounded-hop frontier: each hop joins only
   *    the FRESH pairs against the edge set (never the accumulated closure),
-  *    so a converged frontier costs nothing. Bounded-hop reachability over
-  *    a dense graph is inherently output-heavy; callers choose `maxHops`
-  *    small (typical KG neighborhood queries: 2–4).
+  *    so a converged frontier costs nothing. Each hop picks its regime
+  *    from the closure so far: exchange-free while it fits one partition,
+  *    exchanges and AQE-sized partitions once it does not. Bounded-hop
+  *    reachability over a dense graph is inherently output-heavy; callers
+  *    choose `maxHops` small (typical KG neighborhood queries: 2–4).
   */
 object Graph {
 
@@ -94,60 +99,37 @@ object Graph {
     // INTO the pinned edge set up front (r6 optimization): the old loop
     // re-joined edges ⋈ outw every round — identical rows, one join per
     // round saved, and the pinned edge frame grows by one LONG column.
-    val (ePinned, eH) = Pinned.pinTracked {
+    val (e, eH) = Pinned.pinTracked {
       val e0 = edges.select(col("src"), col("dst"), col("w"))
       e0.join(e0.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src"))
     }
-    // r6: size-compact the pinned loop frames (narrow wrapper, see
-    // Tuning.compact) — the round bodies scan them `iters` times, and a
-    // KB-sized pin otherwise costs core-count task launches per scan
-    val e = Tuning.compact(ePinned, ePinned.count())
+    val r = Pinned.rounds(e)
     // the node frame carries the dangling flag (r6): the old loop re-joined
     // `dangling ⋈ ranks` every round just to sum the dangling mass; with
     // the flag riding the pinned rank frame, the dangling share is a plain
     // filtered 1-row aggregation of the frame the round reads anyway.
-    val (nodesPinned, nodesH) = Pinned.pinTracked {
-      val outSrcs = e.select(col("src").as("node")).distinct()
-        .withColumn("has_out", lit(true))
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-        .join(outSrcs, Seq("node"), "left")
-        .select(col("node"), coalesce(!col("has_out"), lit(true)).as("dang"))
-    }
+    val (nodes, nodesH) = Pinned.pinTracked(nodeFlags(e, r))
 
-    val n = nodesPinned.count()
+    val n = Pinned.rows(nodes)
     require(n > 0, "pageRank on an empty edge set")
-    val nodes = Tuning.compact(nodesPinned, n)
     val seed = scale / n
     val teleport = seed * (dampDen - dampNum) / dampDen
-
-    // r6 (guide §3.1): every per-round join has one node-sized side (ranks
-    // into the edge join, the inflow aggregate into the node join). n was
-    // just measured, so when it is provably broadcast-safe, hint it — the
-    // edge-sized side then never exchanges. Data-adaptive: production node
-    // counts exceed the limit and keep the shuffle plan.
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, n)
 
     var (ranks, ranksH) = Pinned.pinTracked(
       nodes.select(col("node"), lit(seed).as("rank"), col("dang")))
     var it = 0
     while (it < iters) {
       // the dangling share stays a 1-row SUBPLAN of the round (not a
-      // driver-collected literal): AQE schedules it CONCURRENTLY with the
-      // independent inflow aggregation inside the round's one pin job,
+      // driver-collected literal): it runs inside the round's one pin job,
       // whereas a per-round collect is a strictly serial driver round-trip
       // (measured +0.15 s/query at 8 rounds — tried and reverted r6)
       val dshare = ranks.filter(col("dang"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
         .select(expr(s"dsum div ${n}L").as("dshare"))
-      val inflow = e
-        .join(maybeBcast(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
-        .select(col("dst").as("node"), expr("(rank * w) div ow").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-      val next = nodes
-        .join(maybeBcast(inflow), Seq("node"), "left")
-        .crossJoin(dshare)
+      val next = withInflow(e, nodes, ranks, r)
+        .crossJoin(r.total(dshare))
         .select(col("node"),
-          expr(s"${teleport}L + ((coalesce(inflow, 0L) + dshare) * ${dampNum}L) div ${dampDen}L")
+          expr(s"${teleport}L + ((inflow + dshare) * ${dampNum}L) div ${dampDen}L")
             .as("rank"), col("dang"))
       val (pinnedNext, nextH) = Pinned.pinTracked(next)
       freeH(ranksH)
@@ -184,32 +166,22 @@ object Graph {
     // flags folded into the node and rank frames (same r6 moves as
     // pageRank): the per-round `dangling ⋈ ranks` and `⋈ isSrc` joins
     // become a filtered aggregation and a carried column.
-    val (ePinned, eH) = Pinned.pinTracked {
+    val (e, eH) = Pinned.pinTracked {
       val e0 = edges.select(col("src"), col("dst"), col("w"))
       e0.join(e0.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src"))
     }
-    // r6: size-compact the pinned loop frames (narrow wrapper, Tuning.compact)
-    val e = Tuning.compact(ePinned, ePinned.count())
-    val (nodesPinned, nodesH) = Pinned.pinTracked {
-      val outSrcs = e.select(col("src").as("node")).distinct()
-        .withColumn("has_out", lit(true))
+    val r = Pinned.rounds(e)
+    val (nodes, nodesH) = Pinned.pinTracked {
       val srcFlag = sources.select(col("node")).distinct()
         .withColumn("src_flag", lit(1L))
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-        .join(outSrcs, Seq("node"), "left")
+      nodeFlags(e, r)
         .join(srcFlag, Seq("node"), "left")
-        .select(col("node"), coalesce(!col("has_out"), lit(true)).as("dang"),
-          coalesce(col("src_flag"), lit(0L)).as("is_src"))
+        .select(col("node"), col("dang"), coalesce(col("src_flag"), lit(0L)).as("is_src"))
     }
 
-    val nS = nodesPinned.filter(col("is_src") === 1L).count()
+    val nS = nodes.filter(col("is_src") === 1L).count()
     require(nS > 0, "personalizedPageRank needs at least one source present in the graph")
     val tp = scale * (dampDen - dampNum) / dampDen / nS
-
-    // same measured-size broadcast hint as pageRank (guide §3.1)
-    val nN = nodesPinned.count()
-    val nodes = Tuning.compact(nodesPinned, nN)
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, nN)
 
     var (ranks, ranksH) = Pinned.pinTracked(
       nodes.select(col("node"),
@@ -221,16 +193,11 @@ object Graph {
       val dshare = ranks.filter(col("dang"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
         .select(expr(s"dsum div ${nS}L").as("dshare"))
-      val inflow = e
-        .join(maybeBcast(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
-        .select(col("dst").as("node"), expr("(rank * w) div ow").as("c"))
-        .groupBy(col("node")).agg(sum(col("c")).as("inflow"))
-      val next = nodes
-        .join(maybeBcast(inflow), Seq("node"), "left")
-        .crossJoin(dshare)
+      val next = withInflow(e, nodes, ranks, r)
+        .crossJoin(r.total(dshare))
         .select(col("node"),
           expr(s"""is_src * ${tp}L
-                  | + ((coalesce(inflow, 0L) + is_src * dshare)
+                  | + ((inflow + is_src * dshare)
                   |    * ${dampNum}L) div ${dampDen}L""".stripMargin.replace("\n", " "))
             .as("rank"), col("dang"))
       val (pinnedNext, nextH) = Pinned.pinTracked(next)
@@ -241,6 +208,35 @@ object Graph {
     }
     freeH(eH); freeH(nodesH)
     ranks.select(col("node"), col("rank"))
+  }
+
+  /** Every node of a pinned `(src, dst, w, ow)` edge set with its dangling
+    * flag (no out-edge) — the node frame pageRank and PPR pin. */
+  private def nodeFlags(e: DataFrame, r: Pinned.Rounds): DataFrame = {
+    val outSrcs = e.select(col("src").as("node")).distinct()
+      .withColumn("has_out", lit(true))
+    r.one(e.select(col("src").as("node")).union(e.select(col("dst").as("node"))))
+      .distinct()
+      .join(r.side(outSrcs), Seq("node"), "left")
+      .select(col("node"), coalesce(!col("has_out"), lit(true)).as("dang"))
+  }
+
+  /** One PageRank round's inflow: every row of the pinned node frame
+    * `nodes` (its flag columns kept) with `inflow` = Σ (r(u) * w) div ow(u)
+    * over its in-edges, 0 without any. Computed as the node frame UNION the
+    * per-edge contributions and one aggregation, not as a join of the node
+    * frame with per-destination sums: every join input stays a measured
+    * pin, which keeps the round exchange-free (see `Pinned.Rounds`). */
+  private def withInflow(e: DataFrame, nodes: DataFrame, ranks: DataFrame,
+                         r: Pinned.Rounds): DataFrame = {
+    val flags = nodes.columns.toSeq.filter(_ != "node")
+    val contrib = e.join(r.side(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
+      .select(col("dst").as("node") +:
+        flags.map(f => lit(null).cast(nodes.schema(f).dataType).as(f)) :+
+        expr("(rank * w) div ow").as("c"): _*)
+    r.one(nodes.select(col("node") +: flags.map(col) :+ lit(0L).as("c"): _*).unionAll(contrib))
+      .groupBy(col("node"))
+      .agg(sum(col("c")).as("inflow"), flags.map(f => max(col(f)).as(f)): _*)
   }
 
   /** Nodes reachable within `maxHops` directed hops, excluding the node
@@ -254,21 +250,22 @@ object Graph {
     // r6 optimization (same move as TripleStore.boundedClosure): the
     // accumulated closure is a LAZY UNION of the pinned per-hop frontiers —
     // one pin per hop instead of two, identical materialized rows, live
-    // memory still exactly the closure (frontiers are disjoint by the
-    // anti-join). The single base pin doubles as hop-1 frontier and
-    // edge set.
+    // memory still exactly the closure (frontiers are disjoint: each holds
+    // only pairs absent from the closure so far). The single base pin
+    // doubles as hop-1 frontier and edge set.
     val (e, _) = Pinned.pinTracked(edges.select(col("src"), col("dst")).distinct())
-    val eRen = e.select(col("src").as("mid"), col("dst").as("d2"))
     var all = e
     var delta = e
     var hop = 1
     var drained = false
     while (hop < maxHops && !drained) {
+      // the closure grows, so every hop picks its regime (Pinned.rounds)
+      val r = Pinned.rounds(all)
+      val eRen = r.side(e.select(col("src").as("mid"), col("dst").as("d2")))
       val stepped = delta.join(eRen, delta("dst") === eRen("mid"))
-        .select(col("src"), col("d2").as("dst")).distinct()
-      val (fresh, freshH) = Pinned.pinTracked(
-        stepped.join(all, Seq("src", "dst"), "left_anti"))
-      if (fresh.isEmpty) {
+        .select(col("src"), col("d2").as("dst"))
+      val (fresh, freshH) = Pinned.pinTracked(r.fresh(stepped, all))
+      if (Pinned.rows(fresh) == 0) {
         Pinned.free(spark, freshH)
         drained = true
       } else {
@@ -277,7 +274,7 @@ object Graph {
       }
       hop += 1
     }
-    val out = all.filter(col("dst") =!= col("src"))
+    val out = Pinned.rounds(all).spread(all, Seq("src")).filter(col("dst") =!= col("src"))
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("n_reach"))
     // result derives from the still-pinned closure; caller-held references
     // stay valid (the pins are only reclaimed when the frame is dropped)
@@ -482,10 +479,9 @@ object Graph {
     // therefore every later round, are identical, so the loop may stop
     // early with the exact same result as running all `rounds` (the
     // fixed-round contract bounds the rounds; it does not require paying
-    // for provably-identity ones). One cheap count per round on the
-    // already-pinned edge frame buys up to (rounds − convergence) whole
-    // round bodies.
-    var nEdges = e.count()
+    // for provably-identity ones). The pin's measured row count (no job)
+    // buys up to (rounds − convergence) whole round bodies.
+    var nEdges = Pinned.rows(e)
     var it = 0
     var stable = false
     while (it < rounds && !stable) {
@@ -498,7 +494,7 @@ object Graph {
       Pinned.free(spark, eH)
       e = pinnedNext
       eH = nextH
-      val n2 = pinnedNext.count()
+      val n2 = Pinned.rows(pinnedNext)
       stable = n2 == nEdges
       nEdges = n2
       it += 1
@@ -531,22 +527,31 @@ object Graph {
     * Returns `(node, hub, auth)` in lattice units for every node.
     */
   def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
+    val (nodes, hubs, auth, r) = hitsScores(edges, iters, scale)
+    // one dense zero-fill at the end (the contract returns every node)
+    nodes
+      .join(r.side(hubs.select(col("node"), col("s").as("hub"))), Seq("node"), "left")
+      .join(r.side(auth.select(col("node"), col("s").as("auth"))), Seq("node"), "left")
+      .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
+        coalesce(col("auth"), lit(0L)).as("auth"))
+    // result derives from the still-pinned nodes/hub/auth frames; they are
+    // reclaimed when the caller drops the frame (same contract as reach)
+  }
+
+  /** The HITS rounds: the pinned node frame and the SPARSE `(node, s)` hub
+    * and authority frames after `iters` rounds, with the round planner. */
+  private[graft] def hitsScores(edges: DataFrame, iters: Int, scale: Long)
+      : (DataFrame, DataFrame, DataFrame, Pinned.Rounds) = {
     require(iters >= 1, "hits needs at least one iteration")
     val spark = edges.sparkSession
     def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
 
-    val (ePinned, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
-    // r6: size-compact the pinned loop frames (narrow wrapper, Tuning.compact)
-    val e = Tuning.compact(ePinned, ePinned.count())
-    val (nodesPinned, _) = Pinned.pinTracked(
-      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
-    val n = nodesPinned.count()
+    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
+    val r = Pinned.rounds(e)
+    val (nodes, _) = Pinned.pinTracked(
+      r.one(e.select(col("src").as("node")).union(e.select(col("dst").as("node")))).distinct())
+    val n = Pinned.rows(nodes)
     require(n > 0, "hits on an empty edge set")
-    val nodes = Tuning.compact(nodesPinned, n)
-
-    // same measured-size broadcast hint as pageRank (guide §3.1): the score
-    // side of every half-step join is node-sized and n was just counted
-    def maybeBcast(df: DataFrame): DataFrame = Tuning.maybeBroadcastNodes(df, n)
 
     /** One half-step, SPARSE form (r6 optimization): rows exist only for
       * nodes that RECEIVE mass this half-step; an absent row means score 0,
@@ -555,28 +560,26 @@ object Graph {
       * renormalization total). The per-half-step `nodes` zero-fill join of
       * the dense form is deferred to ONE final projection.
       *
-      * The renormalization total is ONE scalar: the raw frame is pinned
-      * (edge join + aggregation, the half-step's real work), the total is
-      * collected from the pinned blocks as a 1-row driver result, and the
-      * truncating renormalization becomes a LAZY literal projection over
-      * the pinned raw frame. The old form's per-half-step total paid a
-      * single-partition exchange + broadcast + nested-loop stage inside
-      * the round pin; arithmetic is bit-identical (same raw sums, same
-      * total, same truncating division — Long `div` and Scala `/` agree on
-      * the non-negative mass domain). Returns the renormalized frame plus
-      * the handle of the raw pin backing it. */
+      * The raw frame is pinned (edge join + aggregation, the half-step's
+      * real work); the renormalization total is a 1-row aggregate of that
+      * pin, and the truncating renormalization a LAZY projection over it
+      * that the NEXT pin evaluates. Over a one-partition pin neither needs
+      * an exchange or a broadcast (see `Pinned.Rounds`), so a half-step is
+      * one job. Arithmetic is bit-identical to the dense form (same raw
+      * sums, same total, same truncating division). Returns the
+      * renormalized frame plus the handle of the raw pin backing it. */
     def halfStep(score: DataFrame, from: String, to: String): (DataFrame, Pinned.Handle) = {
       val raw = e
-        .join(maybeBcast(score.select(col("node").as(from), col("s"))), Seq(from))
+        .join(r.side(score.select(col("node").as(from), col("s"))), Seq(from))
         .select(col(to).as("node"), expr("s * w").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
       val (rawP, rawH) = Pinned.pinTracked(raw)
       // the total stays a 1-row SUBPLAN over the pinned raw frame (not a
-      // driver-collected literal): the consumer's pin job schedules it as
-      // its own tiny stage over cached blocks, where a per-half-step
-      // collect would be a strictly serial driver round-trip
+      // driver-collected literal): over a one-partition pin it is computed
+      // inside the consumer's pin job, where a per-half-step collect would
+      // be a strictly serial driver round-trip
       val tot = rawP.agg(coalesce(sum(col("raw")), lit(0L)).as("t"))
-      val s = rawP.crossJoin(tot)
+      val s = rawP.crossJoin(r.total(tot))
         .select(col("node"),
           when(col("t") > 0L, expr(s"(raw * ${scale}L) div t"))
             .otherwise(lit(0L)).as("s"))
@@ -600,14 +603,7 @@ object Graph {
       it += 1
     }
     freeH(eH)
-    // one dense zero-fill at the end (the contract returns every node)
-    nodes
-      .join(maybeBcast(hubs.select(col("node"), col("s").as("hub"))), Seq("node"), "left")
-      .join(maybeBcast(lastAuth.select(col("node"), col("s").as("auth"))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-    // result derives from the still-pinned nodes/hub/auth frames; they are
-    // reclaimed when the caller drops the frame (same contract as reach)
+    (nodes, hubs, lastAuth, r)
   }
 
   /** Per-node local clustering coefficient over the undirected simple

@@ -53,11 +53,7 @@ object Selection {
       hi0 = if (head.getLong(0) == 0) 0L else head.getLong(2), k)
   }
 
-  private def refine(base: DataFrame, n: Long, lo0: Long, hi0: Long,
-                     k: Long,
-                     histCache: scala.collection.mutable.Map[(Long, Long),
-                       Array[(Long, Long, Long, Long)]] =
-                       scala.collection.mutable.Map.empty): Long = {
+  private def refine(base: DataFrame, n: Long, lo0: Long, hi0: Long, k: Long): Long = {
     require(k >= 1, s"rank k must be >= 1 (1-based); got $k")
     require(k <= n, s"rank k=$k out of range (only $n non-null values)")
     var lo = lo0
@@ -81,15 +77,14 @@ object Selection {
       // walking the full ⌈64/log₂B⌉ bound. Same answer by construction:
       // the rank-k value lies in the chosen bucket, and every value there
       // is within [attained min, attained max].
-      // the histogram of a bracket is a pure function of (base, lo, hi) —
-      // batched callers (exactQuantiles) share one cache so the q quantiles
-      // pay ONE first-round scan instead of q identical ones (r6)
-      val counts = histCache.getOrElseUpdate((lo, hi), base
+      // every round narrows [lo, hi], so each bracket is histogrammed once
+      // (exactQuantiles batches its brackets into one scan per round itself)
+      val counts = base
         .filter(col("__v") >= lo && col("__v") <= hi)
         .groupBy(call_function("div", col("__v") - lo, lit(width)).as("__b"))
         .agg(count(lit(1)).as("__n"), min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1))
+        .sortBy(_._1)
       var i = 0
       var found = false
       while (i < counts.length && !found) {

@@ -512,7 +512,7 @@ object TripleStore {
     * reaches itself.
     *
     * Semi-naive evaluation: each round joins only the LAST round's fresh
-    * pairs against the edge set and anti-joins the known closure, so work
+    * pairs against the edge set and subtracts the known closure, so work
     * per round is bounded by the new pairs, frames are pinned with ≤3 live
     * (edges, closure, frontier), and the loop drains early when a round
     * finds nothing. This MATERIALIZES the bounded closure — inherently
@@ -535,7 +535,7 @@ object TripleStore {
 
     // r6 optimization: the accumulated closure is kept as a LAZY UNION of
     // the already-pinned per-hop frontiers instead of re-materializing
-    // `all ∪ fresh` every hop — the anti-join and the returned frame read
+    // `all ∪ fresh` every hop — the subtraction and the returned frame read
     // the same materialized rows either way (a union of pinned RDDs
     // recomputes nothing), but each hop now runs ONE pin job instead of
     // two. Live pins are bounded by maxHops frontier frames whose total
@@ -543,18 +543,21 @@ object TripleStore {
     // until the caller drops the result (same lifetime contract as before —
     // ContextCleaner reclaims on drop).
     val (e, _) = Pinned.pinTracked(pairs.select(col("subj"), col("obj")).distinct())
-    val eRen = e.select(col("subj").as("mid"), col("obj").as("o2"))
     var all = e.withColumn("n_hops", lit(1L))
     var delta = all
     var hop = 1
     var drained = false
     while (hop < maxHops && !drained) {
+      // while the closure fits one partition a hop plans without exchange
+      // or broadcast: one job, the frontier's pin (Pinned.Rounds); the
+      // closure grows, so every hop picks its regime again
+      val r = Pinned.rounds(all)
+      val eRen = r.side(e.select(col("subj").as("mid"), col("obj").as("o2")))
       val stepped = delta.join(eRen, delta("obj") === eRen("mid"))
-        .select(col("subj"), col("o2").as("obj")).distinct()
+        .select(col("subj"), col("o2").as("obj"))
       val (fresh, freshH) = Pinned.pinTracked(
-        stepped.join(all, Seq("subj", "obj"), "left_anti")
-          .withColumn("n_hops", lit((hop + 1).toLong)))
-      if (fresh.isEmpty) {
+        r.fresh(stepped, all).withColumn("n_hops", lit((hop + 1).toLong)))
+      if (Pinned.rows(fresh) == 0) {
         Pinned.free(pairs.sparkSession, freshH)
         drained = true
       } else {
@@ -563,7 +566,7 @@ object TripleStore {
       }
       hop += 1
     }
-    all
+    Pinned.rounds(all).spread(all, Seq("subj", "obj"))
   }
 
   // ------------------------------------------------------ property paths
@@ -773,43 +776,47 @@ object TripleStore {
     *
     * Semi-naive: each round derives only from the LAST round's fresh
     * triples (the transitive rule joins fresh×all on BOTH sides, so chains
-    * double per round — convergence in O(log diameter) rounds), anti-joins
+    * double per round — convergence in O(log diameter) rounds), subtracts
     * the known closure, early-drains, and THROWS if `maxRounds` is hit
     * before the fixpoint — a truncated closure would be silently wrong
     * (same contract as connectedComponents; contrast pathPlus, where the
     * hop bound IS the query semantics). Schema frames are ontology-sized
-    * by contract and broadcast; ≤3 pinned frames live. The transitive
-    * closure is inherently output-bounded work — on a 100 TB store apply
-    * it to preds whose reachability sets are meant to be materialized
-    * (hierarchies, containment), and route unbounded-graph reachability
-    * questions to the hop-bounded path operators or HyperBall. */
+    * by contract and read to the driver once; ≤3 pinned frames live. The
+    * transitive closure is inherently output-bounded work — on a 100 TB
+    * store apply it to preds whose reachability sets are meant to be
+    * materialized (hierarchies, containment), and route unbounded-graph
+    * reachability questions to the hop-bounded path operators or
+    * HyperBall. */
   def owlClosure(instance: DataFrame, schema: DataFrame, maxRounds: Int = 16): DataFrame = {
     import graft.plans.Pinned
     val spark = instance.sparkSession
     def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
 
-    val inv = schema.filter(col("pred") === "inverseOf")
-      .select(col("subj").as("pred"), col("obj").as("q"))
-    val invMap = inv.unionAll(inv.select(col("q").as("pred"), col("pred").as("q")))
-      .distinct()
-    def typed(cls: String) =
-      schema.filter(col("pred") === "type" && col("obj") === cls)
-        .select(col("subj").as("pred")).distinct()
+    // the schema is ontology-sized by contract: read it to the driver once
+    // and compile each rule's schema side into literal filters and lookups,
+    // so the rounds join only instance frames — no per-round broadcast of a
+    // schema frame, and chain-free ontologies skip the chain joins
+    val axioms = schema.select(col("subj"), col("pred"), col("obj")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    // pred -> every q with (pred inverseOf q) or (q inverseOf pred)
+    val invOf = axioms.collect { case (p, "inverseOf", q) => Seq(p -> q, q -> p) }.flatten
+      .distinct.groupBy(_._1).map { case (p, qs) => p -> qs.map(_._2).sorted }
+    def typed(cls: String): Seq[String] =
+      axioms.collect { case (p, "type", `cls`) => p }.distinct.sorted
     val symPreds = typed("SymmetricProperty")
     val trnPreds = typed("TransitiveProperty")
-    // (head pred p, first leg q, second leg r) — ontology-sized, broadcast;
-    // the one-off emptiness probe (schema is a KB, not a corpus) keeps
-    // chain-free ontologies from paying two extra joins per round
-    val chains = schema.filter(col("pred") === "chainFirst")
-      .select(col("subj").as("cp"), col("obj").as("cq"))
-      .join(schema.filter(col("pred") === "chainSecond")
-        .select(col("subj").as("cp"), col("obj").as("cr")), Seq("cp"))
-    val hasChains = !chains.isEmpty
+    // first-leg pred q -> every (head pred p, second-leg pred r)
+    val chainsOf = (for {
+      (cp, "chainFirst", cq) <- axioms
+      (cp2, "chainSecond", cr) <- axioms if cp2 == cp
+    } yield cq -> (cp, cr)).distinct.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).sorted }
+    def predIn(ps: Iterable[String]): Column = col("pred").isin(ps.toSeq: _*)
 
     // r6 optimization (same move as boundedClosure): `all` is a LAZY UNION
     // of the pinned base and pinned per-round fresh frames — one pin per
     // round instead of two, identical materialized rows, live memory still
-    // exactly the closure (fresh sets are disjoint by the anti-join).
+    // exactly the closure (fresh sets are disjoint: each holds only triples
+    // absent from the closure so far).
     val (all0, _) = Pinned.pinTracked(
       instance.select(col("subj"), col("pred"), col("obj")).distinct())
     var all = all0
@@ -822,43 +829,56 @@ object TripleStore {
           s"owlClosure did not reach the fixpoint in $maxRounds rounds — " +
             "a truncated closure would be silently wrong; raise maxRounds")
       }
-      val viaInv = delta.join(broadcast(invMap), Seq("pred"))
-        .select(col("obj").as("subj"), col("q").as("pred"), col("subj").as("obj"))
-      val viaSym = delta.join(broadcast(symPreds), Seq("pred"))
-        .select(col("obj").as("subj"), col("pred"), col("subj").as("obj"))
-      val trnDelta = delta.join(broadcast(trnPreds), Seq("pred"))
-      val trnAll = all.join(broadcast(trnPreds), Seq("pred"))
-      def step(l: DataFrame, r: DataFrame) =
+      // while the closure fits one partition a round plans without
+      // exchange or broadcast: one job, the fresh frame's pin
+      // (Pinned.Rounds); the closure grows, so every round picks its regime
+      val r = Pinned.rounds(all)
+      val allOne = r.one(all)
+      val viaInv = Option.when(invOf.nonEmpty)(delta.filter(predIn(invOf.keys))
+        .select(col("obj").as("subj"),
+          explode(element_at(typedLit(invOf), col("pred"))).as("pred"),
+          col("subj").as("obj")))
+      val viaSym = Option.when(symPreds.nonEmpty)(delta.filter(predIn(symPreds))
+        .select(col("obj").as("subj"), col("pred"), col("subj").as("obj")))
+      def step(l: DataFrame, rt: DataFrame) =
         l.select(col("pred"), col("subj"), col("obj").as("mid"))
-          .join(r.select(col("pred"), col("subj").as("mid"), col("obj")),
+          .join(r.side(rt.select(col("pred"), col("subj").as("mid"), col("obj"))),
             Seq("pred", "mid"))
           .select(col("subj"), col("pred"), col("obj"))
+      val viaTrn = Option.when(trnPreds.nonEmpty) {
+        val trnDelta = delta.filter(predIn(trnPreds))
+        val trnAll = allOne.filter(predIn(trnPreds))
+        step(trnDelta, trnAll).unionAll(step(trnAll, trnDelta))
+      }
       // prp-spo2: first-leg rows tagged (head pred, second-leg pred),
       // joined on (second-leg pred, mid) — semi-naive like prp-trp, fresh
       // on either leg
-      def chainStep(l: DataFrame, r: DataFrame) =
-        l.join(broadcast(chains), l("pred") === chains("cq"))
-          .select(col("cp"), col("cr"), col("subj"), col("obj").as("mid"))
-          .join(r.select(col("pred").as("cr"), col("subj").as("mid"), col("obj")),
+      def chainStep(l: DataFrame, rt: DataFrame) =
+        l.filter(predIn(chainsOf.keys))
+          .select(explode(element_at(typedLit(chainsOf), col("pred"))).as("c"),
+            col("subj"), col("obj").as("mid"))
+          .select(col("c._1").as("cp"), col("c._2").as("cr"), col("subj"), col("mid"))
+          .join(r.side(rt.select(col("pred").as("cr"), col("subj").as("mid"), col("obj"))),
             Seq("cr", "mid"))
           .select(col("subj"), col("cp").as("pred"), col("obj"))
-      val base = viaInv.unionAll(viaSym)
-        .unionAll(step(trnDelta, trnAll)).unionAll(step(trnAll, trnDelta))
-      val derived = (if (hasChains)
-        base.unionAll(chainStep(delta, all)).unionAll(chainStep(all, delta))
-      else base).distinct()
-      val (fresh, freshH) = Pinned.pinTracked(
-        derived.join(all, Seq("subj", "pred", "obj"), "left_anti"))
-      if (fresh.isEmpty) {
-        freeH(freshH)
-        drained = true
-      } else {
-        all = all.unionAll(fresh)
-        delta = fresh
+      val viaChain = Option.when(chainsOf.nonEmpty)(
+        chainStep(delta, allOne).unionAll(chainStep(allOne, delta)))
+      val branches = Seq(viaInv, viaSym, viaTrn, viaChain).flatten
+      if (branches.isEmpty) drained = true
+      else {
+        val (fresh, freshH) = Pinned.pinTracked(
+          r.fresh(branches.reduce(_ unionAll _), all))
+        if (Pinned.rows(fresh) == 0) {
+          freeH(freshH)
+          drained = true
+        } else {
+          all = all.unionAll(fresh)
+          delta = fresh
+        }
+        round += 1
       }
-      round += 1
     }
-    all
+    Pinned.rounds(all).spread(all, Seq("subj", "pred", "obj"))
   }
 
   /** OWL RL prp-fp — FunctionalProperty sameAs inference: for each pred
