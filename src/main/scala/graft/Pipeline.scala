@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlannedPartitions
 
 import graft.ml.SenseInduction
 import graft.operators.{Cooc, Linking, Significance, Tokenize}
@@ -92,8 +93,9 @@ object Pipeline {
 
     val guarded = guard(docs, cfg)
 
-    // lineage invariant table: per-row sha256(content) (BASELINE.json:15)
-    val dochash = staged("dochash", Nil) {
+    // lineage invariant table: per-row sha256(content) (BASELINE.json:15),
+    // kept with the checkpointed store; an in-memory run has no reader for it
+    if (ck.isDefined) staged("dochash", Nil) {
       guarded.select(col("repo"), col("path"), col("commit"),
         sha2(col("content"), 256).as("sha256"))
     }
@@ -109,11 +111,21 @@ object Pipeline {
       td
     }
 
-    val cov = staged("coverage", Nil)(Tokenize.coverageFrom(tokdocs, cfg).toDF())
+    // A projection in fewer partitions than task slots (a corpus of one
+    // parquet split) would run every pass below in that many tasks. The
+    // integer and set passes read it hash-spread by document: their BIGINT
+    // counts and distincts do not depend on partitioning. The partition
+    // count is read from the plan; no job runs for it.
+    val slots = spark.sparkContext.defaultParallelism
+    val scanPartitions = PlannedPartitions.of(tokdocs.toDF())
+    val byDoc =
+      if (scanPartitions.exists(_ < slots)) tokdocs.repartition(slots, col("docid")) else tokdocs
+
+    val cov = staged("coverage", Nil)(Tokenize.coverageFrom(byDoc, cfg).toDF())
 
     val sigcooc = staged("sigcooc", Seq("coverage")) {
       import spark.implicits._
-      val toks = Tokenize.tokensFrom(tokdocs)
+      val toks = Tokenize.tokensFrom(byDoc)
       val (cont, caches) = Cooc.contingency(spark, toks, cov.as[CovTok], cfg)
       caches.foreach(persisted += _) // cleanup() owns the chain's caches
       // Bonferroni filter + top-k cap, with a pure-dataflow per-entity
@@ -122,13 +134,22 @@ object Pipeline {
     }
 
     // per-mention sparse context vectors, built doc-locally against the
-    // broadcast dictionary: the whole ML input costs ZERO shuffles
+    // broadcast dictionary, from the projection in scan order. NMF sums each
+    // entity's contexts in order, so a one-partition projection's rows are
+    // spread by entity, never by document: an exchange from one map
+    // partition keeps each reducer's rows in map order, so every entity's
+    // contexts stay whole and in scan order, each entity yields one partial,
+    // and the fitted senses are bit-identical to a one-partition fit (the
+    // checkpoint writes each entity into one file, so its read-back keeps
+    // the order). A larger projection keeps its layout: an entity exchange
+    // would cap NMF at one task per entity.
     val ctxrows = staged("ctxrows", Seq("sigcooc")) {
       import spark.implicits._
       val dict = SenseInduction.dictionary(sigcooc).collect()
         .groupBy(_.getString(0))
         .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
-      Tokenize.contextRowsFrom(tokdocs, cfg, dict).toDF()
+      val ctx = Tokenize.contextRowsFrom(tokdocs, cfg, dict).toDF()
+      if (scanPartitions.contains(1) && slots > 1) ctx.repartition(slots, col("entity")) else ctx
     }
 
     // ctxrows is already cached in compact columnar form by staged();
@@ -170,7 +191,6 @@ object Pipeline {
         TableIO.readTriples(spark, uri)
       case _ => triplesRaw
     }
-    val _ = dochash // materialized for lineage; consumed by tests/audits
     E1Result(triples, senseVec, assignments, ck,
       cleanup = () => persisted.foreach(_.unpersist(false)))
   }

@@ -30,8 +30,10 @@ object Tuning {
   /** Size-adaptive narrow compaction of an already-materialized (persisted
     * and computed) frame. AQE cannot re-coalesce a cached plan's output
     * partitioning (`canChangeCachedPlanOutputPartitioning` is off by
-    * default, and flipping it would also re-partition the float-path
-    * model-induction inputs, which are partition-order-sensitive), so a
+    * default, and flipping it would also let AQE re-partition E1's cached
+    * context rows, whose NMF sums are bit-exact only while each entity's
+    * contexts sit whole in one partition, in scan order — the invariant
+    * `Pipeline.induceAndEmit`'s entity spread keeps), so a
     * node-/edge-sized cached frame keeps the harness' core-count partitions
     * and every downstream scan pays that many task launches for near-empty
     * blocks. When the MEASURED row count implies fewer useful tasks, wrap

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * that is <= ~100 MB; past a configurable byte budget `fitSharded` (the
   * default entry point via SenseInduction / cfg.modelBytesBudget) loops over
   * disjoint entity subsets — the passes are entity-keyed and per-entity
-  * seeded, so the sharded fit equals the joint one (up to the float
-  * merge-order jitter any two runs share), just with one filtered scan per
-  * shard instead of a single scan.
+  * seeded, so the sharded fit equals the joint one (exactly when every
+  * entity's contexts sit in one partition, see below), just with one
+  * filtered scan per shard instead of a single scan.
   *
   * One data pass per iteration, so cost is data-proportional and scales
   * linearly with executors — unlike a generic factorizer that shuffles
@@ -33,6 +33,12 @@ import org.apache.spark.sql.functions._
   *
   * Deterministic: H is seeded per entity from cfg.seed; all entities are
   * fit SIMULTANEOUSLY in the same passes (entity is part of the group key).
+  * Bit-exact when every entity's contexts sit whole in one partition: each
+  * pass then sums an entity's terms in partition order and `reduceByKey`
+  * merges nothing. E1 keeps that true for a one-split corpus, whose context
+  * rows it spreads by entity (`Pipeline.induceAndEmit`). An entity whose
+  * contexts span partitions merges its float partials in shuffle arrival
+  * order, which can move the last bits from run to run.
   */
 object ThinNMF {
 
@@ -149,8 +155,8 @@ object ThinNMF {
     * driver/executor-heap-scale). Every pass of `fit` is entity-keyed and
     * seeded per entity, so fitting disjoint subsets sequentially produces
     * the same H maps as one joint fit, modulo only the floating-point
-    * merge-order jitter that two identical unsharded runs already have
-    * (EntityShardSpec asserts elementwise equality at 1e-9) — a user
+    * merge-order jitter of entities whose contexts span partitions (see the
+    * header; EntityShardSpec asserts elementwise equality at 1e-9) — a user
     * pointing 10^6 tracked entities at the inducer now gets a slower
     * correct run (one filtered scan per shard) instead of an OOM. */
   def fitSharded(grouped: RDD[Ctx], spark: SparkSession, k: Int, iters: Int, seed: Long,
