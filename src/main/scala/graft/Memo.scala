@@ -155,11 +155,15 @@ object Memo {
     * shared path (ADVICE r2). */
   private[graft] def modelStoreRoot: String =
     sys.props.get("graft.model.root")
-      .orElse(sys.env.get("GRAFT_MODEL_ROOT"))
+      .orElse(rootEnv.value.get("GRAFT_MODEL_ROOT"))
       .getOrElse(s"${sys.props("java.io.tmpdir")}/graft-models-${sys.props("user.name")}")
 
   private def rootIsExplicit: Boolean =
-    sys.props.contains("graft.model.root") || sys.env.contains("GRAFT_MODEL_ROOT")
+    sys.props.contains("graft.model.root") || rootEnv.value.contains("GRAFT_MODEL_ROOT")
+
+  /** The environment the model-store root is looked up in: the process's,
+    * unless a caller (a test of the implicit store) supplies its own. */
+  private[graft] val rootEnv = new scala.util.DynamicVariable[Map[String, String]](sys.env)
 
   /** The shared tokenized projection (P2 guard applied, persisted columnar).
     * Tokenization is cfg-independent here (no stopwords on the contract

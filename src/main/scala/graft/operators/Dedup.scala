@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.{CodeDoc, TokDoc, WsidConfig}
+import graft.plans.Pinned
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -441,67 +443,90 @@ object Dedup {
     * (a,b), (b,c) must merge into one cluster {a,b,c} before exactly one
     * representative is kept.
     *
-    * Algorithm: alternating large-star / small-star (Kiveris et al.,
+    * Algorithm: the pairs are pinned once. When that pin fits one
+    * partition (`Pinned.rounds(...).single`: one partition within
+    * `spark.sql.maxSinglePartitionBytes`), union-find runs inside one task
+    * over the pinned rows (`Pinned.inTask`) — the pin, that task's pin and
+    * the caller's job, however long the chains. Otherwise alternating
+    * large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC 2014 — public
     * literature), re-expressed as DataFrame aggregations. Each round is two
     * key-grouped min-aggregations plus a semi-join-free emit — no driver-side
     * graph state, no vertex collect — and the round count is O(log n), so
     * components over billions of pairs cost a bounded handful of shuffles.
-    * Per-round state is localCheckpoint'd: an iterative DataFrame loop
-    * otherwise grows its lineage (and analysis time) without bound.
+    * Both give the same assignment (PinnedRoundsSpec).
     *
     * Returns (docid, cluster) for every node appearing in `pairs` (columns
-    * `a`, `b`), cluster = MINIMUM reachable id in the id column's OWN
-    * ordering (numeric for long vec_ids, lexicographic for string docids) —
-    * so the cluster id is itself the canonical "first" survivor. The input
-    * type is preserved end-to-end: casting to string here would elect
-    * "100099" over "99" for numeric ids. Throws if `maxIter` rounds don't
-    * converge (silently-partial components would be a wrong answer, not a
-    * slow one).
+    * `a`, `b`), cluster = MINIMUM reachable id in Spark's ordering of the id
+    * column's OWN type (numeric for long vec_ids, binary UTF-8 for string
+    * docids) — so the cluster id is itself the canonical "first" survivor.
+    * The input type is preserved end-to-end: casting to string here would
+    * elect "100099" over "99" for numeric ids. The star rounds throw if
+    * `maxIter` rounds don't converge (silently-partial components would be
+    * a wrong answer, not a slow one).
     *
-    * Iteration state: each round's edge set is persisted (MEMORY_AND_DISK),
-    * materialized by the convergence check, and the PREVIOUS round's set is
-    * unpersisted immediately — at most two edge-set copies are ever live,
-    * no matter how many rounds run (an unbounded checkpoint trail would
-    * hold O(rounds) input-sized copies hostage to driver GC). Recompute on
-    * block loss is safe: every edge in the chain derives through
-    * deterministic hash aggregations. Lineage is additionally truncated
-    * with an eager localCheckpoint every few rounds so pathological graphs
-    * cannot grow the plan without bound. */
+    * Iteration state of the star rounds: each round's edge set is pinned
+    * and the PREVIOUS round's pin freed immediately — at most two edge-set
+    * copies are ever live, no matter how many rounds run. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // eager localCheckpoint EVERY round is load-bearing twice over: the
-    // round body references `edges` several times, so without truncation
-    // the logical plan grows EXPONENTIALLY in rounds (plans are trees, not
-    // DAGs); and a frozen materialization is what makes the fixpoint test
-    // read the same data the next round consumes. Checkpoint blocks are
-    // freed DETERMINISTICALLY (not left to driver GC) by diffing the
-    // public getPersistentRDDs registry around each checkpoint and
-    // unpersisting the superseded round's RDDs — at most two edge-set
-    // copies are ever live. (Single-driver loop: the registry diff is not
-    // meant to be raced by concurrent checkpointing jobs.)
-    // materialization via Pinned.pinTracked: localCheckpoint by default; a
-    // RELIABLE checkpoint on durable storage when graft.checkpoint.dir is
-    // configured (executor loss then re-reads instead of failing mid-CC),
-    // with superseded rounds' blocks freed deterministically (see Pinned).
-    def checkpointTracked(df: DataFrame): (DataFrame, graft.plans.Pinned.Handle) =
-      graft.plans.Pinned.pinTracked(df)
-    def free(h: graft.plans.Pinned.Handle): Unit =
-      graft.plans.Pinned.free(pairs.sparkSession, h)
+    val spark = pairs.sparkSession
     // ONE scan of `pairs` (often an expensive candidate chain): the pinned
     // base keeps degenerate self-pairs (lo == hi) alongside the normalized
-    // edges, so the singleton rescue at the end reads node-sized pinned
-    // rows instead of re-executing the whole pair plan a second time. The
-    // self-node frame is pinned separately (node-sized, held to the end)
-    // and the base is freed as soon as both derivations are materialized.
-    val (base, baseIds) = checkpointTracked(pairs
+    // edges, so the singleton rescue reads pinned rows instead of
+    // re-executing the whole pair plan a second time.
+    val (base, baseH) = Pinned.pinTracked(pairs
       .select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"))
       .distinct())
-    val (selfNodes, selfIds) = checkpointTracked(
+    if (Pinned.rounds(base).single) {
+      val keyType = base.schema("lo").dataType
+      val schema = StructType(Seq(StructField("docid", keyType), StructField("cluster", keyType)))
+      val res = Pinned.inTask(schema, base)(in => componentsInTask(in.head, keyType))
+      Pinned.free(spark, baseH)
+      res
+    } else starRounds(base, baseH, maxIter)
+  }
+
+  /** Union-find over the pinned `(lo, hi)` pairs inside their task. Nodes
+    * are numbered in Spark's order of the key type, so every component's
+    * root, kept at its least number, is its minimum member; a node seen
+    * only in self-pairs is its own component. Emits `(docid, cluster)` in
+    * node order. */
+  private def componentsInTask(rows: Iterator[InternalRow], keyType: DataType): Iterator[InternalRow] = {
+    val pairs = rows.map(r => (Pinned.keyAt(r, 0, keyType), Pinned.keyAt(r, 1, keyType))).toArray
+    val (keys, index) = Pinned.numbered(pairs.iterator.flatMap(p => Iterator(p._1, p._2)), keyType)
+    val parent = Array.tabulate(keys.length)(identity)
+    def find(v: Int): Int = {
+      var r = v
+      while (parent(r) != r) r = parent(r)
+      var x = v
+      while (parent(x) != r) { val up = parent(x); parent(x) = r; x = up }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(index.get(a)), find(index.get(b)))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+    Iterator.tabulate(keys.length)(v => InternalRow(keys(v), keys(find(v))))
+  }
+
+  /** Large-star / small-star rounds over the pinned `(lo, hi)` base. */
+  private def starRounds(base: DataFrame, baseH: Pinned.Handle, maxIter: Int): DataFrame = {
+    // a pin EVERY round is load-bearing twice over: the round body
+    // references `edges` several times, so without truncation the logical
+    // plan grows EXPONENTIALLY in rounds (plans are trees, not DAGs); and a
+    // frozen materialization is what makes the fixpoint test read the same
+    // data the next round consumes. Superseded rounds are freed through
+    // their handles (see Pinned.pinTracked): at most two edge-set copies
+    // are ever live.
+    def free(h: Pinned.Handle): Unit = Pinned.free(base.sparkSession, h)
+    // the self-node frame is pinned separately (node-sized, held to the
+    // end) and the base is freed as soon as both derivations are pinned
+    val (selfNodes, selfIds) = Pinned.pinTracked(
       base.filter(col("lo") === col("hi")).select(col("lo").as("docid")))
-    var (edges, edgeIds) = checkpointTracked(base.filter(col("lo") =!= col("hi")))
-    free(baseIds)
-    var converged = edges.isEmpty
+    var (edges, edgeIds) = Pinned.pinTracked(base.filter(col("lo") =!= col("hi")))
+    free(baseH)
+    var converged = Pinned.rows(edges) == 0
     var it = 0
     while (!converged && it < maxIter) {
       // large-star: every neighbor v > u of center u links to
@@ -524,7 +549,7 @@ object Dedup {
         .filter(col("m") =!= col("v"))
         .select(col("m").as("lo"), col("v").as("hi"))
         .distinct()
-      val (next, nextIds) = checkpointTracked(small)
+      val (next, nextIds) = Pinned.pinTracked(small)
       // fixpoint test: the edge set is a TRUE star forest (stable under both
       // phases) only when BOTH hold: no node is a center and a leaf, AND
       // every leaf has exactly one center. The second clause is not implied
@@ -555,7 +580,7 @@ object Dedup {
           "partial components would be silently wrong; raise maxIter")
     }
     // pin the (node-sized) star assignment eagerly, then release the edges
-    val (out, outIds) = checkpointTracked(
+    val (out, outIds) = Pinned.pinTracked(
       edges.select(col("hi").as("docid"), col("lo").as("cluster"))
         .unionAll(edges.select(col("lo").as("docid"), col("lo").as("cluster")))
         .distinct())
@@ -574,7 +599,7 @@ object Dedup {
     // intermediate is freed; what remains cached is exactly the returned
     // assignment (reclaimed by ContextCleaner once the caller drops it).
     val selfOnly = selfNodes.join(out, Seq("docid"), "left_anti")
-    val (res, _) = checkpointTracked(
+    val (res, _) = Pinned.pinTracked(
       out.unionByName(selfOnly.select(col("docid"), col("docid").as("cluster"))))
     free(outIds)
     free(selfIds)

@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.plans.Pinned
 
@@ -21,16 +23,18 @@ import graft.plans.Pinned
   *  - `bigramEdges` is doc-local (window partitioned by docid; skew bounded
   *    by `maxDocChars`), then one hash aggregation on (src, dst) — the
   *    standard two-phase count with map-side combine.
-  *  - `pageRank` iterates rank-join-aggregate with the edge set and
-  *    out-weight frame pinned ONCE (read per round, never recomputed) and
-  *    each round's node-sized rank frame pinned and the previous round
-  *    freed deterministically — at most two rank copies live, same
-  *    discipline as Dedup.connectedComponents. Work per round is one
-  *    edge join plus one aggregation on dst; rounds are a fixed constant.
-  *    When the pinned edge set is one partition that fits
-  *    `spark.sql.maxSinglePartitionBytes` (every KB-sized graph),
-  *    `Pinned.rounds` plans each round with no exchange and no broadcast,
-  *    so a round is one job: its pin.
+  *  - `pageRank`, `personalizedPageRank` and `hits` pin the edge set ONCE.
+  *    When that pin is one partition that fits
+  *    `spark.sql.maxSinglePartitionBytes` (every KB-sized graph), the
+  *    whole loop runs inside one task over the pinned rows
+  *    (`Pinned.inTask`): the same Long arithmetic on arrays, so a query is
+  *    the edge pin, that task's pin and its own job, whatever the round
+  *    count. Past the bound each round is relational: rank-join-aggregate
+  *    against the pinned edge and out-weight frame, each round's
+  *    node-sized frame pinned and the previous round freed
+  *    deterministically — at most two rank copies live. Work per round is
+  *    one edge join plus one aggregation on dst; rounds are a fixed
+  *    constant. Both paths give the same rows (PinnedRoundsSpec).
   *  - `reach` is the semi-naive bounded-hop frontier: each hop joins only
   *    the FRESH pairs against the edge set (never the accumulated closure),
   *    so a converged frontier costs nothing. Each hop picks its regime
@@ -81,65 +85,20 @@ object Graph {
     * seed = scale div N (the uniform start). Truncation loses a few units
     * of mass per round — identically in every engine, which is the point.
     *
-    * Overflow envelope (documented precondition, not checked row-wise): a
-    * single rank is bounded by `scale`, so `rank * w` needs
-    * scale * max(w) < 2^63 — at the default scale 1e12, max edge weight
-    * 9.2e6. For heavier edge sets pass a smaller `scale` (the lattice just
-    * coarsens) or pre-bucket weights.
+    * Overflow envelope (documented precondition): a single rank is
+    * bounded by `scale`, so `rank * w` needs scale * max(w) < 2^63 — at the
+    * default scale 1e12, max edge weight 9.2e6. For heavier edge sets pass
+    * a smaller `scale` (the lattice just coarsens) or pre-bucket weights.
+    * Every product and sum is overflow-checked in both the relational and
+    * the in-task form (see [[ranks]]), so an input past the envelope fails,
+    * as ANSI Spark does, instead of returning ranks.
     *
     * Returns `(node, rank)` with rank in lattice units.
     */
   def pageRank(edges: DataFrame, iters: Int, scale: Long = 1000000000000L,
                dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iters >= 1, "pageRank needs at least one iteration")
-    val spark = edges.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
-
-    // pinned once, read every round. The per-source out-weight is folded
-    // INTO the pinned edge set up front (r6 optimization): the old loop
-    // re-joined edges ⋈ outw every round — identical rows, one join per
-    // round saved, and the pinned edge frame grows by one LONG column.
-    val (e, eH) = Pinned.pinTracked {
-      val e0 = edges.select(col("src"), col("dst"), col("w"))
-      e0.join(e0.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src"))
-    }
-    val r = Pinned.rounds(e)
-    // the node frame carries the dangling flag (r6): the old loop re-joined
-    // `dangling ⋈ ranks` every round just to sum the dangling mass; with
-    // the flag riding the pinned rank frame, the dangling share is a plain
-    // filtered 1-row aggregation of the frame the round reads anyway.
-    val (nodes, nodesH) = Pinned.pinTracked(nodeFlags(e, r))
-
-    val n = Pinned.rows(nodes)
-    require(n > 0, "pageRank on an empty edge set")
-    val seed = scale / n
-    val teleport = seed * (dampDen - dampNum) / dampDen
-
-    var (ranks, ranksH) = Pinned.pinTracked(
-      nodes.select(col("node"), lit(seed).as("rank"), col("dang")))
-    var it = 0
-    while (it < iters) {
-      // the dangling share stays a 1-row SUBPLAN of the round (not a
-      // driver-collected literal): it runs inside the round's one pin job,
-      // whereas a per-round collect is a strictly serial driver round-trip
-      // (measured +0.15 s/query at 8 rounds — tried and reverted r6)
-      val dshare = ranks.filter(col("dang"))
-        .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
-        .select(expr(s"dsum div ${n}L").as("dshare"))
-      val next = withInflow(e, nodes, ranks, r)
-        .crossJoin(r.total(dshare))
-        .select(col("node"),
-          expr(s"${teleport}L + ((inflow + dshare) * ${dampNum}L) div ${dampDen}L")
-            .as("rank"), col("dang"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      freeH(ranksH)
-      ranks = pinnedNext
-      ranksH = nextH
-      it += 1
-    }
-    freeH(eH); freeH(nodesH)
-    // the final pinned rank frame is the result (caller drops -> cleaner)
-    ranks.select(col("node"), col("rank"))
+    ranks(edges, None, iters, scale, dampNum, dampDen)
   }
 
   /** Personalized PageRank: the teleport mass lands on `sources` (column
@@ -159,42 +118,137 @@ object Graph {
                            scale: Long = 1000000000000L,
                            dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
+    ranks(edges, Some(sources), iters, scale, dampNum, dampDen)
+  }
+
+  private val NoSource = "personalizedPageRank needs at least one source present in the graph"
+
+  /** PageRank (`sources` None: every node is a teleport target) and
+    * personalized PageRank. PageRank is the personalized lattice with
+    * S = every node, except for its teleport term, which truncates the
+    * uniform start rank: (scale div N)·(dampDen−dampNum) div dampDen.
+    *
+    * The edges are pinned once. When [[Pinned.rounds]] says they (and the
+    * pinned sources) fit one partition, every round runs inside one task
+    * ([[ranksInTask]]): the pins, that task and the caller's job are the
+    * whole loop, whatever `iters` is. Otherwise [[rankRounds]] runs each
+    * round as a relational plan and a pin. */
+  private def ranks(edges: DataFrame, sources: Option[DataFrame], iters: Int, scale: Long,
+                    dampNum: Long, dampDen: Long): DataFrame = {
     val spark = edges.sparkSession
+    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
+    if (sources.isEmpty) require(Pinned.rows(e) > 0, "pageRank on an empty edge set")
+    val srcPin = sources.map(s => Pinned.pinTracked(
+      s.select(col("node").cast(e.schema("src").dataType)).distinct()))
+    val pins = e +: srcPin.map(_._1).toSeq
+    val out =
+      if (Pinned.rounds(pins: _*).single) {
+        val (keyType, wType) = (nodeType(e), e.schema("w").dataType)
+        val schema = StructType(Seq(StructField("node", keyType), StructField("rank", LongType)))
+        val r = Pinned.inTask(schema, pins: _*) { in =>
+          ranksInTask(in.head, in.lift(1), keyType, wType, iters, scale, dampNum, dampDen)
+        }
+        require(Pinned.rows(r) > 0, NoSource)
+        r
+      } else rankRounds(e, srcPin.map(_._1), iters, scale, dampNum, dampDen)
+    Pinned.free(spark, eH)
+    srcPin.foreach(p => Pinned.free(spark, p._2))
+    out
+  }
+
+  /** The rank loop's start rank of a teleport target and its teleport term
+    * per round, for `nS` targets (see [[ranks]]). */
+  private def rankConsts(personalized: Boolean, nS: Long, scale: Long,
+                         dampNum: Long, dampDen: Long): (Long, Long) = {
+    val seed = scale / nS
+    (seed, if (personalized) scale * (dampDen - dampNum) / dampDen / nS
+           else seed * (dampDen - dampNum) / dampDen)
+  }
+
+  /** The rank loop inside one task over the pinned `(src, dst, w)` rows and
+    * (personalized) the pinned source nodes: the relational rounds'
+    * arithmetic on arrays, with `ow`, the dangling flags and the teleport
+    * targets computed here. Emits `(node, rank)` in node order, or nothing
+    * when no source is a node. */
+  private def ranksInTask(edgeRows: Iterator[InternalRow], sourceRows: Option[Iterator[InternalRow]],
+                          keyType: DataType, wType: DataType, iters: Int,
+                          scale: Long, dampNum: Long, dampDen: Long): Iterator[InternalRow] = {
+    val g = new InTaskEdges(edgeRows, keyType, wType)
+    val n = g.keys.length
+    val ow = new Array[Long](n)
+    val dang = Array.fill(n)(true)
+    for (i <- 0 until g.m) {
+      dang(g.src(i)) = false
+      if (g.weighted(i)) ow(g.src(i)) = Math.addExact(ow(g.src(i)), g.w(i))
+    }
+    val isSrc = sourceRows match {
+      case None => Array.fill(n)(1L)
+      case Some(rows) =>
+        val s = new Array[Long](n)
+        rows.foreach(r => Option(g.index.get(Pinned.keyAt(r, 0, keyType))).foreach(v => s(v) = 1L))
+        s
+    }
+    val nS = isSrc.sum
+    if (nS == 0) return Iterator.empty
+    val (seed, tp) = rankConsts(sourceRows.isDefined, nS, scale, dampNum, dampDen)
+    var rank = isSrc.map(_ * seed)
+    for (_ <- 1 to iters) {
+      var dsum = 0L
+      for (v <- 0 until n if dang(v)) dsum = Math.addExact(dsum, rank(v))
+      val dshare = dsum / nS
+      val inflow = new Array[Long](n)
+      for (i <- 0 until g.m if g.weighted(i)) inflow(g.dst(i)) = Math.addExact(inflow(g.dst(i)),
+        Math.multiplyExact(rank(g.src(i)), g.w(i)) / ow(g.src(i)))
+      rank = Array.tabulate(n) { v =>
+        Math.addExact(Math.multiplyExact(isSrc(v), tp), Math.multiplyExact(
+          Math.addExact(inflow(v), Math.multiplyExact(isSrc(v), dshare)), dampNum) / dampDen)
+      }
+    }
+    Iterator.tabulate(n)(v => InternalRow(g.keys(v), rank(v)))
+  }
+
+  /** The rank loop as relational rounds over the pinned `(src, dst, w)`
+    * edges `e`: one plan and one pin per round. */
+  private def rankRounds(e: DataFrame, sources: Option[DataFrame], iters: Int, scale: Long,
+                         dampNum: Long, dampDen: Long): DataFrame = {
+    val spark = e.sparkSession
     def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
 
-    // out-weight folded into the pinned edge set, and the dangling/source
-    // flags folded into the node and rank frames (same r6 moves as
-    // pageRank): the per-round `dangling ⋈ ranks` and `⋈ isSrc` joins
-    // become a filtered aggregation and a carried column.
-    val (e, eH) = Pinned.pinTracked {
-      val e0 = edges.select(col("src"), col("dst"), col("w"))
-      e0.join(e0.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src"))
-    }
-    val r = Pinned.rounds(e)
-    val (nodes, nodesH) = Pinned.pinTracked {
-      val srcFlag = sources.select(col("node")).distinct()
-        .withColumn("src_flag", lit(1L))
-      nodeFlags(e, r)
-        .join(srcFlag, Seq("node"), "left")
-        .select(col("node"), col("dang"), coalesce(col("src_flag"), lit(0L)).as("is_src"))
-    }
-
-    val nS = nodes.filter(col("is_src") === 1L).count()
-    require(nS > 0, "personalizedPageRank needs at least one source present in the graph")
-    val tp = scale * (dampDen - dampNum) / dampDen / nS
+    // pinned once, read every round. The per-source out-weight is folded
+    // INTO the pinned edge set up front (r6 optimization): the old loop
+    // re-joined edges ⋈ outw every round — identical rows, one join per
+    // round saved, and the pinned edge frame grows by one LONG column.
+    val (ew, ewH) = Pinned.pinTracked(
+      e.join(e.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src")))
+    // the node frame carries the dangling and teleport-target flags (r6):
+    // the old loop re-joined `dangling ⋈ ranks` every round just to sum the
+    // dangling mass; with the flag riding the pinned rank frame, the
+    // dangling share is a plain filtered 1-row aggregation of the frame the
+    // round reads anyway.
+    val (nodes, nodesH) = Pinned.pinTracked(sources match {
+      case None => nodeFlags(ew).withColumn("is_src", lit(1L))
+      case Some(s) =>
+        nodeFlags(ew)
+          .join(s.select(col("node")).withColumn("src_flag", lit(1L)), Seq("node"), "left")
+          .select(col("node"), col("dang"), coalesce(col("src_flag"), lit(0L)).as("is_src"))
+    })
+    val nS = if (sources.isEmpty) Pinned.rows(nodes) else nodes.filter(col("is_src") === 1L).count()
+    require(nS > 0, NoSource)
+    val (seed, tp) = rankConsts(sources.isDefined, nS, scale, dampNum, dampDen)
 
     var (ranks, ranksH) = Pinned.pinTracked(
-      nodes.select(col("node"),
-        when(col("is_src") === 1L, lit(scale / nS)).otherwise(lit(0L)).as("rank"),
-        col("dang")))
+      nodes.select(col("node"), (col("is_src") * seed).as("rank"), col("dang")))
     var it = 0
     while (it < iters) {
-      // dangling share stays a concurrent 1-row subplan (see pageRank note)
+      // the dangling share stays a 1-row SUBPLAN of the round (not a
+      // driver-collected literal): it runs inside the round's pin job,
+      // whereas a per-round collect is a strictly serial driver round-trip
+      // (measured +0.15 s/query at 8 rounds — tried and reverted r6)
       val dshare = ranks.filter(col("dang"))
         .agg(coalesce(sum(col("rank")), lit(0L)).as("dsum"))
         .select(expr(s"dsum div ${nS}L").as("dshare"))
-      val next = withInflow(e, nodes, ranks, r)
-        .crossJoin(r.total(dshare))
+      val next = withInflow(ew, nodes, ranks)
+        .crossJoin(dshare)
         .select(col("node"),
           expr(s"""is_src * ${tp}L
                   | + ((inflow + is_src * dshare)
@@ -206,18 +260,19 @@ object Graph {
       ranksH = nextH
       it += 1
     }
-    freeH(eH); freeH(nodesH)
+    freeH(ewH); freeH(nodesH)
+    // the final pinned rank frame is the result (caller drops -> cleaner)
     ranks.select(col("node"), col("rank"))
   }
 
   /** Every node of a pinned `(src, dst, w, ow)` edge set with its dangling
-    * flag (no out-edge) — the node frame pageRank and PPR pin. */
-  private def nodeFlags(e: DataFrame, r: Pinned.Rounds): DataFrame = {
+    * flag (no out-edge) — the node frame the rank rounds pin. */
+  private def nodeFlags(e: DataFrame): DataFrame = {
     val outSrcs = e.select(col("src").as("node")).distinct()
       .withColumn("has_out", lit(true))
-    r.one(e.select(col("src").as("node")).union(e.select(col("dst").as("node"))))
+    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
       .distinct()
-      .join(r.side(outSrcs), Seq("node"), "left")
+      .join(outSrcs, Seq("node"), "left")
       .select(col("node"), coalesce(!col("has_out"), lit(true)).as("dang"))
   }
 
@@ -226,17 +281,47 @@ object Graph {
     * over its in-edges, 0 without any. Computed as the node frame UNION the
     * per-edge contributions and one aggregation, not as a join of the node
     * frame with per-destination sums: every join input stays a measured
-    * pin, which keeps the round exchange-free (see `Pinned.Rounds`). */
-  private def withInflow(e: DataFrame, nodes: DataFrame, ranks: DataFrame,
-                         r: Pinned.Rounds): DataFrame = {
+    * pin, so the planner sizes it by measurement. */
+  private def withInflow(e: DataFrame, nodes: DataFrame, ranks: DataFrame): DataFrame = {
     val flags = nodes.columns.toSeq.filter(_ != "node")
-    val contrib = e.join(r.side(ranks.select(col("node").as("src"), col("rank"))), Seq("src"))
+    val contrib = e.join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
       .select(col("dst").as("node") +:
         flags.map(f => lit(null).cast(nodes.schema(f).dataType).as(f)) :+
         expr("(rank * w) div ow").as("c"): _*)
-    r.one(nodes.select(col("node") +: flags.map(col) :+ lit(0L).as("c"): _*).unionAll(contrib))
+    nodes.select(col("node") +: flags.map(col) :+ lit(0L).as("c"): _*).unionAll(contrib)
       .groupBy(col("node"))
       .agg(sum(col("c")).as("inflow"), flags.map(f => max(col(f)).as(f)): _*)
+  }
+
+  /** The key type of a pinned `(src, dst, ...)` edge set, which the
+    * in-task kernels read both endpoints as. */
+  private def nodeType(e: DataFrame): DataType = {
+    val t = e.schema("src").dataType
+    require(e.schema("dst").dataType == t, "src and dst must have the same type")
+    t
+  }
+
+  /** A pinned `(src, dst, w)` edge set read inside its task: the node keys
+    * in Spark's order of their type, each edge's endpoints as positions in
+    * that order, and its integer weight. An edge with a null weight is
+    * `weighted` false: it adds nothing to any sum, as in Spark's. */
+  private final class InTaskEdges(rows: Iterator[InternalRow], keyType: DataType, wType: DataType) {
+    private val buf = rows.map { r =>
+      (Pinned.keyAt(r, 0, keyType), Pinned.keyAt(r, 1, keyType),
+        if (r.isNullAt(2)) None else Some(r.get(2, wType) match {
+          case l: java.lang.Long => l.longValue
+          case i: java.lang.Integer => i.longValue
+          case s: java.lang.Short => s.longValue
+          case b: java.lang.Byte => b.longValue
+          case o => throw new IllegalArgumentException(s"edge weights must be integers, got $o")
+        }))
+    }.toArray
+    val (keys, index) = Pinned.numbered(buf.iterator.flatMap(e => Iterator(e._1, e._2)), keyType)
+    val m: Int = buf.length
+    val src: Array[Int] = buf.map(e => index.get(e._1).intValue)
+    val dst: Array[Int] = buf.map(e => index.get(e._2).intValue)
+    val weighted: Array[Boolean] = buf.map(_._3.isDefined)
+    val w: Array[Long] = buf.map(_._3.getOrElse(0L))
   }
 
   /** Nodes reachable within `maxHops` directed hops, excluding the node
@@ -439,11 +524,10 @@ object Graph {
   /** Weakly connected components of the directed edge frame: `(node,
     * component)`, component = minimum node id reachable ignoring direction.
     *
-    * Thin adapter over the production large-star/small-star implementation
-    * (`Dedup.connectedComponents`) — O(log n) rounds, ≤2 edge-set copies
-    * live, converge-or-throw, durable-pin routed. One operator, one
-    * battle-tested body, two registry surfaces (dedup clusters, KG
-    * components). */
+    * Thin adapter over `Dedup.connectedComponents` — union-find in one
+    * task when the pairs fit one partition, O(log n) large-star/small-star
+    * rounds otherwise, durable-pin routed. One operator, one battle-tested
+    * body, two registry surfaces (dedup clusters, KG components). */
   def wcc(edges: DataFrame): DataFrame =
     Dedup.connectedComponents(
       undirected(edges).select(col("a"), col("b")))
@@ -522,36 +606,76 @@ object Graph {
     * multiplies by `scale` again — so scale² * max-node-incident-weight
     * must stay below 2^63. At the default scale 1e6 that allows ~9.2e6
     * total incident weight per node; pass a smaller scale for heavier
-    * graphs (the lattice just coarsens).
+    * graphs (the lattice just coarsens). Past it both forms fail, like
+    * [[pageRank]].
+    *
+    * The edges are pinned once. When that pin fits one partition, all
+    * `iters` rounds run inside one task ([[hitsInTask]]); otherwise each
+    * half-step is a relational plan and a pin ([[hitsScores]]).
     *
     * Returns `(node, hub, auth)` in lattice units for every node.
     */
   def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
-    val (nodes, hubs, auth, r) = hitsScores(edges, iters, scale)
-    // one dense zero-fill at the end (the contract returns every node)
-    nodes
-      .join(r.side(hubs.select(col("node"), col("s").as("hub"))), Seq("node"), "left")
-      .join(r.side(auth.select(col("node"), col("s").as("auth"))), Seq("node"), "left")
-      .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-    // result derives from the still-pinned nodes/hub/auth frames; they are
-    // reclaimed when the caller drops the frame (same contract as reach)
-  }
-
-  /** The HITS rounds: the pinned node frame and the SPARSE `(node, s)` hub
-    * and authority frames after `iters` rounds, with the round planner. */
-  private[graft] def hitsScores(edges: DataFrame, iters: Int, scale: Long)
-      : (DataFrame, DataFrame, DataFrame, Pinned.Rounds) = {
     require(iters >= 1, "hits needs at least one iteration")
     val spark = edges.sparkSession
+    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
+    require(Pinned.rows(e) > 0, "hits on an empty edge set")
+    val out =
+      if (Pinned.rounds(e).single) {
+        val (keyType, wType) = (nodeType(e), e.schema("w").dataType)
+        val schema = StructType(Seq(StructField("node", keyType),
+          StructField("hub", LongType, nullable = false), StructField("auth", LongType, nullable = false)))
+        Pinned.inTask(schema, e)(in => hitsInTask(in.head, keyType, wType, iters, scale))
+      } else {
+        val (nodes, hubs, auth) = hitsScores(e, iters, scale)
+        // one dense zero-fill at the end (the contract returns every node)
+        nodes
+          .join(hubs.select(col("node"), col("s").as("hub")), Seq("node"), "left")
+          .join(auth.select(col("node"), col("s").as("auth")), Seq("node"), "left")
+          .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"),
+            coalesce(col("auth"), lit(0L)).as("auth"))
+        // derives from the still-pinned nodes/hub/auth frames; they are
+        // reclaimed when the caller drops the frame (same contract as reach)
+      }
+    Pinned.free(spark, eH)
+    out
+  }
+
+  /** The HITS rounds inside one task over the pinned `(src, dst, w)` rows,
+    * with the sparse half-step's semantics: a node that receives no mass
+    * scores 0, and the renormalization total sums the half-step's raw
+    * scores. Emits `(node, hub, auth)` in node order. */
+  private def hitsInTask(rows: Iterator[InternalRow], keyType: DataType, wType: DataType,
+                         iters: Int, scale: Long): Iterator[InternalRow] = {
+    val g = new InTaskEdges(rows, keyType, wType)
+    val n = g.keys.length
+    def halfStep(score: Array[Long], from: Array[Int], to: Array[Int]): Array[Long] = {
+      val raw = new Array[Long](n)
+      for (i <- 0 until g.m if g.weighted(i))
+        raw(to(i)) = Math.addExact(raw(to(i)), Math.multiplyExact(score(from(i)), g.w(i)))
+      val t = raw.foldLeft(0L)(Math.addExact(_, _))
+      raw.map(r => if (t > 0) Math.multiplyExact(r, scale) / t else 0L)
+    }
+    var hubs = Array.fill(n)(scale / n)
+    var auth = hubs
+    for (_ <- 1 to iters) {
+      auth = halfStep(hubs, g.src, g.dst)
+      hubs = halfStep(auth, g.dst, g.src)
+    }
+    Iterator.tabulate(n)(v => InternalRow(g.keys(v), hubs(v), auth(v)))
+  }
+
+  /** The HITS rounds as relational plans over the pinned `(src, dst, w)`
+    * edges `e`: the pinned node frame and the SPARSE `(node, s)` hub and
+    * authority frames after `iters` rounds. */
+  private[graft] def hitsScores(e: DataFrame, iters: Int, scale: Long)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val spark = e.sparkSession
     def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
 
-    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
-    val r = Pinned.rounds(e)
     val (nodes, _) = Pinned.pinTracked(
-      r.one(e.select(col("src").as("node")).union(e.select(col("dst").as("node")))).distinct())
+      e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
     val n = Pinned.rows(nodes)
-    require(n > 0, "hits on an empty edge set")
 
     /** One half-step, SPARSE form (r6 optimization): rows exist only for
       * nodes that RECEIVE mass this half-step; an absent row means score 0,
@@ -563,23 +687,21 @@ object Graph {
       * The raw frame is pinned (edge join + aggregation, the half-step's
       * real work); the renormalization total is a 1-row aggregate of that
       * pin, and the truncating renormalization a LAZY projection over it
-      * that the NEXT pin evaluates. Over a one-partition pin neither needs
-      * an exchange or a broadcast (see `Pinned.Rounds`), so a half-step is
-      * one job. Arithmetic is bit-identical to the dense form (same raw
-      * sums, same total, same truncating division). Returns the
-      * renormalized frame plus the handle of the raw pin backing it. */
+      * that the NEXT pin evaluates. Arithmetic is bit-identical to the dense
+      * form (same raw sums, same total, same truncating division). Returns
+      * the renormalized frame plus the handle of the raw pin backing it. */
     def halfStep(score: DataFrame, from: String, to: String): (DataFrame, Pinned.Handle) = {
       val raw = e
-        .join(r.side(score.select(col("node").as(from), col("s"))), Seq(from))
+        .join(score.select(col("node").as(from), col("s")), Seq(from))
         .select(col(to).as("node"), expr("s * w").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
       val (rawP, rawH) = Pinned.pinTracked(raw)
       // the total stays a 1-row SUBPLAN over the pinned raw frame (not a
-      // driver-collected literal): over a one-partition pin it is computed
-      // inside the consumer's pin job, where a per-half-step collect would
-      // be a strictly serial driver round-trip
+      // driver-collected literal): it is computed inside the consumer's pin
+      // job, where a per-half-step collect would be a strictly serial
+      // driver round-trip
       val tot = rawP.agg(coalesce(sum(col("raw")), lit(0L)).as("t"))
-      val s = rawP.crossJoin(r.total(tot))
+      val s = rawP.crossJoin(tot)
         .select(col("node"),
           when(col("t") > 0L, expr(s"(raw * ${scale}L) div t"))
             .otherwise(lit(0L)).as("s"))
@@ -602,8 +724,7 @@ object Graph {
       hubsH = Some(nextHbH)
       it += 1
     }
-    freeH(eH)
-    (nodes, hubs, lastAuth, r)
+    (nodes, hubs, lastAuth)
   }
 
   /** Per-node local clustering coefficient over the undirected simple

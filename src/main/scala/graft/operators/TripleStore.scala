@@ -739,9 +739,9 @@ object TripleStore {
     * member — deterministic) and return the canonical graph with SET
     * semantics (aliases collapsing onto one triple dedup). `sameAs` is a
     * symmetric pair frame `(a, b)`; transitivity is honored by running the
-    * pairs through the production large-star/small-star connected
-    * components (O(log n) rounds — [[Dedup.connectedComponents]]), so alias
-    * CHAINS canonicalize to one representative, not pairwise.
+    * pairs through the production connected components
+    * ([[Dedup.connectedComponents]]), so alias CHAINS canonicalize to one
+    * representative, not pairwise.
     *
     * Scale shape: the component assignment is node-sized relative to the
     * ALIAS graph (≪ the store) and broadcast-joins onto subj and obj — the

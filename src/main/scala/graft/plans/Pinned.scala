@@ -1,10 +1,15 @@
 package graft.plans
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.graft.PinnedPlans
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Partition-pinning materialization for the iterative/scan operators
   * (connected components' star rounds, the two-phase prefix scan), with a
@@ -87,36 +92,89 @@ object Pinned {
     * (see [[Rounds]]). Both modes measure the same rows, so they plan
     * identically. */
   def pinTracked(df: DataFrame): (DataFrame, Handle) = {
-    val spark = df.sparkSession
+    val (rdd, rows, bytes, handle) = PinnedPlans.execute(df)(materialize(df.sparkSession, _))
+    (PinnedPlans.frameOver(df, rdd, rows, bytes), handle)
+  }
+
+  /** Run a loop whole inside ONE task: `kernel` reads the rows of the
+    * one-partition pins `pins` (one iterator each, in order) and returns
+    * rows of `schema`, which are pinned like [[pin]] — measured,
+    * `SinglePartition`, durable-mode routed — by the same, single job. The
+    * loops call it when [[rounds]] says their pins fit one partition
+    * (`Rounds.single`), where a relational round would be one job of
+    * planning and launch over a few KB. A kernel must return a function of
+    * its inputs' row SETS (not their order), so a retried task pins the
+    * same rows. */
+  def inTask(schema: StructType, pins: DataFrame*)(
+      kernel: Seq[Iterator[InternalRow]] => Iterator[InternalRow]): DataFrame = {
+    val spark = pins.head.sparkSession
+    val out = pins.map(relation(_).rdd) match {
+      case Seq(a) if a.getNumPartitions == 1 => a.mapPartitions(x => kernel(Seq(x)))
+      case Seq(a, b) if a.getNumPartitions == 1 && b.getNumPartitions == 1 =>
+        a.zipPartitions(b)((x, y) => kernel(Seq(x, y)))
+      case _ => throw new IllegalArgumentException("inTask reads one or two one-partition pins")
+    }
+    val unsafe = out.mapPartitions { it =>
+      val proj = UnsafeProjection.create(schema)
+      it.map(proj(_).copy(): InternalRow)
+    }
+    val (rdd, rows, bytes, _) = materialize(spark, unsafe)
+    PinnedPlans.frameOver(spark, schema, rdd, rows, bytes)
+  }
+
+  /** Key column `i` of a pinned row, read inside an [[inTask]] kernel as a
+    * value that hashes and compares like Spark's: a string is a
+    * `UTF8String` copied out of the row's buffer, any other atomic type its
+    * boxed value. Keys are non-null. */
+  def keyAt(row: InternalRow, i: Int, dt: DataType): Any = row.get(i, dt) match {
+    case null => throw new IllegalArgumentException(s"null key in column $i")
+    case s: UTF8String => s.clone()
+    case k => k
+  }
+
+  /** The distinct `keys` of type `dt` in Spark's order of the type (binary
+    * UTF-8 for strings, not `String.compareTo`'s UTF-16 order) and each
+    * key's position in that order. A kernel that numbers its nodes this
+    * way emits them in an order that does not depend on its input's. */
+  def numbered(keys: Iterator[Any], dt: DataType): (Array[Any], java.util.HashMap[Any, Integer]) = {
+    val index = new java.util.HashMap[Any, Integer]
+    keys.foreach(index.put(_, 0))
+    val sorted = index.keySet.toArray.asInstanceOf[Array[Any]].sorted(TypeUtils.getInterpretedOrdering(dt))
+    sorted.indices.foreach(i => index.put(sorted(i), i))
+    (sorted, index)
+  }
+
+  /** Mark `rdd` for its pin (reliable checkpoint in durable mode,
+    * localCheckpoint otherwise) and run the ONE job that computes, stores
+    * and measures it: its rows, row bytes and the pin's Handle. */
+  private def materialize(spark: SparkSession, rdd: RDD[InternalRow])
+      : (RDD[InternalRow], Long, Long, Handle) = {
     val durable = durableDir(spark)
     durable.foreach(useCheckpointRoot(spark, _))
-    val (rdd, rows, bytes) = PinnedPlans.execute(df) { rdd =>
-      if (durable.isDefined) {
-        // persist before the reliable checkpoint: Spark's checkpoint-write
-        // job otherwise RECOMPUTES the whole plan from lineage after the
-        // measuring job already ran it once — doubling every CC/BPE/scan
-        // round in exactly the durable-cluster scenario this mode serves.
-        // The transient cache is dropped as soon as the checkpoint files
-        // hold the data.
-        rdd.persist(StorageLevel.MEMORY_AND_DISK)
-        rdd.checkpoint()
-      } else rdd.localCheckpoint()
-      // the job's end runs the checkpoint (the local one finds every block
-      // already stored; the reliable one writes from the transient cache)
-      val perPart = rdd.mapPartitions { it =>
-        var n = 0L
-        var b = 0L
-        it.foreach { r =>
-          n += 1
-          b += (r match {
-            case u: UnsafeRow => u.getSizeInBytes.toLong
-            case o => 8L * math.max(1, o.numFields)
-          })
-        }
-        Iterator.single((n, b))
-      }.collect()
-      (rdd, perPart.map(_._1).sum, perPart.map(_._2).sum)
-    }
+    if (durable.isDefined) {
+      // persist before the reliable checkpoint: Spark's checkpoint-write
+      // job otherwise RECOMPUTES the whole plan from lineage after the
+      // measuring job already ran it once — doubling every CC/BPE/scan
+      // round in exactly the durable-cluster scenario this mode serves.
+      // The transient cache is dropped as soon as the checkpoint files
+      // hold the data.
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    // the job's end runs the checkpoint (the local one finds every block
+    // already stored; the reliable one writes from the transient cache)
+    val perPart = rdd.mapPartitions { it =>
+      var n = 0L
+      var b = 0L
+      it.foreach { r =>
+        n += 1
+        b += (r match {
+          case u: UnsafeRow => u.getSizeInBytes.toLong
+          case o => 8L * math.max(1, o.numFields)
+        })
+      }
+      Iterator.single((n, b))
+    }.collect()
     require(rdd.isCheckpointed || rdd.getNumPartitions == 0,
       s"pin of RDD ${rdd.id} was not checkpointed")
     val handle =
@@ -124,7 +182,7 @@ object Pinned {
         rdd.unpersist(blocking = false)
         Handle(Set.empty, rdd.getCheckpointFile.toSet)
       } else Handle(Set(rdd.id), Set.empty)
-    (PinnedPlans.frameOver(df, rdd, rows, bytes), handle)
+    (rdd, perPart.map(_._1).sum, perPart.map(_._2).sum, handle)
   }
 
   /** Measured row count of a frame returned by [[pin]]/[[pinTracked]] —
@@ -139,23 +197,24 @@ object Pinned {
 
   /** Round planning for a loop over pinned frames. When a round reads only
     * one-partition pins that together fit one partition (every KB-sized
-    * graph frame does under AQE's partition coalescing), it can run with no
-    * exchange and no broadcast — one job, the round's pin — if the planner
-    * sees exact single-partition inputs on every join and aggregation.
-    * Spark keeps a join exchange-free only when its inputs report exactly
-    * `SinglePartition` AND each input's size estimate fits
-    * `spark.sql.maxSinglePartitionBytes`; estimates of join outputs are
-    * size products, so the loops join measured pins (or projections,
-    * filters and unions of them) only, and combine derived frames by
-    * union + one aggregation ([[fresh]], the PageRank inflow):
-    *   - [[side]] hints `shuffle_hash` on the node-sized join side (after
+    * graph frame does under AQE's partition coalescing), the round is
+    * [[single]]. The node-state loops (HITS, PageRank, PPR, connected
+    * components) then run whole in one task ([[inTask]]) and never plan a
+    * round. The growing closures (reach, the bounded closure, the OWL
+    * closure) still plan each round, with no exchange and no broadcast — one
+    * job, the round's pin — if the planner sees exact single-partition
+    * inputs on every join and aggregation. Spark keeps a join exchange-free
+    * only when its inputs report exactly `SinglePartition` AND each input's
+    * size estimate fits `spark.sql.maxSinglePartitionBytes`; estimates of
+    * join outputs are size products, so the closures join measured pins (or
+    * projections, filters and unions of them) only, and combine derived
+    * frames by union + one aggregation ([[fresh]]):
+    *   - [[side]] hints `shuffle_hash` on the small join side (after
     *     [[one]]): with measured (small) statistics the planner would
     *     otherwise broadcast it, and each broadcast is its own job;
-    *   - [[total]] hints a replicated nested loop on a 1-row totals frame
-    *     (a broadcast nested loop otherwise);
     *   - [[one]] re-declares `SinglePartition` with a narrow `coalesce(1)`
     *     where Spark reports `PartitioningCollection` or `Unknown` (unions,
-    *     cartesian products, inner-join outputs).
+    *     inner-join outputs).
     * Otherwise these are the identity, so large inputs keep their exchange
     * plans and AQE-sized partitions. Past the size bound, [[spread]]
     * hash-partitions the frames the closures aggregate or return when all
@@ -166,7 +225,6 @@ object Pinned {
   final class Rounds private[Pinned] (onePartition: Boolean, fits: Boolean) {
     val single: Boolean = onePartition && fits
     def side(df: DataFrame): DataFrame = if (single) one(df).hint("shuffle_hash") else df
-    def total(df: DataFrame): DataFrame = if (single) df.hint("shuffle_replicate_nl") else df
     def one(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
     def spread(df: DataFrame, keys: Seq[String]): DataFrame =
       if (single) df.coalesce(1)

@@ -1,13 +1,16 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The plan-level half of `graft.plans.Pinned`: the few steps that need
   * Spark's `private[sql]` API (`Dataset.ofRows`, the session's SQL conf,
@@ -37,11 +40,21 @@ object PinnedPlans {
     * (what `Dataset.checkpoint` reports) otherwise. */
   def frameOver(df: DataFrame, rdd: RDD[InternalRow], rows: Long, bytes: Long): DataFrame = {
     val ds = classicOf(df)
+    frame(ds.sparkSession, ds.logicalPlan.output, rdd, rows, bytes)
+  }
+
+  /** The same frame over an RDD of rows of `schema` that no plan produced. */
+  def frameOver(spark: SparkSession, schema: StructType, rdd: RDD[InternalRow],
+                rows: Long, bytes: Long): DataFrame =
+    frame(spark.asInstanceOf[classic.SparkSession], DataTypeUtils.toAttributes(schema), rdd, rows, bytes)
+
+  private def frame(spark: classic.SparkSession, output: Seq[Attribute], rdd: RDD[InternalRow],
+                    rows: Long, bytes: Long): DataFrame = {
     val partitioning =
       if (rdd.getNumPartitions == 1) SinglePartition else UnknownPartitioning(0)
-    val plan = LogicalRDD(ds.logicalPlan.output, rdd, partitioning)(
-      ds.sparkSession, Some(Statistics(sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))), None)
-    classic.Dataset.ofRows(ds.sparkSession, plan)
+    val plan = LogicalRDD(output, rdd, partitioning)(
+      spark, Some(Statistics(sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows)))), None)
+    classic.Dataset.ofRows(spark, plan)
   }
 
   /** The pinned `LogicalRDD` a frame is, if it is one (no operator on top). */

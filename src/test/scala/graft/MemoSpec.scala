@@ -53,25 +53,28 @@ class MemoSpec extends SparkTestBase {
     val foreign = try lookup.lookupPrincipalByName("nobody")
     catch { case _: Throwable => cancel("no 'nobody' principal on this host") }
     assume(sys.props("user.name") != "nobody")
-
-    val cfg = WsidConfig(entities = Seq("scan", "sort"), window = 5, topK = 30)
-    Memo.modelOf(spark, sfDir, cfg) // builds into the per-user default store
-    Memo.invalidate(spark)
-    // another principal now owns THIS cfg's cached model dir (same key
-    // derivation as Memo.modelOf) -> load must refuse
-    val keyHex = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$sfDir|${cfg.canonicalId}|${Memo.ModelVersion}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-    val key = new java.io.File(Memo.modelStoreRoot, keyHex)
-    assert(key.isDirectory, s"model dir missing at $key")
-    java.nio.file.Files.setOwner(key.toPath, foreign)
-    try {
-      val e = intercept[SecurityException] { Memo.modelOf(spark, sfDir, cfg) }
-      assert(e.getMessage.contains("owned by"))
-    } finally {
-      java.nio.file.Files.setOwner(key.toPath,
-        lookup.lookupPrincipalByName(sys.props("user.name")))
+    // the implicit store is the one with no configured root, whatever the
+    // shell running the suite exports
+    Memo.rootEnv.withValue(sys.env - "GRAFT_MODEL_ROOT") {
+      val cfg = WsidConfig(entities = Seq("scan", "sort"), window = 5, topK = 30)
+      Memo.modelOf(spark, sfDir, cfg) // builds into the per-user default store
       Memo.invalidate(spark)
+      // another principal now owns THIS cfg's cached model dir (same key
+      // derivation as Memo.modelOf) -> load must refuse
+      val keyHex = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s"$sfDir|${cfg.canonicalId}|${Memo.ModelVersion}".getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString.take(16)
+      val key = new java.io.File(Memo.modelStoreRoot, keyHex)
+      assert(key.isDirectory, s"model dir missing at $key")
+      java.nio.file.Files.setOwner(key.toPath, foreign)
+      try {
+        val e = intercept[SecurityException] { Memo.modelOf(spark, sfDir, cfg) }
+        assert(e.getMessage.contains("owned by"))
+      } finally {
+        java.nio.file.Files.setOwner(key.toPath,
+          lookup.lookupPrincipalByName(sys.props("user.name")))
+        Memo.invalidate(spark)
+      }
     }
   }
 

@@ -13,15 +13,16 @@ import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPar
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PinnedPlans
 
-import graft.operators.{Graph, TripleStore}
+import graft.operators.{Dedup, Graph, TripleStore}
 import graft.plans.Pinned
 
-/** Measured pins and the one-job rounds they enable: a pin's plan carries
-  * its measured size and (for one partition) `SinglePartition`; the graph
-  * and closure loops then run each round as exactly one Spark job; their
-  * handles name only their own storage (concurrent loops in one session
-  * no longer free each other's pins); and the multi-partition path gives
-  * bit-identical outputs. */
+/** Measured pins and what they enable: a pin's plan carries its measured
+  * size and (for one partition) `SinglePartition`; HITS, PageRank, PPR and
+  * connected components then run whole inside one task, and the closure
+  * loops run each round as exactly one Spark job; handles name only their
+  * own storage (concurrent loops in one session no longer free each
+  * other's pins); and the relational rounds give bit-identical outputs and
+  * fail alike. */
 class PinnedRoundsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -124,13 +125,16 @@ class PinnedRoundsSpec extends SparkTestBase {
       val measured = Pinned.pin(df).queryExecution.optimizedPlan.stats.sizeInBytes
       (BigDecimal(est) / BigDecimal(measured.max(1))).toDouble
     }
-    val e = one(graph)
+    val e = Pinned.pin(one(graph))
     // 10 HITS half-steps: the sparse hub and authority frames
-    val (_, hubs1, auth1, _) = Graph.hitsScores(e, iters = 1, scale = 1000000L)
-    val (_, hubs5, auth5, _) = Graph.hitsScores(e, iters = 5, scale = 1000000L)
-    // 8 PageRank rounds: the returned frame is the last round's pin
-    val pr1 = Graph.pageRank(e, iters = 1)
-    val pr8 = Graph.pageRank(e, iters = 8)
+    val (_, hubs1, auth1) = Graph.hitsScores(e, iters = 1, scale = 1000000L)
+    val (_, hubs5, auth5) = Graph.hitsScores(e, iters = 5, scale = 1000000L)
+    // 8 PageRank rounds, relational past one partition: the returned frame
+    // is the last round's pin
+    val (pr1, pr8) = withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      val multi = graph.toDF("src", "dst", "w").repartition(4)
+      (Graph.pageRank(multi, iters = 1), Graph.pageRank(multi, iters = 8))
+    }
     for ((first, last) <- Seq((hubs1, hubs5), (auth1, auth5), (pr1, pr8))) {
       val (r1, rn) = (ratio(first), ratio(last))
       assert(rn <= 64.0, s"estimate is ${rn}x the measured size")
@@ -138,12 +142,22 @@ class PinnedRoundsSpec extends SparkTestBase {
     }
   }
 
-  test("one Spark job per HITS half-step, PageRank round and closure hop") {
+  test("one job per loop for HITS, PageRank, PPR and CC; one per closure hop") {
     val e = one(graph)
+    // in one task: the edge pin, the kernel's pin and the collect, whatever
+    // the round count (PPR adds the source pin)
     def hits(k: Int) = jobsOf(Graph.hits(e, iters = k).collect())
     def pr(k: Int) = jobsOf(Graph.pageRank(e, iters = k).collect())
     def ppr(k: Int) = jobsOf(Graph.personalizedPageRank(e,
-      Seq("n00", "n05").toDF("node"), iters = k).collect())
+      Seq("n00", "n05").toDF("node").coalesce(1), iters = k).collect())
+    // CC over a path of m pairs: the star rounds needed O(log m) rounds,
+    // union-find in the pair pin's task needs none
+    def cc(m: Int) = jobsOf(Dedup.connectedComponents(
+      chain(m).toDF("a", "b", "w").select(col("a"), col("b")).coalesce(1)).collect())
+    assert(Seq(hits(1), hits(3)) == Seq(3, 3))
+    assert(Seq(pr(2), pr(5)) == Seq(3, 3))
+    assert(Seq(ppr(2), ppr(4)) == Seq(4, 4))
+    assert(Seq(cc(4), cc(32)) == Seq(3, 3))
     // a 12-edge path never drains early within 6 hops
     val path = one(chain(12))
     def reach(k: Int) = jobsOf(Graph.reach(path, maxHops = k).collect())
@@ -155,9 +169,6 @@ class PinnedRoundsSpec extends SparkTestBase {
     val schema = Seq(("p", "type", "TransitiveProperty")).toDF("subj", "pred", "obj")
     def owl(m: Int) = jobsOf(TripleStore.owlClosure(
       triples(chain(m), "p").coalesce(1), schema).collect())
-    assert(hits(3) - hits(1) == 4, "2 HITS rounds = 4 half-steps")
-    assert(pr(5) - pr(2) == 3)
-    assert(ppr(4) - ppr(2) == 2)
     assert(reach(6) - reach(3) == 3)
     assert(plus(6) - plus(3) == 3)
     assert(owl(8) - owl(2) == 2)
@@ -174,7 +185,10 @@ class PinnedRoundsSpec extends SparkTestBase {
         rowsOf(Graph.personalizedPageRank(e, Seq("n00", "n05").toDF("node"), iters = 4)),
         rowsOf(Graph.reach(e, maxHops = 3)),
         rowsOf(TripleStore.pathPlus(t, "p", maxHops = 3)),
-        rowsOf(TripleStore.owlClosure(t, schema)))
+        rowsOf(TripleStore.owlClosure(t, schema)),
+        rowsOf(Graph.wcc(e)),
+        rowsOf(TripleStore.canonicalize(t, e.filter(col("w") > 5L)
+          .select(col("src").as("a"), col("dst").as("b")))))
     }
     val single = all(one(graph), triples(graph, "p").coalesce(1))
     val multi = withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
@@ -184,6 +198,48 @@ class PinnedRoundsSpec extends SparkTestBase {
     }
     assert(single.map(_.size) == multi.map(_.size))
     single.zip(multi).foreach { case (s, m) => assert(s == m) }
+  }
+
+  /** `body` in the in-task regime and in the relational one: the same
+    * one-partition pins past a 1-byte `spark.sql.maxSinglePartitionBytes`. */
+  private def bothRegimes[T](body: => T): (T, T) =
+    (body, withConf("spark.sql.maxSinglePartitionBytes", "1")(body))
+
+  /** Whether `body` failed with an arithmetic overflow anywhere in its
+    * cause chain (a kernel's or an ANSI expression's, thrown in a task). */
+  private def overflows(body: => Any): Boolean =
+    try { body; false } catch {
+      case t: Throwable =>
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+          .exists(c => c.isInstanceOf[ArithmeticException] ||
+            String.valueOf(c.getMessage).contains("ArithmeticException"))
+    }
+
+  test("weights past the Long envelope fail in both regimes, with no rows") {
+    // s * w overflows in the first HITS half-step; rank * w in the first
+    // PageRank round (rank <= 1e12, w = 1e8) and PPR round
+    val heavyHits = one(graph.map { case (s, d, w) => (s, d, w * (Long.MaxValue / 16)) })
+    val heavyRank = one(graph.map { case (s, d, w) => (s, d, w * 100000000L) })
+    val (inTask, relational) = bothRegimes(Seq(
+      overflows(Graph.hits(heavyHits, iters = 2).collect()),
+      overflows(Graph.pageRank(heavyRank, iters = 2).collect()),
+      overflows(Graph.personalizedPageRank(heavyRank, Seq("n00").toDF("node"), iters = 2).collect())))
+    assert(inTask == Seq(true, true, true) && relational == Seq(true, true, true))
+  }
+
+  test("CC picks the minimum under Spark's binary order of the key type in both regimes") {
+    // UTF-16 order puts the surrogate pair of "😀" (U+1F600) before "～"
+    // (U+FF5E); UTF-8 bytes (F0.. vs EF..) put "～" first, as Spark does
+    val strs = Seq(("😀", "～"), ("s", "s"))
+    val (s1, s2) = bothRegimes(rowsOf(Dedup.connectedComponents(strs.toDF("a", "b").coalesce(1))))
+    assert(s1 == s2)
+    assert(s1.map(r => r.getString(0) -> r.getString(1)).toMap ==
+      Map("～" -> "～", "😀" -> "～", "s" -> "s"))
+    val longs = Seq((10L, 9L), (100099L, 10L), (-5L, 7L), (7L, 7L), (3L, 3L))
+    val (l1, l2) = bothRegimes(rowsOf(Dedup.connectedComponents(longs.toDF("a", "b").coalesce(1))))
+    assert(l1 == l2)
+    assert(l1.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(9L -> 9L, 10L -> 9L, 100099L -> 9L, -5L -> -5L, 7L -> -5L, 3L -> 3L))
   }
 
   test("each closure round picks its regime from the measured size of the pins it reads") {
