@@ -35,13 +35,16 @@ import graft.plans.Pinned
   *    deterministically — at most two rank copies live. Work per round is
   *    one edge join plus one aggregation on dst; rounds are a fixed
   *    constant. Both paths give the same rows (PinnedRoundsSpec).
-  *  - `reach` is the semi-naive bounded-hop frontier: each hop joins only
-  *    the FRESH pairs against the edge set (never the accumulated closure),
-  *    so a converged frontier costs nothing. Each hop picks its regime
-  *    from the closure so far: exchange-free while it fits one partition,
-  *    exchanges and AQE-sized partitions once it does not. Bounded-hop
-  *    reachability over a dense graph is inherently output-heavy; callers
-  *    choose `maxHops` small (typical KG neighborhood queries: 2–4).
+  *  - `reach` is the bounded closure of the edge set
+  *    (`TripleStore.boundedClosure`, shared with the property paths),
+  *    counted per source. While the edge pin and the closure fit
+  *    `spark.sql.maxSinglePartitionBytes` the closure is one BFS per node
+  *    inside one task; past that, each hop is semi-naive and relational:
+  *    it joins only the FRESH pairs against the edge set (never the
+  *    accumulated closure), so a converged frontier costs nothing, and
+  *    picks its regime from the closure so far. Bounded-hop reachability
+  *    over a dense graph is inherently output-heavy; callers choose
+  *    `maxHops` small (typical KG neighborhood queries: 2–4).
   */
 object Graph {
 
@@ -326,44 +329,18 @@ object Graph {
 
   /** Nodes reachable within `maxHops` directed hops, excluding the node
     * itself: returns `(node, n_reach)` for every node with at least one
-    * out-edge. Semi-naive expansion: hop i+1 joins only hop i's FRESH pairs
-    * with the edge set, and stops early once a frontier is empty. */
+    * out-edge. The bounded closure of the edges
+    * ([[TripleStore.boundedClosure]]: in one task while it fits one
+    * partition, semi-naive relational hops otherwise), less self-pairs,
+    * counted per source. */
   def reach(edges: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "reach needs at least one hop")
-    val spark = edges.sparkSession
-
-    // r6 optimization (same move as TripleStore.boundedClosure): the
-    // accumulated closure is a LAZY UNION of the pinned per-hop frontiers —
-    // one pin per hop instead of two, identical materialized rows, live
-    // memory still exactly the closure (frontiers are disjoint: each holds
-    // only pairs absent from the closure so far). The single base pin
-    // doubles as hop-1 frontier and edge set.
-    val (e, _) = Pinned.pinTracked(edges.select(col("src"), col("dst")).distinct())
-    var all = e
-    var delta = e
-    var hop = 1
-    var drained = false
-    while (hop < maxHops && !drained) {
-      // the closure grows, so every hop picks its regime (Pinned.rounds)
-      val r = Pinned.rounds(all)
-      val eRen = r.side(e.select(col("src").as("mid"), col("dst").as("d2")))
-      val stepped = delta.join(eRen, delta("dst") === eRen("mid"))
-        .select(col("src"), col("d2").as("dst"))
-      val (fresh, freshH) = Pinned.pinTracked(r.fresh(stepped, all))
-      if (Pinned.rows(fresh) == 0) {
-        Pinned.free(spark, freshH)
-        drained = true
-      } else {
-        all = all.unionAll(fresh)
-        delta = fresh
-      }
-      hop += 1
-    }
-    val out = Pinned.rounds(all).spread(all, Seq("src")).filter(col("dst") =!= col("src"))
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("n_reach"))
-    // result derives from the still-pinned closure; caller-held references
-    // stay valid (the pins are only reclaimed when the frame is dropped)
-    out
+    // the result derives from the still-pinned closure; caller-held
+    // references stay valid (the pins are only reclaimed when the frame is
+    // dropped)
+    TripleStore.boundedClosure(edges.select(col("src").as("subj"), col("dst").as("obj")), maxHops)
+      .filter(col("obj") =!= col("subj"))
+      .groupBy(col("subj").as("node")).agg(count(lit(1)).as("n_reach"))
   }
 
   /** Approximate bounded-hop neighborhood sizes — the 100 TB scale path for

@@ -1,7 +1,15 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PinnedPlans
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.Pinned
 
 /** SPARQL-style basic-graph-pattern (BGP) matching over a materialized
   * `(subj, pred, obj)` triple table — the query surface of the graph the
@@ -204,7 +212,6 @@ object TripleStore {
   def bgpValues(triples: DataFrame, patterns: Seq[(Term, Term, Term)],
                 vars: Seq[String], rows: Seq[Seq[Option[String]]]): DataFrame = {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
     require(vars.nonEmpty && rows.nonEmpty, "VALUES needs variables and rows")
     require(rows.forall(_.size == vars.size),
       s"every VALUES row must have ${vars.size} entries")
@@ -511,11 +518,17 @@ object TripleStore {
     * min-hop). Cyclic paths keep SPARQL semantics — a node on a cycle
     * reaches itself.
     *
-    * Semi-naive evaluation: each round joins only the LAST round's fresh
-    * pairs against the edge set and subtracts the known closure, so work
-    * per round is bounded by the new pairs, frames are pinned with ≤3 live
-    * (edges, closure, frontier), and the loop drains early when a round
-    * finds nothing. This MATERIALIZES the bounded closure — inherently
+    * The edge set is pinned once. While that pin fits one partition the
+    * whole closure is computed inside one task (a BFS per source node over
+    * the pinned rows), so the query is the edge pin, that task's pin and
+    * its own job, whatever `maxHops` is. Past the bound — or once the
+    * closure itself outgrows it — the loop is semi-naive and relational:
+    * each round joins only the LAST round's fresh pairs against the edge
+    * set and subtracts the known closure, so work per round is bounded by
+    * the new pairs, each round's fresh pairs are one pin (the returned
+    * closure is the lazy union of the edge pin and those pins), and the
+    * loop drains early when a round finds nothing.
+    * Either way this MATERIALIZES the bounded closure — inherently
     * output-quadratic on dense graphs; the hop bound is the scale control,
     * and for counting-only questions [[Graph.reachApprox]] (HyperBall)
     * is the 100 TB path. */
@@ -524,15 +537,101 @@ object TripleStore {
       triples.filter(col("pred") === pred).select(col("subj"), col("obj")),
       maxHops)
 
-  /** Semi-naive bounded transitive closure of an arbitrary `(subj, obj)`
-    * pair frame, with `n_hops` = min path length (BFS first-discovery
-    * round). The engine under [[pathPlus]] and the `Plus`/`Star` path
-    * combinators — see pathPlus for the per-round work bound, pinning
-    * discipline, and the scale contract. */
+  /** Bounded transitive closure of an arbitrary `(subj, obj)` pair frame,
+    * with `n_hops` = min path length (BFS first-discovery round). The
+    * engine under [[pathPlus]], the `Plus`/`Star` path combinators and
+    * [[Graph.reach]] — see pathPlus for the two regimes, the pinning
+    * discipline and the scale contract. */
   private[graft] def boundedClosure(pairs: DataFrame, maxHops: Int): DataFrame = {
-    import graft.plans.Pinned
     require(maxHops >= 1, "boundedClosure needs at least one hop")
+    val (e, eH) = Pinned.pinTracked(pairs.select(col("subj"), col("obj")).distinct())
+    val keyType = e.schema("subj").dataType
+    val schema = StructType(Seq(e.schema("subj"), e.schema("obj"),
+      StructField("n_hops", LongType, nullable = false)))
+    closedInTask(e, eH, Seq("subj", "obj"), schema) { (rows, bound) =>
+      closureInTask(rows, keyType, maxHops, bound)
+    }.getOrElse(closureRounds(e, maxHops))
+  }
 
+  /** Key types an in-task closure reads: boxed, they hash and compare as
+    * Spark's values do. */
+  private val KernelKeyTypes = Set[DataType](StringType, LongType, IntegerType, ShortType, ByteType)
+
+  /** The closure of the base pin `base` computed whole in ONE task by
+    * `kernel` (which gets the base rows and the byte bound), or None when
+    * [[Pinned.rounds]] says the base does not fit one partition, the base
+    * is empty, or the `keys` columns differ in type or are not strings or
+    * integers. A kernel GIVES UP by emitting no rows — when the closure's
+    * row bytes pass `spark.sql.maxSinglePartitionBytes`, on a null key, or
+    * when it would need more rounds than its caller allows — which is
+    * unambiguous because a closure contains its non-empty base; the caller
+    * then runs its relational rounds from the same base pin, so results
+    * and exceptions are those rounds'. The base pin is freed once the
+    * kernel's pin holds the closure. */
+  private def closedInTask(base: DataFrame, baseH: Pinned.Handle, keys: Seq[String],
+                           schema: StructType)(
+      kernel: (Iterator[InternalRow], Long) => Iterator[InternalRow]): Option[DataFrame] = {
+    val types = keys.map(base.schema(_).dataType).distinct
+    if (types.size != 1 || !KernelKeyTypes(types.head) || Pinned.rows(base) == 0 ||
+        !Pinned.rounds(base).single) None
+    else {
+      val bound = PinnedPlans.maxSinglePartitionBytes(base)
+      val closed = Pinned.inTask(schema, base)(in => kernel(in.head, bound))
+      if (Pinned.rows(closed) == 0) None
+      else {
+        Pinned.free(base.sparkSession, baseH)
+        Some(closed)
+      }
+    }
+  }
+
+  /** The bounded closure inside one task over the pinned distinct
+    * `(subj, obj)` rows: a BFS from every node, `n_hops` its first-discovery
+    * hop. Emits `(subj, obj, n_hops)` in key order, or nothing (gives up,
+    * see [[closedInTask]]) on a null key or once the rows pass `bound`
+    * bytes. */
+  private def closureInTask(rows: Iterator[InternalRow], keyType: DataType, maxHops: Int,
+                            bound: Long): Iterator[InternalRow] = {
+    val pairs = rows.map(r => if (r.anyNull) null
+      else (Pinned.keyAt(r, 0, keyType), Pinned.keyAt(r, 1, keyType))).toArray
+    if (pairs.contains(null)) return Iterator.empty
+    val (keys, index) = Pinned.numbered(pairs.iterator.flatMap(p => Iterator(p._1, p._2)), keyType)
+    val n = keys.length
+    val succ = Array.fill(n)(mutable.ArrayBuilder.make[Int])
+    pairs.foreach(p => succ(index.get(p._1).intValue) += index.get(p._2).intValue)
+    val next = succ.map(_.result())
+    val rowBytes = Pinned.fixedBytes(3)
+    val keyBytes = keys.map(Pinned.varBytes)
+    val hopOf = new Array[Int](n) // 0: not reached from the current source
+    val out = mutable.ArrayBuffer.empty[InternalRow]
+    var bytes = 0L
+    for (s <- 0 until n) {
+      val reached = mutable.ArrayBuffer.empty[Int]
+      var frontier = Array(s)
+      var hop = 1
+      while (hop <= maxHops && frontier.nonEmpty) {
+        val fresh = mutable.ArrayBuilder.make[Int]
+        for (v <- frontier; w <- next(v) if hopOf(w) == 0) {
+          hopOf(w) = hop
+          fresh += w
+          reached += w
+        }
+        frontier = fresh.result()
+        hop += 1
+      }
+      for (w <- reached.sorted) {
+        bytes += rowBytes + keyBytes(s) + keyBytes(w)
+        if (bytes > bound) return Iterator.empty
+        out += InternalRow(keys(s), keys(w), hopOf(w).toLong)
+        hopOf(w) = 0
+      }
+    }
+    out.iterator
+  }
+
+  /** The bounded closure as relational semi-naive rounds from the pinned
+    * distinct pairs `e`: one plan and one pin per hop. */
+  private def closureRounds(e: DataFrame, maxHops: Int): DataFrame = {
     // r6 optimization: the accumulated closure is kept as a LAZY UNION of
     // the already-pinned per-hop frontiers instead of re-materializing
     // `all ∪ fresh` every hop — the subtraction and the returned frame read
@@ -542,7 +641,6 @@ object TripleStore {
     // size is exactly the closure the old single pin held; all stay pinned
     // until the caller drops the result (same lifetime contract as before —
     // ContextCleaner reclaims on drop).
-    val (e, _) = Pinned.pinTracked(pairs.select(col("subj"), col("obj")).distinct())
     var all = e.withColumn("n_hops", lit(1L))
     var delta = all
     var hop = 1
@@ -558,7 +656,7 @@ object TripleStore {
       val (fresh, freshH) = Pinned.pinTracked(
         r.fresh(stepped, all).withColumn("n_hops", lit((hop + 1).toLong)))
       if (Pinned.rows(fresh) == 0) {
-        Pinned.free(pairs.sparkSession, freshH)
+        Pinned.free(e.sparkSession, freshH)
         drained = true
       } else {
         all = all.unionAll(fresh)
@@ -609,7 +707,8 @@ object TripleStore {
     * (SPARQL paths are existence tests, never bags). Each combinator is
     * pure Catalyst — predicate leaves prune a pred-partitioned store's
     * scan, `Chain` is one equi-join, `Alt` a union-distinct, and the
-    * closures run the same semi-naive loop as [[pathPlus]]. */
+    * closures are [[pathPlus]]'s bounded closure (in one task while it fits
+    * one partition). */
   def path(triples: DataFrame, expr: PathExpr): DataFrame = expr match {
     case Pred(p) =>
       triples.filter(col("pred") === p).select(col("subj"), col("obj")).distinct()
@@ -647,7 +746,6 @@ object TripleStore {
     * reached-set frame stays node-sized and the early-drain check stops
     * paying for hops the graph doesn't have. */
   def describe(triples: DataFrame, nodes: DataFrame, hops: Int): DataFrame = {
-    import graft.plans.Pinned
     require(hops >= 0, "describe needs hops >= 0")
     val spark = triples.sparkSession
     def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
@@ -781,35 +879,145 @@ object TripleStore {
     * before the fixpoint — a truncated closure would be silently wrong
     * (same contract as connectedComponents; contrast pathPlus, where the
     * hop bound IS the query semantics). Schema frames are ontology-sized
-    * by contract and read to the driver once; ≤3 pinned frames live. The
+    * by contract and read to the driver once, as the rules' lookup tables.
+    *
+    * The instance triples are pinned once. While that pin fits one
+    * partition the same rounds run inside one task over the pinned rows
+    * ([[owlInTask]]): the query is the base pin, that task's pin and its
+    * own job, whatever the round count, and the base pin is freed. The
+    * task gives up (see [[closedInTask]]) past the byte bound, on a null
+    * key or past `maxRounds`, and the relational rounds then run from the
+    * base pin — one plan and one pin per round, every round's fresh pin
+    * live in the returned lazy union — and throw as above. The
     * transitive closure is inherently output-bounded work — on a 100 TB
     * store apply it to preds whose reachability sets are meant to be
     * materialized (hierarchies, containment), and route unbounded-graph
     * reachability questions to the hop-bounded path operators or
     * HyperBall. */
   def owlClosure(instance: DataFrame, schema: DataFrame, maxRounds: Int = 16): DataFrame = {
-    import graft.plans.Pinned
-    val spark = instance.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
+    val rules = OwlRules(schema.select(col("subj"), col("pred"), col("obj")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq)
+    val (all0, all0H) = Pinned.pinTracked(
+      instance.select(col("subj"), col("pred"), col("obj")).distinct())
+    val inTask =
+      if (rules.isEmpty || rules.preds.contains(null) || all0.schema("pred").dataType != StringType) None
+      else {
+        val keyType = all0.schema("subj").dataType
+        closedInTask(all0, all0H, Seq("subj", "obj"), all0.schema) { (rows, bound) =>
+          owlInTask(rows, keyType, rules, maxRounds, bound)
+        }
+      }
+    inTask.getOrElse(owlRounds(all0, rules, maxRounds))
+  }
 
-    // the schema is ontology-sized by contract: read it to the driver once
-    // and compile each rule's schema side into literal filters and lookups,
-    // so the rounds join only instance frames — no per-round broadcast of a
-    // schema frame, and chain-free ontologies skip the chain joins
-    val axioms = schema.select(col("subj"), col("pred"), col("obj")).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    // pred -> every q with (pred inverseOf q) or (q inverseOf pred)
-    val invOf = axioms.collect { case (p, "inverseOf", q) => Seq(p -> q, q -> p) }.flatten
-      .distinct.groupBy(_._1).map { case (p, qs) => p -> qs.map(_._2).sorted }
-    def typed(cls: String): Seq[String] =
-      axioms.collect { case (p, "type", `cls`) => p }.distinct.sorted
-    val symPreds = typed("SymmetricProperty")
-    val trnPreds = typed("TransitiveProperty")
-    // first-leg pred q -> every (head pred p, second-leg pred r)
-    val chainsOf = (for {
-      (cp, "chainFirst", cq) <- axioms
-      (cp2, "chainSecond", cr) <- axioms if cp2 == cp
-    } yield cq -> (cp, cr)).distinct.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).sorted }
+  /** The OWL rules' schema side, compiled on the driver from the axiom
+    * triples: `invOf` maps a pred to every q with (pred inverseOf q) or
+    * (q inverseOf pred), `chainsOf` a chain's first-leg pred q to every
+    * (head pred p, second-leg pred r). Keys and values are sorted. */
+  private final case class OwlRules(invOf: Map[String, Seq[String]], symPreds: Seq[String],
+                                    trnPreds: Seq[String], chainsOf: Map[String, Seq[(String, String)]]) {
+    def isEmpty: Boolean = invOf.isEmpty && symPreds.isEmpty && trnPreds.isEmpty && chainsOf.isEmpty
+    def preds: Seq[String] =
+      (invOf.keys ++ invOf.values.flatten ++ symPreds ++ trnPreds ++ chainsOf.keys ++
+        chainsOf.values.flatten.flatMap(c => Seq(c._1, c._2))).toSeq.distinct
+  }
+
+  private object OwlRules {
+    def apply(axioms: Seq[(String, String, String)]): OwlRules = {
+      def typed(cls: String): Seq[String] =
+        axioms.collect { case (p, "type", `cls`) => p }.distinct.sorted
+      OwlRules(
+        axioms.collect { case (p, "inverseOf", q) => Seq(p -> q, q -> p) }.flatten
+          .distinct.groupBy(_._1).map { case (p, qs) => p -> qs.map(_._2).sorted },
+        typed("SymmetricProperty"),
+        typed("TransitiveProperty"),
+        (for {
+          (cp, "chainFirst", cq) <- axioms
+          (cp2, "chainSecond", cr) <- axioms if cp2 == cp
+        } yield cq -> (cp, cr)).distinct.groupBy(_._1).map { case (q, v) => q -> v.map(_._2).sorted })
+    }
+  }
+
+  /** The OWL rounds inside one task over the pinned distinct `(subj, pred,
+    * obj)` rows: the relational rounds' semi-naive rules on integer-coded
+    * triples, each round deriving from the round-start closure only, so it
+    * runs the same rounds. Emits the closure in key order, or nothing
+    * (gives up, see [[closedInTask]]) on a null, past `bound` bytes, or
+    * where the relational rounds would throw for `maxRounds`. */
+  private def owlInTask(rows: Iterator[InternalRow], keyType: DataType, rules: OwlRules,
+                        maxRounds: Int, bound: Long): Iterator[InternalRow] = {
+    val base = rows.map(r => if (r.anyNull) null else (Pinned.keyAt(r, 0, keyType),
+      Pinned.keyAt(r, 1, StringType), Pinned.keyAt(r, 2, keyType))).toArray
+    if (base.contains(null)) return Iterator.empty
+    val (nodes, node) = Pinned.numbered(base.iterator.flatMap(t => Iterator(t._1, t._3)), keyType)
+    val (preds, pred) = Pinned.numbered(base.iterator.map(_._2) ++
+      rules.preds.iterator.map(UTF8String.fromString), StringType)
+    val (n, np) = (nodes.length.toLong, preds.length.toLong)
+    if (BigInt(n) * n * np > Long.MaxValue) return Iterator.empty
+    // a triple is one Long, ordered by (subj, pred, obj) like the key order
+    def code(s: Int, p: Int, o: Int): Long = (s * np + p) * n + o
+    def p(name: String): Int = pred.get(UTF8String.fromString(name)).intValue
+    val invOf = Array.fill(np.toInt)(Seq.empty[Int])
+    rules.invOf.foreach { case (a, qs) => invOf(p(a)) = qs.map(p) }
+    val sym, trn = new Array[Boolean](np.toInt)
+    rules.symPreds.foreach(a => sym(p(a)) = true)
+    rules.trnPreds.foreach(a => trn(p(a)) = true)
+    // first-leg pred -> (head, second leg); second-leg pred -> (head, first leg)
+    val firstOf, secondOf = Array.fill(np.toInt)(Seq.empty[(Int, Int)])
+    for ((q, cs) <- rules.chainsOf; (cp, cr) <- cs) {
+      firstOf(p(q)) :+= ((p(cp), p(cr)))
+      secondOf(p(cr)) :+= ((p(cp), p(q)))
+    }
+    val rowBytes = Pinned.fixedBytes(3)
+    val nodeBytes = nodes.map(Pinned.varBytes)
+    val predBytes = preds.map(Pinned.varBytes)
+    val all = mutable.HashSet.empty[Long]
+    // (pred, subj) -> objs and (pred, obj) -> subjs of the closure so far
+    val objsOf, subjsOf = mutable.LongMap.empty[mutable.ArrayBuffer[Int]]
+    var bytes = 0L
+    def add(s: Int, q: Int, o: Int): Boolean = {
+      all += code(s, q, o)
+      objsOf.getOrElseUpdate(q * n + s, mutable.ArrayBuffer.empty) += o
+      subjsOf.getOrElseUpdate(q * n + o, mutable.ArrayBuffer.empty) += s
+      bytes += rowBytes + nodeBytes(s) + predBytes(q) + nodeBytes(o)
+      bytes <= bound
+    }
+    def at(m: mutable.LongMap[mutable.ArrayBuffer[Int]], q: Int, v: Int) =
+      m.getOrElse(q * n + v, mutable.ArrayBuffer.empty[Int])
+    var delta = base.map(t => (node.get(t._1).intValue, pred.get(t._2).intValue, node.get(t._3).intValue))
+    if (!delta.forall(t => add(t._1, t._2, t._3))) return Iterator.empty
+    var round = 0
+    while (delta.nonEmpty) {
+      if (round >= maxRounds) return Iterator.empty
+      val fresh = mutable.HashSet.empty[(Int, Int, Int)]
+      def derive(s: Int, q: Int, o: Int): Unit = if (!all(code(s, q, o))) fresh += ((s, q, o))
+      for ((s, q, o) <- delta) {
+        invOf(q).foreach(i => derive(o, i, s))
+        if (sym(q)) derive(o, q, s)
+        if (trn(q)) {
+          at(objsOf, q, o).foreach(o2 => derive(s, q, o2))
+          at(subjsOf, q, s).foreach(s0 => derive(s0, q, o))
+        }
+        for ((cp, cr) <- firstOf(q)) at(objsOf, cr, o).foreach(z => derive(s, cp, z))
+        for ((cp, cq) <- secondOf(q)) at(subjsOf, cq, s).foreach(x => derive(x, cp, o))
+      }
+      round += 1
+      delta = fresh.toArray
+      if (!delta.forall(t => add(t._1, t._2, t._3))) return Iterator.empty
+    }
+    all.toArray.sorted.iterator.map { c =>
+      val o = (c % n).toInt
+      val sp = c / n
+      InternalRow(nodes((sp / np).toInt), preds((sp % np).toInt), nodes(o))
+    }
+  }
+
+  /** The OWL rules as relational semi-naive rounds from the pinned distinct
+    * instance triples `all0`: one plan and one pin per round. */
+  private def owlRounds(all0: DataFrame, rules: OwlRules, maxRounds: Int): DataFrame = {
+    val spark = all0.sparkSession
+    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
+    import rules.{chainsOf, invOf, symPreds, trnPreds}
     def predIn(ps: Iterable[String]): Column = col("pred").isin(ps.toSeq: _*)
 
     // r6 optimization (same move as boundedClosure): `all` is a LAZY UNION
@@ -817,8 +1025,6 @@ object TripleStore {
     // round instead of two, identical materialized rows, live memory still
     // exactly the closure (fresh sets are disjoint: each holds only triples
     // absent from the closure so far).
-    val (all0, _) = Pinned.pinTracked(
-      instance.select(col("subj"), col("pred"), col("obj")).distinct())
     var all = all0
     var delta = all0
     var round = 0
@@ -916,90 +1122,86 @@ object TripleStore {
     * rule subset: property closure first (inherited edges can trigger
     * domain/range of superproperties), then domain/range typing, then type
     * inheritance through the class closure. `schema` holds the ontology
-    * triples (`subClassOf` / `subPropertyOf` / `domain` / `range` preds);
-    * it is ontology-sized BY CONTRACT (a KB, not a corpus) — its closures
-    * run on node-sized frames (`maxDepth` bounds hierarchy depth) and
-    * broadcast onto the instance side, so the instance graph shuffles only
-    * for the final distinct. Returns asserted ∪ entailed, set semantics. */
+    * triples (`subClassOf` / `subPropertyOf` / `domain` / `range` preds,
+    * plus `equivalentClass` / `equivalentProperty`); it is ontology-sized
+    * BY CONTRACT (a KB, not a corpus) — it is read to the driver once, its
+    * hierarchies are closed there (`maxDepth` bounds their depth), and the
+    * closed hierarchies and domain/range tables ride the per-triple pass
+    * as lookup maps. For this rule subset each instance triple's
+    * entailments depend only on itself and the closed schema (the spec
+    * "rdfs closure is per-triple local"), so the closure is ONE pass that
+    * maps every instance triple to itself plus its entailments and one
+    * distinct: no join, and the instance graph shuffles only for that
+    * distinct. Returns asserted ∪ entailed, set semantics. */
   def rdfsClosure(instance: DataFrame, schema: DataFrame, maxDepth: Int): DataFrame = {
+    val spark = instance.sparkSession
+    import spark.implicits._
+    val axioms = schema.select(col("subj"), col("pred"), col("obj")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    def pairs(pred: String): Seq[(String, String)] =
+      axioms.collect { case (a, `pred`, b) => (a, b) }.distinct
     // OWL RL cax-eqc1/2 + prp-eqp1/2: equivalence IS bidirectional
     // subsumption — expand each equivalence axiom into both sub-axiom
     // directions BEFORE closing the hierarchies, so equivalent classes/
     // properties form a 2-cycle of the sub* graph and entail both ways
-    // (boundedClosure's semi-naive anti-join terminates on cycles; the
-    // resulting self-subsumptions are absorbed by the final distinct).
-    def eqAsSub(eqPred: String, subPred: String): DataFrame = {
-      val eq = schema.filter(col("pred") === eqPred)
-      eq.select(col("subj"), lit(subPred).as("pred"), col("obj"))
-        .unionAll(eq.select(col("obj").as("subj"),
-          lit(subPred).as("pred"), col("subj").as("obj")))
-    }
-    val schemaX = schema
-      .unionAll(eqAsSub("equivalentClass", "subClassOf"))
-      .unionAll(eqAsSub("equivalentProperty", "subPropertyOf"))
-    // The hierarchy closures run ON THE DRIVER (r6 optimization): the schema
-    // is ontology-sized BY CONTRACT (a KB, not a corpus) and the closed
-    // hierarchies were ALREADY collected to the driver implicitly — every
-    // consumer below broadcasts them — so closing locally is strictly no
-    // more driver memory than before, and it replaces two distributed
-    // semi-naive loops (2 pins + 1 emptiness probe per hop, per hierarchy)
-    // with zero Spark jobs (the guard is loud, not silent truncation).
-    // Semantics are IDENTICAL to boundedClosure: all (a, b) pairs connected
-    // by 1..maxDepth hops, BFS first-discovery, cycles allowed (equivalence
-    // 2-cycles yield the same self-subsumptions the final distinct absorbs).
-    val spark = instance.sparkSession
-    import spark.implicits._
-    def closureOf(pred: String): DataFrame = {
-      val rows = schemaX.filter(col("pred") === pred)
-        .select(col("subj"), col("obj")).distinct().collect()
-      require(rows.length <= 4000000,
-        s"schema hierarchy '$pred' has ${rows.length} edges — not ontology-sized; " +
-          "rdfsClosure's broadcast contract does not hold for corpus-scale schemas")
-      val adj = rows.iterator.map(r => (r.getString(0), r.getString(1))).toArray
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-      val out = Seq.newBuilder[(String, String)]
-      adj.keysIterator.foreach { start =>
-        val seen = scala.collection.mutable.Set.empty[String]
-        var frontier = adj(start)
-        frontier.foreach { n => out += ((start, n)); seen += n }
-        var d = 1
-        while (d < maxDepth && frontier.nonEmpty) {
-          val next = frontier.flatMap(n => adj.getOrElse(n, Set.empty)) -- seen
-          next.foreach { n => out += ((start, n)); seen += n }
-          frontier = next
-          d += 1
+    // (the BFS below terminates on cycles; the resulting self-subsumptions
+    // are absorbed by the final distinct).
+    def hierarchy(subPred: String, eqPred: String): Map[String, Seq[String]] =
+      closed(pairs(subPred) ++ pairs(eqPred).flatMap { case (a, b) => Seq((a, b), (b, a)) },
+        subPred, maxDepth)
+    val supProps = hierarchy("subPropertyOf", "equivalentProperty")
+    val supClasses = hierarchy("subClassOf", "equivalentClass")
+    def table(pred: String): Map[String, Seq[String]] =
+      pairs(pred).groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    val (domains, ranges) = (table("domain"), table("range"))
+
+    // a null key matches no axiom, as it joins no schema row
+    def at(m: Map[String, Seq[String]], k: String): Seq[String] =
+      if (k == null) Nil else m.getOrElse(k, Nil)
+    instance.select(col("subj"), col("pred"), col("obj")).as[(String, String, String)]
+      .flatMap { case (s, p, o) =>
+        if (p == null) Seq((s, p, o))
+        else {
+          // rdfs7 over the CLOSED property hierarchy
+          val props = p +: supProps.getOrElse(p, Nil)
+          // rdfs2/rdfs3 over the extended edges, plus the type edges among them
+          val types = props.flatMap { q =>
+            (if (q == "type") Seq((s, o)) else Nil) ++
+              at(domains, q).map((s, _)) ++ at(ranges, q).map((o, _))
+          }
+          // rdfs9 over the CLOSED class hierarchy
+          val lifted = types.flatMap { case (x, c) => at(supClasses, c).map((x, _)) }
+          (props.map((s, _, o)) ++ (types ++ lifted).map { case (x, c) => (x, "type", c) }).distinct
         }
       }
-      out.result().toDF("subj", "obj")
+      .toDF("subj", "pred", "obj")
+      .distinct()
+  }
+
+  /** The hierarchy `edges` closed ON THE DRIVER: every node with an edge
+    * mapped to the nodes it reaches in 1..maxDepth hops, BFS order, cycles
+    * allowed (a node on a cycle reaches itself). The schema is
+    * ontology-sized by contract; the guard is loud, not silent truncation. */
+  private def closed(edges: Seq[(String, String)], pred: String,
+                     maxDepth: Int): Map[String, Seq[String]] = {
+    val uniq = edges.distinct
+    require(uniq.length <= 4000000,
+      s"schema hierarchy '$pred' has ${uniq.length} edges — not ontology-sized; " +
+        "rdfsClosure's driver-side closure does not hold for corpus-scale schemas")
+    val adj = uniq.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    adj.map { case (start, direct) =>
+      val out = Seq.newBuilder[String]
+      val seen = mutable.Set.empty[String]
+      var frontier = direct
+      frontier.foreach { n => out += n; seen += n }
+      var d = 1
+      while (d < maxDepth && frontier.nonEmpty) {
+        val next = frontier.flatMap(n => adj.getOrElse(n, Set.empty)) -- seen
+        next.foreach { n => out += n; seen += n }
+        frontier = next
+        d += 1
+      }
+      start -> out.result()
     }
-    val subProp = closureOf("subPropertyOf")
-    val subClass = closureOf("subClassOf")
-
-    // rdfs7 over the CLOSED property hierarchy
-    val inherited = instance.join(
-        broadcast(subProp.select(col("subj").as("pred"), col("obj").as("sup"))),
-        Seq("pred"))
-      .select(col("subj"), col("sup").as("pred"), col("obj"))
-    val ext = instance.unionAll(inherited)
-
-    // rdfs2/rdfs3 over the extended edge set
-    val dom = schema.filter(col("pred") === "domain")
-      .select(col("subj").as("pred"), col("obj").as("cls"))
-    val ran = schema.filter(col("pred") === "range")
-      .select(col("subj").as("pred"), col("obj").as("cls"))
-    val typedDom = ext.join(broadcast(dom), Seq("pred"))
-      .select(col("subj"), lit("type").as("pred"), col("cls").as("obj"))
-    val typedRan = ext.join(broadcast(ran), Seq("pred"))
-      .select(col("obj").as("subj"), lit("type").as("pred"), col("cls").as("obj"))
-
-    // rdfs9 over the CLOSED class hierarchy, fed by asserted + derived types
-    val allTypes = ext.filter(col("pred") === "type")
-      .unionAll(typedDom).unionAll(typedRan)
-    val upTypes = allTypes.join(
-        broadcast(subClass.select(col("subj").as("obj"), col("obj").as("sup"))),
-        Seq("obj"))
-      .select(col("subj"), col("pred"), col("sup").as("obj"))
-
-    ext.unionAll(typedDom).unionAll(typedRan).unionAll(upTypes).distinct()
   }
 }

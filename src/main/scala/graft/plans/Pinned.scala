@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.graft.PinnedPlans
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Partition-pinning materialization for the iterative/scan operators
@@ -104,7 +105,10 @@ object Pinned {
     * (`Rounds.single`), where a relational round would be one job of
     * planning and launch over a few KB. A kernel must return a function of
     * its inputs' row SETS (not their order), so a retried task pins the
-    * same rows. */
+    * same rows. A kernel whose output grows while it runs (the closures)
+    * sums its rows' [[fixedBytes]]/[[varBytes]] and gives up by returning
+    * no rows once they pass `spark.sql.maxSinglePartitionBytes`; its
+    * caller then runs the relational rounds. */
   def inTask(schema: StructType, pins: DataFrame*)(
       kernel: Seq[Iterator[InternalRow]] => Iterator[InternalRow]): DataFrame = {
     val spark = pins.head.sparkSession
@@ -142,6 +146,20 @@ object Pinned {
     val sorted = index.keySet.toArray.asInstanceOf[Array[Any]].sorted(TypeUtils.getInterpretedOrdering(dt))
     sorted.indices.foreach(i => index.put(sorted(i), i))
     (sorted, index)
+  }
+
+  /** The fixed bytes of an `UnsafeRow` of `fields` fields (null bitset and
+    * one 8-byte slot each) and the word-aligned variable bytes of a key read
+    * by [[keyAt]] (a string's; 0 for any fixed-width key). A row's bytes are
+    * the first plus the second of each of its keys: what [[inTask]]'s pin
+    * measures for it, so a kernel whose output grows can stop once the sum
+    * passes `spark.sql.maxSinglePartitionBytes`. */
+  def fixedBytes(fields: Int): Long =
+    UnsafeRow.calculateBitSetWidthInBytes(fields) + 8L * fields
+
+  def varBytes(key: Any): Long = key match {
+    case s: UTF8String => ByteArrayMethods.roundNumberOfBytesToNearestWord(s.numBytes)
+    case _ => 0L
   }
 
   /** Mark `rdd` for its pin (reliable checkpoint in durable mode,
@@ -198,13 +216,17 @@ object Pinned {
   /** Round planning for a loop over pinned frames. When a round reads only
     * one-partition pins that together fit one partition (every KB-sized
     * graph frame does under AQE's partition coalescing), the round is
-    * [[single]]. The node-state loops (HITS, PageRank, PPR, connected
-    * components) then run whole in one task ([[inTask]]) and never plan a
-    * round. The growing closures (reach, the bounded closure, the OWL
-    * closure) still plan each round, with no exchange and no broadcast — one
-    * job, the round's pin — if the planner sees exact single-partition
-    * inputs on every join and aggregation. Spark keeps a join exchange-free
-    * only when its inputs report exactly `SinglePartition` AND each input's
+    * [[single]]. The loops then run whole in one task ([[inTask]]) and
+    * never plan a round: the node-state loops (HITS, PageRank, PPR,
+    * connected components) and the growing closures (the bounded closure
+    * under reach and the property paths, the OWL closure). The helpers
+    * below serve the relational rounds that remain: every loop past the
+    * bound, and a closure whose kernel gave up — its closure outgrew the
+    * bound, it met a null key, or (OWL) it needed more than `maxRounds`.
+    * Such a round is planned with no exchange and no broadcast — one job,
+    * the round's pin — if the planner sees exact single-partition inputs
+    * on every join and aggregation. Spark keeps a join exchange-free only
+    * when its inputs report exactly `SinglePartition` AND each input's
     * size estimate fits `spark.sql.maxSinglePartitionBytes`; estimates of
     * join outputs are size products, so the closures join measured pins (or
     * projections, filters and unions of them) only, and combine derived

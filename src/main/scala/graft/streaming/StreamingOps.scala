@@ -304,8 +304,10 @@ object StreamingOps {
     * stratified rule subset each instance triple's entailments depend only
     * on itself plus the schema closure, so union-of-per-batch-closures ==
     * closure-of-the-union — the standing entailed store never needs
-    * recomputation as triples stream in. The schema is ontology-sized and
-    * broadcast inside rdfsClosure; per-batch work is delta-sized.
+    * recomputation as triples stream in. The schema is ontology-sized:
+    * rdfsClosure reads it to the driver and closes it once per batch, and
+    * maps each of the batch's triples to its entailments in one pass, so
+    * per-batch work is delta-sized.
     *
     * Append-mode duplicates across batches are possible (two batches can
     * entail the same triple); a triple store is a SET, so dedup belongs to

@@ -17,10 +17,11 @@ import graft.operators.{Dedup, Graph, TripleStore}
 import graft.plans.Pinned
 
 /** Measured pins and what they enable: a pin's plan carries its measured
-  * size and (for one partition) `SinglePartition`; HITS, PageRank, PPR and
-  * connected components then run whole inside one task, and the closure
-  * loops run each round as exactly one Spark job; handles name only their
-  * own storage (concurrent loops in one session no longer free each
+  * size and (for one partition) `SinglePartition`; HITS, PageRank, PPR,
+  * connected components and the reach, path and OWL closures then run
+  * whole inside one task, and a closure that outgrows the bound gives up
+  * and runs its relational rounds, one Spark job each; handles name only
+  * their own storage (concurrent loops in one session no longer free each
   * other's pins); and the relational rounds give bit-identical outputs and
   * fail alike. */
 class PinnedRoundsSpec extends SparkTestBase {
@@ -142,7 +143,7 @@ class PinnedRoundsSpec extends SparkTestBase {
     }
   }
 
-  test("one job per loop for HITS, PageRank, PPR and CC; one per closure hop") {
+  test("one job per loop: HITS, PageRank, PPR, CC and the reach, path, OWL closures") {
     val e = one(graph)
     // in one task: the edge pin, the kernel's pin and the collect, whatever
     // the round count (PPR adds the source pin)
@@ -158,20 +159,22 @@ class PinnedRoundsSpec extends SparkTestBase {
     assert(Seq(pr(2), pr(5)) == Seq(3, 3))
     assert(Seq(ppr(2), ppr(4)) == Seq(4, 4))
     assert(Seq(cc(4), cc(32)) == Seq(3, 3))
-    // a 12-edge path never drains early within 6 hops
+    // the growing closures: the base pin, the kernel's pin and the collect.
+    // A 12-edge path never drains early within 6 hops, so relational rounds
+    // would take one job per hop
     val path = one(chain(12))
     def reach(k: Int) = jobsOf(Graph.reach(path, maxHops = k).collect())
     def plus(k: Int) = jobsOf(TripleStore.pathPlus(
       triples(chain(12), "p").coalesce(1), "p", maxHops = k).collect())
     // transitive closure of an m-edge path: semi-naive doubling finds the
     // paths up to length 2^k in round k, and round ceil(log2 m) + 1 drains
-    // (m = 2: 2 rounds; m = 8: 4 rounds)
+    // (m = 2: 2 rounds; m = 8: 4 rounds), all inside the one task
     val schema = Seq(("p", "type", "TransitiveProperty")).toDF("subj", "pred", "obj")
     def owl(m: Int) = jobsOf(TripleStore.owlClosure(
       triples(chain(m), "p").coalesce(1), schema).collect())
-    assert(reach(6) - reach(3) == 3)
-    assert(plus(6) - plus(3) == 3)
-    assert(owl(8) - owl(2) == 2)
+    assert(Seq(reach(3), reach(6)) == Seq(3, 3))
+    assert(Seq(plus(3), plus(6)) == Seq(3, 3))
+    assert(Seq(owl(2), owl(8)) == Seq(3, 3))
     assert(TripleStore.owlClosure(triples(chain(8), "p"), schema).count() == 8L * 9 / 2)
   }
 
@@ -179,13 +182,17 @@ class PinnedRoundsSpec extends SparkTestBase {
     def all(e: DataFrame, t: DataFrame): Seq[Seq[Row]] = {
       val schema = Seq(("p", "type", "TransitiveProperty"), ("p", "inverseOf", "q"),
         ("q", "type", "SymmetricProperty")).toDF("subj", "pred", "obj")
+      val rdfsSchema = Seq(("p", "subPropertyOf", "q"), ("q", "domain", "D"), ("p", "range", "R"),
+        ("D", "subClassOf", "E")).toDF("subj", "pred", "obj")
       Seq(
         rowsOf(Graph.hits(e, iters = 5)),
         rowsOf(Graph.pageRank(e, iters = 8)),
         rowsOf(Graph.personalizedPageRank(e, Seq("n00", "n05").toDF("node"), iters = 4)),
         rowsOf(Graph.reach(e, maxHops = 3)),
         rowsOf(TripleStore.pathPlus(t, "p", maxHops = 3)),
+        rowsOf(TripleStore.path(t, TripleStore.Star(TripleStore.Pred("p"), maxHops = 2))),
         rowsOf(TripleStore.owlClosure(t, schema)),
+        rowsOf(TripleStore.rdfsClosure(t, rdfsSchema, maxDepth = 3)),
         rowsOf(Graph.wcc(e)),
         rowsOf(TripleStore.canonicalize(t, e.filter(col("w") > 5L)
           .select(col("src").as("a"), col("dst").as("b")))))
@@ -265,6 +272,52 @@ class PinnedRoundsSpec extends SparkTestBase {
       // a 40-hop reach switches regime midway and returns the same rows
       assert(rowsOf(Graph.reach(path, maxHops = 40)) == expected)
     }
+  }
+
+  test("a closure that outgrows the bound gives up in its task and returns the relational rows") {
+    val path = chain(40)
+    val t = triples(path, "p").coalesce(1)
+    val schema = Seq(("p", "type", "TransitiveProperty")).toDF("subj", "pred", "obj")
+    val base = Pinned.pin(t)
+    def bytes(p: DataFrame) = PinnedPlans.pinnedRelation(p).get.stats.sizeInBytes
+    // the 40-triple base fits the bound, its 820-triple closure does not
+    val bound = bytes(base) * 4
+    def run() = Seq(
+      rowsOf(TripleStore.pathPlus(t, "p", maxHops = 40)),
+      rowsOf(TripleStore.owlClosure(t, schema)))
+    val inTask = run()
+    val relational = withConf("spark.sql.maxSinglePartitionBytes", "1")(run())
+    val (gaveUp, jobs) = withConf("spark.sql.maxSinglePartitionBytes", bound.toString) {
+      assert(Pinned.rounds(Pinned.pin(t.filter(col("pred") === "p").select(col("subj"), col("obj")))).single)
+      assert(Pinned.rounds(base).single)
+      var out: Seq[Seq[Row]] = null
+      val n = jobsOf { out = run() }
+      (out, n)
+    }
+    assert(inTask.map(_.size) == Seq(820, 820))
+    assert(gaveUp == relational && inTask == relational)
+    // the relational rounds ran after the kernel's empty pin: more than the
+    // in-task 2 x 3 jobs
+    assert(jobs > 6, s"$jobs jobs")
+    // converge-or-throw holds in both regimes: the kernel gives up where the
+    // rounds would pass maxRounds, and the relational rounds throw
+    val (e1, e2) = bothRegimes(intercept[IllegalStateException](
+      TripleStore.owlClosure(triples(chain(8), "p").coalesce(1), schema, maxRounds = 2)).getMessage)
+    assert(e1 == e2)
+  }
+
+  test("null keys: every closure gives the same rows in both regimes") {
+    val es = chain(6) ++ Seq((null, "n02", 1L), ("n03", null, 1L), ("n04", "n00", 1L))
+    val t = triples(es, "p").coalesce(1)
+      .unionAll(Seq(("n01", null: String, "n05")).toDF("subj", "pred", "obj"))
+    val schema = Seq(("p", "type", "TransitiveProperty"), ("p", "inverseOf", "q"))
+      .toDF("subj", "pred", "obj")
+    val (a, b) = bothRegimes(Seq(
+      rowsOf(Graph.reach(one(es), maxHops = 4)),
+      rowsOf(TripleStore.pathPlus(t, "p", maxHops = 4)),
+      rowsOf(TripleStore.owlClosure(t.coalesce(1), schema))))
+    assert(a == b)
+    assert(a(1).exists(_.isNullAt(0)) && a(2).exists(_.isNullAt(1)))
   }
 
   test("Tuning.compact reads the materialized partition count and rejects an unmaterialized frame") {
