@@ -12,7 +12,9 @@ package graft
   * @param salts         salt fan-out for the skewed co-occurrence groupBy (I1)
   * @param kSenses       number of senses to induce per entity
   * @param minSenseScore assignment confidence floor: below it no hasSense triple
-  * @param method        "nmf" (ALS-based distributed NMF) | "hclust" (BisectingKMeans)
+  * @param method        "nmf" (ThinNMF: thin-matrix alternating-NNLS NMF) |
+  *                      "hclust" (distributed bisecting k-means); any other
+  *                      value is rejected
   * @param broadcastDictMaxRows  adaptive ceiling: term-statistics dictionaries
   *                      smaller than this are broadcast (BASELINE.json:6 mandate);
   *                      larger ones fall back to a shuffle join.
@@ -42,7 +44,6 @@ final case class WsidConfig(
     seed: Long = 42L,
     maxDocChars: Int = 16 * 1024 * 1024,
     nmfMaxIter: Int = 5,
-    nmfRegParam: Double = 0.01,
     broadcastDictMaxRows: Long = 2000000L,
     descriptorFallback: Boolean = true,
     modelBytesBudget: Long = 512L * 1024 * 1024,
@@ -50,6 +51,8 @@ final case class WsidConfig(
       * hclust analogue of nmfMaxIter, previously a hardcoded 10. */
     hclustIters: Int = 10
 ) {
+  require(method == "nmf" || method == "hclust",
+    s"unknown sense method '$method' (expected \"nmf\" or \"hclust\")")
 
   /** Canonical, ORDER-INDEPENDENT rendering for cache keys and checkpoint
     * fingerprints. `Set#toString` renders in hash/insertion order, so a raw

@@ -53,29 +53,29 @@ object CurationQueries {
     * (session, input) (r6): the two consumers each re-tokenized the corpus
     * twice (full + target slice) per invocation for the same
     * document-sized weight frame. */
-  private val dsirMemo = new Memo.BoundedMemo[DataFrame](_.unpersist(false))
+  private val dsirMemo = Memo.pinMemo()
   private def dsirWeightFrame(s: SparkSession, d: String): DataFrame =
     dsirMemo.getOrBuild((s, s"$d|dsirweights")) {
       val aug = dsirAug(s, d)
       val feats = Curation.bucketCounts(toTok(aug), DsirB)
       val tgtFeats = Curation.bucketCounts(
         toTok(aug.filter(col("docid").cast("long") % 7 === 0)), DsirB)
-      graft.plans.Pinned.pin(
+      graft.plans.Pinned.pinTracked(
         Curation.dsirWeights(feats, Curation.dsirDeltas(feats, tgtFeats, DsirB)))
-    }
+    }._1
 
   /** Pinned once per (session, input) (r6): the feature frame is the
     * shared prefix of LR training (warm phase), q_lr_score and
     * q_select_classifier — each invocation re-tokenized the corpus for the
     * same document-sized hashed-presence frame. */
-  private val lrFeatMemo = new Memo.BoundedMemo[DataFrame](_.unpersist(false))
+  private val lrFeatMemo = Memo.pinMemo()
   private def lrFeat(s: SparkSession, d: String): DataFrame =
     lrFeatMemo.getOrBuild((s, s"$d|lrfeat")) {
       val aug = lrAug(s, d)
-      graft.plans.Pinned.pin(
+      graft.plans.Pinned.pinTracked(
         Curation.presenceFeatures(toTok(aug), LrB)
           .join(aug.select("docid", "y"), "docid"))
-    }
+    }._1
 
   /** The trained model is pure driver data (B+1 longs) with no session
     * references, so it memoizes safely per sf dir — q_lr_train and

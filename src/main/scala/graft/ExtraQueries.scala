@@ -28,18 +28,22 @@ object ExtraQueries {
     * slice per invocation; the handful of distinct conditions (full corpus,
     * the <30/<40/<200 fixture slices) now share one cached columnar copy
     * each — the same shared-projection economics as Memo.tokDocsOf, bounded
-    * by the same LRU memo class. */
+    * by the same LRU memo class. The build materializes the cache (as
+    * Memo.kgEdgesOf does): left lazy, concurrent stages of one query that
+    * read the frame twice would each tokenize the same partition. */
   private val tdwMemo = new Memo.BoundedMemo[Dataset[TokDoc]](_.unpersist(false))
   private def tokdocsWhere(spark: SparkSession, sfDir: String,
                            cond: org.apache.spark.sql.Column): Dataset[TokDoc] = {
     import spark.implicits._
     tdwMemo.getOrBuild((spark, s"$sfDir|tdw|${cond.toString}")) {
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      val td = spark.read.parquet(s"$sfDir/documents.parquet")
         .filter(cond)
         .select(col("doc_id").cast("string").as("docid"), col("text"))
         .as[(String, String)]
         .map { case (id, t) => TokDoc(id, Tokenize.tokensOf(t, Set.empty)) }
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      td.count()
+      td
     }
   }
 
@@ -136,13 +140,13 @@ object ExtraQueries {
     * (session, input) and pinned node-sized (r6; same registry economics as
     * the bpe/lr/costats memos — the first consumer pays the build, every
     * later invocation reads the assignment). */
-  private val ccMemo = new Memo.BoundedMemo[DataFrame](_.unpersist(false))
+  private val ccMemo = Memo.pinMemo()
   private def plantedClusters(s: SparkSession, d: String): DataFrame =
     ccMemo.getOrBuild((s, s"$d|plantedcc")) {
-      graft.plans.Pinned.pin(
+      graft.plans.Pinned.pinTracked(
         Dedup.nearDupClusters(
           Dedup.ngramJaccardPairs(tdWithPlantedNearDups(s, d), 2, 0.85)))
-    }
+    }._1
 
   /** SQL replay of tdWithPlantedNearDups — shared by the q_dedup_cc and
     * q_dedup_substring oracles so the fixture can never silently diverge

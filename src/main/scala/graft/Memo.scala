@@ -6,6 +6,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.Tokenize
+import graft.plans.Pinned
+
+import scala.jdk.CollectionConverters._
 
 /** Process-lifetime memo behind the driver-contract query registry.
   *
@@ -27,9 +30,15 @@ import graft.operators.Tokenize
   */
 object Memo {
 
+  /** Every BoundedMemo constructed in this JVM, newest first. A memo built
+    * over another memo's frames is declared after it, so walking newest
+    * first drops dependents before the frames they read. */
+  private val registry = new java.util.concurrent.CopyOnWriteArrayList[BoundedMemo[_]]()
+
   /** Bounded access-ordered memo; stopped sessions purged on every access
     * (their persisted frames died with the session — no unpersist needed or
-    * safe), LRU entries evicted WITH unpersist once size exceeds the cap.
+    * safe), LRU entries released through `onEvict` (unpersist, or
+    * `Pinned.free` for a [[pinMemo]]) once size exceeds the cap.
     *
     * Builds run OUTSIDE the map lock behind a per-key latch (ADVICE r3 #4):
     * the map lock only guards lookups/puts (microseconds), concurrent
@@ -37,8 +46,13 @@ object Memo {
     * its result, and a second SparkSession in the same JVM building a
     * DIFFERENT key proceeds in parallel instead of blocking on an unrelated
     * session's minutes-long model build. A failed build propagates to its
-    * waiters and clears the latch so a retry can rebuild. */
+    * waiters and clears the latch so a retry can rebuild.
+    *
+    * Every memo registers itself on construction, so [[invalidate]] and
+    * [[totalEntries]] reach memos declared outside this object too. */
   private[graft] final class BoundedMemo[V](onEvict: V => Unit) {
+    registry.add(0, this)
+
     private def maxEntries: Int =
       sys.props.getOrElse("graft.memo.max", "8").toInt
 
@@ -113,9 +127,14 @@ object Memo {
   private val ivfMemo = new BoundedMemo[Array[Array[Double]]](_ => ())
   private val bpeMemo = new BoundedMemo[Seq[(Long, String, String, Long)]](_ => ())
 
+  /** A memo of `Pinned.pinTracked` frames. A pin is not in the cache
+    * manager, so `unpersist` would not release it: eviction frees the
+    * pin's blocks or its checkpoint directory through its Handle. */
+  private[graft] def pinMemo(): BoundedMemo[(DataFrame, Pinned.Handle)] =
+    new BoundedMemo[(DataFrame, Pinned.Handle)]({ case (df, h) => Pinned.free(df.sparkSession, h) })
+
   /** Total live entries across all memos (test hook for the LRU bound). */
-  private[graft] def totalEntries: Int =
-    tokdocsMemo.size + costatsMemo.size + modelMemo.size + ivfMemo.size + bpeMemo.size
+  private[graft] def totalEntries: Int = registry.asScala.iterator.map(_.size).sum
 
   /** Version key for the on-disk model cache, derived from the BYTECODE of
     * the classes that pin induction semantics (tokenizer, counting,
@@ -358,14 +377,5 @@ object Memo {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** Drop every memoized artifact for a session (test hygiene). */
-  def invalidate(spark: SparkSession): Unit = {
-    l3Memo.invalidate(spark)
-    rankedMemo.invalidate(spark)
-    costatsMemo.invalidate(spark)
-    tokdocsMemo.invalidate(spark)
-    modelMemo.invalidate(spark)
-    ivfMemo.invalidate(spark)
-    bpeMemo.invalidate(spark)
-    edgesMemo.invalidate(spark)
-  }
+  def invalidate(spark: SparkSession): Unit = registry.forEach(_.invalidate(spark))
 }

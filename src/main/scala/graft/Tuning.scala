@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   * stages still get (bytes / advisory) ≫ core-count partitions — nothing
   * here is tuned to the local core count.
   *
-  * Every value is env-overridable; `GRAFT_TUNE=off` disables the whole
-  * hook (the session then runs exactly as the caller built it). */
+  * The values are constants: each is the one the engine's outputs, plans
+  * and benchmarks are measured under. */
 object Tuning {
 
   /** Size-adaptive narrow compaction of an already-materialized (persisted
@@ -59,28 +59,21 @@ object Tuning {
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Idempotent per session; a no-op when GRAFT_TUNE=off. */
+  /** Idempotent per session. */
   def ensure(spark: SparkSession): Unit = {
-    if (sys.env.get("GRAFT_TUNE").contains("off")) return
     if (!applied.add(spark)) return
-    def env(k: String, dflt: String) = sys.env.getOrElse(k, dflt)
     val c = spark.conf
     // §2.2: respect the advisory post-shuffle partition size instead of
     // pinning post-shuffle parallelism at the core count. Locally this
     // collapses KB-sized exchanges to one task; at scale the same setting
     // yields (stage bytes / advisory) partitions.
-    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      env("GRAFT_AQE_PARALLELISM_FIRST", "false"))
-    // §2.2/§9: 64 MB advisory locally (Spark's default); production
-    // clusters raise it via env (the guide's 100 MB–1 GB band).
-    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      env("GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
+    c.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    // §2.2/§9: 64 MB advisory (Spark's default).
+    c.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     // §3.1: let the planner pick shuffled-hash over sort-merge when the
     // per-partition build side fits, and let AQE demote sort-merge joins
     // to shuffled-hash at runtime for small stages.
-    c.set("spark.sql.join.preferSortMergeJoin",
-      env("GRAFT_PREFER_SMJ", "false"))
-    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      env("GRAFT_SHJ_LOCALMAP_THRESHOLD", "64m"))
+    c.set("spark.sql.join.preferSortMergeJoin", "false")
+    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
   }
 }

@@ -1,6 +1,5 @@
 package graft.ml
 
-import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,15 +11,12 @@ import graft.WsidConfig
   * Default method "nmf" is the thin-matrix alternating-NNLS NMF (ThinNMF):
   * one data pass per iteration, driver-solved H — the shape-aware choice for
   * A(ctx x term) with ctx ~ 10^9+ and term <= topK (wsid's NMF ancestry:
-  * Van de Cruys & Apidianaki, ACL 2011). Alternatives:
-  *  - "als": nonnegative explicit-feedback ALS — ONE composite block-diagonal
-  *    fit for all entities (entity-offset item ids), jobs independent of the
-  *    entity count;
-  *  - "hclust": distributed bisecting k-means (BisectingSenses) on
-  *    L2-normalized vectors, all entities split in the same passes, cluster
-  *    centers standing in for H.
+  * Van de Cruys & Apidianaki, ACL 2011). The alternative "hclust" is
+  * distributed bisecting k-means (BisectingSenses) on L2-normalized
+  * vectors, all entities split in the same passes, cluster centers standing
+  * in for H.
   *
-  * All methods converge on the same artifact: the per-entity k x m sense
+  * Both methods converge on the same artifact: the per-entity k x m sense
   * matrix H, from which senseVec (long form) and the fused assignment pass
   * both derive.
   */
@@ -45,22 +41,14 @@ object SenseInduction {
   def senseMatrix(spark: SparkSession, grouped: org.apache.spark.rdd.RDD[ThinNMF.Ctx],
                   cfg: WsidConfig): DataFrame = {
     val h: Map[String, ThinNMF.H] = cfg.method match {
-      case "als" => alsH(spark, longForm(spark, grouped), cfg)
       case "hclust" =>
         BisectingSenses.fitSharded(grouped, spark, cfg.kSenses, cfg.hclustIters,
           cfg.seed, cfg.modelBytesBudget)
-      case _ =>
+      case "nmf" =>
         ThinNMF.fitSharded(grouped, spark, cfg.kSenses, cfg.nmfMaxIter, cfg.seed,
           cfg.modelBytesBudget)
     }
     ThinNMF.senseVecDF(spark, h)
-  }
-
-  /** Long-form view of grouped context rows (entity, ctxid, termid, w). */
-  def longForm(spark: SparkSession, grouped: org.apache.spark.rdd.RDD[ThinNMF.Ctx]): DataFrame = {
-    import spark.implicits._
-    grouped.flatMap(c => c.termids.zip(c.ws).map { case (t, w) => (c.entity, c.ctxid, t, w) })
-      .toDF("entity", "ctxid", "termid", "w")
   }
 
   /** Rebuild the broadcastable H map from a (possibly checkpointed) senseVec
@@ -74,75 +62,6 @@ object SenseInduction {
       rs.foreach(r => h(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
       e -> h
     }
-  }
-
-  /** M1-alt: NMF as nonnegative ALS — ONE composite fit for every entity.
-    * Entities share no observed cells, so the joint problem is
-    * block-diagonal: item ids are entity-offset termids, user ids are dense
-    * (entity, ctxid) codes, and a single rank-k explicit-feedback ALS
-    * factorizes all blocks at once (the squared loss and the per-row normal
-    * equations decompose exactly per block, because a user's equations touch
-    * only the items it rated). Spark jobs per iteration are therefore
-    * independent of the entity count — round 1 ran one ALS per entity. */
-  private def alsH(spark: SparkSession, ctxvec: DataFrame, cfg: WsidConfig): Map[String, ThinNMF.H] = {
-    import spark.implicits._
-    val k = cfg.kSenses
-    // per-entity term dims -> contiguous item-id offsets (dictionary-sized)
-    val ms = ctxvec.groupBy("entity").agg(max(col("termid")).as("m"))
-      .as[(String, Int)].collect().map { case (e, mMax) => e -> (mMax + 1) }.toMap
-    if (ms.isEmpty) return Map.empty
-    val entities = ms.keys.toSeq.sorted
-    // accumulate in Long FIRST: an Int scanLeft would wrap silently and the
-    // overflow check below would pass on the wrapped value
-    val offLong = entities.scanLeft(0L)((acc, e) => acc + ms(e)).dropRight(1)
-    require(offLong.last + ms(entities.last) <= Int.MaxValue,
-      "composite item id space exceeds Int — shard entities")
-    val offArr = offLong.map(_.toInt).toArray
-    val offsetDF = entities.zip(offArr).toDF("entity", "off")
-
-    // dense Int user ids over (entity, ctxid), DETERMINISTIC under
-    // recompute: ids come from the checkpoint-pinned two-phase global
-    // position scan over the (entity, ctxid) total order. The previous
-    // zipWithUniqueId form depended on within-partition element order,
-    // which a task retry / cache-evicted recompute of the distinct() can
-    // permute — the same context would then enter different ALS rating
-    // blocks under different cids, silently corrupting the factorization.
-    val (posDF, total) = graft.operators.Mixing.withGlobalPositions(
-      ctxvec.select("entity", "ctxid").distinct(), Seq("entity", "ctxid"))
-    require(total <= Int.MaxValue, "context id space exceeds Int — shard entities")
-    val users = posDF
-      .select(col("entity"), col("ctxid"), (col("pos") - 1).cast("int").as("cid"))
-    val ratings = ctxvec.join(users, Seq("entity", "ctxid"))
-      .join(broadcast(offsetDF), Seq("entity"))
-      .select(col("cid"), (col("off") + col("termid")).cast("int").as("item"),
-        col("w").cast("float").as("rating"))
-
-    val als = new ALS()
-      .setUserCol("cid").setItemCol("item").setRatingCol("rating")
-      .setRank(k)
-      .setMaxIter(cfg.nmfMaxIter)
-      .setRegParam(cfg.nmfRegParam)
-      .setNonnegative(true)
-      .setImplicitPrefs(false)
-      .setSeed(cfg.seed)
-      // pinned block count: the job DAG is identical at any core count
-      .setNumUserBlocks(8).setNumItemBlocks(8)
-      .setColdStartStrategy("drop")
-    val model = als.fit(ratings)
-    val factors = model.itemFactors.select("id", "features")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
-
-    // slice the composite item factors back into per-entity H by offset range
-    val h = entities.map(e => e -> Array.ofDim[Double](k, ms(e))).toMap
-    factors.foreach { case (item, fs) =>
-      var idx = java.util.Arrays.binarySearch(offArr, item)
-      if (idx < 0) idx = -idx - 2
-      val e = entities(idx)
-      val t = item - offArr(idx)
-      var s = 0
-      while (s < k) { h(e)(s)(t) = math.max(0.0, fs(s).toDouble); s += 1 }
-    }
-    h
   }
 
   /** M4: human-readable top-terms-per-sense descriptors. */

@@ -152,6 +152,48 @@ class MemoSpec extends SparkTestBase {
       s"invalidate leaked persisted frames: $before before build, $after after invalidate")
   }
 
+  test("invalidate and totalEntries reach the memos declared outside Memo") {
+    // the DSIR weight frame and the planted-cluster assignment live in
+    // CurationQueries' and ExtraQueries' own memos
+    Memo.invalidate(spark)
+    val base = Memo.totalEntries
+    CurationQueries.sparkQueries("q_dsir_weights")(spark, sfDir).count()
+    ExtraQueries.sparkQueries("q_dedup_cc")(spark, sfDir).count()
+    assert(Memo.totalEntries >= base + 2,
+      s"registry queries' memo entries not counted: ${Memo.totalEntries} (was $base)")
+    Memo.invalidate(spark)
+    assert(Memo.totalEntries == base, s"invalidate left ${Memo.totalEntries - base} entries")
+  }
+
+  test("evicting a pinned memo entry frees its pin (blocks locally, checkpoint dir when durable)") {
+    // q_dedup_cc reads its memo's pin directly (an orderBy over it)
+    def pinOf(): org.apache.spark.rdd.RDD[_] = {
+      val df = ExtraQueries.sparkQueries("q_dedup_cc")(spark, sfDir)
+      df.count()
+      org.apache.spark.sql.graft.PinnedPlans.pinnedLeaves(df).head.rdd
+    }
+    Memo.invalidate(spark)
+    val local = pinOf()
+    assert(spark.sparkContext.getPersistentRDDs.contains(local.id))
+    Memo.invalidate(spark)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(local.id),
+      s"evicted pin RDD ${local.id} still persisted")
+
+    val root = Files.createTempDirectory("graft_memo_ckpt")
+    spark.conf.set(plans.Pinned.ConfKey, root.toString)
+    try {
+      val durable = pinOf()
+      val dir = new java.io.File(new java.net.URI(durable.getCheckpointFile
+        .getOrElse(fail("durable pin wrote no checkpoint"))))
+      assert(dir.isDirectory, s"checkpoint dir missing at $dir")
+      Memo.invalidate(spark)
+      assert(!dir.exists(), s"evicted pin's checkpoint dir $dir not deleted")
+    } finally {
+      spark.conf.unset(plans.Pinned.ConfKey)
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
   test("memos are LRU-bounded: sweeping 10 configs holds <= graft.memo.max entries") {
     withProp("graft.memo.max", "3") {
       val before = Memo.totalEntries

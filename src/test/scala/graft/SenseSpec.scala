@@ -46,12 +46,17 @@ class SenseSpec extends SparkTestBase {
     checkPR("nmf")
   }
 
-  test("E1 planted fixtures: triple P/R >= 0.95 with nonnegative ALS") {
-    checkPR("als")
-  }
-
   test("E1 planted fixtures: triple P/R >= 0.95 with Hclust (BisectingKMeans)") {
     checkPR("hclust")
+  }
+
+  test("WsidConfig rejects a sense method other than nmf or hclust, naming it") {
+    Seq("als", "NMF", "hclust ", "").foreach { m =>
+      val e = intercept[IllegalArgumentException](WsidConfig(entities = Seq("python"), method = m))
+      assert(e.getMessage.contains(s"'$m'"), s"message does not name '$m': ${e.getMessage}")
+    }
+    assert(WsidConfig(entities = Nil, method = "hclust").method == "hclust")
+    intercept[IllegalArgumentException](WsidConfig(entities = Nil).copy(method = "als"))
   }
 
   test("BisectingSenses: identical rows decline the split (no empty leaf, no duplicate centers)") {
