@@ -31,7 +31,7 @@ object ExtraQueries {
     * by the same LRU memo class. The build materializes the cache (as
     * Memo.kgEdgesOf does): left lazy, concurrent stages of one query that
     * read the frame twice would each tokenize the same partition. */
-  private val tdwMemo = new Memo.BoundedMemo[Dataset[TokDoc]](_.unpersist(false))
+  private val tdwMemo = new Memo.BoundedMemo[Dataset[TokDoc]]
   private def tokdocsWhere(spark: SparkSession, sfDir: String,
                            cond: org.apache.spark.sql.Column): Dataset[TokDoc] = {
     import spark.implicits._
@@ -139,14 +139,17 @@ object ExtraQueries {
     * large/small-star components → survivor election), resolved once per
     * (session, input) and pinned node-sized (r6; same registry economics as
     * the bpe/lr/costats memos — the first consumer pays the build, every
-    * later invocation reads the assignment). */
-  private val ccMemo = Memo.pinMemo()
+    * later invocation reads the assignment). The components' own pin is
+    * freed once the assignment over it is pinned, so the entry holds one
+    * pin. */
+  private val ccMemo = new Memo.BoundedMemo[DataFrame]
   private def plantedClusters(s: SparkSession, d: String): DataFrame =
     ccMemo.getOrBuild((s, s"$d|plantedcc")) {
-      graft.plans.Pinned.pinTracked(
-        Dedup.nearDupClusters(
-          Dedup.ngramJaccardPairs(tdWithPlantedNearDups(s, d), 2, 0.85)))
-    }._1
+      val cc = Dedup.connectedComponents(
+        Dedup.ngramJaccardPairs(tdWithPlantedNearDups(s, d), 2, 0.85))
+      try graft.plans.Pinned.pin(Dedup.clustered(cc))
+      finally graft.plans.Pinned.free(cc)
+    }
 
   /** SQL replay of tdWithPlantedNearDups — shared by the q_dedup_cc and
     * q_dedup_substring oracles so the fixture can never silently diverge

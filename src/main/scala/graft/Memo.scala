@@ -22,11 +22,20 @@ import scala.jdk.CollectionConverters._
   *
   * Keys carry the config string so a registry query with a different
   * WsidConfig can never alias another's cache. Each memo is BOUNDED
-  * (access-ordered LRU, `graft.memo.max` entries, default 8): a long-lived
-  * session sweeping many (sfDir, cfg) combinations unpersists and drops its
-  * least-recently-used entries instead of pinning persisted frames for
-  * process lifetime (VERDICT r2 #7). Eviction only costs recomputation —
-  * every entry rebuilds deterministically from its key.
+  * (access-ordered LRU, [[MaxEntries]] entries): a long-lived session
+  * sweeping many (sfDir, cfg) combinations releases and drops its
+  * least-recently-used entries instead of holding frames for process
+  * lifetime (VERDICT r2 #7). Eviction only costs recomputation — every entry
+  * rebuilds deterministically from its key.
+  *
+  * How an entry holds its frames: a frame bounded by the vocabulary or the
+  * entity set (the KG edges, the scored chain, the ranked stores, the E3
+  * model) is a measured pin (`Pinned.pin`), built inside the memo build by
+  * the one job that materializes and measures it, at the partition count
+  * AQE gave its plan. A frame that grows with the corpus (the tokenized
+  * projections, coverage, L3) stays a columnar cache, several times smaller
+  * on heap than pinned rows. Every memo releases an entry the same way
+  * ([[release]]): its pins are freed, its caches unpersisted.
   */
 object Memo {
 
@@ -35,10 +44,13 @@ object Memo {
     * first drops dependents before the frames they read. */
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[BoundedMemo[_]]()
 
+  /** Entries each memo keeps per JVM before evicting the least recently
+    * used one. */
+  val MaxEntries = 8
+
   /** Bounded access-ordered memo; stopped sessions purged on every access
-    * (their persisted frames died with the session — no unpersist needed or
-    * safe), LRU entries released through `onEvict` (unpersist, or
-    * `Pinned.free` for a [[pinMemo]]) once size exceeds the cap.
+    * (their frames died with the session — no release needed or safe), LRU
+    * entries released through [[release]] once size exceeds the cap.
     *
     * Builds run OUTSIDE the map lock behind a per-key latch (ADVICE r3 #4):
     * the map lock only guards lookups/puts (microseconds), concurrent
@@ -50,15 +62,12 @@ object Memo {
     *
     * Every memo registers itself on construction, so [[invalidate]] and
     * [[totalEntries]] reach memos declared outside this object too. */
-  private[graft] final class BoundedMemo[V](onEvict: V => Unit) {
+  private[graft] final class BoundedMemo[V] {
     registry.add(0, this)
-
-    private def maxEntries: Int =
-      sys.props.getOrElse("graft.memo.max", "8").toInt
 
     private val m = new java.util.LinkedHashMap[(SparkSession, String), V](16, 0.75f, true) {
       override def removeEldestEntry(e: java.util.Map.Entry[(SparkSession, String), V]): Boolean =
-        if (size() > maxEntries) { onEvict(e.getValue); true } else false
+        if (this.size() > MaxEntries) { release(e.getValue); true } else false
     }
 
     private val inflight =
@@ -99,39 +108,43 @@ object Memo {
       val it = m.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (e.getKey._1 eq spark) { onEvict(e.getValue); it.remove() }
+        if (e.getKey._1 eq spark) { release(e.getValue); it.remove() }
       }
     }
 
     def size: Int = m.synchronized(m.size())
   }
 
-  private val tokdocsMemo = new BoundedMemo[Dataset[TokDoc]](_.unpersist(false))
-  private val costatsMemo = new BoundedMemo[Pipeline.CoStats]({ cs =>
-    cs.coverage.unpersist(false); cs.scored.unpersist(false)
-    cs.internal.foreach(_.unpersist(false)) // the chain's cooc/marg caches
-  })
-  private val modelMemo = new BoundedMemo[(DataFrame, DataFrame)]({ case (d, s) =>
-    d.unpersist(false); s.unpersist(false)
-  })
-  // stores (raw persisted frame, row count): eviction must unpersist the
-  // RAW frame — `uncacheQuery(cascade = false)` matches by plan equality,
-  // so unpersisting the size-compacted coalesce VIEW would be a no-op and
-  // leak the cache entry (review finding, r6). Consumers get the view,
-  // rebuilt per call from the stored count (no job — a plan wrapper).
-  private val edgesMemo = new BoundedMemo[(DataFrame, Long)](_._1.unpersist(false))
-  private val rankedMemo = new BoundedMemo[(DataFrame, DataFrame)]({ case (a, b) =>
-    a.unpersist(false); b.unpersist(false)
-  })
-  private val l3Memo = new BoundedMemo[DataFrame](_.unpersist(false))
-  private val ivfMemo = new BoundedMemo[Array[Array[Double]]](_ => ())
-  private val bpeMemo = new BoundedMemo[Seq[(Long, String, String, Long)]](_ => ())
+  /** Release what a memo entry holds, the one eviction path of every memo:
+    * each pin in it is freed (`Pinned.free`: its blocks or its checkpoint
+    * directory), each other frame is a columnar cache and is unpersisted.
+    * Tuples, case classes and collections are walked; driver data (models,
+    * merge tables, centroids) holds nothing to release. */
+  private def release(v: Any): Unit = v match {
+    case ds: Dataset[_] =>
+      val df = ds.toDF()
+      if (Pinned.isPin(df)) Pinned.free(df) else ds.unpersist(false)
+    case xs: Iterable[_] => xs.foreach(release)
+    case p: Product => p.productIterator.foreach(release)
+    case _ => ()
+  }
 
-  /** A memo of `Pinned.pinTracked` frames. A pin is not in the cache
-    * manager, so `unpersist` would not release it: eviction frees the
-    * pin's blocks or its checkpoint directory through its Handle. */
-  private[graft] def pinMemo(): BoundedMemo[(DataFrame, Pinned.Handle)] =
-    new BoundedMemo[(DataFrame, Pinned.Handle)]({ case (df, h) => Pinned.free(df.sparkSession, h) })
+  private val tokdocsMemo = new BoundedMemo[Dataset[TokDoc]]
+  private val costatsMemo = new BoundedMemo[Pipeline.CoStats]
+  private val modelMemo = new BoundedMemo[(DataFrame, DataFrame)]
+  private val edgesMemo = new BoundedMemo[DataFrame]
+  private val rankedMemo = new BoundedMemo[(DataFrame, DataFrame)]
+  private val l3Memo = new BoundedMemo[DataFrame]
+  private val ivfMemo = new BoundedMemo[Array[Array[Double]]]
+  private val bpeMemo = new BoundedMemo[Seq[(Long, String, String, Long)]]
+
+  /** Pin a memo frame whose plan ends in no exchange AQE may coalesce, at
+    * the partition count AQE sizes it to: a REBALANCE exchange is coalesced
+    * to `advisoryPartitionSizeInBytes` (one partition for a KB-sized frame,
+    * bytes / 64 MB at scale). Scored's last exchange lives inside the
+    * chain's cached cooc plan, whose partitioning AQE keeps (see
+    * `Tuning.ensure`), and senseVec is a scan of the model's files. */
+  private def pinSized(df: DataFrame): DataFrame = Pinned.pin(df.hint("rebalance"))
 
   /** Total live entries across all memos (test hook for the LRU bound). */
   private[graft] def totalEntries: Int = registry.asScala.iterator.map(_.size).sum
@@ -199,28 +212,22 @@ object Memo {
 
   /** The KG bigram adjacency over the shared tokenized projection, counted
     * once per (session, corpus): the whole q_kg_* family reads this one
-    * persisted vocabulary-sized frame instead of re-running
+    * pinned vocabulary-sized frame instead of re-running
     * tokenize→window→aggregate per query (the same registry economics as
-    * the E2/E3 memos). */
-  def kgEdgesOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): DataFrame = {
-    // r6: materialize at build time (the count was always charged to the
-    // warm phase — Bench counts this frame immediately) and hand every
-    // consumer a size-compacted view: the whole q_kg_* family scans this
-    // edge frame per query, and a KB-sized cached frame otherwise costs
-    // core-count task launches per scan (Tuning.compact is a narrow
-    // wrapper; unchanged at production edge counts). Graph results are
-    // partitioning-invariant by contract (GraphSpec bit-equality).
-    val (raw, rows) = edgesMemo.getOrBuild((spark, s"$sfDir|kgedges|${cfg.maxDocChars}")) {
-      val e = operators.Graph.bigramEdges(
-        Tokenize.tokensFrom(tokDocsOf(spark, sfDir, cfg)).toDF())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (e, e.count())
+    * the E2/E3 memos). The pin is built at memo-build time (the warm phase)
+    * and carries its measured size, so consumers plan over it without a
+    * job, and AQE's coalescing of the aggregation leaves a KB-sized frame in
+    * one partition instead of core-count near-empty ones. */
+  def kgEdgesOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): DataFrame =
+    edgesMemo.getOrBuild((spark, s"$sfDir|kgedges|${cfg.maxDocChars}")) {
+      Pinned.pin(operators.Graph.bigramEdges(
+        Tokenize.tokensFrom(tokDocsOf(spark, sfDir, cfg)).toDF()))
     }
-    Tuning.compact(raw, rows)
-  }
 
-  /** The E2 chain over the shared projection, with its two reused frames
-    * (coverage feeds A3/A4/L3, scored feeds C1/C2/C3/L3) persisted once. */
+  /** The E2 chain over the shared projection: coverage (feeds A3/A4/L3,
+    * grows with the corpus) cached columnar, scored (feeds C1/C2/C3/L3,
+    * vocabulary-bounded) pinned. The chain's own cooc/marginal caches are
+    * released once scored is pinned; `significant` and `top` read the pin. */
   def coStatsOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): Pipeline.CoStats =
     costatsMemo.getOrBuild((spark, s"$sfDir|${cfg.canonicalId}")) {
       // r6 (guide §2.6 — overlap independent jobs): materialize the shared
@@ -234,41 +241,29 @@ object Memo {
       td.toDF().count() // tokenize exactly once, before the fork
       val cs = Pipeline.coStatsFrom(td, cfg)
       cs.coverage.persist(StorageLevel.MEMORY_AND_DISK)
-      cs.scored.persist(StorageLevel.MEMORY_AND_DISK)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val fCov = Future { cs.coverage.count() }
-      val fScored = Future { cs.scored.count() }
-      val nCov = Await.result(fCov, Duration.Inf)
-      val nScored = Await.result(fScored, Duration.Inf)
-      // r6: hand consumers size-compacted views of the two persisted frames
-      // (narrow coalesce, Tuning.compact — AQE cannot re-coalesce a cached
-      // plan, so a KB-sized cache otherwise costs core-count task launches
-      // on every one of its ~30 consumers' scans). Values were materialized
-      // by the counts above, so nothing can drift; unchanged at production
-      // row counts. The RAW frames ride `internal` so the memo's evict
-      // callback unpersists the actual cache entries — unpersisting only
-      // the coalesce views would be a plan-equality no-op and leak them
-      // (review finding, r6).
-      cs.copy(coverage = Tuning.compact(cs.coverage, nCov),
-        scored = Tuning.compact(cs.scored, nScored),
-        internal = cs.internal ++ Seq(cs.coverage.toDF(), cs.scored.toDF()))
+      val scored = pinSized(cs.scored)
+      Await.result(fCov, Duration.Inf)
+      cs.internal.foreach(_.unpersist(false))
+      val sig = operators.Significance.significant(scored, cfg)
+      cs.copy(scored = scored, significant = sig,
+        top = operators.Significance.topK(sig, cfg), internal = Nil)
     }
 
   /** The two standing ranked stores of the q_kg_* family — the top-20
     * `coOccursWith` and top-1 `isTopTermOf` rankings over the memoized E2
-    * chain — persisted once per (session, input): ~25 registry queries each
+    * chain — pinned once per (session, input): ~25 registry queries each
     * re-ranked the scored frame per invocation (two per-entity windows +
-    * their exchanges); one vocabulary-sized cached copy serves them all
+    * their exchanges); one vocabulary-sized pin each serves them all
     * (same registry economics as the E2/edges memos, r6 optimization). */
   def rankedStoresOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): (DataFrame, DataFrame) =
     rankedMemo.getOrBuild((spark, s"$sfDir|ranked|${cfg.canonicalId}")) {
       val cs = coStatsOf(spark, sfDir, cfg)
-      (operators.Significance.topK(cs.scored, cfg.copy(topK = 20))
-        .persist(StorageLevel.MEMORY_AND_DISK),
-        operators.Significance.topK(cs.scored, cfg.copy(topK = 1))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+      (Pinned.pin(operators.Significance.topK(cs.scored, cfg.copy(topK = 20))),
+        Pinned.pin(operators.Significance.topK(cs.scored, cfg.copy(topK = 1))))
     }
 
   /** The L3 coOccursWith document-level triple store (coverage ⋈ top-20 →
@@ -285,7 +280,8 @@ object Memo {
     }
 
   /** E3's sense model for (sfDir, cfg): induced ONCE into a version-keyed
-    * checkpoint under the model store and loaded back via the one-call API —
+    * checkpoint under the model store, loaded back via the one-call API and
+    * pinned (dict and senseVec are entity-set-sized) —
     * later processes (and later queries in this one) resume instead of
     * re-running the ML. E3's contract is "disambiguate against an EXISTING
     * model"; building the model is E1's job and is benchmarked there. */
@@ -313,7 +309,7 @@ object Memo {
       }
       verifyOwnership(fs, root)
       val (dict, senseVec) = Pipeline.loadModel(spark, root.toString)
-      (dict.persist(StorageLevel.MEMORY_AND_DISK), senseVec.persist(StorageLevel.MEMORY_AND_DISK))
+      (Pinned.pin(dict), pinSized(senseVec))
     }
 
   /** Create the store root if missing; the implicit per-user default gets

@@ -26,8 +26,8 @@ object Pipeline {
       significant: DataFrame, // Bonferroni-filtered
       top: DataFrame, // + rank, capped at cfg.topK
       /** vocab-bounded frames the chain persisted internally (cooc,
-        * marginals) — owners (Memo eviction, callers) unpersist these
-        * together with coverage/scored. */
+        * marginals) — their owner unpersists them once it holds what it
+        * needs of the chain (Memo.coStatsOf: once scored is pinned). */
       internal: Seq[DataFrame] = Nil)
 
   def coStats(docs: Dataset[CodeDoc], cfg: WsidConfig): CoStats =

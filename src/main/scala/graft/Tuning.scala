@@ -27,39 +27,19 @@ import org.apache.spark.sql.SparkSession
   * and benchmarks are measured under. */
 object Tuning {
 
-  /** Size-adaptive narrow compaction of an already-materialized (persisted
-    * and computed) frame. AQE cannot re-coalesce a cached plan's output
-    * partitioning (`canChangeCachedPlanOutputPartitioning` is off by
-    * default, and flipping it would also let AQE re-partition E1's cached
-    * context rows, whose NMF sums are bit-exact only while each entity's
-    * contexts sit whole in one partition, in scan order — the invariant
-    * `Pipeline.induceAndEmit`'s entity spread keeps), so a
-    * node-/edge-sized cached frame keeps the harness' core-count partitions
-    * and every downstream scan pays that many task launches for near-empty
-    * blocks. When the MEASURED row count implies fewer useful tasks, wrap
-    * the frame in a narrow `coalesce` — no data moves, no shuffle; at
-    * production row counts the target meets/exceeds the current partition
-    * count and the frame is returned UNCHANGED. Callers restrict this to
-    * integer-exact consumers (graph lattice, counting aggs), whose results
-    * are partitioning-invariant by spec'd contract.
-    *
-    * The current partition count is read from the persisted frame's loaded
-    * cache, never by planning the frame (`ds.rdd` re-plans and, under AQE,
-    * can run stages); a frame that is not materialized is rejected. */
-  def compact[T](ds: org.apache.spark.sql.Dataset[T], rows: Long,
-                 rowsPerTask: Long = 262144L): org.apache.spark.sql.Dataset[T] = {
-    val cur = org.apache.spark.sql.graft.PinnedPlans.materializedPartitions(ds.toDF())
-      .getOrElse(throw new IllegalArgumentException(
-        "Tuning.compact needs a persisted frame after its first action"))
-    val want = math.max(1L, math.min(cur.toLong, (rows + rowsPerTask - 1) / rowsPerTask)).toInt
-    if (want < cur) ds.coalesce(want) else ds
-  }
-
   private val applied =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Idempotent per session. */
+  /** Idempotent per session.
+    *
+    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` stays off
+    * (Spark's default): turning it on would let AQE re-partition E1's cached
+    * context rows, whose NMF sums are bit-exact only while each entity's
+    * contexts sit whole in one partition, in scan order — the invariant
+    * `Pipeline.induceAndEmit`'s entity spread keeps. The KB-sized memo frames
+    * that would gain from re-coalescing are pins instead, which sit at the
+    * partition count AQE gave the plan they materialized. */
   def ensure(spark: SparkSession): Unit = {
     if (!applied.add(spark)) return
     val c = spark.conf

@@ -75,14 +75,14 @@ object Bpe {
 
   /** Word-count table with the brace-wrapped symbol form — the single
     * corpus-scale pass both trainers share. */
-  private def pinnedVocab(td: Dataset[TokDoc]): (DataFrame, Pinned.Handle) = {
+  private def pinnedVocab(td: Dataset[TokDoc]): DataFrame = {
     val spark = td.sparkSession
     import spark.implicits._
     val words = td.flatMap(_.terms.iterator).toDF("w")
       .groupBy("w").agg(count(lit(1)).as("n"))
-    val v = Pinned.pinTracked(
+    val v = Pinned.pin(
       words.select(col("w"), col("n"), seqOf(col("w")).as("seq")))
-    requireBraceFree(v._1)
+    requireBraceFree(v)
     v
   }
 
@@ -92,7 +92,7 @@ object Bpe {
     import spark.implicits._
 
     // corpus-scale pass: distinct-word counts, then never touch docs again
-    var (vocab, vocabIds) = pinnedVocab(td)
+    var vocab = pinnedVocab(td)
 
     val table = Seq.newBuilder[(Long, String, String, Long)]
     var step = 1
@@ -112,15 +112,14 @@ object Bpe {
       else {
         val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         table += ((step.toLong, l, r, cnt))
-        val (next, nextIds) = Pinned.pinTracked(vocab.withColumn("seq",
+        val next = Pinned.pin(vocab.withColumn("seq",
           replace(col("seq"), lit(s"{$l}{$r}"), lit(s"{$l$r}"))))
-        Pinned.free(spark, vocabIds)
+        Pinned.free(vocab)
         vocab = next
-        vocabIds = nextIds
         step += 1
       }
     }
-    Pinned.free(spark, vocabIds)
+    Pinned.free(vocab)
     table.result().toDF("step", "lhs", "rhs", "pair_count")
   }
 
@@ -179,7 +178,7 @@ object Bpe {
     val spark = td.sparkSession
     import spark.implicits._
 
-    var (vocab, vocabIds) = pinnedVocab(td)
+    var vocab = pinnedVocab(td)
     // complete inventory of multi-char symbols in the corpus: exactly the
     // concats of merges applied so far (initial symbols are single chars).
     // Exact mode only — greedy's used-set check already keeps same-round
@@ -252,10 +251,9 @@ object Bpe {
         val newSeq = batch.foldLeft(col("seq")) { case (acc, (l, r, _)) =>
           replace(acc, lit(s"{$l}{$r}"), lit(s"{$l$r}"))
         }
-        val (next, nextIds) = Pinned.pinTracked(vocab.withColumn("seq", newSeq))
-        Pinned.free(spark, vocabIds)
+        val next = Pinned.pin(vocab.withColumn("seq", newSeq))
+        Pinned.free(vocab)
         vocab = next
-        vocabIds = nextIds
         batch.foreach { case (l, r, cnt) =>
           table += ((step.toLong, l, r, cnt))
           if (exact) inventory += (l + r)
@@ -264,7 +262,7 @@ object Bpe {
         rounds += 1
       }
     }
-    Pinned.free(spark, vocabIds)
+    Pinned.free(vocab)
     (table.result().toDF("step", "lhs", "rhs", "pair_count"), rounds)
   }
 

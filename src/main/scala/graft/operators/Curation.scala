@@ -440,7 +440,7 @@ object Curation {
     *   grad_q[b]   = Σ_d [b ∈ buckets(d)] · g_q(d)               (BIGINT agg)
     *   w_q[b]     += round( lr · grad_q[b] / n )                 (driver)
     *
-    * = ONE aggregation job per round over the persisted feature frame
+    * = ONE aggregation job per round over the pinned feature frame
     * (the bias gradient rides the same job as bucket −1), a B+1-row
     * collect, and an O(B) in-place update. The sigmoid is per-row and
     * quantized before any cross-row sum, so training is bit-deterministic
@@ -449,15 +449,12 @@ object Curation {
     * with map-side combine on ≤ B+1 keys; model state never exceeds B+1
     * longs. `feat` must carry an integer `y` ∈ {0,1}. */
   def trainLogReg(feat: DataFrame, b: Int, rounds: Int, lr: Double = 1.0): LrModel = {
-    val cachedRaw = feat.select(col("y").cast("long").as("y"), col("buckets"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = cachedRaw.count()
-    require(n > 0, "trainLogReg: empty training frame")
-    // r6: size-compact the cached training frame (narrow wrapper, see
-    // Tuning.compact) — every round scans it, the per-row gradient is
+    // every round scans the pinned projection; the per-row gradient is
     // quantized to a Long BEFORE the sum, so the aggregate is partition-
     // order-invariant and the round replay (q_lr_train oracle) unchanged
-    val cached = graft.Tuning.compact(cachedRaw, n)
+    val cached = graft.plans.Pinned.pin(feat.select(col("y").cast("long").as("y"), col("buckets")))
+    val n = graft.plans.Pinned.rows(cached)
+    require(n > 0, "trainLogReg: empty training frame")
     val wq = new Array[Long](b)
     var biasq = 0L
     var r = 0
@@ -476,7 +473,7 @@ object Curation {
       }
       r += 1
     }
-    cachedRaw.unpersist()
+    graft.plans.Pinned.free(cached)
     LrModel(b, rounds, wq, biasq)
   }
 

@@ -469,12 +469,11 @@ object Dedup {
     * and the PREVIOUS round's pin freed immediately — at most two edge-set
     * copies are ever live, no matter how many rounds run. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
     // ONE scan of `pairs` (often an expensive candidate chain): the pinned
     // base keeps degenerate self-pairs (lo == hi) alongside the normalized
     // edges, so the singleton rescue reads pinned rows instead of
     // re-executing the whole pair plan a second time.
-    val (base, baseH) = Pinned.pinTracked(pairs
+    val base = Pinned.pin(pairs
       .select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"))
       .distinct())
@@ -482,9 +481,9 @@ object Dedup {
       val keyType = base.schema("lo").dataType
       val schema = StructType(Seq(StructField("docid", keyType), StructField("cluster", keyType)))
       val res = Pinned.inTask(schema, base)(in => componentsInTask(in.head, keyType))
-      Pinned.free(spark, baseH)
+      Pinned.free(base)
       res
-    } else starRounds(base, baseH, maxIter)
+    } else starRounds(base, maxIter)
   }
 
   /** Union-find over the pinned `(lo, hi)` pairs inside their task. Nodes
@@ -511,21 +510,19 @@ object Dedup {
   }
 
   /** Large-star / small-star rounds over the pinned `(lo, hi)` base. */
-  private def starRounds(base: DataFrame, baseH: Pinned.Handle, maxIter: Int): DataFrame = {
+  private def starRounds(base: DataFrame, maxIter: Int): DataFrame = {
     // a pin EVERY round is load-bearing twice over: the round body
     // references `edges` several times, so without truncation the logical
     // plan grows EXPONENTIALLY in rounds (plans are trees, not DAGs); and a
     // frozen materialization is what makes the fixpoint test read the same
-    // data the next round consumes. Superseded rounds are freed through
-    // their handles (see Pinned.pinTracked): at most two edge-set copies
-    // are ever live.
-    def free(h: Pinned.Handle): Unit = Pinned.free(base.sparkSession, h)
+    // data the next round consumes. Superseded rounds are freed (see
+    // Pinned.free): at most two edge-set copies are ever live.
     // the self-node frame is pinned separately (node-sized, held to the
     // end) and the base is freed as soon as both derivations are pinned
-    val (selfNodes, selfIds) = Pinned.pinTracked(
+    val selfNodes = Pinned.pin(
       base.filter(col("lo") === col("hi")).select(col("lo").as("docid")))
-    var (edges, edgeIds) = Pinned.pinTracked(base.filter(col("lo") =!= col("hi")))
-    free(baseH)
+    var edges = Pinned.pin(base.filter(col("lo") =!= col("hi")))
+    Pinned.free(base)
     var converged = Pinned.rows(edges) == 0
     var it = 0
     while (!converged && it < maxIter) {
@@ -549,7 +546,7 @@ object Dedup {
         .filter(col("m") =!= col("v"))
         .select(col("m").as("lo"), col("v").as("hi"))
         .distinct()
-      val (next, nextIds) = Pinned.pinTracked(small)
+      val next = Pinned.pin(small)
       // fixpoint test: the edge set is a TRUE star forest (stable under both
       // phases) only when BOTH hold: no node is a center and a leaf, AND
       // every leaf has exactly one center. The second clause is not implied
@@ -567,24 +564,23 @@ object Dedup {
         // violation ⟺ a leaf with any second appearance (leaf or center)
         .filter(col("leaves") > 0 && col("tot") > 1)
         .isEmpty
-      free(edgeIds)
+      Pinned.free(edges)
       edges = next
-      edgeIds = nextIds
       it += 1
     }
     if (!converged) {
-      free(edgeIds)
-      free(selfIds)
+      Pinned.free(edges)
+      Pinned.free(selfNodes)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "partial components would be silently wrong; raise maxIter")
     }
     // pin the (node-sized) star assignment eagerly, then release the edges
-    val (out, outIds) = Pinned.pinTracked(
+    val out = Pinned.pin(
       edges.select(col("hi").as("docid"), col("lo").as("cluster"))
         .unionAll(edges.select(col("lo").as("docid"), col("lo").as("cluster")))
         .distinct())
-    free(edgeIds)
+    Pinned.free(edges)
     // nodes appearing ONLY in self-pairs (a == b) never enter the star
     // rounds (the edge normalization drops degenerate loops), so they are
     // unioned back as singleton clusters — the contract is "every node
@@ -599,18 +595,20 @@ object Dedup {
     // intermediate is freed; what remains cached is exactly the returned
     // assignment (reclaimed by ContextCleaner once the caller drops it).
     val selfOnly = selfNodes.join(out, Seq("docid"), "left_anti")
-    val (res, _) = Pinned.pinTracked(
+    val res = Pinned.pin(
       out.unionByName(selfOnly.select(col("docid"), col("docid").as("cluster"))))
-    free(outIds)
-    free(selfIds)
+    Pinned.free(out)
+    Pinned.free(selfNodes)
     res
   }
 
   /** Cluster-resolved dedup emit: pair graph → components → per-doc cluster
     * id, cluster size, and the keep/drop decision (the minimum id in each
     * cluster survives — consistent with dedupKeepFirst's first-key-wins). */
-  def nearDupClusters(pairs: DataFrame): DataFrame = {
-    val cc = connectedComponents(pairs)
+  def nearDupClusters(pairs: DataFrame): DataFrame = clustered(connectedComponents(pairs))
+
+  /** [[nearDupClusters]] over a `(docid, cluster)` assignment. */
+  def clustered(cc: DataFrame): DataFrame = {
     val sizes = cc.groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
     cc.join(sizes, Seq("cluster"))
       .select(col("docid"), col("cluster"), col("cluster_size"),

@@ -138,12 +138,11 @@ object Graph {
     * round as a relational plan and a pin. */
   private def ranks(edges: DataFrame, sources: Option[DataFrame], iters: Int, scale: Long,
                     dampNum: Long, dampDen: Long): DataFrame = {
-    val spark = edges.sparkSession
-    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
+    val e = Pinned.pin(edges.select(col("src"), col("dst"), col("w")))
     if (sources.isEmpty) require(Pinned.rows(e) > 0, "pageRank on an empty edge set")
-    val srcPin = sources.map(s => Pinned.pinTracked(
+    val srcPin = sources.map(s => Pinned.pin(
       s.select(col("node").cast(e.schema("src").dataType)).distinct()))
-    val pins = e +: srcPin.map(_._1).toSeq
+    val pins = e +: srcPin.toSeq
     val out =
       if (Pinned.rounds(pins: _*).single) {
         val (keyType, wType) = (nodeType(e), e.schema("w").dataType)
@@ -153,9 +152,8 @@ object Graph {
         }
         require(Pinned.rows(r) > 0, NoSource)
         r
-      } else rankRounds(e, srcPin.map(_._1), iters, scale, dampNum, dampDen)
-    Pinned.free(spark, eH)
-    srcPin.foreach(p => Pinned.free(spark, p._2))
+      } else rankRounds(e, srcPin, iters, scale, dampNum, dampDen)
+    pins.foreach(Pinned.free)
     out
   }
 
@@ -214,21 +212,18 @@ object Graph {
     * edges `e`: one plan and one pin per round. */
   private def rankRounds(e: DataFrame, sources: Option[DataFrame], iters: Int, scale: Long,
                          dampNum: Long, dampDen: Long): DataFrame = {
-    val spark = e.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
-
     // pinned once, read every round. The per-source out-weight is folded
     // INTO the pinned edge set up front (r6 optimization): the old loop
     // re-joined edges ⋈ outw every round — identical rows, one join per
     // round saved, and the pinned edge frame grows by one LONG column.
-    val (ew, ewH) = Pinned.pinTracked(
+    val ew = Pinned.pin(
       e.join(e.groupBy(col("src")).agg(sum(col("w")).as("ow")), Seq("src")))
     // the node frame carries the dangling and teleport-target flags (r6):
     // the old loop re-joined `dangling ⋈ ranks` every round just to sum the
     // dangling mass; with the flag riding the pinned rank frame, the
     // dangling share is a plain filtered 1-row aggregation of the frame the
     // round reads anyway.
-    val (nodes, nodesH) = Pinned.pinTracked(sources match {
+    val nodes = Pinned.pin(sources match {
       case None => nodeFlags(ew).withColumn("is_src", lit(1L))
       case Some(s) =>
         nodeFlags(ew)
@@ -239,7 +234,7 @@ object Graph {
     require(nS > 0, NoSource)
     val (seed, tp) = rankConsts(sources.isDefined, nS, scale, dampNum, dampDen)
 
-    var (ranks, ranksH) = Pinned.pinTracked(
+    var ranks = Pinned.pin(
       nodes.select(col("node"), (col("is_src") * seed).as("rank"), col("dang")))
     var it = 0
     while (it < iters) {
@@ -257,13 +252,12 @@ object Graph {
                   | + ((inflow + is_src * dshare)
                   |    * ${dampNum}L) div ${dampDen}L""".stripMargin.replace("\n", " "))
             .as("rank"), col("dang"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      freeH(ranksH)
+      val pinnedNext = Pinned.pin(next)
+      Pinned.free(ranks)
       ranks = pinnedNext
-      ranksH = nextH
       it += 1
     }
-    freeH(ewH); freeH(nodesH)
+    Pinned.free(ew); Pinned.free(nodes)
     // the final pinned rank frame is the result (caller drops -> cleaner)
     ranks.select(col("node"), col("rank"))
   }
@@ -362,14 +356,11 @@ object Graph {
     * query self-checks rel-err against the exact closure, A2′-style. */
   def reachApprox(edges: DataFrame, maxHops: Int, lgK: Int = 12): DataFrame = {
     require(maxHops >= 1, "reachApprox needs at least one hop")
-    val spark = edges.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
-
-    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst")).distinct())
-    val (nodes, nodesH) = Pinned.pinTracked(
+    val e = Pinned.pin(edges.select(col("src"), col("dst")).distinct())
+    val nodes = Pinned.pin(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
 
-    var (b, bH) = Pinned.pinTracked(
+    var b = Pinned.pin(
       nodes.groupBy(col("node")).agg(hll_sketch_agg(col("node"), lit(lgK)).as("sk")))
     var it = 0
     while (it < maxHops) {
@@ -380,17 +371,15 @@ object Graph {
         .select(col("node"),
           when(col("nb").isNull, col("sk"))
             .otherwise(hll_union(col("sk"), col("nb"))).as("sk"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      freeH(bH)
+      val pinnedNext = Pinned.pin(next)
+      Pinned.free(b)
       b = pinnedNext
-      bH = nextH
       it += 1
     }
-    val out = b.select(col("node"),
-      (hll_sketch_estimate(col("sk")) - lit(1L)).as("n_reach_est"))
-    val (pinnedOut, _) = Pinned.pinTracked(out)
-    freeH(eH); freeH(nodesH); freeH(bH)
-    pinnedOut
+    val out = Pinned.pin(b.select(col("node"),
+      (hll_sketch_estimate(col("sk")) - lit(1L)).as("n_reach_est")))
+    Seq(e, nodes, b).foreach(Pinned.free)
+    out
   }
 
   /** Undirected simple edge set underlying a directed weighted edge frame:
@@ -469,15 +458,14 @@ object Graph {
     * two node-sized copies live, same discipline as pageRank/CC. */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "labelPropagation needs at least one iteration")
-    val spark = edges.sparkSession
     val und = undirected(edges)
     // symmetric adjacency: each undirected edge contributes both directions
-    val (sym, symH) = Pinned.pinTracked(
+    val sym = Pinned.pin(
       und.select(col("a").as("v"), col("b").as("nbr"), col("w"))
         .unionAll(und.select(col("b").as("v"), col("a").as("nbr"), col("w"))))
     val w = Window.partitionBy(col("v"))
       .orderBy(col("s").desc, col("l").asc)
-    var (labels, labelsH) = Pinned.pinTracked(
+    var labels = Pinned.pin(
       sym.select(col("v").as("node")).distinct()
         .select(col("node"), col("node").as("label")))
     var it = 0
@@ -488,13 +476,12 @@ object Graph {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("v").as("node"), col("l").as("label"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      Pinned.free(spark, labelsH)
+      val pinnedNext = Pinned.pin(next)
+      Pinned.free(labels)
       labels = pinnedNext
-      labelsH = nextH
       it += 1
     }
-    Pinned.free(spark, symH)
+    Pinned.free(sym)
     labels
   }
 
@@ -526,7 +513,6 @@ object Graph {
     * are pinned per round, previous freed: ≤2 copies live. */
   def kcore(edges: DataFrame, k: Int, rounds: Int, minW: Long = 0L): DataFrame = {
     require(k >= 1 && rounds >= 1, "kcore needs k >= 1 and rounds >= 1")
-    val spark = edges.sparkSession
     def degreesOf(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -534,7 +520,7 @@ object Graph {
     // natural sparsifier for co-occurrence graphs whose raw simple graph is
     // near-complete — thresholding the directed halves instead would be
     // order-sensitive
-    var (e, eH) = Pinned.pinTracked(
+    var e = Pinned.pin(
       undirected(edges).filter(col("w") >= minW).select(col("a"), col("b")))
     // r6: a peel round that removes NO edge is a fixpoint — degrees, and
     // therefore every later round, are identical, so the loop may stop
@@ -551,19 +537,17 @@ object Graph {
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      Pinned.free(spark, eH)
+      val pinnedNext = Pinned.pin(next)
+      Pinned.free(e)
       e = pinnedNext
-      eH = nextH
       val n2 = Pinned.rows(pinnedNext)
       stable = n2 == nEdges
       nEdges = n2
       it += 1
     }
-    val out = degreesOf(e).filter(col("deg") >= k)
-    val (pinnedOut, _) = Pinned.pinTracked(out)
-    Pinned.free(spark, eH)
-    pinnedOut
+    val out = Pinned.pin(degreesOf(e).filter(col("deg") >= k))
+    Pinned.free(e)
+    out
   }
 
   /** Weighted HITS (Kleinberg 1999) on a scaled-integer lattice, `iters`
@@ -594,8 +578,7 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int, scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
-    val spark = edges.sparkSession
-    val (e, eH) = Pinned.pinTracked(edges.select(col("src"), col("dst"), col("w")))
+    val e = Pinned.pin(edges.select(col("src"), col("dst"), col("w")))
     require(Pinned.rows(e) > 0, "hits on an empty edge set")
     val out =
       if (Pinned.rounds(e).single) {
@@ -614,7 +597,7 @@ object Graph {
         // derives from the still-pinned nodes/hub/auth frames; they are
         // reclaimed when the caller drops the frame (same contract as reach)
       }
-    Pinned.free(spark, eH)
+    Pinned.free(e)
     out
   }
 
@@ -647,10 +630,7 @@ object Graph {
     * authority frames after `iters` rounds. */
   private[graft] def hitsScores(e: DataFrame, iters: Int, scale: Long)
       : (DataFrame, DataFrame, DataFrame) = {
-    val spark = e.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
-
-    val (nodes, _) = Pinned.pinTracked(
+    val nodes = Pinned.pin(
       e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct())
     val n = Pinned.rows(nodes)
 
@@ -666,13 +646,13 @@ object Graph {
       * pin, and the truncating renormalization a LAZY projection over it
       * that the NEXT pin evaluates. Arithmetic is bit-identical to the dense
       * form (same raw sums, same total, same truncating division). Returns
-      * the renormalized frame plus the handle of the raw pin backing it. */
-    def halfStep(score: DataFrame, from: String, to: String): (DataFrame, Pinned.Handle) = {
+      * the renormalized frame plus the raw pin backing it. */
+    def halfStep(score: DataFrame, from: String, to: String): (DataFrame, DataFrame) = {
       val raw = e
         .join(score.select(col("node").as(from), col("s")), Seq(from))
         .select(col(to).as("node"), expr("s * w").as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("raw"))
-      val (rawP, rawH) = Pinned.pinTracked(raw)
+      val rawP = Pinned.pin(raw)
       // the total stays a 1-row SUBPLAN over the pinned raw frame (not a
       // driver-collected literal): it is computed inside the consumer's pin
       // job, where a per-half-step collect would be a strictly serial
@@ -682,23 +662,23 @@ object Graph {
         .select(col("node"),
           when(col("t") > 0L, expr(s"(raw * ${scale}L) div t"))
             .otherwise(lit(0L)).as("s"))
-      (s, rawH)
+      (s, rawP)
     }
 
     val seed = scale / n
     var hubs = nodes.select(col("node"), lit(seed).as("s")) // lazy off pinned nodes
-    var hubsH: Option[Pinned.Handle] = None
+    var hubsRaw: Option[DataFrame] = None
     var lastAuth: DataFrame = null
     var it = 0
     while (it < iters) {
-      val (auth, authH) = halfStep(hubs, "src", "dst")
-      val (nextHb, nextHbH) = halfStep(auth, "dst", "src")
+      val (auth, authRaw) = halfStep(hubs, "src", "dst")
+      val (nextHb, nextHbRaw) = halfStep(auth, "dst", "src")
       // the hub pin has consumed the auth frame, so the auth raw pin can be
       // freed — except the final round's, whose frame is part of the OUTPUT
-      hubsH.foreach(freeH)
-      if (it == iters - 1) lastAuth = auth else freeH(authH)
+      hubsRaw.foreach(Pinned.free)
+      if (it == iters - 1) lastAuth = auth else Pinned.free(authRaw)
       hubs = nextHb
-      hubsH = Some(nextHbH)
+      hubsRaw = Some(nextHbRaw)
       it += 1
     }
     (nodes, hubs, lastAuth)
@@ -782,8 +762,7 @@ object Graph {
     * round, previous freed: ≤2 node-sized copies live. */
   def shortestPaths(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "shortestPaths needs at least one hop")
-    val spark = edges.sparkSession
-    var (dist, dH) = Pinned.pinTracked(
+    var dist = Pinned.pin(
       sources.select(col("node")).distinct().select(col("node"), lit(0L).as("dist")))
     var it = 0
     while (it < maxHops) {
@@ -792,10 +771,9 @@ object Graph {
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
       val next = dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      val (pinnedNext, nextH) = Pinned.pinTracked(next)
-      Pinned.free(spark, dH)
+      val pinnedNext = Pinned.pin(next)
+      Pinned.free(dist)
       dist = pinnedNext
-      dH = nextH
       it += 1
     }
     dist

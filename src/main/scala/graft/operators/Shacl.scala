@@ -83,8 +83,8 @@ object Shacl {
       }).distinct()
       // the focus's own triples, re-keyed and PINNED — every constraint
       // reads this one materialization instead of re-scanning the store
-      val (pinnedFocus, focusH) = Pinned.pinTracked(focus)
-      val (mine, mineH) = Pinned.pinTracked(
+      val pinnedFocus = Pinned.pin(focus)
+      val mine = Pinned.pin(
         triples.join(pinnedFocus, triples("subj") === pinnedFocus("focus"))
           .select(col("focus"), col("pred"), col("obj")))
 
@@ -127,15 +127,15 @@ object Shacl {
             "closed", col("pred"),
             lit(s"pred not in {${allowed.sorted.mkString(", ")}}"))
       }
-      (perConstraint.foldLeft(empty)(_ unionAll _), Seq(focusH, mineH))
+      (perConstraint.foldLeft(empty)(_ unionAll _), Seq(pinnedFocus, mine))
     }
     // pin the (violation-sized) final report, then free every per-shape
     // intermediate deterministically — callers get a frozen frame, never a
     // plan that re-reads the store per action
     // the report itself stays pinned for the caller; ContextCleaner
     // reclaims it once dropped (same contract as connectedComponents)
-    val (out, _) = Pinned.pinTracked(reports.map(_._1).reduce(_ unionAll _))
-    reports.flatMap(_._2).foreach(Pinned.free(spark, _))
+    val out = Pinned.pin(reports.map(_._1).reduce(_ unionAll _))
+    reports.flatMap(_._2).foreach(Pinned.free)
     out
   }
 }

@@ -529,7 +529,7 @@ object TextStats {
       }
       m.keysIterator.map(k => (k, 0L)) ++ Iterator((null: String, np))
     }.toDF("term", "np")
-    val (cand, h) = graft.plans.Pinned.pinTracked(summaries)
+    val cand = graft.plans.Pinned.pin(summaries)
     val keys = try {
       val n = cand.filter(col("term").isNull)
         .agg(coalesce(sum(col("np")), lit(0L))).as[Long].head()
@@ -542,7 +542,7 @@ object TextStats {
       // the lazy recount so no lineage escapes the pin's lifetime
       cand.filter(col("term").isNotNull).select("term").distinct()
         .as[String].collect().sorted
-    } finally graft.plans.Pinned.free(td.sparkSession, h)
+    } finally graft.plans.Pinned.free(cand)
     terms.toDF("term")
       .join(broadcast(keys.toSeq.toDF("term")), Seq("term"), "left_semi")
       .groupBy("term").agg(count(lit(1)).as("n"))

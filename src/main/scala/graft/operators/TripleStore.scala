@@ -544,11 +544,11 @@ object TripleStore {
     * discipline and the scale contract. */
   private[graft] def boundedClosure(pairs: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1, "boundedClosure needs at least one hop")
-    val (e, eH) = Pinned.pinTracked(pairs.select(col("subj"), col("obj")).distinct())
+    val e = Pinned.pin(pairs.select(col("subj"), col("obj")).distinct())
     val keyType = e.schema("subj").dataType
     val schema = StructType(Seq(e.schema("subj"), e.schema("obj"),
       StructField("n_hops", LongType, nullable = false)))
-    closedInTask(e, eH, Seq("subj", "obj"), schema) { (rows, bound) =>
+    closedInTask(e, Seq("subj", "obj"), schema) { (rows, bound) =>
       closureInTask(rows, keyType, maxHops, bound)
     }.getOrElse(closureRounds(e, maxHops))
   }
@@ -568,7 +568,7 @@ object TripleStore {
     * then runs its relational rounds from the same base pin, so results
     * and exceptions are those rounds'. The base pin is freed once the
     * kernel's pin holds the closure. */
-  private def closedInTask(base: DataFrame, baseH: Pinned.Handle, keys: Seq[String],
+  private def closedInTask(base: DataFrame, keys: Seq[String],
                            schema: StructType)(
       kernel: (Iterator[InternalRow], Long) => Iterator[InternalRow]): Option[DataFrame] = {
     val types = keys.map(base.schema(_).dataType).distinct
@@ -579,7 +579,7 @@ object TripleStore {
       val closed = Pinned.inTask(schema, base)(in => kernel(in.head, bound))
       if (Pinned.rows(closed) == 0) None
       else {
-        Pinned.free(base.sparkSession, baseH)
+        Pinned.free(base)
         Some(closed)
       }
     }
@@ -653,10 +653,10 @@ object TripleStore {
       val eRen = r.side(e.select(col("subj").as("mid"), col("obj").as("o2")))
       val stepped = delta.join(eRen, delta("obj") === eRen("mid"))
         .select(col("subj"), col("o2").as("obj"))
-      val (fresh, freshH) = Pinned.pinTracked(
+      val fresh = Pinned.pin(
         r.fresh(stepped, all).withColumn("n_hops", lit((hop + 1).toLong)))
       if (Pinned.rows(fresh) == 0) {
-        Pinned.free(e.sparkSession, freshH)
+        Pinned.free(fresh)
         drained = true
       } else {
         all = all.unionAll(fresh)
@@ -747,34 +747,31 @@ object TripleStore {
     * paying for hops the graph doesn't have. */
   def describe(triples: DataFrame, nodes: DataFrame, hops: Int): DataFrame = {
     require(hops >= 0, "describe needs hops >= 0")
-    val spark = triples.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
     // reached/frontier rotate through pins (node-sized): the loop body
     // references each twice, so an unpinned chain would re-execute the
     // whole prior frontier history per round (plans are trees, not DAGs)
-    var (reached, reachedH) = Pinned.pinTracked(nodes.select(col("node")).distinct())
+    var reached = Pinned.pin(nodes.select(col("node")).distinct())
     var frontier = reached
-    var frontierH = reachedH
     var h = 0
     var drained = false
     while (h < hops && !drained) {
-      val (next, nextH) = Pinned.pinTracked(
+      val next = Pinned.pin(
         triples.join(frontier, triples("subj") === frontier("node"))
           .select(col("obj").as("node")).distinct()
           .join(reached, Seq("node"), "left_anti"))
       if (next.isEmpty) {
-        freeH(nextH)
+        Pinned.free(next)
         drained = true
       } else {
-        val (nextReached, nextReachedH) = Pinned.pinTracked(reached.unionAll(next))
-        if (frontierH ne reachedH) freeH(frontierH)
-        freeH(reachedH)
-        reached = nextReached; reachedH = nextReachedH
-        frontier = next; frontierH = nextH
+        val nextReached = Pinned.pin(reached.unionAll(next))
+        if (frontier ne reached) Pinned.free(frontier)
+        Pinned.free(reached)
+        reached = nextReached
+        frontier = next
       }
       h += 1
     }
-    if (frontierH ne reachedH) freeH(frontierH)
+    if (frontier ne reached) Pinned.free(frontier)
     triples.join(reached, triples("subj") === reached("node"))
       .select(col("subj"), col("pred"), col("obj")).distinct()
   }
@@ -897,13 +894,13 @@ object TripleStore {
   def owlClosure(instance: DataFrame, schema: DataFrame, maxRounds: Int = 16): DataFrame = {
     val rules = OwlRules(schema.select(col("subj"), col("pred"), col("obj")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq)
-    val (all0, all0H) = Pinned.pinTracked(
+    val all0 = Pinned.pin(
       instance.select(col("subj"), col("pred"), col("obj")).distinct())
     val inTask =
       if (rules.isEmpty || rules.preds.contains(null) || all0.schema("pred").dataType != StringType) None
       else {
         val keyType = all0.schema("subj").dataType
-        closedInTask(all0, all0H, Seq("subj", "obj"), all0.schema) { (rows, bound) =>
+        closedInTask(all0, Seq("subj", "obj"), all0.schema) { (rows, bound) =>
           owlInTask(rows, keyType, rules, maxRounds, bound)
         }
       }
@@ -1015,8 +1012,6 @@ object TripleStore {
   /** The OWL rules as relational semi-naive rounds from the pinned distinct
     * instance triples `all0`: one plan and one pin per round. */
   private def owlRounds(all0: DataFrame, rules: OwlRules, maxRounds: Int): DataFrame = {
-    val spark = all0.sparkSession
-    def freeH(h: Pinned.Handle): Unit = Pinned.free(spark, h)
     import rules.{chainsOf, invOf, symPreds, trnPreds}
     def predIn(ps: Iterable[String]): Column = col("pred").isin(ps.toSeq: _*)
 
@@ -1072,10 +1067,10 @@ object TripleStore {
       val branches = Seq(viaInv, viaSym, viaTrn, viaChain).flatten
       if (branches.isEmpty) drained = true
       else {
-        val (fresh, freshH) = Pinned.pinTracked(
+        val fresh = Pinned.pin(
           r.fresh(branches.reduce(_ unionAll _), all))
         if (Pinned.rows(fresh) == 0) {
-          freeH(freshH)
+          Pinned.free(fresh)
           drained = true
         } else {
           all = all.unionAll(fresh)

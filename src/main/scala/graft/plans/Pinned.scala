@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Partition-pinning materialization for the iterative/scan operators
-  * (connected components' star rounds, the two-phase prefix scan), with a
-  * config-surfaced durable mode.
+  * (connected components' star rounds, the two-phase prefix scan) and the
+  * vocabulary-sized memo frames (`Memo`), with a config-surfaced durable
+  * mode.
   *
   * Default (no config): eager `localCheckpoint` — correct and fast in local
   * mode and on healthy clusters, but executor loss kills the job (truncated
@@ -30,15 +31,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * offset/window agreement holds either way; the swap changes fault
   * behavior only, never results (PinnedSpec asserts equality).
   *
-  * Durable-mode retention: Spark's own `ReliableCheckpointRDD` lifecycle
-  * keeps one snapshot per pin until the context stops (GC-driven cleanup
-  * via `spark.cleaner.referenceTracking.cleanCheckpoints` is opt-in and
-  * nondeterministic), so `pinTracked` additionally records the `rdd-*`
-  * checkpoint directory each durable pin wrote and `free` DELETES a
-  * superseded pin's directory eagerly — a long-lived driver running many
-  * CC/BPE/scan jobs against one checkpoint root stays bounded at the live
-  * pins, not the pin history (PinnedSpec asserts superseded dirs are
-  * removed while the final pin survives and stays readable).
+  * Freeing: a pin frees itself. [[free]] reads the pin's own RDD off its
+  * `LogicalRDD` and unpersists its blocks (localCheckpoint mode) or deletes
+  * its `rdd-*` checkpoint directory (durable mode). Spark's own
+  * `ReliableCheckpointRDD` lifecycle would keep one snapshot per pin until
+  * the context stops (GC-driven cleanup via
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is opt-in and
+  * nondeterministic), so a long-lived driver running many CC/BPE/scan jobs
+  * against one checkpoint root stays bounded at the live pins, not the pin
+  * history (PinnedSpec asserts superseded dirs are removed while the final
+  * pin survives and stays readable).
   *
   * Measured pins: a pinned frame's plan statistics are the row count and
   * row bytes its pin job measured, and a one-partition pin declares
@@ -49,11 +51,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-planned exchanges and broadcasts — under AQE one job each.
   */
 object Pinned {
-
-  /** What one pinTracked call materialized: the pinned RDD's block id
-    * (localCheckpoint mode) or its reliable-checkpoint directory (durable
-    * mode). free() releases both. */
-  final case class Handle(blocks: Set[Int], ckptDirs: Set[String])
 
   val ConfKey = "graft.checkpoint.dir"
 
@@ -66,24 +63,7 @@ object Pinned {
       .filter(_.nonEmpty)
 
   /** Eagerly materialize `df` with pinned partitions: reliable checkpoint
-    * when a durable dir is configured, localCheckpoint otherwise. */
-  def pin(df: DataFrame): DataFrame = pinTracked(df)._1
-
-  /** pin() plus a Handle for everything the pin materialized — the
-    * iterative operators (CC star rounds, BPE merge rounds) free superseded
-    * rounds DETERMINISTICALLY with free() instead of waiting on driver GC,
-    * so at most two round-state copies are ever live in EITHER mode.
-    *
-    * The Handle names the pin's OWN storage: the id of the pinned RDD
-    * (localCheckpoint blocks) or its `rdd-<id>` checkpoint directory
-    * (durable mode), read off the RDD the pin created. Nothing is inferred
-    * from a before/after diff of the context's registries, so pins taken
-    * concurrently on other threads of the same session never land in this
-    * handle (a diff-built handle let one query's free() unpersist another
-    * query's live pin: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). free() is a
-    * superseded-state contract: the caller promises the pinned frame is
-    * never referenced again (re-reading a freed durable pin fails exactly
-    * like recomputing a freed localCheckpoint does).
+    * when a durable dir is configured, localCheckpoint otherwise.
     *
     * The pin is ONE job that both materializes and measures: it counts the
     * rows and sums their bytes per partition, and the returned frame's plan
@@ -91,10 +71,13 @@ object Pinned {
     * materialized as one partition also declares `SinglePartition`, so the
     * planner can run joins and aggregations over it without an exchange
     * (see [[Rounds]]). Both modes measure the same rows, so they plan
-    * identically. */
-  def pinTracked(df: DataFrame): (DataFrame, Handle) = {
-    val (rdd, rows, bytes, handle) = PinnedPlans.execute(df)(materialize(df.sparkSession, _))
-    (PinnedPlans.frameOver(df, rdd, rows, bytes), handle)
+    * identically. The iterative operators (CC star rounds, BPE merge rounds)
+    * [[free]] each superseded round's pin DETERMINISTICALLY instead of
+    * waiting on driver GC, so at most two round-state copies are ever live
+    * in EITHER mode. */
+  def pin(df: DataFrame): DataFrame = {
+    val (rdd, rows, bytes) = PinnedPlans.execute(df)(materialize(df.sparkSession, _))
+    PinnedPlans.frameOver(df, rdd, rows, bytes)
   }
 
   /** Run a loop whole inside ONE task: `kernel` reads the rows of the
@@ -122,7 +105,7 @@ object Pinned {
       val proj = UnsafeProjection.create(schema)
       it.map(proj(_).copy(): InternalRow)
     }
-    val (rdd, rows, bytes, _) = materialize(spark, unsafe)
+    val (rdd, rows, bytes) = materialize(spark, unsafe)
     PinnedPlans.frameOver(spark, schema, rdd, rows, bytes)
   }
 
@@ -164,9 +147,9 @@ object Pinned {
 
   /** Mark `rdd` for its pin (reliable checkpoint in durable mode,
     * localCheckpoint otherwise) and run the ONE job that computes, stores
-    * and measures it: its rows, row bytes and the pin's Handle. */
+    * and measures it: its rows and row bytes. */
   private def materialize(spark: SparkSession, rdd: RDD[InternalRow])
-      : (RDD[InternalRow], Long, Long, Handle) = {
+      : (RDD[InternalRow], Long, Long) = {
     val durable = durableDir(spark)
     durable.foreach(useCheckpointRoot(spark, _))
     if (durable.isDefined) {
@@ -195,15 +178,11 @@ object Pinned {
     }.collect()
     require(rdd.isCheckpointed || rdd.getNumPartitions == 0,
       s"pin of RDD ${rdd.id} was not checkpointed")
-    val handle =
-      if (durable.isDefined) {
-        rdd.unpersist(blocking = false)
-        Handle(Set.empty, rdd.getCheckpointFile.toSet)
-      } else Handle(Set(rdd.id), Set.empty)
-    (rdd, perPart.map(_._1).sum, perPart.map(_._2).sum, handle)
+    if (durable.isDefined) rdd.unpersist(blocking = false)
+    (rdd, perPart.map(_._1).sum, perPart.map(_._2).sum)
   }
 
-  /** Measured row count of a frame returned by [[pin]]/[[pinTracked]] —
+  /** Measured row count of a frame returned by [[pin]]/[[inTask]] —
     * read from its plan statistics, no job. */
   def rows(pinned: DataFrame): Long =
     relation(pinned).stats.rowCount.map(_.toLong).getOrElse(
@@ -307,18 +286,27 @@ object Pinned {
     if (!underRoot) sc.setCheckpointDir(dir)
   }
 
-  /** Release everything a pinTracked Handle recorded: unpersist blocks
-    * (non-blocking) and delete the pin's reliable-checkpoint directories. */
-  def free(spark: SparkSession, h: Handle): Unit = {
-    h.blocks.foreach(id =>
-      spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    if (h.ckptDirs.nonEmpty) {
-      val hconf = spark.sparkContext.hadoopConfiguration
-      h.ckptDirs.foreach { d =>
+  /** Release everything `pin` (a frame returned by [[pin]]/[[inTask]])
+    * materialized, read off its own RDD: its blocks (localCheckpoint mode,
+    * non-blocking) or its reliable-checkpoint directory (durable mode).
+    * Nothing is inferred from the context's registries, so pins taken
+    * concurrently on other threads of the same session are never touched
+    * (a registry diff once let one query free another query's live pin:
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). The caller promises the pin is
+    * never read again: re-reading a freed durable pin fails exactly like
+    * recomputing a freed localCheckpoint does. Throws on a frame that is
+    * not exactly a pin, as [[rows]] does. */
+  def free(pin: DataFrame): Unit = {
+    val rdd = relation(pin).rdd
+    rdd.getCheckpointFile match {
+      case Some(d) =>
         val p = new org.apache.hadoop.fs.Path(d)
-        try p.getFileSystem(hconf).delete(p, true)
+        try p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
         catch { case _: java.io.IOException => () } // best-effort sweep
-      }
+      case None => rdd.unpersist(blocking = false)
     }
   }
+
+  /** True when `df` is exactly a pin (no operator on top of it). */
+  def isPin(df: DataFrame): Boolean = PinnedPlans.pinnedRelation(df).isDefined
 }

@@ -13,9 +13,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** The plan-level half of `graft.plans.Pinned`: the few steps that need
-  * Spark's `private[sql]` API (`Dataset.ofRows`, the session's SQL conf,
-  * the cache manager), kept in one small object so the rest of the engine
-  * stays on public API. */
+  * Spark's `private[sql]` API (`Dataset.ofRows`, the session's SQL conf),
+  * kept in one small object so the rest of the engine stays on public API. */
 object PinnedPlans {
 
   private def classicOf(df: DataFrame): classic.Dataset[Row] =
@@ -78,15 +77,4 @@ object PinnedPlans {
     * size estimate the planner keeps in one partition without an exchange. */
   def maxSinglePartitionBytes(df: DataFrame): Long =
     classicOf(df).sparkSession.sessionState.conf.getConf(SQLConf.MAX_SINGLE_PARTITION_BYTES)
-
-  /** Partition count of a persisted frame whose cache is fully computed,
-    * read from its loaded column buffers without planning or running it.
-    * None for anything else (unmaterialized, or an operator on top). */
-  def materializedPartitions(df: DataFrame): Option[Int] = {
-    val ds = classicOf(df)
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
-      .map(_.cachedRepresentation.cacheBuilder)
-      .filter(_.isCachedColumnBuffersLoaded)
-      .map(_.cachedColumnBuffers.getNumPartitions)
-  }
 }

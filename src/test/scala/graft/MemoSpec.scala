@@ -79,7 +79,7 @@ class MemoSpec extends SparkTestBase {
   }
 
   test("BoundedMemo: same-key concurrent builders collapse to ONE build") {
-    val memo = new Memo.BoundedMemo[String](_ => ())
+    val memo = new Memo.BoundedMemo[String]
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val started = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
@@ -106,7 +106,7 @@ class MemoSpec extends SparkTestBase {
     // key A's build blocks until key B's build STARTS — possible only if
     // builds run outside a shared lock; under the old whole-build lock this
     // times out (asserted, not hung)
-    val memo = new Memo.BoundedMemo[String](_ => ())
+    val memo = new Memo.BoundedMemo[String]
     val aStarted = new java.util.concurrent.CountDownLatch(1)
     val bStarted = new java.util.concurrent.CountDownLatch(1)
     val a = new Thread(() => memo.getOrBuild((spark, "key-a")) {
@@ -126,7 +126,7 @@ class MemoSpec extends SparkTestBase {
   }
 
   test("BoundedMemo: failed build clears the latch so a retry rebuilds") {
-    val memo = new Memo.BoundedMemo[String](_ => ())
+    val memo = new Memo.BoundedMemo[String]
     val key = (spark, "flaky-key")
     intercept[RuntimeException] {
       memo.getOrBuild(key) { throw new RuntimeException("boom") }
@@ -134,22 +134,71 @@ class MemoSpec extends SparkTestBase {
     assert(memo.getOrBuild(key)("recovered") == "recovered")
   }
 
-  test("evicting a size-compacted memo frame unpersists the RAW cache entry (r6 leak regression)") {
-    // kgEdgesOf / coStatsOf hand out coalesce() VIEWS over their persisted
-    // frames; `unpersist` matches by plan equality, so an evict callback
-    // holding only the view would silently leak the cache entry. The memos
-    // therefore keep the raw frames for eviction — this pins that contract.
+  private def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Spark jobs started by `body` on this thread (by job group). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, group)
+    try { body; org.apache.spark.TestListenerBus.drain(sc); n.get } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** The rdd-* checkpoint directories under a durable pin root. */
+  private def rddDirs(root: java.io.File): Seq[java.io.File] = {
+    def files(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles()).map(_.toSeq.flatMap(c => c +: files(c))).getOrElse(Nil)
+    files(root).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
+  }
+
+  private def withDurablePins[T](body: java.io.File => T): T = {
+    val root = Files.createTempDirectory("graft_memo_ckpt").toFile
+    spark.conf.set(plans.Pinned.ConfKey, root.toString)
+    try body(root) finally {
+      spark.conf.unset(plans.Pinned.ConfKey)
+      org.apache.commons.io.FileUtils.deleteDirectory(root)
+    }
+  }
+
+  test("invalidate releases every cached and pinned frame the memo builds made") {
+    // the vocabulary-sized memo frames are pins, the corpus-sized ones
+    // columnar caches; one release path must drop both kinds, and the E2
+    // build must not leave the chain's own caches behind
+    def buildAll(): Unit = {
+      Memo.kgEdgesOf(spark, sfDir, Queries.cfg).count()
+      val cs = Memo.coStatsOf(spark, sfDir, Queries.cfg)
+      cs.coverage.count(); cs.scored.count()
+      val (top20, top1) = Memo.rankedStoresOf(spark, sfDir, Queries.cfg)
+      top20.count(); top1.count()
+      Memo.l3TriplesOf(spark, sfDir, Queries.cfg).count()
+    }
     Memo.invalidate(spark)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    Memo.kgEdgesOf(spark, sfDir, Queries.cfg).count()
-    val cs = Memo.coStatsOf(spark, sfDir, Queries.cfg)
-    cs.coverage.count(); cs.scored.count()
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "expected the memo builds to persist frames")
+    val before = persistedIds
+    buildAll()
+    val edges = Memo.kgEdgesOf(spark, sfDir, Queries.cfg)
+    assert(plans.Pinned.isPin(edges) && plans.Pinned.isPin(Memo.coStatsOf(spark, sfDir, Queries.cfg).scored))
+    assert(jobsOf(assert(plans.Pinned.rows(edges) > 0)) == 0, "a pin's row count ran a job")
+    assert(persistedIds != before, "expected the memo builds to persist frames")
     Memo.invalidate(spark)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before,
-      s"invalidate leaked persisted frames: $before before build, $after after invalidate")
+    assert(persistedIds == before, s"invalidate left ${persistedIds -- before} persisted")
+
+    withDurablePins { root =>
+      buildAll()
+      assert(rddDirs(root).nonEmpty, s"no durable pins under $root")
+      Memo.invalidate(spark)
+      assert(persistedIds == before, s"invalidate left ${persistedIds -- before} persisted")
+      assert(rddDirs(root).isEmpty, s"invalidate left pin dirs ${rddDirs(root).map(_.getName)}")
+    }
   }
 
   test("invalidate and totalEntries reach the memos declared outside Memo") {
@@ -159,56 +208,54 @@ class MemoSpec extends SparkTestBase {
     val base = Memo.totalEntries
     CurationQueries.sparkQueries("q_dsir_weights")(spark, sfDir).count()
     ExtraQueries.sparkQueries("q_dedup_cc")(spark, sfDir).count()
-    assert(Memo.totalEntries >= base + 2,
+    CurationQueries.sparkQueries("q_lr_score")(spark, sfDir).count()
+    assert(Memo.totalEntries >= base + 4,
       s"registry queries' memo entries not counted: ${Memo.totalEntries} (was $base)")
     Memo.invalidate(spark)
     assert(Memo.totalEntries == base, s"invalidate left ${Memo.totalEntries - base} entries")
   }
 
   test("evicting a pinned memo entry frees its pin (blocks locally, checkpoint dir when durable)") {
-    // q_dedup_cc reads its memo's pin directly (an orderBy over it)
+    // q_dedup_cc reads its memo's pin directly (an orderBy over it); the
+    // entry is the only thing the query leaves persisted, so invalidate
+    // restores the session's persisted set exactly
     def pinOf(): org.apache.spark.rdd.RDD[_] = {
       val df = ExtraQueries.sparkQueries("q_dedup_cc")(spark, sfDir)
       df.count()
       org.apache.spark.sql.graft.PinnedPlans.pinnedLeaves(df).head.rdd
     }
     Memo.invalidate(spark)
+    val before = persistedIds
     val local = pinOf()
     assert(spark.sparkContext.getPersistentRDDs.contains(local.id))
     Memo.invalidate(spark)
-    assert(!spark.sparkContext.getPersistentRDDs.contains(local.id),
-      s"evicted pin RDD ${local.id} still persisted")
+    assert(persistedIds == before, s"evicted entry left ${persistedIds -- before} persisted")
 
-    val root = Files.createTempDirectory("graft_memo_ckpt")
-    spark.conf.set(plans.Pinned.ConfKey, root.toString)
-    try {
+    withDurablePins { root =>
       val durable = pinOf()
       val dir = new java.io.File(new java.net.URI(durable.getCheckpointFile
         .getOrElse(fail("durable pin wrote no checkpoint"))))
       assert(dir.isDirectory, s"checkpoint dir missing at $dir")
       Memo.invalidate(spark)
       assert(!dir.exists(), s"evicted pin's checkpoint dir $dir not deleted")
-    } finally {
-      spark.conf.unset(plans.Pinned.ConfKey)
-      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      assert(rddDirs(root).isEmpty, s"evicted entry left pin dirs ${rddDirs(root).map(_.getName)}")
+      assert(persistedIds == before, s"evicted entry left ${persistedIds -- before} persisted")
     }
   }
 
-  test("memos are LRU-bounded: sweeping 10 configs holds <= graft.memo.max entries") {
-    withProp("graft.memo.max", "3") {
-      val before = Memo.totalEntries
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-      (1 to 10).foreach { i =>
-        // distinct guard bound -> distinct memo key per sweep step
-        val cfg = Queries.cfg.copy(maxDocChars = 1024 * 1024 + i)
-        Memo.tokDocsOf(spark, sfDir, cfg).count()
-      }
-      assert(Memo.totalEntries <= before + 3,
-        s"memo grew unbounded: ${Memo.totalEntries} entries (was $before)")
-      val persistedAfter = spark.sparkContext.getPersistentRDDs.size
-      assert(persistedAfter <= persistedBefore + 3,
-        s"persisted frames grew unbounded: $persistedBefore -> $persistedAfter")
-      Memo.invalidate(spark)
+  test("memos are LRU-bounded: sweeping 10 configs holds <= Memo.MaxEntries entries") {
+    val before = Memo.totalEntries
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    (1 to 10).foreach { i =>
+      // distinct guard bound -> distinct memo key per sweep step
+      val cfg = Queries.cfg.copy(maxDocChars = 1024 * 1024 + i)
+      Memo.tokDocsOf(spark, sfDir, cfg).count()
     }
+    assert(Memo.totalEntries <= before + Memo.MaxEntries,
+      s"memo grew unbounded: ${Memo.totalEntries} entries (was $before)")
+    val persistedAfter = spark.sparkContext.getPersistentRDDs.size
+    assert(persistedAfter <= persistedBefore + Memo.MaxEntries,
+      s"persisted frames grew unbounded: $persistedBefore -> $persistedAfter")
+    Memo.invalidate(spark)
   }
 }

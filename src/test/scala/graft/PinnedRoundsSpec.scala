@@ -20,8 +20,8 @@ import graft.plans.Pinned
   * size and (for one partition) `SinglePartition`; HITS, PageRank, PPR,
   * connected components and the reach, path and OWL closures then run
   * whole inside one task, and a closure that outgrows the bound gives up
-  * and runs its relational rounds, one Spark job each; handles name only
-  * their own storage (concurrent loops in one session no longer free each
+  * and runs its relational rounds, one Spark job each; a pin frees only
+  * its own storage (concurrent loops in one session no longer free each
   * other's pins); and the relational rounds give bit-identical outputs and
   * fail alike. */
 class PinnedRoundsSpec extends SparkTestBase {
@@ -96,17 +96,23 @@ class PinnedRoundsSpec extends SparkTestBase {
     intercept[IllegalArgumentException](Pinned.rows(p1.select(col("v"))))
   }
 
-  test("a pin's handle names only its own RDD") {
-    val (p, h) = Pinned.pinTracked(spark.range(0, 10, 1, 2).toDF("v"))
-    assert(h.blocks == Set(PinnedPlans.pinnedRelation(p).get.rdd.id) && h.ckptDirs.isEmpty)
-    Pinned.free(spark, h)
-    assert(!sc.getPersistentRDDs.contains(h.blocks.head))
+  test("free(pin) releases only its own RDD") {
+    val p = Pinned.pin(spark.range(0, 10, 1, 2).toDF("v"))
+    val q = Pinned.pin(spark.range(0, 10, 1, 2).toDF("v"))
+    val (pId, qId) = (PinnedPlans.pinnedRelation(p).get.rdd.id, PinnedPlans.pinnedRelation(q).get.rdd.id)
+    assert(sc.getPersistentRDDs.contains(pId) && sc.getPersistentRDDs.contains(qId))
+    Pinned.free(p)
+    assert(!sc.getPersistentRDDs.contains(pId))
+    // the other pin, taken meanwhile, is never freed and stays readable
+    assert(sc.getPersistentRDDs.contains(qId) && q.agg(sum("v")).head.getLong(0) == 45L)
+    Pinned.free(q)
+    intercept[IllegalArgumentException](Pinned.free(q.select(col("v"))))
   }
 
   test("concurrent graph loops in one session keep each other's pins (results equal sequential)") {
-    // each loop frees its superseded rounds; a handle built by diffing the
+    // each loop frees its superseded rounds; a free built by diffing the
     // context's persisted RDDs also captured pins taken meanwhile on other
-    // threads, and free() then dropped them: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+    // threads and dropped them: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
     val e = one(graph)
     val runs: Seq[() => Seq[Row]] = Seq(
       () => rowsOf(Graph.hits(e, iters = 4)),
@@ -318,16 +324,5 @@ class PinnedRoundsSpec extends SparkTestBase {
       rowsOf(TripleStore.owlClosure(t.coalesce(1), schema))))
     assert(a == b)
     assert(a(1).exists(_.isNullAt(0)) && a(2).exists(_.isNullAt(1)))
-  }
-
-  test("Tuning.compact reads the materialized partition count and rejects an unmaterialized frame") {
-    val cached = spark.range(0, 1000, 1, 4).toDF("v").persist()
-    try {
-      intercept[IllegalArgumentException](Tuning.compact(cached, 1000L))
-      assert(cached.count() == 1000L)
-      assert(Tuning.compact(cached, 1000L).rdd.getNumPartitions == 1)
-      assert(Tuning.compact(cached, 1000L, rowsPerTask = 100L) eq cached)
-    } finally cached.unpersist()
-    intercept[IllegalArgumentException](Tuning.compact(spark.range(0, 10).toDF("v"), 10L))
   }
 }

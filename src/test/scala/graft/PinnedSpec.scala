@@ -70,24 +70,29 @@ class PinnedSpec extends SparkTestBase {
         files(dir).filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
           .map(_.getAbsolutePath).toSet
       }
-      val (a, ha) = Pinned.pinTracked((0 until 50).map(i => (i, i * 3)).toDF("k", "v"))
-      assert(ha.ckptDirs.nonEmpty, "durable pin recorded no checkpoint dirs")
-      val (b, hb) = Pinned.pinTracked(a.withColumn("v", $"v" + 1))
-      assert(hb.ckptDirs.nonEmpty && hb.ckptDirs.intersect(ha.ckptDirs).isEmpty,
-        s"handle dirs must be disjoint per pin: $ha vs $hb")
+      // a pin's own checkpoint directory, read off its RDD
+      def dirsOf(pin: org.apache.spark.sql.DataFrame): Set[String] =
+        org.apache.spark.sql.graft.PinnedPlans.pinnedRelation(pin).get.rdd.getCheckpointFile.toSet
+      val a = Pinned.pin((0 until 50).map(i => (i, i * 3)).toDF("k", "v"))
+      val aDirs = dirsOf(a)
+      assert(aDirs.nonEmpty, "durable pin wrote no checkpoint dir")
+      val b = Pinned.pin(a.withColumn("v", $"v" + 1))
+      val bDirs = dirsOf(b)
+      assert(bDirs.nonEmpty && bDirs.intersect(aDirs).isEmpty,
+        s"checkpoint dirs must be disjoint per pin: $aDirs vs $bDirs")
       assert(rddDirs().size >= 2)
       // supersede A: its snapshot dirs vanish, B's stay and B still reads
-      // (handles carry Hadoop URIs like file:/…; normalize to local paths)
+      // (checkpoint files are Hadoop URIs like file:/…; normalize to local paths)
       def norm(d: String): String = new org.apache.hadoop.fs.Path(d).toUri.getPath
-      Pinned.free(spark, ha)
+      Pinned.free(a)
       val left = rddDirs()
-      assert(ha.ckptDirs.forall(d => !left.contains(norm(d))),
-        s"superseded dirs not swept: ${ha.ckptDirs} still in $left")
-      assert(hb.ckptDirs.forall(d => left.contains(norm(d))),
-        s"live pin's dirs must survive the sweep: ${hb.ckptDirs} vs $left")
+      assert(aDirs.forall(d => !left.contains(norm(d))),
+        s"superseded dirs not swept: $aDirs still in $left")
+      assert(bDirs.forall(d => left.contains(norm(d))),
+        s"live pin's dirs must survive the sweep: $bDirs vs $left")
       assert(b.agg(org.apache.spark.sql.functions.sum("v")).head.getLong(0) ==
         (0 until 50).map(_ * 3 + 1).sum.toLong, "live pin unreadable after sweep")
-      Pinned.free(spark, hb)
+      Pinned.free(b)
       assert(rddDirs().isEmpty, "final free left snapshot dirs behind")
     }
   }
