@@ -13,30 +13,10 @@ import org.apache.spark.sql.SparkSession
   * can never masquerade as a fast one. */
 object Bench {
 
-  /** The iterative operators (CC star rounds, the two-phase scan) unpersist
-    * superseded localCheckpoints deliberately; Spark logs a benign
-    * "was locally checkpointed, its lineage has been truncated" WARN per
-    * freed RDD, which reads like an error in a captured log tail. Silence
-    * the rdd-package logger for harness sessions only — failures surface
-    * through the operators' converge-or-throw guards and the harness' own
-    * nonzero exits, never through these logs. */
-  private[graft] def muteCheckpointWarns(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH/bench_last.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.local.dir", sys.env.getOrElse("GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    muteCheckpointWarns()
+    val spark = Session.local(tmpfsShuffle = true)
 
     // warm the session once (JIT, codegen compiler, FS cache) with cheap
     // actions so the map-order-first query doesn't absorb JVM warmup
@@ -189,7 +169,7 @@ object Bench {
       s""""queries_steal_sec":$qsSteal,"e1_steal_sec":$e1StealJson,""" +
       s""""steal_total_sec":${HostStat.json(benchStealSec)},""" +
       s""""steal_cores_avg":${HostStat.json(stealCoresAvg)},""" +
-      s""""cpus":$cpus,"sf":${jstr(sfDir)},"n_errors":${errors.size},"errors":$errJson}"""
+      s""""cpus":${spark.sparkContext.defaultParallelism},"sf":${jstr(sfDir)},"n_errors":${errors.size},"errors":$errJson}"""
     println(json)
     val p = java.nio.file.Paths.get(outPath)
     Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))

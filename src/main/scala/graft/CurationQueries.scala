@@ -89,9 +89,7 @@ object CurationQueries {
 
   /** Bench warm hook: charge the one-time LR training to the warm phase
     * (the BPE-training accounting rule, VERDICT r4 #3). */
-  private[graft] def warmLr(s: SparkSession, d: String): Unit = {
-    Tuning.ensure(s); lrModelOf(s, d); ()
-  }
+  private[graft] def warmLr(s: SparkSession, d: String): Unit = { lrModelOf(s, d); () }
 
   // ------------------------------------------------------------ queries
 

@@ -98,7 +98,6 @@ object EventQueries {
     // die BEFORE the shuffle — the window-rank form (the oracle) shuffles
     // and sorts every row of every group
     "q_events_topk" -> ((s, d) => {
-      graft.GraftFunctions.ensureRegistered(s)
       eventsOf(s, d)
         .groupBy("event_type")
         .agg(call_function(graft.GraftFunctions.TopKName,

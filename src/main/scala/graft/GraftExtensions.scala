@@ -142,11 +142,12 @@ object GraftFunctions {
   val TopKName = "graft_top_k"
   val NfcName = "graft_nfc"
 
-  /** Make graft functions callable on any session, including ones the driver
-    * built without our extensions: if the native Catalyst expression is not
-    * registered, fall back to an equivalent Scala UDF. Pipeline code then
-    * uses functions.call_function(LogHypergeomName, ...) uniformly. */
-  def ensureRegistered(spark: SparkSession): Unit = {
+  /** Make graft functions callable on a session built without our
+    * extensions: if the native Catalyst expression is not registered, fall
+    * back to an equivalent Scala UDF. Called once per session by
+    * [[Session.ensure]]; pipeline code then uses
+    * functions.call_function(LogHypergeomName, ...) uniformly. */
+  private[graft] def registerFallbacks(spark: SparkSession): Unit = {
     if (!spark.catalog.functionExists(GraftFunctions.LogHypergeomName)) {
       spark.udf.register(GraftFunctions.LogHypergeomName,
         (k: Long, n: Long, bigK: Long, bigN: Long) => HyperGeom.logTail(k, n, bigK, bigN))

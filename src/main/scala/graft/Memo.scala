@@ -143,7 +143,7 @@ object Memo {
     * to `advisoryPartitionSizeInBytes` (one partition for a KB-sized frame,
     * bytes / 64 MB at scale). Scored's last exchange lives inside the
     * chain's cached cooc plan, whose partitioning AQE keeps (see
-    * `Tuning.ensure`), and senseVec is a scan of the model's files. */
+    * `Session`), and senseVec is a scan of the model's files. */
   private def pinSized(df: DataFrame): DataFrame = Pinned.pin(df.hint("rebalance"))
 
   /** Total live entries across all memos (test hook for the LRU bound). */
@@ -201,7 +201,7 @@ object Memo {
     * Tokenization is cfg-independent here (no stopwords on the contract
     * corpus); the guard bound is part of the key via cfg.maxDocChars. */
   def tokDocsOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): Dataset[TokDoc] = {
-    Tuning.ensure(spark)
+    Session.ensure(spark)
     tokdocsMemo.getOrBuild(
       (spark, s"$sfDir|${cfg.maxDocChars}|${cfg.stopwords.toSeq.sorted.mkString(",")}")) {
       val docs = sources.CorpusSynth.fromDocuments(spark, sfDir)

@@ -71,13 +71,13 @@ object Pipeline {
   def induceAndEmit(spark: SparkSession, docs: Dataset[CodeDoc], cfg: WsidConfig,
                     ckptRoot: Option[String] = None, corpusId: String = "",
                     sharedTokDocs: Option[Dataset[TokDoc]] = None): E1Result = {
-    Tuning.ensure(spark)
+    Session.ensure(spark)
     val ck = ckptRoot.map(new Checkpoint(spark, _))
     val cfgId = s"$corpusId|${cfg.canonicalId}"
     val persisted = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
     // checkpoint parquet doubles as stage materialization; without it,
     // persist each reused stage so downstream actions don't re-run the
-    // whole upstream chain (ALS alone takes ~30 actions)
+    // whole upstream chain (every NMF iteration is an action)
     def staged(name: String, inputs: Seq[String])(compute: => DataFrame): DataFrame = {
       // §1.5 job labels: every action triggered while building this stage
       // shows up under its name in the UI / listener profiles
@@ -153,19 +153,23 @@ object Pipeline {
     }
 
     // ctxrows is already cached in compact columnar form by staged();
-    // each NMF pass decodes Ctx records from it (decode < re-tokenize, and
-    // the columnar cache is ~5x smaller on heap than Java Ctx objects)
-    val grouped = {
+    // each NMF pass and the assignment pass decode Ctx records from it
+    // (decode < re-tokenize, and the columnar cache is ~5x smaller on heap
+    // than Java Ctx objects)
+    val ctx = {
       import spark.implicits._
-      ctxrows.as[ml.ThinNMF.Ctx].rdd
+      ctxrows.as[ml.ThinNMF.Ctx]
     }
+    // taken outside staged("senses"): planning the RDD runs ctxrows'
+    // exchange, which is no NMF work
+    val grouped = ctx.rdd
 
     val senseVecRaw = staged("senses", Seq("ctxrows")) {
       SenseInduction.senseMatrix(spark, grouped, cfg)
     }
 
     val h = SenseInduction.collectH(senseVecRaw)
-    val assignRaw = ml.ThinNMF.assign(grouped, spark, h, cfg.minSenseScore)
+    val assignRaw = ml.ThinNMF.assignDS(ctx, h, cfg.minSenseScore)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     persisted += assignRaw
     val (assignments, senseVecRelabeled) = Linking.relabel(assignRaw, senseVecRaw)

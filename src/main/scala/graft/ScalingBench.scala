@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Two-cluster-size scaling evidence (BASELINE.md protocol).
@@ -21,9 +20,7 @@ import org.apache.spark.sql.functions._
   * (default 60, the amplification factor), GRAFT_BENCH_PARTS (default 48,
   * input splits AND shuffle partitions, fixed across levels),
   * GRAFT_BENCH_ONLY (single-level mode for the bin/scaling.sh wrapper),
-  * GRAFT_LOCAL_DIR (tmpfs shuffle dir), GRAFT_DEBUG_JOBS (per-job
-  * profiling listener — NOT for measured runs; its bus thread shares the
-  * pinned CPU).
+  * GRAFT_LOCAL_DIR (tmpfs shuffle dir).
   */
 object ScalingBench {
 
@@ -52,8 +49,9 @@ object ScalingBench {
     // misleading "0 vs 0 diverge" — name the real problem instead
     require(cSmall > 0 && cBig > 0,
       s"E1 emitted no triples ($cSmall / $cBig) — empty or misconfigured corpus at $sfDir")
-    // ALS factor init depends on rating partitioning, so borderline sense
-    // assignments may flip across parallelism levels; counts must agree to 1%
+    // on the many-split path ThinNMF merges each entity's float partials in
+    // shuffle arrival order, so borderline sense assignments may flip across
+    // parallelism levels; counts must agree to 1%
     require(math.abs(cSmall - cBig).toDouble / cSmall < 0.01,
       s"triple counts diverge across parallelism: $cSmall vs $cBig")
 
@@ -79,31 +77,7 @@ object ScalingBench {
     * partitions to each run's core count would compare two different plans. */
   def runOnce(cores: Int, sfDir: String, reps: Int): (Double, Long, Option[Double]) = {
     val parts = sys.env.getOrElse("GRAFT_BENCH_PARTS", "48").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", parts.toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // tmpfs shuffle dirs: stand-in for per-executor local SSDs — a single
-      // contended virtio disk is a sandbox artifact, not a cluster property
-      .config("spark.local.dir", sys.env.getOrElse("GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.contains("GRAFT_DEBUG_JOBS")) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        private val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.put(js.jobId, (System.nanoTime(),
-            js.stageInfos.map(si => s"${si.name.takeWhile(_ != '.')}x${si.numTasks}").mkString("+")))
-        override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          Option(starts.remove(je.jobId)).foreach { case (t0, desc) =>
-            val ms = (System.nanoTime() - t0) / 1000000
-            if (ms > 300) println(f"[job] cores=$cores job=${je.jobId}%3d ${ms}%6d ms  $desc")
-          }
-        }
-      })
-    }
+    val spark = Session.local(cores, Some(parts), tmpfsShuffle = true, kryo = true)
     try {
       import spark.implicits._
       // repartition the (single-file) base BEFORE amplifying: replica

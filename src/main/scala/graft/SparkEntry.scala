@@ -19,13 +19,13 @@ object SparkEntry {
 
   /** One entry per implemented operator: SURVEY.md §2 inventory (Queries)
     * plus the training-data-pipeline extras (ExtraQueries). Every entry
-    * runs through the session tuning hook (Tuning.ensure — idempotent,
-    * results unchanged; see Tuning for the why). */
+    * runs through the session set-up hook (Session.ensure — idempotent,
+    * results unchanged; see Session for the why). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     (Queries.sparkQueries ++ ExtraQueries.sparkQueries ++ KgQueries.sparkQueries ++
       MmQueries.sparkQueries ++ EventQueries.sparkQueries ++ CurationQueries.sparkQueries)
       .map { case (name, fn) =>
-        name -> ((s: SparkSession, d: String) => { Tuning.ensure(s); fn(s, d) })
+        name -> ((s: SparkSession, d: String) => { Session.ensure(s); fn(s, d) })
       }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

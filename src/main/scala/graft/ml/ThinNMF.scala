@@ -284,16 +284,8 @@ object ThinNMF {
     h.map { case (e, he) => e -> ((he, gram(he))) }
 
   /** Final fused pass: per-context sense assignment (argmax NMF loading,
-    * cosine-to-sense confidence). */
-  def assign(grouped: RDD[Ctx], spark: SparkSession, h: Map[String, H], minScore: Double): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(withGrams(h))
-    grouped.flatMap(c => assignOne(bc.value, c, minScore))
-      .toDF("entity", "ctxid", "senseid", "score")
-  }
-
-  /** Dataset variant of the assignment pass — STATELESS, so it runs
-    * unchanged on a Structured Streaming Dataset (append mode). */
+    * cosine-to-sense confidence). STATELESS, so it runs unchanged on a
+    * Structured Streaming Dataset (append mode). */
   def assignDS(grouped: Dataset[Ctx], h: Map[String, H], minScore: Double): DataFrame = {
     val spark = grouped.sparkSession
     import spark.implicits._

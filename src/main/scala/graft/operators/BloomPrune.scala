@@ -71,7 +71,6 @@ object BloomPrune {
       s"prunedEquiJoin needs distinct key column names (got `$bigKey` on both " +
         "sides — the join condition would be an ambiguous self-reference); " +
         "alias one side first")
-    graft.GraftFunctions.ensureRegistered(big.sparkSession)
     val n = expectedItems.getOrElse(
       small.select(col(smallKey)).distinct().count())
     val bf = buildFilter(small, col(smallKey), math.max(n, 1L), fpp)

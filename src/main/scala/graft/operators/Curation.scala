@@ -447,19 +447,21 @@ object Curation {
     * under any partitioning and the oracle replays all rounds in SQL.
     * At 100 TB: per round, one pass over (docid, buckets) — bytes per doc —
     * with map-side combine on ≤ B+1 keys; model state never exceeds B+1
-    * longs. `feat` must carry an integer `y` ∈ {0,1}. */
+    * longs. `feat` must carry an integer `y` ∈ {0,1}; a `feat` that is
+    * already a pin is trained over as it is. */
   def trainLogReg(feat: DataFrame, b: Int, rounds: Int, lr: Double = 1.0): LrModel = {
-    // every round scans the pinned projection; the per-row gradient is
-    // quantized to a Long BEFORE the sum, so the aggregate is partition-
-    // order-invariant and the round replay (q_lr_train oracle) unchanged
-    val cached = graft.plans.Pinned.pin(feat.select(col("y").cast("long").as("y"), col("buckets")))
+    // every round scans a pin; the per-row gradient is quantized to a Long
+    // BEFORE the sum, so the aggregate is partition-order-invariant and the
+    // round replay (q_lr_train oracle) unchanged
+    val owned = !graft.plans.Pinned.isPin(feat)
+    val cached = if (owned) graft.plans.Pinned.pin(feat.select("y", "buckets")) else feat
     val n = graft.plans.Pinned.rows(cached)
     require(n > 0, "trainLogReg: empty training frame")
     val wq = new Array[Long](b)
     var biasq = 0L
     var r = 0
     while (r < rounds) {
-      val g = round((col("y").cast("double")
+      val g = round((col("y").cast("long").cast("double")
         - lit(1.0) / (lit(1.0) + exp(-marginExpr(wq, biasq).cast("double") / lit(1e6))))
         * 1e6).cast("long")
       val grads = cached
@@ -473,7 +475,7 @@ object Curation {
       }
       r += 1
     }
-    graft.plans.Pinned.free(cached)
+    if (owned) graft.plans.Pinned.free(cached)
     LrModel(b, rounds, wq, biasq)
   }
 

@@ -795,7 +795,6 @@ object Dedup {
   def embeddingNearDupsLsh(emb: DataFrame, threshold: Double,
                            bands: Int = 16, width: Int = 8, seed: Long = 42L,
                            maxBucket: Int = 1000): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(emb.sparkSession)
     val sigs = Similarity.hyperplaneBuckets(emb, "vec_id", bands, width, seed)
     // hot-bucket-guarded, self-join-free candidate generation (a degenerate
     // bucket of m vectors would emit m^2 pairs AND an m-sized agg buffer)
@@ -847,7 +846,6 @@ object Dedup {
     // an empty cluster table would silently assign NULL cells (element_at
     // on an empty sorted array) and drop nothing — fail loudly instead
     require(centers.nonEmpty, "semanticDedup needs a non-empty cluster table")
-    graft.GraftFunctions.ensureRegistered(emb.sparkSession)
     // pinned: `cells` feeds the pair join's BOTH sides and the final kept
     // flag — unpinned, the O(nlist*dim) per-row argmin would re-run per
     // reference (and nlist grows with the corpus)
@@ -876,7 +874,6 @@ object Dedup {
     * shuffle of exploded coordinates (the round-1 posexplode form moved
     * |V|^2 * dim rows through a shuffle to compute the same dots). */
   def embeddingNearDups(emb: DataFrame, threshold: Double): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(emb.sparkSession)
     val a = emb.select(col("vec_id").as("a"),
       Similarity.l2normalized(Similarity.asDouble("embedding")).as("ea"))
     val b = emb.select(col("vec_id").as("b"),

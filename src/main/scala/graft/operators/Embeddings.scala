@@ -48,7 +48,6 @@ object Embeddings {
     * where mean = floor(qsum/n) elementwise. ONE hash aggregation; the
     * result frame is label-count-sized. */
   def centroids(emb: DataFrame, labelCol: String, vecCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     emb.groupBy(col(labelCol).cast("long").as("label"))
       .agg(
         call_function(GraftFunctions.VectorSumName, quantize(col(vecCol))).as("qsum"),
@@ -62,7 +61,6 @@ object Embeddings {
     * with zero shuffles. */
   def centroidDistances(emb: DataFrame, idCol: String, labelCol: String,
                         vecCol: String): DataFrame = {
-    GraftFunctions.ensureRegistered(emb.sparkSession)
     val cents = centroids(emb, labelCol, vecCol).select("label", "mean_q")
     val q = emb.select(col(idCol).cast("long").as("vec_id"),
       col(labelCol).cast("long").as("label"), quantize(col(vecCol)).as("q"))

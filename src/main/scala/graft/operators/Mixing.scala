@@ -152,7 +152,6 @@ object Mixing {
     * (group, rnk 1..k strongest-first, id, hkey). */
   def quotaSample(df: DataFrame, groupCol: String, idCol: String, k: Int): DataFrame = {
     require(k >= 1, s"quota k must be >= 1; got $k")
-    graft.GraftFunctions.ensureRegistered(df.sparkSession)
     val M = lit(2147483647L)
     val hkey = col(idCol) % M * lit(48271L) % M * lit(69621L) % M
     df.select(col(groupCol).as("grp"), col(idCol).as("id"), hkey.as("hkey"))

@@ -15,7 +15,6 @@ object Significance {
     * Uses the native codegen'd Catalyst expression when the session was built
     * with GraftExtensions, else the registered UDF fallback. */
   def withLogp(contingency: DataFrame): DataFrame = {
-    GraftFunctions.ensureRegistered(contingency.sparkSession)
     contingency.withColumn("logp",
       call_function(GraftFunctions.LogHypergeomName,
         col("k").cast("long"), col("n").cast("long"),

@@ -28,8 +28,8 @@ object Similarity {
 
   /** Dot product of two array<double> columns via the native codegen'd
     * ArrayDot expression (falls back to a registered UDF on sessions built
-    * without GraftExtensions — see GraftFunctions.ensureRegistered, which
-    * every entry-point operator calls). The per-PAIR hot path: on
+    * without GraftExtensions — see GraftFunctions.registerFallbacks, which
+    * `Session.ensure` calls once per session). The per-PAIR hot path: on
     * pre-normalized vectors this IS the cosine at one call per pair. */
   private[operators] def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     call_function(graft.GraftFunctions.ArrayDotName, a, b)
@@ -46,7 +46,6 @@ object Similarity {
     * `queries` and `corpus`: (vec_id, embedding). Queries are broadcast;
     * the corpus is scanned once (whole-stage codegen, no UDF). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.select(col("vec_id").as("b"), asDouble("embedding").as("eb"))
     val q = queries.select(col("vec_id").as("a"), asDouble("embedding").as("ea"))
     val scored = c.crossJoin(broadcast(q))
@@ -82,7 +81,6 @@ object Similarity {
     * bandwidth per scan, and the quantized column composes with ivfProbe
     * (quantize within cells) unchanged. */
   def quantizedTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus.select(col("vec_id").as("b"), quantizeInt8(asDouble("embedding")).as("qb"))
     val q = queries.select(col("vec_id").as("a"), quantizeInt8(asDouble("embedding")).as("qa"))
     val scored = c.crossJoin(broadcast(q))
@@ -151,7 +149,6 @@ object Similarity {
     * re-rank of candidates only. */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               bands: Int = 8, width: Int = 8, seed: Long = 42L): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     val cs = hyperplaneBuckets(corpus, "b", bands, width, seed)
     val qs = hyperplaneBuckets(queries, "a", bands, width, seed)
     val candidates = qs.join(cs, Seq("band", "bucket"))
@@ -384,7 +381,6 @@ object Similarity {
     * every run (SimilaritySpec asserts the guard fires on a planted
     * single-cluster corpus). */
   def ivfCellStats(corpus: DataFrame, centers: Array[Array[Double]]): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     corpus.select(col("vec_id"), asDouble("embedding").as("e"))
       .withColumn("cell", element_at(nearestCells(centers, col("e"), 1), 1))
       .groupBy("cell").agg(count(lit(1)).as("n"))
@@ -396,7 +392,6 @@ object Similarity {
   def ivfProbe(corpus: DataFrame, queries: DataFrame, k: Int,
                centers: Array[Array[Double]], nprobe: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
-    graft.GraftFunctions.ensureRegistered(spark)
     val train = corpus.select(col("vec_id"), asDouble("embedding").as("e"))
     def cellsOf(e: org.apache.spark.sql.Column, n: Int) = nearestCells(centers, e, n)
 

@@ -461,7 +461,6 @@ object TextStats {
     require(k > 0, s"keyword count must be positive, got $k")
     val spark = td.sparkSession
     import spark.implicits._
-    graft.GraftFunctions.ensureRegistered(spark)
     val tf = td.mapPartitions(_.flatMap { d =>
       if (d.terms.isEmpty) Iterator.empty
       else {
@@ -645,7 +644,6 @@ object TextStats {
     * rewrote the text — a cheap crawl-health signal) and rewrites
     * `content`. */
   def nfcNormalize(docs: Dataset[CodeDoc]): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     val nfc = call_function(graft.GraftFunctions.NfcName, col("content"))
     docs.toDF()
       .withColumn("nfc", nfc)

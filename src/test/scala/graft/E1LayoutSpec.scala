@@ -52,14 +52,14 @@ class E1LayoutSpec extends SparkTestBase {
     val dict = SenseInduction.dictionary(sig).collect()
       .groupBy(_.getString(0))
       .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
-    val ctx = Tokenize.contextRowsFrom(td, cfg, dict).rdd.cache()
-    assert(ctx.getNumPartitions == 1)
-    val h = ThinNMF.fit(ctx, spark, cfg.kSenses, cfg.nmfMaxIter, cfg.seed)
+    val ctx = Tokenize.contextRowsFrom(td, cfg, dict).cache()
+    assert(ctx.rdd.getNumPartitions == 1)
+    val h = ThinNMF.fit(ctx.rdd, spark, cfg.kSenses, cfg.nmfMaxIter, cfg.seed)
     val (assign, senseVec) = Linking.relabel(
-      ThinNMF.assign(ctx, spark, h, cfg.minSenseScore), ThinNMF.senseVecDF(spark, h))
+      ThinNMF.assignDS(ctx, h, cfg.minSenseScore), ThinNMF.senseVecDF(spark, h))
     val triples = Linking.hasSenseTriples(assign).unionByName(Pipeline.coocTriples(cov, sig))
     try (senseRows(senseVec), assignRows(assign), tripleRows(triples))
-    finally { (Seq(td.toDF(), cov.toDF(), sig) ++ caches).foreach(_.unpersist()); ctx.unpersist() }
+    finally (Seq(td.toDF(), cov.toDF(), sig, ctx.toDF()) ++ caches).foreach(_.unpersist())
   }
 
   /** Runs `body` and returns, with its value, the task counts of the stages

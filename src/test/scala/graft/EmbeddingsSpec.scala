@@ -12,10 +12,8 @@ import graft.operators.Embeddings
 class EmbeddingsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def vsum = (c: org.apache.spark.sql.Column) => {
-    GraftFunctions.ensureRegistered(spark)
+  private def vsum = (c: org.apache.spark.sql.Column) =>
     call_function(GraftFunctions.VectorSumName, c)
-  }
 
   test("VectorSumAgg == posexplode+sum, randomized, across partitionings; NULL arrays skipped") {
     val rnd = new scala.util.Random(23)
@@ -81,7 +79,7 @@ class EmbeddingsSpec extends SparkTestBase {
   }
 
   test("typed-udaf registration would silently truncate — WHY there is no vector_sum fallback") {
-    // Measured justification for ensureRegistered deliberately NOT
+    // Measured justification for registerFallbacks deliberately NOT
     // registering an extension-less vector_sum: Spark's implicit input
     // cast for udaf arguments coerces array<double> -> array<bigint>
     // silently. If this ever starts failing loudly in a future Spark, the

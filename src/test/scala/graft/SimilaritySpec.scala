@@ -15,7 +15,6 @@ class SimilaritySpec extends SparkTestBase {
     val rnd = new scala.util.Random(11)
     val rows = (0 until 500).map(_ => (Seq.fill(64)(rnd.nextDouble() * 2 - 1),
       Seq.fill(64)(rnd.nextDouble() * 2 - 1))).toDF("x", "y")
-    GraftFunctions.ensureRegistered(spark)
     val hof = aggregate(zip_with(col("x"), col("y"), (a, b) => a * b),
       lit(0.0), (acc, v) => acc + v)
     val native = call_function(GraftFunctions.ArrayDotName, col("x"), col("y"))
@@ -42,7 +41,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("ArrayDot: mismatched dimensions yield NULL, matching the HOF form") {
-    GraftFunctions.ensureRegistered(spark)
     val rows = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0)), // dim bug -> NULL, never a partial dot
       (Seq(1.0, 2.0), Seq(3.0, 4.0))

@@ -11,10 +11,8 @@ import org.apache.spark.sql.functions._
 class TopKSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def topk(v: org.apache.spark.sql.Column, t: org.apache.spark.sql.Column, k: Int) = {
-    GraftFunctions.ensureRegistered(spark)
+  private def topk(v: org.apache.spark.sql.Column, t: org.apache.spark.sql.Column, k: Int) =
     call_function(GraftFunctions.TopKName, v, t, lit(k))
-  }
 
   test("top-k == window rank, randomized with heavy ties, across partitionings") {
     val rnd = new scala.util.Random(31)
