@@ -8,7 +8,10 @@ package graft
   * @param stopwords     closed-class terms dropped before any counting
   * @param alpha         significance level; Bonferroni-corrected per entity
   *                      by the candidate count m: keep logp < ln(alpha) - ln(m)
-  * @param topK          cap on significant terms kept per entity (descriptor size)
+  * @param topK          cap on significant terms kept per entity (descriptor
+  *                      size); an entity where NOTHING clears the Bonferroni
+  *                      cut keeps its top-k candidates by rank instead,
+  *                      marked `fallback = true` (`Significance.descriptors`)
   * @param salts         salt fan-out for the skewed co-occurrence groupBy (I1)
   * @param kSenses       number of senses to induce per entity
   * @param minSenseScore assignment confidence floor: below it no hasSense triple
@@ -18,10 +21,6 @@ package graft
   * @param broadcastDictMaxRows  adaptive ceiling: term-statistics dictionaries
   *                      smaller than this are broadcast (BASELINE.json:6 mandate);
   *                      larger ones fall back to a shuffle join.
-  * @param descriptorFallback  when true (default), entities where NOTHING
-  *                      clears the Bonferroni cut fall back to rank-only
-  *                      top-k descriptors (marked `fallback = true` in the
-  *                      output); when false such entities emit no descriptors.
   * @param modelBytesBudget  ceiling on the broadcast sense-model footprint of
   *                      one induction fit (ThinNMF: E*k*(m+k) doubles;
   *                      hclust: E*(2k-1)*m). Entity sets whose model exceeds
@@ -45,7 +44,6 @@ final case class WsidConfig(
     maxDocChars: Int = 16 * 1024 * 1024,
     nmfMaxIter: Int = 5,
     broadcastDictMaxRows: Long = 2000000L,
-    descriptorFallback: Boolean = true,
     modelBytesBudget: Long = 512L * 1024 * 1024,
     /** Lloyd iterations per bisecting split (method = "hclust") — the
       * hclust analogue of nmfMaxIter, previously a hardcoded 10. */

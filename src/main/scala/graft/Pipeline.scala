@@ -78,18 +78,22 @@ object Pipeline {
     // checkpoint parquet doubles as stage materialization; without it,
     // persist each reused stage so downstream actions don't re-run the
     // whole upstream chain (every NMF iteration is an action)
-    def staged(name: String, inputs: Seq[String])(compute: => DataFrame): DataFrame = {
-      // §1.5 job labels: every action triggered while building this stage
-      // shows up under its name in the UI / listener profiles
+    // §1.5 job labels: every action triggered inside shows up under the
+    // stage's name in the UI / listener profiles
+    def labelled[T](name: String)(body: => T): T = {
       spark.sparkContext.setJobDescription(s"e1:$name")
-      try ck match {
-        case Some(c) => c.stage(name, inputs, cfgId)(compute)
-        case None =>
-          val df = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          persisted += df
-          df
-      } finally spark.sparkContext.setJobDescription(null)
+      try body finally spark.sparkContext.setJobDescription(null)
     }
+    def staged(name: String, inputs: Seq[String])(compute: => DataFrame): DataFrame =
+      labelled(name) {
+        ck match {
+          case Some(c) => c.stage(name, inputs, cfgId)(compute)
+          case None =>
+            val df = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            persisted += df
+            df
+        }
+      }
 
     val guarded = guard(docs, cfg)
 
@@ -160,9 +164,9 @@ object Pipeline {
       import spark.implicits._
       ctxrows.as[ml.ThinNMF.Ctx]
     }
-    // taken outside staged("senses"): planning the RDD runs ctxrows'
-    // exchange, which is no NMF work
-    val grouped = ctx.rdd
+    // planning the RDD runs ctxrows' exchange: ctxrows' work, kept out of
+    // staged("senses") and its NMF jobs
+    val grouped = labelled("ctxrows")(ctx.rdd)
 
     val senseVecRaw = staged("senses", Seq("ctxrows")) {
       SenseInduction.senseMatrix(spark, grouped, cfg)

@@ -57,13 +57,14 @@ object Session {
   private val ready =
     java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Once per session: set the tuned confs and register the UDF fallbacks
-    * of the graft functions a session without GraftExtensions lacks. A
-    * caller's later change to a tuned conf is kept. */
+  /** Once per session: set the tuned confs and register the native graft
+    * functions a session without GraftExtensions lacks, from the same table
+    * the extension injects ([[GraftFunctions.all]]). A caller's later change
+    * to a tuned conf is kept. */
   def ensure(spark: SparkSession): Unit = ready.synchronized {
     if (ready.add(spark)) {
       tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-      GraftFunctions.registerFallbacks(spark)
+      GraftFunctions.registerMissing(spark)
     }
   }
 

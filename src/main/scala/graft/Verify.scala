@@ -1,17 +1,27 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`bin/compare.py`
+  * replays it). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing args: run only these queries (local iteration aid;
     // the driver always calls with exactly two args → full dump)
-    val onlyQueries = args.drop(2).toSet
     val spark = Session.local()
+    dump(spark, sfDir, outDir, args.drop(2).toSet)
+    spark.stop()
+  }
+
+  /** Write each registry query in `only` (every query when empty) to
+    * `outDir/<name>` as parquet, and every oracle SQL to
+    * `outDir/oracle_sql.json`. A failing query is reported on stderr and
+    * leaves no dump, which the compare counts as a SKIP. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, only: Set[String]): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => onlyQueries.isEmpty || onlyQueries(name) }
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -20,8 +30,8 @@ object Verify {
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // — a tab or CR in an oracle SQL string would otherwise make the
+    // compare's json.load fail on the whole file.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -34,6 +44,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -84,8 +84,8 @@ case class BloomMightContain(left: Expression, right: Expression)
 
 object BloomMightContain {
   // one deserialization per JVM per distinct filter (content-keyed: a
-  // ByteBuffer hashes/compares by contents) — shared by the native lazy
-  // val and the UDF fallback path in GraftFunctions.registerFallbacks.
+  // ByteBuffer hashes/compares by contents) — read by every expression
+  // instance's lazy val, so equal filters share one deserialized copy.
   // BOUNDED: an access-ordered LRU keeping the 8 most-recent filters —
   // a long-lived session running many bloom joins must not accumulate
   // megabyte filters (bytes + deserialized bits each) until executor OOM;

@@ -51,9 +51,8 @@ object BloomPrune {
     * [[BloomMightContain]] expression (the standing call_function idiom;
     * it deserializes once per JVM, never per row). */
   def mightContain(filter: BloomFilter, key: Column): Column = {
-    // key Column has no session; callers' frames register the fallback in
-    // prunedEquiJoin — standalone users need GraftExtensions (Verify/Bench
-    // and the test base all carry it)
+    // the key Column has no session: the frame it lands in resolves the
+    // function, so that session needs GraftExtensions or Session.ensure
     val bos = new java.io.ByteArrayOutputStream()
     filter.writeTo(bos)
     call_function(graft.GraftFunctions.BloomMightContainName, key, lit(bos.toByteArray))

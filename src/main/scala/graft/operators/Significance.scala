@@ -12,8 +12,8 @@ import graft.{GraftFunctions, WsidConfig}
 object Significance {
 
   /** C1: add logp = log P[X >= k], X ~ Hypergeom(bign, n, bigk).
-    * Uses the native codegen'd Catalyst expression when the session was built
-    * with GraftExtensions, else the registered UDF fallback. */
+    * Runs the native codegen'd LogHypergeomTail expression, which
+    * GraftExtensions or Session.ensure registers. */
   def withLogp(contingency: DataFrame): DataFrame = {
     contingency.withColumn("logp",
       call_function(GraftFunctions.LogHypergeomName,
@@ -33,14 +33,15 @@ object Significance {
 
   /** C2+C3 fused with a pure-dataflow fallback: per entity keep the
     * Bonferroni-significant terms, or — ONLY for entities where nothing
-    * clears the cut (uniform harness corpora), and only when
-    * cfg.descriptorFallback allows it — fall back to all candidates, then
-    * cap at top-k. No driver-side isEmpty branch, no extra job.
+    * clears the cut (uniform harness corpora) — fall back to all
+    * candidates, then cap at top-k. No driver-side isEmpty branch, no extra
+    * job.
     *
     * Rows that exist only via the fallback carry `fallback = true`, so
     * production consumers can always distinguish statistically significant
     * descriptors from rank-only ones (the C2 contract is not silently
-    * weakened). */
+    * weakened): `descriptors(...).filter(!col("fallback"))` is exactly the
+    * significant top-k, with no rows for an entity where nothing clears. */
   def descriptors(scored: DataFrame, cfg: WsidConfig): DataFrame = {
     val byEntity = Window.partitionBy("entity")
     val filtered = scored
@@ -48,8 +49,7 @@ object Significance {
       .withColumn("is_sig",
         when(col("logp") < log(lit(cfg.alpha)) - log(col("m")), 1).otherwise(0))
       .withColumn("n_sig", sum(col("is_sig")).over(byEntity))
-      .filter(col("is_sig") === 1 ||
-        (lit(cfg.descriptorFallback) && col("n_sig") === 0))
+      .filter(col("is_sig") === 1 || col("n_sig") === 0)
       .withColumn("fallback", col("n_sig") === 0)
       .drop("m", "is_sig", "n_sig")
     topK(filtered, cfg)

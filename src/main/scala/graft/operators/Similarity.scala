@@ -27,9 +27,8 @@ object Similarity {
   }
 
   /** Dot product of two array<double> columns via the native codegen'd
-    * ArrayDot expression (falls back to a registered UDF on sessions built
-    * without GraftExtensions — see GraftFunctions.registerFallbacks, which
-    * `Session.ensure` calls once per session). The per-PAIR hot path: on
+    * ArrayDot expression (registered by GraftExtensions or
+    * `Session.ensure`). The per-PAIR hot path: on
     * pre-normalized vectors this IS the cosine at one call per pair. */
   private[operators] def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     call_function(graft.GraftFunctions.ArrayDotName, a, b)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.operators.Significance
 import graft.sources.CorpusSynth
 
 class CoStatsSpec extends SparkTestBase {
@@ -57,12 +58,34 @@ class CoStatsSpec extends SparkTestBase {
   }
 
   test("E2 native expression: plan uses codegen'd LogHypergeomTail, not ScalaUDF") {
-    val docs = CorpusSynth.plantedDocs(spark, docsPerEntity = 10)
     val cfg = WsidConfig(entities = Seq("python"), window = 8)
-    val cs = Pipeline.coStats(docs, cfg)
-    val plan = cs.scored.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_log_hypergeom_tail"))
-    assert(!plan.contains("UDF"), "expected the native Catalyst expression, found a ScalaUDF")
+    // the suite's session (GraftExtensions) and one without it (Session.ensure)
+    for ((s, name) <- Seq(spark -> "extensions", SparkTestBase.stripped() -> "ensure")) {
+      val cs = Pipeline.coStats(CorpusSynth.plantedDocs(s, docsPerEntity = 10), cfg)
+      // by class: a named ScalaUDF prints as graft_log_hypergeom_tail(...) too
+      val exprs = cs.scored.queryExecution.optimizedPlan.collect { case p => p.expressions }
+        .flatten.flatMap(_.collect { case e => e })
+      assert(exprs.exists(_.isInstanceOf[graft.functions.LogHypergeomTail]), name)
+      assert(!exprs.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]),
+        s"$name: expected the native Catalyst expression, found a ScalaUDF")
+    }
+  }
+
+  test("descriptors without the fallback rows are the significant top-k") {
+    val docs = CorpusSynth.plantedDocs(spark, docsPerEntity = 10)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("entity", "term", "logp", "rank").collect().map(_.toSeq).toSet
+    // alpha = 1e-300: nothing clears the cut, every descriptor is a fallback
+    // row; at the default alpha the planted vocabulary clears it
+    for (alpha <- Seq(1e-300, 0.01)) {
+      val cfg = WsidConfig(entities = Seq("python", "java"), window = 8, alpha = alpha, topK = 20)
+      val cs = Pipeline.coStats(docs, cfg)
+      val desc = Significance.descriptors(cs.scored, cfg)
+      assert(rows(desc.filter(!col("fallback"))) == rows(cs.top), s"alpha $alpha")
+      val fallbackRows = desc.filter(col("fallback")).count()
+      if (alpha == 1e-300) assert(cs.top.isEmpty && fallbackRows == desc.count() && fallbackRows > 0)
+      else assert(!cs.top.isEmpty && fallbackRows == 0)
+    }
   }
 
   test("E2 native expression: fractional argument fails analysis instead of silently truncating") {

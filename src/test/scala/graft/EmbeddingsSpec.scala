@@ -78,46 +78,25 @@ class EmbeddingsSpec extends SparkTestBase {
     rnd.nextInt() // keep rnd referenced
   }
 
-  test("typed-udaf registration would silently truncate — WHY there is no vector_sum fallback") {
-    // Measured justification for registerFallbacks deliberately NOT
-    // registering an extension-less vector_sum: Spark's implicit input
-    // cast for udaf arguments coerces array<double> -> array<bigint>
-    // silently. If this ever starts failing loudly in a future Spark, the
-    // fallback can be reinstated — this test is the tripwire.
-    object Probe extends org.apache.spark.sql.expressions.Aggregator[
-        Seq[java.lang.Long], Array[Long], Seq[Long]] {
-      override def zero: Array[Long] = Array.emptyLongArray
-      override def reduce(b: Array[Long], a: Seq[java.lang.Long]): Array[Long] =
-        if (a == null) b
-        else {
-          val buf = if (b.length == 0) new Array[Long](a.length) else b
-          var i = 0
-          while (i < buf.length) { buf(i) += a(i).longValue(); i += 1 }
-          buf
-        }
-      override def merge(x: Array[Long], y: Array[Long]): Array[Long] =
-        if (y.length == 0) x else if (x.length == 0) y
-        else { var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x }
-      override def finish(b: Array[Long]): Seq[Long] = b.toSeq
-      override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-      override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
-    }
-    spark.udf.register("vs_fallback_probe", org.apache.spark.sql.functions.udaf(Probe))
+  test("without GraftExtensions, graft_vector_sum over array<double> fails loudly") {
+    // Session.ensure registers the native aggregate there, not a typed udaf
+    // (whose implicit input cast would floor 1.5 to 1): both the DataFrame
+    // and the SQL-text path must reject the fractional array
+    val s = SparkTestBase.stripped()
+    import s.implicits._
     val frac = Seq((1, Seq(1.5, 2.5))).toDF("label", "v")
-    val res = scala.util.Try {
-      frac.groupBy("label")
-        .agg(call_function("vs_fallback_probe", col("v")).as("s"))
-        .as[(Int, Seq[Long])].collect().head._2
+    val e1 = intercept[Exception] { frac.groupBy("label").agg(vsum(col("v"))).collect() }
+    assert(e1.getMessage.contains("expects ARRAY of integral"), e1.getMessage)
+    frac.createOrReplaceTempView("vs_frac_stripped")
+    val e2 = intercept[Exception] {
+      s.sql("SELECT label, graft_vector_sum(v) FROM vs_frac_stripped GROUP BY label").collect()
     }
-    res match {
-      case scala.util.Success(s) =>
-        assert(s == Seq(1L, 2L), s"coercion behavior changed: $s")
-      case scala.util.Failure(_) =>
-        fail("Spark now rejects the implicit fractional cast for udaf inputs — " +
-          "a loud extension-less vector_sum fallback is possible again; reinstate it")
-    }
+    assert(e2.getMessage.contains("ARRAY<BIGINT>") || e2.getMessage.contains("graft_vector_sum"),
+      e2.getMessage)
+    // integral arrays still sum there
+    val got = Seq((1, Seq(1, 2)), (1, Seq(10, 20))).toDF("label", "v")
+      .groupBy("label").agg(vsum(col("v"))).as[(Int, Seq[Long])].collect().head._2
+    assert(got == Seq(11L, 22L))
   }
 
   test("fdiv floors like DuckDB // (negative numerators included)") {

@@ -17,4 +17,15 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = Session.local(cores = 4, logLevel = "ERROR")
+
+  /** A session without GraftExtensions' functions, made ready the way any
+    * such session is: a child of the suite's session with graft's functions
+    * dropped from its own registry (the parent keeps them), then
+    * `Session.ensure` unless `ensure` is false. */
+  def stripped(ensure: Boolean = true): SparkSession = {
+    val s = session.newSession()
+    GraftFunctions.all.foreach { case (id, _, _) => s.sessionState.functionRegistry.dropFunction(id) }
+    if (ensure) Session.ensure(s)
+    s
+  }
 }
