@@ -18,9 +18,6 @@ package graft
   * @param method        "nmf" (ThinNMF: thin-matrix alternating-NNLS NMF) |
   *                      "hclust" (distributed bisecting k-means); any other
   *                      value is rejected
-  * @param broadcastDictMaxRows  adaptive ceiling: term-statistics dictionaries
-  *                      smaller than this are broadcast (BASELINE.json:6 mandate);
-  *                      larger ones fall back to a shuffle join.
   * @param modelBytesBudget  ceiling on the broadcast sense-model footprint of
   *                      one induction fit (ThinNMF: E*k*(m+k) doubles;
   *                      hclust: E*(2k-1)*m). Entity sets whose model exceeds
@@ -43,11 +40,7 @@ final case class WsidConfig(
     seed: Long = 42L,
     maxDocChars: Int = 16 * 1024 * 1024,
     nmfMaxIter: Int = 5,
-    broadcastDictMaxRows: Long = 2000000L,
-    modelBytesBudget: Long = 512L * 1024 * 1024,
-    /** Lloyd iterations per bisecting split (method = "hclust") — the
-      * hclust analogue of nmfMaxIter, previously a hardcoded 10. */
-    hclustIters: Int = 10
+    modelBytesBudget: Long = 512L * 1024 * 1024
 ) {
   require(method == "nmf" || method == "hclust",
     s"unknown sense method '$method' (expected \"nmf\" or \"hclust\")")

@@ -619,12 +619,12 @@ object ExtraQueries {
     // cell-balance guard rides along (cross join against per-query rows):
     // a degenerate KMeans fit that dumps the corpus into one cell shows up
     // as max_cell_share_e4 -> 10000 in every run (VERDICT r2 #8)
-    // built via ivfIndexBalanced: on this healthy corpus the first fit is
-    // under the share threshold, so the build equals ivfIndex — the retry
-    // machinery only engages on degenerate fits (SimilaritySpec)
+    // on this healthy corpus ivfIndex's first fit is under the share
+    // threshold, so the balance response never engages (it repairs
+    // degenerate fits; SimilaritySpec)
     "q_sim_ivf" -> ((s, d) => {
       val centers = Memo.ivfIndexOf(s, s"$d|emb500|nlist16|balanced")(
-        Similarity.ivfIndexBalanced(emb(s, d, 500), nlist = 16))
+        Similarity.ivfIndex(emb(s, d, 500), nlist = 16))
       withRecallVsBrute(Similarity.ivfProbe(emb(s, d, 500), emb(s, d, 3), 5, centers), s, d)
         .crossJoin(Similarity.ivfCellStats(emb(s, d, 500), centers))
     }),

@@ -188,16 +188,14 @@ object Pipeline {
       .unionByName(coocTriples(toCov(spark, cov), sigcooc))
 
     // S3 graph materialize (checkpointed mode): the partitioned triple table
-    // is the terminal resume point — identical inputs skip the rewrite
-    val triples = (ck, ckptRoot) match {
-      case (Some(c), Some(root)) =>
-        val fp = Seq("coverage", "sigcooc", "senses").map(c.fingerprintOf).mkString("|")
-        val uri = s"$root/triples"
-        val existing = TableIO.readManifest(spark, s"$uri/_manifest.json")
-        if (existing.exists(_.inputFingerprint == fp)) c.resumed += "triples"
-        else { TableIO.writeTriples(triplesRaw, uri, fp); c.computed += "triples" }
-        TableIO.readTriples(spark, uri)
-      case _ => triplesRaw
+    // is the terminal resume point — identical inputs skip the rewrite. It
+    // commits through Checkpoint.stage like every other stage, not through
+    // staged(): the in-memory build keeps triplesRaw a lazy union
+    val triples = ck match {
+      case Some(c) =>
+        c.stage("triples", Seq("coverage", "sigcooc", "senses"),
+          layout = TableIO.Layout.Triples)(triplesRaw).select("subj", "pred", "obj")
+      case None => triplesRaw
     }
     E1Result(triples, senseVec, assignments, ck,
       cleanup = () => persisted.foreach(_.unpersist(false)))

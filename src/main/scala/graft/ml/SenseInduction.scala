@@ -22,6 +22,10 @@ import graft.WsidConfig
   */
 object SenseInduction {
 
+  /** Lloyd iterations per bisecting split (method = "hclust") — the hclust
+    * analogue of `WsidConfig.nmfMaxIter`. */
+  val HclustIters = 10
+
   /** V1: dense per-entity term ids from the significance ranking (rank is
     * 1-based and unique per entity, so termid = rank - 1 is a bijection). */
   def dictionary(topSig: DataFrame): DataFrame =
@@ -42,7 +46,7 @@ object SenseInduction {
                   cfg: WsidConfig): DataFrame = {
     val h: Map[String, ThinNMF.H] = cfg.method match {
       case "hclust" =>
-        BisectingSenses.fitSharded(grouped, spark, cfg.kSenses, cfg.hclustIters,
+        BisectingSenses.fitSharded(grouped, spark, cfg.kSenses, HclustIters,
           cfg.seed, cfg.modelBytesBudget)
       case "nmf" =>
         ThinNMF.fitSharded(grouped, spark, cfg.kSenses, cfg.nmfMaxIter, cfg.seed,

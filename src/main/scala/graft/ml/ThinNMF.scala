@@ -1,8 +1,7 @@
 package graft.ml
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Distributed NMF specialized for wsid's matrix shape: A(ctx x term) with a
   * HUGE context dimension (one row per mention, 10^9+ at full scale) and a
@@ -47,19 +46,6 @@ object ThinNMF {
 
   /** One context row of the sparse matrix (termids sorted, parallel ws). */
   final case class Ctx(entity: String, ctxid: String, termids: Array[Int], ws: Array[Double])
-
-  /** Group long-form ctxvec (entity, ctxid, termid, w) into context rows —
-    * the ONE shuffle of the whole factorization; cache the result. */
-  def group(ctxvec: DataFrame): Dataset[Ctx] = {
-    val spark = ctxvec.sparkSession
-    import spark.implicits._
-    ctxvec.groupBy("entity", "ctxid")
-      .agg(collect_list(struct(col("termid"), col("w"))).as("cells"))
-      .map { r =>
-        val cells = r.getSeq[Row](2).map(c => (c.getInt(0), c.getDouble(1))).sortBy(_._1)
-        Ctx(r.getString(0), r.getString(1), cells.map(_._1).toArray, cells.map(_._2).toArray)
-      }
-  }
 
   /** Projected Gauss–Seidel NNLS: min_{w>=0} w'Gw - 2b'w  (k <= ~16). */
   private[ml] def nnlsCD(g: Array[Array[Double]], b: Array[Double], iters: Int = 30): Array[Double] = {

@@ -15,6 +15,11 @@ import graft.{CodeDoc, CovTok, Token, WsidConfig}
   */
 object Cooc {
 
+  /** Adaptive ceiling: a term-statistics dictionary of at most this many
+    * rows is broadcast (BASELINE.json:6 mandate); a larger one falls back
+    * to a shuffle join. */
+  val BroadcastDictMaxRows = 2000000L
+
   /** A1: global term marginals n(t) over the (stopword-filtered) token stream. */
   def marginals(tokens: Dataset[Token], cfg: WsidConfig): DataFrame =
     SaltedAgg.countBy(tokens.toDF(), Seq("term"), col("docid"), cfg.salts, "n")
@@ -57,7 +62,7 @@ object Cooc {
     * The term-marginals dictionary is semi-join-reduced to the candidate
     * vocabulary first, then broadcast when small enough
     * (BASELINE.json:6 "broadcast joins carry the term-statistics dictionary");
-    * it falls back to a shuffle join past cfg.broadcastDictMaxRows.
+    * it falls back to a shuffle join past [[BroadcastDictMaxRows]] rows.
     *
     * Returns the contingency frame PLUS the vocab-bounded frames this call
     * persisted (cooc, marginals) — the CALLER owns their lifetime
@@ -83,7 +88,7 @@ object Cooc {
     // dictionary = marginals restricted to candidate co-occurring terms
     val dict = marg.join(cooc.select("term").distinct(), Seq("term"), "left_semi")
     val margJoined =
-      if (vocabSize <= cfg.broadcastDictMaxRows) cooc.join(broadcast(dict), Seq("term"))
+      if (vocabSize <= BroadcastDictMaxRows) cooc.join(broadcast(dict), Seq("term"))
       else cooc.join(dict, Seq("term"))
 
     val cont = margJoined

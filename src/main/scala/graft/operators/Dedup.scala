@@ -826,7 +826,7 @@ object Dedup {
     * paper orders by distance-to-centroid, a one-column swap.
     *
     * `centers` is the cluster table — a pinned deterministic slice for the
-    * oracle-checked registry query, `ivfIndexBalanced` for production (the
+    * oracle-checked registry query, `ivfIndex` for production (the
     * same build-once index the ANN path probes; SemDeDup reuses it free).
     *
     * The tau comparison happens on the e4-QUANTIZED cosine, so the

@@ -28,6 +28,11 @@ import org.apache.spark.sql.functions._
   * driver holds B longs. Deterministic: same input multiset ⇒ same
   * answer, any partitioning.
   *
+  * One counting round (`histogram`) and one rank walk (`rankWalk`) serve
+  * every entry point: [[exactRank]] walks one rank, [[exactQuantiles]] a
+  * batch of them, and [[budgetCutScore]] walks the same round top-down by
+  * weight.
+  *
   * Rank semantics: k is 1-based over the sorted NON-NULL values
   * (`ORDER BY v LIMIT 1 OFFSET k−1` — the oracle's formulation);
   * quantile(q) maps to k = max(1, ⌈q·n⌉), i.e. the inverted-CDF /
@@ -42,62 +47,114 @@ object Selection {
 
   private val Buckets = 4096L
 
-  /** The k-th smallest (1-based) non-null value of LONG column `valueCol`.
-    * Throws on k out of range. One counting aggregation per refinement
-    * round, ≤ ⌈64/12⌉ = 6 rounds for full-range LONGs. */
-  def exactRank(df: DataFrame, valueCol: String, k: Long): Long = {
-    val base = df.select(col(valueCol).as("__v")).filter(col("__v").isNotNull)
-    val head = base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head()
-    refine(base, n = head.getLong(0),
-      lo0 = if (head.getLong(0) == 0) 0L else head.getLong(1),
-      hi0 = if (head.getLong(0) == 0) 0L else head.getLong(2), k)
-  }
-
-  private def refine(base: DataFrame, n: Long, lo0: Long, hi0: Long, k: Long): Long = {
-    require(k >= 1, s"rank k must be >= 1 (1-based); got $k")
-    require(k <= n, s"rank k=$k out of range (only $n non-null values)")
-    var lo = lo0
-    var hi = hi0
-    require(BigInt(hi) - BigInt(lo) <= BigInt(Long.MaxValue),
-      s"value range [$lo, $hi] spans more than 2^63 — shift/scale the column first " +
-        "(the per-row offset v - lo must stay in LONG)")
-    var residual = k
-    var guard = 0
-    while (lo < hi) {
-      guard += 1
-      require(guard <= 8, s"selection failed to converge (range [$lo,$hi])")
+  /** One counting round: for each of the pairwise-disjoint `brackets`
+    * (lo, hi), bucket the rows whose `valueCol` lies in it into B
+    * equi-width buckets and return the bracket's (bucket, mass, attained
+    * min, attained max) rows in bucket order — `mass` is the aggregate per
+    * bucket (`count(lit(1))`, or `sum(weight)`). ONE aggregation whatever
+    * the bracket count: a row is tagged with its bracket (first-match
+    * when-chain), then bucketed with that bracket's width. A bracket with
+    * no rows gets no rows.
+    *
+    * The per-bucket ATTAINED min/max ride the same aggregation (r6): a
+    * walk narrows its bracket to the chosen bucket's attained value range,
+    * not its arithmetic edges, so a bucket holding one distinct value ends
+    * the refinement at once and real (sparse / clustered) distributions
+    * converge in 1–2 counting scans instead of walking the full
+    * ⌈64/log₂B⌉ bound. Same answer by construction: the target lies in the
+    * chosen bucket, and every value there is within [attained min,
+    * attained max]. */
+  private def histogram(base: DataFrame, valueCol: String, mass: Column,
+                        brackets: Seq[(Long, Long)]): Seq[Array[(Long, Long, Long, Long)]] = {
+    // laminar-family sanity: a walk's active brackets never partially overlap
+    for (Seq((l1, h1), (l2, h2)) <- brackets.combinations(2))
+      require(h1 < l2 || h2 < l1, s"selection brackets overlap: [$l1,$h1] vs [$l2,$h2]")
+    val widths = brackets.map { case (lo, hi) =>
+      require(BigInt(hi) - BigInt(lo) <= BigInt(Long.MaxValue),
+        s"value range [$lo, $hi] spans more than 2^63 — shift/scale the column first " +
+          "(the per-row offset v - lo must stay in LONG)")
       // ceil-width so B buckets always cover [lo, hi]; integer `div` per
       // row (Spark's `/` on LONGs is DOUBLE division and would drift)
-      val width = ((BigInt(hi) - BigInt(lo)) / Buckets + 1).toLong
-      // per-bucket ATTAINED min/max ride the same aggregation (r6
-      // optimization): the bracket narrows to the chosen bucket's attained
-      // value range, not its arithmetic edges — a bucket holding one
-      // distinct value ends the refinement immediately, so real (sparse /
-      // clustered) distributions converge in 1–2 counting scans instead of
-      // walking the full ⌈64/log₂B⌉ bound. Same answer by construction:
-      // the rank-k value lies in the chosen bucket, and every value there
-      // is within [attained min, attained max].
-      // every round narrows [lo, hi], so each bracket is histogrammed once
-      // (exactQuantiles batches its brackets into one scan per round itself)
-      val counts = base
-        .filter(col("__v") >= lo && col("__v") <= hi)
-        .groupBy(call_function("div", col("__v") - lo, lit(width)).as("__b"))
-        .agg(count(lit(1)).as("__n"), min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .sortBy(_._1)
-      var i = 0
-      var found = false
-      while (i < counts.length && !found) {
-        val (_, cnt, mn, mx) = counts(i)
-        if (residual <= cnt) {
-          lo = mn
-          hi = mx
-          found = true
-        } else { residual -= cnt; i += 1 }
-      }
-      require(found, s"rank walk exhausted buckets (range [$lo,$hi], residual $residual)")
+      ((BigInt(hi) - BigInt(lo)) / Buckets + 1).toLong
     }
-    lo
+    val v = col(valueCol)
+    val brCol = brackets.zipWithIndex
+      .foldRight(lit(null).cast("int")) { case (((lo, hi), i), acc) =>
+        when(v >= lo && v <= hi, lit(i)).otherwise(acc)
+      }
+    val bkCol = brackets.zipWithIndex
+      .foldRight(lit(null).cast("long")) { case (((lo, _), i), acc) =>
+        when(col("__br") === i, call_function("div", v - lo, lit(widths(i)))).otherwise(acc)
+      }
+    val rows = base
+      .select(brCol.as("__br"), col("*"))
+      .filter(col("__br").isNotNull)
+      .select(col("*"), bkCol.as("__b"))
+      .groupBy(col("__br"), col("__b"))
+      .agg(mass.as("__m"), min(v).as("__mn"), max(v).as("__mx"))
+      .collect()
+      .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
+      .groupBy(_._1)
+    brackets.indices.map(i => rows.get(i).map(_.map(_._2).sortBy(_._1)).getOrElse(Array.empty))
+  }
+
+  /** The values at the 1-based ranks `ranksOf(n)` of the non-null `__v`
+    * column of `base`, n being its row count; returns (rank, value) pairs
+    * in the order given. One count/min/max pass, then batched refinement:
+    * each round histograms ALL still-active rank brackets in ONE counting
+    * aggregation, so a batch pays max(rounds) scans instead of Σ rounds —
+    * at 100 TB each saved round is a saved full counting scan. Brackets
+    * are pairwise disjoint-or-identical by construction (every bracket is
+    * a bucket of a shared parent walk, and identical brackets are deduped),
+    * which the round's require guards; each rank walks its own bracket's
+    * counts to the bucket holding its residual rank and recurses into it. */
+  private def rankWalk(base: DataFrame, ranksOf: Long => Seq[Long]): Seq[(Long, Long)] = {
+    val head = base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head()
+    val n = head.getLong(0)
+    // force strictness: a lazy caller Seq (Stream/LazyList/view) would
+    // re-run its map per traversal
+    val ranks = ranksOf(n).toVector
+    ranks.foreach { k =>
+      require(k >= 1, s"rank k must be >= 1 (1-based); got $k")
+      require(k <= n, s"rank k=$k out of range (only $n non-null values)")
+    }
+    final class St(var lo: Long, var hi: Long, var residual: Long)
+    val sts = ranks.map(k => new St(head.getLong(1), head.getLong(2), k))
+    var guard = 0
+    while (sts.exists(s => s.lo < s.hi)) {
+      guard += 1
+      require(guard <= 8, s"selection failed to converge (${sts.map(s => (s.lo, s.hi))})")
+      val brackets = sts.collect { case s if s.lo < s.hi => (s.lo, s.hi) }.distinct
+      val hist = histogram(base, "__v", count(lit(1)), brackets)
+      sts.foreach { s =>
+        if (s.lo < s.hi) {
+          val counts = hist(brackets.indexOf((s.lo, s.hi)))
+          var i = 0
+          var found = false
+          while (i < counts.length && !found) {
+            val (_, cnt, mn, mx) = counts(i)
+            if (s.residual <= cnt) {
+              s.lo = mn
+              s.hi = mx
+              found = true
+            } else { s.residual -= cnt; i += 1 }
+          }
+          require(found,
+            s"rank walk exhausted buckets (range [${s.lo},${s.hi}], residual ${s.residual})")
+        }
+      }
+    }
+    ranks.zip(sts.map(_.lo))
+  }
+
+  /** The k-th smallest (1-based) non-null value of LONG column `valueCol`.
+    * Throws on k out of range. A one-rank call of the batched walk: one
+    * counting aggregation per refinement round, ≤ ⌈64/12⌉ = 6 rounds for
+    * full-range LONGs. Persists nothing: every round re-reads `df`, so a
+    * caller that selects repeatedly from an expensive frame persists it. */
+  def exactRank(df: DataFrame, valueCol: String, k: Long): Long = {
+    val base = df.select(col(valueCol).as("__v")).filter(col("__v").isNotNull)
+    rankWalk(base, _ => Seq(k)).head._2
   }
 
   /** Exact `quantile_disc`-convention quantiles: for each q in `qs`,
@@ -105,18 +162,10 @@ object Selection {
     * a local Seq (quantiles are a driver-sized result by definition).
     * The single-column projection is persisted for the batch — one parquet
     * scan total; count/min/max are computed once and shared by every
-    * quantile's refinement.
-    *
-    * Batched refinement (r6): every round histograms ALL still-active
-    * quantile brackets in ONE counting aggregation (a row is tagged with
-    * its bracket, then bucketed with that bracket's width), so the batch
-    * pays max(rounds) scans of the projection instead of Σ rounds — at
-    * 100 TB each saved round is a saved full counting scan. Brackets are
-    * pairwise disjoint-or-identical by construction (every bracket is a
-    * bucket of a shared parent walk, and identical brackets are deduped),
-    * which a loud require guards; each quantile walks its own bracket's
-    * counts exactly as the sequential form did, so the answers are
-    * bit-identical (SelectionSpec's sort-equality suite). */
+    * quantile's walk, and every round serves all still-active quantiles in
+    * one scan of the projection (the batched walk [[exactRank]] runs too),
+    * so the answers equal per-rank [[exactRank]] calls bit for bit
+    * (SelectionSpec's sort-equality suite). */
   def exactQuantiles(df: DataFrame, valueCol: String,
                      qs: Seq[Double]): Seq[(Long, Long, Long)] = {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
@@ -124,76 +173,11 @@ object Selection {
     val base = df.select(col(valueCol).as("__v")).filter(col("__v").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val head = base.agg(count(lit(1)), min(col("__v")), max(col("__v"))).head()
-      val n = head.getLong(0)
-      require(n > 0, "no non-null values to select from")
-      require(BigInt(head.getLong(2)) - BigInt(head.getLong(1)) <= BigInt(Long.MaxValue),
-        s"value range [${head.getLong(1)}, ${head.getLong(2)}] spans more than 2^63 — " +
-          "shift/scale the column first (the per-row offset v - lo must stay in LONG)")
-      final class St(var lo: Long, var hi: Long, var residual: Long)
-      // force strictness: a lazy caller Seq (Stream/LazyList/view) would
-      // re-run this map per traversal, discarding the St mutations
-      val sts = qs.toVector.map { q =>
-        val k = math.max(1L, math.ceil(q * n).toLong)
-        require(k >= 1 && k <= n, s"rank k=$k out of range (only $n non-null values)")
-        (math.round(q * 10000), k, new St(head.getLong(1), head.getLong(2), k))
-      }
-      var guard = 0
-      while (sts.exists { case (_, _, s) => s.lo < s.hi }) {
-        guard += 1
-        require(guard <= 8,
-          s"selection failed to converge (${sts.map { case (_, _, s) => (s.lo, s.hi) }})")
-        val brackets = sts.collect { case (_, _, s) if s.lo < s.hi => (s.lo, s.hi) }.distinct
-        // laminar-family sanity: active brackets never partially overlap
-        for (Seq((l1, h1), (l2, h2)) <- brackets.combinations(2))
-          require(h1 < l2 || h2 < l1,
-            s"quantile brackets overlap: [$l1,$h1] vs [$l2,$h2]")
-        val widths = brackets.map { case (lo, hi) =>
-          ((BigInt(hi) - BigInt(lo)) / Buckets + 1).toLong
-        }
-        // one pass: tag each in-ANY-bracket row with its bracket index and
-        // that bracket's bucket (first-match when-chain; brackets disjoint)
-        val brCol = brackets.zipWithIndex
-          .foldRight(lit(null).cast("int")) { case (((lo, hi), i), acc) =>
-            when(col("__v") >= lo && col("__v") <= hi, lit(i)).otherwise(acc)
-          }
-        val bkCol = brackets.zipWithIndex
-          .foldRight(lit(null).cast("long")) { case (((lo, _), i), acc) =>
-            when(col("__br") === i,
-              call_function("div", col("__v") - lo, lit(widths(i)))).otherwise(acc)
-          }
-        val hist = base
-          .select(brCol.as("__br"), col("__v"))
-          .filter(col("__br").isNotNull)
-          .select(col("__br"), bkCol.as("__b"), col("__v"))
-          .groupBy(col("__br"), col("__b"))
-          .agg(count(lit(1)).as("__n"), min(col("__v")).as("__mn"), max(col("__v")).as("__mx"))
-          .collect()
-          .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-          .groupBy(_._1)
-          .map { case (br, rows) => br -> rows.map(_._2).sortBy(_._1) }
-        sts.foreach { case (_, _, s) =>
-          if (s.lo < s.hi) {
-            val br = brackets.indexOf((s.lo, s.hi))
-            val counts = hist.getOrElse(br,
-              throw new IllegalStateException(
-                s"rank walk found no rows in bracket [${s.lo},${s.hi}]"))
-            var i = 0
-            var found = false
-            while (i < counts.length && !found) {
-              val (_, cnt, mn, mx) = counts(i)
-              if (s.residual <= cnt) {
-                s.lo = mn
-                s.hi = mx
-                found = true
-              } else { s.residual -= cnt; i += 1 }
-            }
-            require(found,
-              s"rank walk exhausted buckets (range [${s.lo},${s.hi}], residual ${s.residual})")
-          }
-        }
-      }
-      sts.map { case (qe4, k, s) => (qe4, k, s.lo) }
+      val values = rankWalk(base, { n =>
+        require(n > 0, "no non-null values to select from")
+        qs.map(q => math.max(1L, math.ceil(q * n).toLong))
+      })
+      qs.toVector.zip(values).map { case (q, (k, v)) => (math.round(q * 10000), k, v) }
     } finally base.unpersist()
   }
 
@@ -222,8 +206,9 @@ object Selection {
     * Algorithm — the weighted, from-the-top twin of [[exactRank]]'s
     * histogram refinement: maintain [lo, hi] bracketing the integer cut
     * and the exact weight `aboveW` strictly above the bracket. Each round
-    * is ONE weighted counting aggregation (B equi-width buckets, integer
-    * arithmetic); walk the buckets top-down on the driver to find the
+    * is the rank walk's counting round with `sum(weight)` as the mass (B
+    * equi-width buckets, integer arithmetic, the same 2^63 span check);
+    * walk the buckets top-down on the driver to find the
     * bucket where the from-the-top cumulative weight first exceeds the
     * budget and recurse into it. ≤ ⌈64/log₂B⌉ rounds, each a counting scan
     * of the persisted two-column (score, weight) projection — at 100 TB
@@ -257,8 +242,6 @@ object Selection {
       val maxScore = hi
       require(maxScore < Long.MaxValue,
         "score Long.MaxValue unsupported (the empty-selection sentinel is maxScore + 1)")
-      require(BigInt(hi) - BigInt(lo) <= BigInt(Long.MaxValue),
-        s"score range [$lo, $hi] spans more than 2^63 — shift/scale the column first")
       // exact weight strictly above the current bracket; invariant
       // aboveW <= budget (so "select only what's above the bracket" is
       // always feasible) and the integer cut lies in [lo, hi + 1].
@@ -286,14 +269,7 @@ object Selection {
       while (lo < hi) {
         guard += 1
         require(guard <= 8, s"budget cut failed to converge (range [$lo,$hi])")
-        val width = ((BigInt(hi) - BigInt(lo)) / Buckets + 1).toLong
-        val counts = base
-          .filter(col("__s") >= lo && col("__s") <= hi)
-          .groupBy(call_function("div", col("__s") - lo, lit(width)).as("__b"))
-          .agg(sum(col("__w")).as("__w"), min(col("__s")).as("__mn"),
-            max(col("__s")).as("__mx"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .sortBy(-_._1)
+        val counts = histogram(base, "__s", sum(col("__w")), Seq((lo, hi))).head.reverse
         // walk top-down: find the highest bucket whose from-the-top
         // cumulative weight exceeds the budget — the cut is inside it
         var cum = aboveW

@@ -125,9 +125,9 @@ object Tokenize {
   /** T3+T4+V2 fused, production E1 path: per-mention sparse context vectors
     * built doc-locally against the broadcast significant-term dictionary
     * (entity -> term -> termid). Context rows are inherently doc-local, so
-    * the ENTIRE ML input is produced with ZERO shuffles — the long-form
-    * ctxvec + groupBy equivalent (SenseInduction.contextVectors ∘
-    * ThinNMF.group) is kept as the relational/oracle form. */
+    * the ENTIRE ML input is produced with ZERO shuffles, where the
+    * long-form ctxvec (SenseInduction.contextVectors) would need a groupBy
+    * per context. */
   def contextRows(docs: Dataset[CodeDoc], cfg: WsidConfig,
                   dict: Map[String, Map[String, Int]]): Dataset[graft.ml.ThinNMF.Ctx] =
     contextRowsFrom(tokDocs(docs, cfg), cfg, dict)

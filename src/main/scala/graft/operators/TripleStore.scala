@@ -19,7 +19,7 @@ import graft.plans.Pinned
   *
   * Execution is pure Catalyst: each pattern becomes a filtered projection
   * of the triple table (constants push down to the scan of a partitioned
-  * triple store — `TableIO.writeTriples` partitions by pred, so a constant
+  * triple store — `TableIO.Layout.Triples` partitions by pred, so a constant
   * predicate prunes partitions), and shared variables become equi-joins in
   * the caller-given order. Selectivity ordering is the caller's lever;
   * disconnected pattern groups cross-join (SPARQL semantics), so keep

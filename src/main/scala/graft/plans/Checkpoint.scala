@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sources.TableIO
 import graft.sources.TableIO.TableManifest
@@ -40,53 +39,26 @@ final class Checkpoint(spark: SparkSession, root: String) {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  def fingerprintOf(stage: String): String = fingerprints(stage)
-
   /** Run (or resume) one stage. `inputs` are upstream stage names whose
     * fingerprints form this stage's input fingerprint; `extraInput` mixes in
-    * external identity (e.g. the source table URI + config hash). */
-  def stage(name: String, inputs: Seq[String] = Nil, extraInput: String = "")
+    * external identity (e.g. the source table URI + config hash); `layout`
+    * is the stage table's partition and sort layout. A miss (re)writes the
+    * table through [[TableIO.writeTable]], whose commit protocol kills the
+    * old manifest before the rewrite starts. */
+  def stage(name: String, inputs: Seq[String] = Nil, extraInput: String = "",
+            layout: TableIO.Layout = TableIO.Layout.Flat)
            (compute: => DataFrame): DataFrame = {
     val inputFp = sha256((inputs.map(fingerprints) :+ extraInput).mkString("|"))
     val dir = s"$root/$name"
-    val existing = TableIO.readManifest(spark, s"$dir/_manifest.json")
-
-    existing match {
+    TableIO.readManifest(spark, s"$dir/_manifest.json") match {
       case Some(m) if m.inputFingerprint == inputFp =>
         resumed += name
         fingerprints(name) = stableFingerprint(m)
-        spark.read.parquet(s"$dir/data")
       case _ =>
-        // Kill the old manifest BEFORE the data rewrite starts: a crash midway
-        // through SaveMode.Overwrite must leave NO matching manifest, or a
-        // later run with the old config would resume from this run's partial
-        // data. Manifest-after-data is the commit point in both directions.
-        val mPath = new Path(s"$dir/_manifest.json")
-        val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-        // the delete MUST succeed before the rewrite starts: a silently
-        // failed delete (object-store/permission hiccup returns false, not
-        // throw) would leave the old manifest next to partial new data, and
-        // a later run with the old config would resume from it
-        if (fs.exists(mPath) && !fs.delete(mPath, false))
-          throw new java.io.IOException(
-            s"could not remove stale manifest $mPath before stage rewrite")
-        val t0 = System.nanoTime()
-        // I3: counters ride the write itself via Dataset.observe — no extra
-        // pass; harvested after the action and persisted in the manifest
-        val obs = org.apache.spark.sql.Observation(s"graft_${name}_${System.nanoTime()}")
-        compute
-          .observe(obs, org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$dir/data")
-        val observedRows = obs.get.get("rows").collect { case l: Long => l }.getOrElse(-1L)
-        val wallMs = (System.nanoTime() - t0) / 1000000
-        val files = TableIO.parquetLineage(spark, s"$dir/data")
-        val m = TableManifest(name, files.map(_.rows).sum, files, inputFp,
-          Map("files" -> files.size.toLong, "observed_rows" -> observedRows), wallMs)
-        TableIO.writeManifest(spark, s"$dir/_manifest.json", m)
+        val m = TableIO.writeTable(spark, dir, name, layout, inputFp)(compute)
         computed += name
         fingerprints(name) = stableFingerprint(m)
-        spark.read.parquet(s"$dir/data")
     }
+    spark.read.parquet(s"$dir/data")
   }
 }

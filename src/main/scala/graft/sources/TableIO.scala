@@ -37,49 +37,69 @@ object TableIO {
     spark.read.schema(Schemas.docSchema).parquet(uri).as[CodeDoc]
   }
 
-  /** S3: graph materialize — triples partitioned by predicate, sorted by
-    * subject within partitions for downstream range scans (SURVEY.md §4.2). */
-  def writeTriples(triples: DataFrame, uri: String, inputFingerprint: String = ""): TableManifest = {
+  /** Table layout: Hive-style partition directories on `partitionBy` (the
+    * frame is exchanged on those columns first, so each partition value
+    * lands in one write task) and rows sorted by `sortBy` within each file.
+    * `Layout.Flat` writes the frame as it comes, in its own partitioning. */
+  final case class Layout(partitionBy: Seq[String], sortBy: Seq[String])
+
+  object Layout {
+    val Flat: Layout = Layout(Nil, Nil)
+
+    /** S3 graph materialize: triples partitioned by predicate, sorted by
+      * subject within partitions for downstream range scans (SURVEY.md
+      * §4.2). */
+    val Triples: Layout = Layout(Seq("pred"), Seq("subj", "obj"))
+
+    /** QUAD-store sink for the named-graph surface (`TripleStore.bgpQuads`):
+      * partitioned `graph` first, `pred` second, so a constant graph term
+      * prunes whole graph subtrees and a (graph, pred)-constant pattern
+      * prunes to single directories — the layout that makes per-graph
+      * rebuild/replace (graph-version maintenance, `TripleStore.diff`) a
+      * directory swap instead of a table rewrite. */
+    val Quads: Layout = Layout(Seq("graph", "pred"), Seq("subj", "obj"))
+  }
+
+  /** Write table `table` under `uri`: `data` as parquet in `layout` under
+    * `<uri>/data`, then `<uri>/_manifest.json` holding {rowCount, per-file
+    * lineage, inputFingerprint, counters, wallMs}. The manifest is the
+    * commit point in both directions: an existing one is deleted BEFORE
+    * `data` is evaluated and the rewrite starts, so a crash midway through
+    * the overwrite leaves no manifest next to partial data, and the new one
+    * is written only after the data. The row count rides the write itself
+    * (`Dataset.observe`, the `observed_rows` counter) — no extra pass. */
+  def writeTable(spark: SparkSession, uri: String, table: String, layout: Layout,
+                 inputFingerprint: String = "")(data: => DataFrame): TableManifest = {
+    val mPath = new Path(s"$uri/_manifest.json")
+    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
+    // the delete MUST succeed before the rewrite starts: a silently failed
+    // delete (object-store/permission hiccup returns false, not throw)
+    // would leave the old manifest next to partial new data, and a later
+    // run with the old inputs would resume from it
+    if (fs.exists(mPath) && !fs.delete(mPath, false))
+      throw new java.io.IOException(s"could not remove stale manifest $mPath before rewrite")
     val t0 = System.nanoTime()
-    triples
-      .repartition(col("pred"))
-      .sortWithinPartitions("subj", "obj")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pred")
+    val obs = org.apache.spark.sql.Observation(s"graft_${table}_${System.nanoTime()}")
+    val observed = data.observe(obs, count(lit(1)).as("rows"))
+    val laid =
+      if (layout.partitionBy.isEmpty) observed
+      else observed.repartition(layout.partitionBy.map(col): _*)
+    val sorted =
+      if (layout.sortBy.isEmpty) laid else laid.sortWithinPartitions(layout.sortBy.map(col): _*)
+    val writer = sorted.write.mode(SaveMode.Overwrite)
+    (if (layout.partitionBy.isEmpty) writer else writer.partitionBy(layout.partitionBy: _*))
       .parquet(s"$uri/data")
+    val observedRows = obs.get.get("rows").collect { case l: Long => l }.getOrElse(-1L)
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val files = parquetLineage(triples.sparkSession, s"$uri/data")
-    val m = TableManifest("triples", files.map(_.rows).sum, files, inputFingerprint,
-      Map("files" -> files.size.toLong), wallMs)
-    writeManifest(triples.sparkSession, s"$uri/_manifest.json", m)
+    val files = parquetLineage(spark, s"$uri/data")
+    val m = TableManifest(table, files.map(_.rows).sum, files, inputFingerprint,
+      Map("files" -> files.size.toLong, "observed_rows" -> observedRows), wallMs)
+    writeManifest(spark, s"$uri/_manifest.json", m)
     m
   }
 
   def readTriples(spark: SparkSession, uri: String): DataFrame =
     spark.read.parquet(s"$uri/data").select("subj", "pred", "obj")
-
-  /** QUAD-store sink for the named-graph surface (`TripleStore.bgpQuads`):
-    * partitioned `graph` first, `pred` second, so a constant graph term
-    * prunes whole graph subtrees and a (graph, pred)-constant pattern
-    * prunes to single directories — the layout that makes per-graph
-    * rebuild/replace (graph-version maintenance, `TripleStore.diff`) a
-    * directory swap instead of a table rewrite. Same manifest/lineage
-    * contract as [[writeTriples]]. */
-  def writeQuads(quads: DataFrame, uri: String, inputFingerprint: String = ""): TableManifest = {
-    val t0 = System.nanoTime()
-    quads
-      .repartition(col("graph"), col("pred"))
-      .sortWithinPartitions("subj", "obj")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("graph", "pred")
-      .parquet(s"$uri/data")
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    val files = parquetLineage(quads.sparkSession, s"$uri/data")
-    val m = TableManifest("quads", files.map(_.rows).sum, files, inputFingerprint,
-      Map("files" -> files.size.toLong), wallMs)
-    writeManifest(quads.sparkSession, s"$uri/_manifest.json", m)
-    m
-  }
 
   def readQuads(spark: SparkSession, uri: String): DataFrame =
     spark.read.parquet(s"$uri/data").select("graph", "subj", "pred", "obj")
@@ -263,7 +283,7 @@ object TableIO {
         "compacted_partitions" -> (plans.size.toLong - skipped),
         "skipped_partitions" -> skipped),
       (System.nanoTime() - t0) / 1000000)
-    writeManifest(spark, mPath.toString, m)
+    writeManifest(spark, s"$uri/_manifest.json", m)
     if (fs.exists(parkedPath)) fs.delete(parkedPath, false)
     m
   }

@@ -59,27 +59,34 @@ class CheckpointSpec extends SparkTestBase {
 
   test("S4: interrupted overwrite cannot leave a stale resumable manifest") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ckpt_stale").toString
-    val df = Seq(1, 2, 3).toDF("x")
-    val ck1 = new plans.Checkpoint(spark, root)
-    ck1.stage("s", Nil, "cfgA")(df)
-    assert(ck1.computed.toSeq == Seq("s"))
+    // a flat stage and one in the partitioned triple-table layout
+    val inputs = Seq(
+      TableIO.Layout.Flat -> Seq(1, 2, 3).toDF("x"),
+      TableIO.Layout.Triples -> Seq(("a", "hasSense", "x"), ("b", "coOccursWith", "y"))
+        .toDF("subj", "pred", "obj"))
+    for ((layout, df) <- inputs) {
+      val root = Files.createTempDirectory("graft_ckpt_stale").toString
+      val ck1 = new plans.Checkpoint(spark, root)
+      ck1.stage("s", Nil, "cfgA", layout)(df)
+      assert(ck1.computed.toSeq == Seq("s"))
 
-    // a run with config B crashes mid-overwrite (compute throws after the
-    // rewrite began): the surviving on-disk state must NOT contain the old
-    // config-A manifest, or a later config-A run would resume from B's
-    // partial/foreign data (ADVICE r1, medium)
-    val ck2 = new plans.Checkpoint(spark, root)
-    intercept[RuntimeException] {
-      ck2.stage("s", Nil, "cfgB")(throw new RuntimeException("boom"))
+      // a run with config B crashes mid-overwrite (compute throws after the
+      // rewrite began): the surviving on-disk state must NOT contain the old
+      // config-A manifest, or a later config-A run would resume from B's
+      // partial/foreign data (ADVICE r1, medium)
+      val ck2 = new plans.Checkpoint(spark, root)
+      intercept[RuntimeException] {
+        ck2.stage("s", Nil, "cfgB", layout)(throw new RuntimeException("boom"))
+      }
+      assert(sources.TableIO.readManifest(spark, s"$root/s/_manifest.json").isEmpty,
+        s"stale manifest survived an interrupted overwrite ($layout)")
+
+      // the config-A rerun therefore RECOMPUTES instead of resuming
+      val ck3 = new plans.Checkpoint(spark, root)
+      val back = ck3.stage("s", Nil, "cfgA", layout)(df)
+      assert(ck3.computed.toSeq == Seq("s") && ck3.resumed.isEmpty)
+      assert(back.count() == df.count())
     }
-    assert(sources.TableIO.readManifest(spark, s"$root/s/_manifest.json").isEmpty,
-      "stale manifest survived an interrupted overwrite")
-
-    // the config-A rerun therefore RECOMPUTES instead of resuming
-    val ck3 = new plans.Checkpoint(spark, root)
-    ck3.stage("s", Nil, "cfgA")(df)
-    assert(ck3.computed.toSeq == Seq("s") && ck3.resumed.isEmpty)
   }
 
   test("I3: dochash lineage — sha256(content) multiset equals input") {
@@ -114,7 +121,7 @@ class CheckpointSpec extends SparkTestBase {
       ("java@r/p2", "hasSense", "java#s1"),
       ("java@r/p2", "coOccursWith", "island")
     ).toDF("subj", "pred", "obj")
-    val m = TableIO.writeTriples(triples, dir, "fp123")
+    val m = TableIO.writeTable(spark, dir, "triples", TableIO.Layout.Triples, "fp123")(triples)
     assert(m.rowCount == 4)
     assert(m.inputFingerprint == "fp123")
     // partitioned by predicate on disk
@@ -130,7 +137,7 @@ class CheckpointSpec extends SparkTestBase {
     val triples = (0 until 40).map { i =>
       (f"s$i%03d", if (i % 2 == 0) "hasSense" else "coOccursWith", s"o$i")
     }.toDF("subj", "pred", "obj")
-    TableIO.writeTriples(triples, dir, "fp-compact")
+    TableIO.writeTable(spark, dir, "triples", TableIO.Layout.Triples, "fp-compact")(triples)
     // fragment the way real tables fragment: incremental appends, one small
     // file each (the sink's repartition(pred) keeps the INITIAL write tight)
     (0 until 5).foreach { b =>

@@ -27,7 +27,7 @@ class PlanSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_pp").toString
     val triples = Seq(("a", "hasSense", "x"), ("b", "coOccursWith", "y"))
       .toDF("subj", "pred", "obj")
-    sources.TableIO.writeTriples(triples, dir)
+    sources.TableIO.writeTable(spark, dir, "triples", sources.TableIO.Layout.Triples)(triples)
     val plan = sources.TableIO.readTriples(spark, dir)
       .filter(col("pred") === "hasSense")
       .queryExecution.executedPlan.toString
@@ -44,7 +44,7 @@ class PlanSpec extends SparkTestBase {
         ("v1", "a", "coOccursWith", "x"), ("v1", "b", "coOccursWith", "y"),
         ("v2", "a", "coOccursWith", "x"), ("v2", "t", "isTopTermOf", "a"))
         .toDF("graph", "subj", "pred", "obj")
-      sources.TableIO.writeQuads(quads, dir)
+      sources.TableIO.writeTable(spark, dir, "quads", sources.TableIO.Layout.Quads)(quads)
       val store = sources.TableIO.readQuads(spark, dir)
       // round-trip through the partitioned layout
       assert(store.as[(String, String, String, String)].collect().toSet ==

@@ -20,9 +20,13 @@ class SelectionSpec extends SparkTestBase {
       }
       val df = vals.toDF("v").repartition(5)
       val sorted = vals.sorted
-      for (k <- Seq(1L, 2L, 500L, 1000L, 1999L, 2000L)) {
+      val ks = Seq(1L, 2L, 500L, 1000L, 1999L, 2000L)
+      // the batched quantile walk at q = (k - 1/2)/n, whose rank is k
+      val viaQuantiles = Selection.exactQuantiles(df, "v", ks.map(k => (k - 0.5) / vals.size))
+      for ((k, (_, qk, qv)) <- ks.zip(viaQuantiles)) {
         val got = Selection.exactRank(df, "v", k)
         assert(got == sorted((k - 1).toInt), s"trial $trial k=$k")
+        assert(qk == k && qv == got, s"trial $trial k=$k: exactQuantiles gave rank $qk value $qv")
       }
     }
   }

@@ -195,7 +195,7 @@ class SimilaritySpec extends SparkTestBase {
       "(fixture no longer exercises the retry; rebuild it)")
     val plainShare = Similarity.maxShareOf(train,
       Similarity.localKMeans(train, 4, badSeed.get.toLong, 10))
-    val balanced = Similarity.ivfIndexBalanced(planted, nlist = 4,
+    val balanced = Similarity.ivfIndex(planted, nlist = 4,
       seed = badSeed.get.toLong, maxShare = 0.5)
     val fixedShare = Similarity.maxShareOf(train, balanced)
     info(f"seed=${badSeed.get} plain=$plainShare%.2f balanced=$fixedShare%.2f")
@@ -207,7 +207,7 @@ class SimilaritySpec extends SparkTestBase {
 
   test("ivfIndexBalanced: irreducible corpus (identical vectors) returns best effort, guard still fires") {
     val flat = (0 until 100).map(i => (i.toLong, Seq.fill(8)(1.0f))).toDF("vec_id", "embedding")
-    val centers = Similarity.ivfIndexBalanced(flat, nlist = 4, maxRetries = 2)
+    val centers = Similarity.ivfIndex(flat, nlist = 4, maxRetries = 2)
     val stats = Similarity.ivfCellStats(flat, centers).head()
     assert(stats.getAs[Long]("max_cell_share_e4") == 10000L, s"$stats")
   }
