@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Curation, Tokenize}
@@ -27,12 +27,6 @@ object CurationQueries {
   private val LrRounds = 6
   private val LrLr = 1.0
 
-  private def toTok(df: DataFrame): Dataset[TokDoc] = {
-    import df.sparkSession.implicits._
-    df.select(col("docid"), col("text")).as[(String, String)]
-      .map { case (id, t) => TokDoc(id, Tokenize.tokensOf(t, Set.empty)) }
-  }
-
   private def dsirAug(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")
       .select(col("doc_id").cast("string").as("docid"),
@@ -57,9 +51,9 @@ object CurationQueries {
   private def dsirWeightFrame(s: SparkSession, d: String): DataFrame =
     dsirMemo.getOrBuild((s, s"$d|dsirweights")) {
       val aug = dsirAug(s, d)
-      val feats = Curation.bucketCounts(toTok(aug), DsirB)
+      val feats = Curation.bucketCounts(Tokenize.tokDocsOfText(aug), DsirB)
       val tgtFeats = Curation.bucketCounts(
-        toTok(aug.filter(col("docid").cast("long") % 7 === 0)), DsirB)
+        Tokenize.tokDocsOfText(aug.filter(col("docid").cast("long") % 7 === 0)), DsirB)
       graft.plans.Pinned.pin(
         Curation.dsirWeights(feats, Curation.dsirDeltas(feats, tgtFeats, DsirB)))
     }
@@ -73,7 +67,7 @@ object CurationQueries {
     lrFeatMemo.getOrBuild((s, s"$d|lrfeat")) {
       val aug = lrAug(s, d)
       graft.plans.Pinned.pin(
-        Curation.presenceFeatures(toTok(aug), LrB)
+        Curation.presenceFeatures(Tokenize.tokDocsOfText(aug), LrB)
           .join(aug.select("docid", "y"), "docid"))
     }
 
@@ -245,10 +239,9 @@ object CurationQueries {
       try {
         val budget = scored.agg(sum(col("ntok"))).head().getLong(0) * 3L / 10L
         val t = operators.Selection.budgetCutScore(scored, "margin_q", "ntok", budget)
-        scored.filter(col("margin_q") >= t)
+        graft.plans.Pinned.pin(scored.filter(col("margin_q") >= t)
           .select(col("docid"), col("margin_q"), col("ntok"), lit(t).as("cut_score"))
-          .orderBy("docid")
-          .localCheckpoint()
+          .orderBy("docid"))
       } finally scored.unpersist()
     }))
 
@@ -271,7 +264,7 @@ object CurationQueries {
        |  FROM documents),
        |tok AS (
        |  SELECT doc_id,
-       |         unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '')) AS tok
+       |         unnest(${Tokenize.termsSql("text")}) AS tok
        |  FROM aug),
        |bx AS (
        |  SELECT doc_id, CAST(${fnvHu("tok")} % $DsirB AS BIGINT) AS bucket
@@ -304,7 +297,7 @@ object CurationQueries {
        |  FROM documents),
        |tok AS (
        |  SELECT doc_id, y,
-       |         unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '')) AS tok
+       |         unnest(${Tokenize.termsSql("text")}) AS tok
        |  FROM aug),
        |featb AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, y,
@@ -545,7 +538,7 @@ object CurationQueries {
          |  GROUP BY f.doc_id, c.bias),
          |nt AS (
          |  SELECT doc_id,
-         |         CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')) AS BIGINT) AS ntok
+         |         CAST(len(${Tokenize.termsSql("text")}) AS BIGINT) AS ntok
          |  FROM aug),
          |sx AS (SELECT mf.doc_id, mf.margin, nt.ntok
          |       FROM mf JOIN nt ON mf.doc_id = nt.doc_id WHERE nt.ntok > 0),

@@ -33,19 +33,22 @@ object ExtraQueries {
     * read the frame twice would each tokenize the same partition. */
   private val tdwMemo = new Memo.BoundedMemo[Dataset[TokDoc]]
   private def tokdocsWhere(spark: SparkSession, sfDir: String,
-                           cond: org.apache.spark.sql.Column): Dataset[TokDoc] = {
-    import spark.implicits._
+                           cond: org.apache.spark.sql.Column): Dataset[TokDoc] =
     tdwMemo.getOrBuild((spark, s"$sfDir|tdw|${cond.toString}")) {
-      val td = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(cond)
-        .select(col("doc_id").cast("string").as("docid"), col("text"))
-        .as[(String, String)]
-        .map { case (id, t) => TokDoc(id, Tokenize.tokensOf(t, Set.empty)) }
+      val td = Tokenize.tokDocsOfText(spark.read.parquet(s"$sfDir/documents.parquet")
+          .filter(cond)
+          .select(col("doc_id").cast("string").as("docid"), col("text")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       td.count()
       td
     }
-  }
+
+  /** The oracle's twin of [[tokdocsWhere]]: a `SELECT` of the doc_id-keyed
+    * `(docid, arr)` corpus, under the SQL condition `cond` when one is
+    * given. */
+  private def tokdocsSql(cond: String = ""): String =
+    s"SELECT CAST(doc_id AS VARCHAR) AS docid, ${Tokenize.termsSql("text")} AS arr FROM documents" +
+      (if (cond.isEmpty) "" else s" WHERE $cond")
 
   /** The corpus embeddings carry no natural near-duplicates (max pairwise
     * cosine ≈ 0.51), so the dedup queries plant them: every vec_id < nPlant
@@ -153,10 +156,8 @@ object ExtraQueries {
     * q_dedup_substring oracles so the fixture can never silently diverge
     * between them (or from the Scala side it mirrors). */
   private val plantedNearDupCte: String =
-    """d AS (
-      |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-      |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-      |  FROM documents WHERE doc_id < 30
+    s"""d AS (
+      |  ${tokdocsSql("doc_id < 30")}
       |),
       |pl AS (
       |  SELECT docid, arr FROM d
@@ -478,15 +479,12 @@ object ExtraQueries {
     // signatures, banding, both capped candidate joins, exact Jaccard —
     // replays in the oracle, so all three flags hash-check per batch doc
     "q_dedup_minhash_increment" -> ((s, d) => {
-      import s.implicits._
       val corpus = tokdocsUnder(s, d, 150)
       def slice(lo: Int, hi: Int, prefix: String, suffix: String) =
-        s.read.parquet(s"$d/documents.parquet")
+        Tokenize.tokDocsOfText(s.read.parquet(s"$d/documents.parquet")
           .filter(col("doc_id") >= lo && col("doc_id") < hi)
           .select(concat(lit(prefix), col("doc_id").cast("string")).as("docid"),
-            concat(col("text"), lit(suffix)).as("text"))
-          .as[(String, String)]
-          .map { case (id, t) => TokDoc(id, Tokenize.tokensOf(t, Set.empty)) }
+            concat(col("text"), lit(suffix)).as("text")))
       val batch = slice(150, 200, "f", "")
         .unionByName(slice(0, 10, "c", " zqy"))
         .unionByName(slice(150, 155, "w", " zqy"))
@@ -755,12 +753,8 @@ object ExtraQueries {
     // SenseSpec). Rows-only: the model is ML-derived.
     "q_e3_disambiguate" -> ((s, d) => {
       val cfg = e3Cfg
-      val (dict, senseVec) = Memo.modelOf(s, d, cfg)
-      val dictMap = dict.collect()
-        .groupBy(_.getString(0))
-        .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
-      val h = ml.SenseInduction.collectH(senseVec)
-      val ctx = Tokenize.contextRowsFrom(Memo.tokDocsOf(s, d, cfg), cfg, dictMap)
+      val (dict, h) = Memo.modelOf(s, d, cfg)
+      val ctx = Tokenize.contextRowsFrom(Memo.tokDocsOf(s, d, cfg), cfg, dict)
       ml.ThinNMF.assignDS(ctx, h, cfg.minSenseScore)
         .groupBy("entity", "senseid")
         .agg(count(lit(1)).as("n"), e4(avg(col("score"))).as("avg_score_e4"))
@@ -985,10 +979,9 @@ object ExtraQueries {
       try {
         val budget = scored.agg(sum(col("ntok"))).head().getLong(0) * 3L / 10L
         val t = operators.Selection.budgetCutScore(scored, "score", "ntok", budget)
-        scored.filter(col("score") >= t)
+        graft.plans.Pinned.pin(scored.filter(col("score") >= t)
           .select(col("doc_id"), col("score"), col("ntok"), lit(t).as("cut_score"))
-          .orderBy("doc_id")
-          .localCheckpoint()
+          .orderBy("doc_id"))
       } finally scored.unpersist()
     }),
 
@@ -1281,9 +1274,7 @@ object ExtraQueries {
          |)""".stripMargin
     }.mkString(",\n")
     s"""WITH t AS MATERIALIZED (
-       |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-       |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-       |  FROM documents
+       |  ${tokdocsSql()}
        |),
        |tok AS MATERIALIZED (SELECT docid, unnest(arr) AS w FROM t),
        |v0 AS MATERIALIZED (
@@ -1319,10 +1310,8 @@ object ExtraQueries {
     * shared by q_text_fingerprint and q_dedup_spans_crossdoc — ends in
     * `fp(docid, fingerprint)`. */
   private val winnowFpCte =
-    """t AS (
-      |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-      |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-      |  FROM documents
+    s"""t AS (
+      |  ${tokdocsSql()}
       |),
       |grams AS (
       |  SELECT docid, i, array_to_string(arr[i:i+4], ' ') || ' ' AS g
@@ -1388,10 +1377,8 @@ object ExtraQueries {
       |  FROM ee GROUP BY 1, 2)""".stripMargin
 
   private val d40Cte =
-    """d40 AS (
-      |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-      |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-      |  FROM documents WHERE doc_id < 40
+    s"""d40 AS (
+      |  ${tokdocsSql("doc_id < 40")}
       |)""".stripMargin
 
   val oracle: Map[String, String] = Map(
@@ -1596,10 +1583,8 @@ object ExtraQueries {
         |FROM k WHERE rn = 1 GROUP BY repo ORDER BY repo""".stripMargin,
 
     "q_text_repetition" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 50
+      s"""WITH t AS (
+        |  ${tokdocsSql("doc_id < 50")}
         |),
         |g AS (
         |  SELECT docid, arr,
@@ -1661,9 +1646,9 @@ object ExtraQueries {
         |FROM keyed WHERE hkey < thr GROUP BY lang ORDER BY lang""".stripMargin,
 
     "q_contamination" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT CAST(doc_id AS VARCHAR) AS docid, doc_id,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
+        |         ${Tokenize.termsSql("text")} AS arr
         |  FROM documents
         |),
         |corp AS (
@@ -1690,9 +1675,9 @@ object ExtraQueries {
     // decontamination emit: same shingle CTEs as q_contamination with the
     // sides swapped; strict threshold 0
     "q_decontaminate" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT CAST(doc_id AS VARCHAR) AS docid, doc_id,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
+        |         ${Tokenize.termsSql("text")} AS arr
         |  FROM documents
         |),
         |bench AS (
@@ -1718,11 +1703,11 @@ object ExtraQueries {
         |ORDER BY length(l.docid), l.docid""".stripMargin,
 
     "q_text_tokencount" ->
-      """WITH docs AS (SELECT source AS repo, text AS content FROM documents)
+      s"""WITH docs AS (SELECT source AS repo, text AS content FROM documents)
         |SELECT repo,
         |       CAST(sum(CASE WHEN length(trim(content)) = 0 THEN 0
-        |                ELSE len(regexp_split_to_array(trim(content), '\s+')) END) AS BIGINT) AS ws_tokens,
-        |       CAST(sum(len(list_filter(regexp_split_to_array(lower(content), '[^a-z0-9_]+'), t -> t <> ''))) AS BIGINT) AS re_tokens,
+        |                ELSE len(regexp_split_to_array(trim(content), '\\s+')) END) AS BIGINT) AS ws_tokens,
+        |       CAST(sum(len(${Tokenize.termsSql("content")})) AS BIGINT) AS re_tokens,
         |       count(*) AS n_docs
         |FROM docs GROUP BY repo ORDER BY repo""".stripMargin,
 
@@ -1832,9 +1817,7 @@ object ExtraQueries {
     // hash-checked row.
     "q_dedup_minhash_lsh" ->
       s"""WITH RECURSIVE t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 200
+        |  ${tokdocsSql("doc_id < 200")}
         |),
         |${minhashChainCte}
         |lshp AS (
@@ -1860,10 +1843,8 @@ object ExtraQueries {
     // join, NOT EXISTS dominance suppression; 1-based i converts to the
     // engine's 0-based start
     "q_kg_gazetteer" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 200
+      s"""WITH t AS (
+        |  ${tokdocsSql("doc_id < 200")}
         |),
         |al AS (
         |  SELECT 'E_a' AS entity, array_to_string(arr[6:8], ' ') AS alias, 3 AS l
@@ -1898,13 +1879,11 @@ object ExtraQueries {
     // compare); coverage intervals, gap-merged span counting, and the
     // sha256 of the excised stream all replay
     "q_decontaminate_spans" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 200
+      s"""WITH t AS (
+        |  ${tokdocsSql("doc_id < 200")}
         |),
         |bt AS (
-        |  SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '')[11:18] AS barr
+        |  SELECT ${Tokenize.termsSql("text")}[11:18] AS barr
         |  FROM documents WHERE doc_id < 5
         |),
         |bsh AS (
@@ -1952,20 +1931,18 @@ object ExtraQueries {
     // both; flags per batch doc
     "q_dedup_minhash_increment" ->
       s"""WITH RECURSIVE t AS (
-         |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-         |  FROM documents WHERE doc_id < 150
+         |  ${tokdocsSql("doc_id < 150")}
          |  UNION ALL
          |  SELECT 'f' || CAST(doc_id AS VARCHAR),
-         |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '')
+         |         ${Tokenize.termsSql("text")}
          |  FROM documents WHERE doc_id >= 150 AND doc_id < 200
          |  UNION ALL
          |  SELECT 'c' || CAST(doc_id AS VARCHAR),
-         |         list_filter(regexp_split_to_array(lower(text || ' zqy'), '[^a-z0-9_]+'), x -> x <> '')
+         |         ${Tokenize.termsSql("text || ' zqy'")}
          |  FROM documents WHERE doc_id < 10
          |  UNION ALL
          |  SELECT 'w' || CAST(doc_id AS VARCHAR),
-         |         list_filter(regexp_split_to_array(lower(text || ' zqy'), '[^a-z0-9_]+'), x -> x <> '')
+         |         ${Tokenize.termsSql("text || ' zqy'")}
          |  FROM documents WHERE doc_id >= 150 AND doc_id < 155
          |),
          |${minhashChainCte}
@@ -2026,10 +2003,8 @@ object ExtraQueries {
     // bucketed branch's outputs are pinned by the all-pairs truth: a
     // banding/bucketing bug shows up as n_bucketed != the oracle's count.
     "q_dedup_simhash" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 200
+      s"""WITH RECURSIVE t AS (
+        |  ${tokdocsSql("doc_id < 200")}
         |),
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |tc AS (SELECT docid, term, count(*) AS c FROM tok GROUP BY docid, term),
@@ -2079,9 +2054,9 @@ object ExtraQueries {
     // sequence packing: the oracle uses the naive single global window —
     // semantically identical to the engine's two-phase distributed scan
     "q_pack_sequences" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '')) AS ntok
+        |         len(${Tokenize.termsSql("text")}) AS ntok
         |  FROM documents
         |),
         |c AS (
@@ -2098,10 +2073,8 @@ object ExtraQueries {
     // passages: integer window arithmetic (no float ceil), DuckDB 1-indexed
     // list slice, sha256 of the space-joined tokens matching Spark's sha2
     "q_text_passages" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents WHERE doc_id < 200
+      s"""WITH t AS (
+        |  ${tokdocsSql("doc_id < 200")}
         |),
         |np AS (
         |  SELECT docid, arr, len(arr) AS n,
@@ -2123,10 +2096,8 @@ object ExtraQueries {
     // integer arithmetic until the final 1e-4 rounding (mirrors the engine
     // exactly, so float summation order can never flip the hash)
     "q_text_unigram_logprob" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |marg AS (
@@ -2148,10 +2119,8 @@ object ExtraQueries {
     // up. Bigrams come from parallel unnest over the doc's ordered token
     // list (positional zip); docs with < 2 tokens emit nothing.
     "q_text_bigram_logprob" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |tok AS (SELECT unnest(arr) AS term FROM t),
         |uni AS (SELECT term, CAST(count(*) AS BIGINT) AS n2 FROM tok GROUP BY term),
@@ -2178,10 +2147,8 @@ object ExtraQueries {
     // by (score desc, SIGNED FNV-1a term hash asc) — the window form the
     // production bounded-heap aggregate replaces
     "q_text_keywords" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |tf AS (SELECT docid, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
@@ -2260,10 +2227,10 @@ object ExtraQueries {
     // from-the-top cumulative token weight still fits the budget (whole tie
     // classes; empty selection would report max+1, unreachable at 30%)
     "q_select_budget" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT doc_id,
-        |         CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')) AS BIGINT) AS ntok,
-        |         CAST(len(list_distinct(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> ''))) AS BIGINT) AS ndist
+        |         CAST(len(${Tokenize.termsSql("text")}) AS BIGINT) AS ntok,
+        |         CAST(len(list_distinct(${Tokenize.termsSql("text")})) AS BIGINT) AS ndist
         |  FROM documents),
         |s AS (SELECT doc_id, ntok, (ndist * 10000) // ntok AS score FROM v WHERE ntok > 0),
         |b AS (SELECT (sum(ntok) * 3) // 10 AS budget FROM s),
@@ -2278,9 +2245,9 @@ object ExtraQueries {
     // grouped-quantiles twin: the full per-group row sort the class-frame
     // form avoids — row_number per lang joined at each ceil-rank
     "q_group_quantiles" ->
-      """WITH v AS (
+      s"""WITH v AS (
         |  SELECT lang,
-        |         CAST(len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')) AS BIGINT) AS ntok
+        |         CAST(len(${Tokenize.termsSql("text")}) AS BIGINT) AS ntok
         |  FROM documents
         |  WHERE text IS NOT NULL),
         |n AS (SELECT lang, count(*) AS n FROM v GROUP BY lang),
@@ -2311,15 +2278,14 @@ object ExtraQueries {
     // dataset card: DuckDB's own ROLLUP over the same derived columns —
     // both engines compute all three grouping levels from one input
     "q_dataset_card" ->
-      """WITH d AS (
+      s"""WITH d AS (
         |  SELECT lang,
         |         CASE WHEN length(text) < 200 THEN 'short'
         |              WHEN length(text) < 1000 THEN 'medium'
         |              ELSE 'long' END AS bucket,
         |         sha256(text) AS sha,
         |         length(text) AS nc,
-        |         len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'),
-        |             x -> x <> '')) AS ntok
+        |         len(${Tokenize.termsSql("text")}) AS ntok
         |  FROM documents
         |)
         |SELECT COALESCE(lang, 'ALL') AS lang, COALESCE(bucket, 'ALL') AS bucket,
@@ -2407,7 +2373,7 @@ object ExtraQueries {
         |tx AS (
         |  SELECT lower(regexp_extract(u, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/:?#]+)', 1)) AS dst_host,
         |         src_host,
-        |         unnest(list_filter(regexp_split_to_array(lower(t), '[^a-z0-9_]+'), x -> x <> '')) AS term
+        |         unnest(${Tokenize.termsSql("t")}) AS term
         |  FROM ax)
         |SELECT dst_host, term, CAST(count(*) AS BIGINT) AS n_refs
         |FROM tx WHERE dst_host <> '' AND dst_host <> src_host
@@ -2421,10 +2387,8 @@ object ExtraQueries {
         |SELECT node, rank FROM r6 ORDER BY node""".stripMargin,
 
     "q_text_langid" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |scores AS (
         |  SELECT docid,
@@ -2583,8 +2547,8 @@ object ExtraQueries {
     // vocab construction: identical (count desc, term) total order, so the
     // top-50 set, ranks, shares, and cumulative coverage all pin exactly
     "q_vocab_topk" ->
-      """WITH t AS (
-        |  SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
+      s"""WITH t AS (
+        |  SELECT ${Tokenize.termsSql("text")} AS arr
         |  FROM documents
         |),
         |tok AS (SELECT unnest(arr) AS term FROM t),
@@ -2605,8 +2569,8 @@ object ExtraQueries {
     // oracle pays the vocabulary shuffle the engine's candidate-then-verify
     // path avoids; threshold (N // 40) derived from the same stream
     "q_vocab_heavyhitters" ->
-      """WITH t AS (
-        |  SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
+      s"""WITH t AS (
+        |  SELECT ${Tokenize.termsSql("text")} AS arr
         |  FROM documents
         |),
         |tok AS (SELECT unnest(arr) AS term FROM t),
@@ -2779,10 +2743,8 @@ object ExtraQueries {
     // quality deciles: ntile(10) over the unigram-LM score (the
     // q_text_unigram_logprob oracle as a CTE), per-bucket volume
     "q_quality_buckets" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |marg AS (
@@ -2812,9 +2774,9 @@ object ExtraQueries {
     // domain-mixture reweighting: identical double arithmetic (BIGINT token
     // counts, one division chain, e4 rounding) in both engines
     "q_mix_weights" ->
-      """WITH docs AS (
+      s"""WITH docs AS (
         |  SELECT lang,
-        |         len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')) AS ntok
+        |         len(${Tokenize.termsSql("text")}) AS ntok
         |  FROM documents
         |),
         |obs AS (
@@ -2864,9 +2826,9 @@ object ExtraQueries {
     // sha256 4-hex key vs the 16-bit-lattice fractional threshold, then
     // epoch unnest; printf('%04x') matches Spark's format_string exactly
     "q_mix_apply" ->
-      """WITH dtok AS (
+      s"""WITH dtok AS (
         |  SELECT lang,
-        |         len(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), t -> t <> '')) AS ntok
+        |         len(${Tokenize.termsSql("text")}) AS ntok
         |  FROM documents
         |),
         |obs AS (
@@ -2905,10 +2867,8 @@ object ExtraQueries {
         |ORDER BY docid, epoch""".stripMargin,
 
     "q_search_bm25" ->
-      """WITH t AS (
-        |  SELECT CAST(doc_id AS VARCHAR) AS docid,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z0-9_]+'), x -> x <> '') AS arr
-        |  FROM documents
+      s"""WITH t AS (
+        |  ${tokdocsSql()}
         |),
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |dl AS (SELECT docid, count(*) AS dl FROM tok GROUP BY docid),

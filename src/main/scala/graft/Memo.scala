@@ -131,20 +131,13 @@ object Memo {
 
   private val tokdocsMemo = new BoundedMemo[Dataset[TokDoc]]
   private val costatsMemo = new BoundedMemo[Pipeline.CoStats]
-  private val modelMemo = new BoundedMemo[(DataFrame, DataFrame)]
+  private val modelMemo =
+    new BoundedMemo[(Map[String, Map[String, Int]], Map[String, ml.ThinNMF.H])]
   private val edgesMemo = new BoundedMemo[DataFrame]
   private val rankedMemo = new BoundedMemo[(DataFrame, DataFrame)]
   private val l3Memo = new BoundedMemo[DataFrame]
   private val ivfMemo = new BoundedMemo[Array[Array[Double]]]
   private val bpeMemo = new BoundedMemo[Seq[(Long, String, String, Long)]]
-
-  /** Pin a memo frame whose plan ends in no exchange AQE may coalesce, at
-    * the partition count AQE sizes it to: a REBALANCE exchange is coalesced
-    * to `advisoryPartitionSizeInBytes` (one partition for a KB-sized frame,
-    * bytes / 64 MB at scale). Scored's last exchange lives inside the
-    * chain's cached cooc plan, whose partitioning AQE keeps (see
-    * `Session`), and senseVec is a scan of the model's files. */
-  private def pinSized(df: DataFrame): DataFrame = Pinned.pin(df.hint("rebalance"))
 
   /** Total live entries across all memos (test hook for the LRU bound). */
   private[graft] def totalEntries: Int = registry.asScala.iterator.map(_.size).sum
@@ -245,7 +238,12 @@ object Memo {
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration
       val fCov = Future { cs.coverage.count() }
-      val scored = pinSized(cs.scored)
+      // pinned at the partition count AQE sizes it to: scored's last
+      // exchange lives inside the chain's cached cooc plan, whose
+      // partitioning AQE keeps (see `Session`), so a REBALANCE exchange is
+      // added and coalesced to `advisoryPartitionSizeInBytes` (one
+      // partition for a KB-sized frame, bytes / 64 MB at scale)
+      val scored = Pinned.pin(cs.scored.hint("rebalance"))
       Await.result(fCov, Duration.Inf)
       cs.internal.foreach(_.unpersist(false))
       val sig = operators.Significance.significant(scored, cfg)
@@ -281,11 +279,14 @@ object Memo {
 
   /** E3's sense model for (sfDir, cfg): induced ONCE into a version-keyed
     * checkpoint under the model store, loaded back via the one-call API and
-    * pinned (dict and senseVec are entity-set-sized) —
-    * later processes (and later queries in this one) resume instead of
-    * re-running the ML. E3's contract is "disambiguate against an EXISTING
-    * model"; building the model is E1's job and is benchmarked there. */
-  def modelOf(spark: SparkSession, sfDir: String, cfg: WsidConfig): (DataFrame, DataFrame) =
+    * held as driver data — the dictionary map and the per-entity sense
+    * matrices H the fused assignment broadcasts (both entity-set-sized) —
+    * so later processes (and later queries in this one) resume instead of
+    * re-running the ML, and no query collects the model again. E3's
+    * contract is "disambiguate against an EXISTING model"; building the
+    * model is E1's job and is benchmarked there. */
+  def modelOf(spark: SparkSession, sfDir: String, cfg: WsidConfig)
+      : (Map[String, Map[String, Int]], Map[String, ml.ThinNMF.H]) =
     modelMemo.getOrBuild((spark, s"$sfDir|${cfg.canonicalId}")) {
       val key = sha256Hex(s"$sfDir|${cfg.canonicalId}|$ModelVersion").take(16)
       val store = new Path(modelStoreRoot)
@@ -309,7 +310,7 @@ object Memo {
       }
       verifyOwnership(fs, root)
       val (dict, senseVec) = Pipeline.loadModel(spark, root.toString)
-      (Pinned.pin(dict), pinSized(senseVec))
+      (ml.SenseInduction.dictionaryMap(dict), ml.SenseInduction.collectH(senseVec))
     }
 
   /** Create the store root if missing; the implicit per-user default gets

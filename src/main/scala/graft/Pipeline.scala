@@ -149,9 +149,7 @@ object Pipeline {
     // would cap NMF at one task per entity.
     val ctxrows = staged("ctxrows", Seq("sigcooc")) {
       import spark.implicits._
-      val dict = SenseInduction.dictionary(sigcooc).collect()
-        .groupBy(_.getString(0))
-        .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
+      val dict = SenseInduction.dictionaryMap(SenseInduction.dictionary(sigcooc))
       val ctx = Tokenize.contextRowsFrom(tokdocs, cfg, dict).toDF()
       if (scanPartitions.contains(1) && slots > 1) ctx.repartition(slots, col("entity")) else ctx
     }

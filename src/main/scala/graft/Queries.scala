@@ -178,14 +178,15 @@ object Queries {
 
   /** Shared CTE chain mirroring the pipeline. Unused CTEs are pruned by the
     * optimizer, so every oracle query carries the full prefix (KgQueries
-    * reuses it so the tokenizer SQL has exactly one source of truth). */
+    * reuses it). Its `toks` CTE, like every other oracle query, tokenizes
+    * through `Tokenize.termsSql`, the one SQL form of the token contract. */
   private[graft] val base: String =
     s"""WITH ${CorpusSynth.docsSqlCte},
        |toks AS (
        |  SELECT docid, unnest(generate_series(1, len(arr))) - 1 AS pos, unnest(arr) AS term
        |  FROM (
        |    SELECT repo || '/' || path || '@' || "commit" AS docid,
-       |           list_filter(regexp_split_to_array(lower(content), '[^a-z0-9_]+'), x -> x <> '') AS arr
+       |           ${Tokenize.termsSql("content")} AS arr
        |    FROM docs
        |    WHERE length(content) BETWEEN 1 AND ${cfg.maxDocChars}
        |  )

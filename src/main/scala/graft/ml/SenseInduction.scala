@@ -31,6 +31,13 @@ object SenseInduction {
   def dictionary(topSig: DataFrame): DataFrame =
     topSig.select(col("entity"), col("term"), (col("rank") - 1).cast("int").as("termid"))
 
+  /** A [[dictionary]] frame as the driver map entity -> term -> termid
+    * that the doc-local context rows broadcast (`Tokenize.contextRowsFrom`). */
+  def dictionaryMap(dict: DataFrame): Map[String, Map[String, Int]] =
+    dict.collect()
+      .groupBy(_.getString(0))
+      .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
+
   /** V2: long-form sparse context vectors (entity, ctxid, termid, w);
     * w = within-window term count. Dictionary is broadcast (I2). */
   def contextVectors(winToks: DataFrame, dict: DataFrame): DataFrame =

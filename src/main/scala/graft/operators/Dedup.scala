@@ -107,13 +107,30 @@ object Dedup {
         col("a.shingle") === col("b.shingle") && col("a.docid") < col("b.docid"))
       .groupBy(col("a.docid").as("a"), col("b.docid").as("b"))
       .agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(inter, sizes, sizes, threshold)
+  }
+
+  /** Exact Jaccard of candidate pairs `(a, b)`: |A∩B| by joining each side's
+    * `(docid, shingle)` rows, then [[jaccardAtLeast]] with the sides'
+    * `(docid, sz)` set sizes. Both sides may be one corpus. */
+  private def verifiedPairs(cand: DataFrame, shA: DataFrame, szA: DataFrame,
+                            shB: DataFrame, szB: DataFrame, threshold: Double): DataFrame = {
+    val inter = cand.join(shA.toDF("a", "shingle"), Seq("a"))
+      .join(shB.toDF("b", "shingle"), Seq("b", "shingle"))
+      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(inter, szA, szB, threshold)
+  }
+
+  /** The pairs `(a, b, jac)` of `(a, b, inter)` rows whose Jaccard
+    * |A∩B| / (|A| + |B| - |A∩B|) reaches `threshold`. */
+  private def jaccardAtLeast(inter: DataFrame, szA: DataFrame, szB: DataFrame,
+                             threshold: Double): DataFrame =
     inter
-      .join(sizes.withColumnRenamed("docid", "a").withColumnRenamed("sz", "sza"), Seq("a"))
-      .join(sizes.withColumnRenamed("docid", "b").withColumnRenamed("sz", "szb"), Seq("b"))
+      .join(szA.toDF("a", "sza"), Seq("a"))
+      .join(szB.toDF("b", "szb"), Seq("b"))
       .withColumn("jac", col("inter") / (col("sza") + col("szb") - col("inter")))
       .filter(col("jac") >= threshold)
       .select("a", "b", "jac")
-  }
 
   // ------------------------------------------------------------- MinHash
 
@@ -204,8 +221,6 @@ object Dedup {
   def minhashLshPairs(td: Dataset[TokDoc], n: Int, threshold: Double,
                       numHashes: Int = 64, bands: Int = 16, seed: Long = 42L,
                       maxBucket: Int = 1000): DataFrame = {
-    import td.sparkSession.implicits._
-    val spark = td.sparkSession
     // invalid banding silently collapses recall (ignored trailing hashes, or
     // rows=0 making every band hash the constant seed) — fail fast instead
     require(bands > 0 && numHashes % bands == 0,
@@ -219,7 +234,7 @@ object Dedup {
     // exact verification of candidates only
     val sh = shingles(td, n)
     val sizes = sh.groupBy("docid").agg(count(lit(1)).as("sz"))
-    minhashVerify(spark, candidates, sh, sizes, threshold)
+    verifiedPairs(candidates, sh, sizes, sh, sizes, threshold)
   }
 
   /** Incremental NEAR-dup admission — the daily-crawl shape for the MinHash
@@ -257,12 +272,8 @@ object Dedup {
     // cross candidates: batch bands probe the corpus index; a hot bucket on
     // EITHER side (boilerplate signature) is pruned count-first, before any
     // pair explodes
-    val cOk = cBands.groupBy("band", "bucket").agg(count(lit(1)).as("csz"))
-      .filter(col("csz") <= maxBucket).select("band", "bucket")
-    val bOk = bBands.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucket).select("band", "bucket")
-    val cross = bBands.join(bOk, Seq("band", "bucket"), "left_semi")
-      .join(cBands.join(cOk, Seq("band", "bucket"), "left_semi")
+    val cross = guardedBuckets(bBands, 1, maxBucket)
+      .join(guardedBuckets(cBands, 1, maxBucket)
         .withColumnRenamed("docid", "cdoc"), Seq("band", "bucket"))
       .select(col("docid").as("a"), col("cdoc").as("b")).distinct()
 
@@ -273,20 +284,11 @@ object Dedup {
     val shC = shingles(corpus, n).join(candCorpus, Seq("docid"), "left_semi")
     val szC = shC.groupBy("docid").agg(count(lit(1)).as("sz"))
 
-    def verified(cand: DataFrame, shA2: DataFrame, szA2: DataFrame,
-                 shB2: DataFrame, szB2: DataFrame): DataFrame =
-      cand.join(shA2.toDF("a", "shingle"), Seq("a"))
-        .join(shB2.toDF("b", "shingle"), Seq("b", "shingle"))
-        .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-        .join(szA2.toDF("a", "sza"), Seq("a"))
-        .join(szB2.toDF("b", "szb"), Seq("b"))
-        .filter(col("inter") / (col("sza") + col("szb") - col("inter")) >= threshold)
-
-    val hitCorpus = verified(cross, shB, szB, shC, szC)
+    val hitCorpus = verifiedPairs(cross, shB, szB, shC, szC, threshold)
       .select(col("a").as("docid")).distinct()
     // within-batch: canonical a<b pairs -> the larger id is dominated
-    val dominated = verified(pairsInBuckets(bBands, "docid", 2, maxBucket),
-        shB, szB, shB, szB)
+    val dominated = verifiedPairs(pairsInBuckets(bBands, "docid", 2, maxBucket),
+        shB, szB, shB, szB, threshold)
       .select(col("b").as("docid")).distinct()
 
     batch.toDF().select("docid")
@@ -308,11 +310,8 @@ object Dedup {
     *     upstream signature sub-DAG evaluates twice total, never per side.
     */
   private[operators] def pairsInBuckets(buckets: DataFrame, idCol: String,
-                                        minSize: Int, maxBucket: Int): DataFrame = {
-    val ok = buckets.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz").between(minSize, maxBucket))
-      .select("band", "bucket")
-    buckets.join(ok, Seq("band", "bucket"), "left_semi")
+                                        minSize: Int, maxBucket: Int): DataFrame =
+    guardedBuckets(buckets, minSize, maxBucket)
       .groupBy("band", "bucket")
       .agg(collect_list(col(idCol)).as("ids"))
       .select(explode(flatten(transform(col("ids"), (x, i) =>
@@ -320,20 +319,15 @@ object Dedup {
           struct(least(x, y).as("a"), greatest(x, y).as("b")))))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .distinct()
-  }
 
-  private def minhashVerify(spark: org.apache.spark.sql.SparkSession, candidates: DataFrame,
-                            sh: DataFrame, sizes: DataFrame, threshold: Double): DataFrame = {
-    val shA = sh.toDF("a", "shingle")
-    val shB = sh.toDF("b", "shingle")
-    val inter = candidates.join(shA, Seq("a")).join(shB, Seq("b", "shingle"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.toDF("a", "sza"), Seq("a"))
-      .join(sizes.toDF("b", "szb"), Seq("b"))
-      .withColumn("jac", col("inter") / (col("sza") + col("szb") - col("inter")))
-      .filter(col("jac") >= threshold)
-      .select("a", "b", "jac")
+  /** The hot-bucket guard: the `(band, bucket, ...)` rows of the buckets
+    * holding `minSize` to `maxBucket` rows, found by a count-only
+    * aggregation (O(1) buffer) before any pair or member list exists. */
+  private def guardedBuckets(buckets: DataFrame, minSize: Int, maxBucket: Int): DataFrame = {
+    val ok = buckets.groupBy("band", "bucket").agg(count(lit(1)).as("bsz"))
+      .filter(col("bsz").between(minSize, maxBucket))
+      .select("band", "bucket")
+    buckets.join(ok, Seq("band", "bucket"), "left_semi")
   }
 
   // ------------------------------------------------------------- SimHash

@@ -39,11 +39,11 @@ object TextStats {
         .cast("long").as("chars_per_token_e4"))
   }
 
-  /** THE word-token array of a content column — the token definition every
-    * oracle replays as `list_filter(regexp_split_to_array(lower(x),
-    * '[^a-z0-9_]+'), t -> t <> '')`. Shared (tokenCounts, Mixing
-    * .mixtureWeights, the budget-cut query) so the definition can never
-    * silently diverge. */
+  /** THE word-token array of a string column: the one Spark column form of
+    * the token contract, whose SQL twin is `Tokenize.termsSql`. Every
+    * column-level tokenization calls it or [[wordTokenCount]] (tokenCounts,
+    * datasetCard, anchorText, Mixing.mixtureWeights, the budget-cut
+    * queries); TokenizeSpec fails if the regex is written anywhere else. */
   private[graft] def wordTokens(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     filter(split(lower(c), "[^a-z0-9_]+"), t => t =!= "")
 
@@ -611,8 +611,7 @@ object TextStats {
           .when(length(col("content")) < 1000, "medium")
           .otherwise("long"))
       .withColumn("sha", sha2(col("content"), 256))
-      .withColumn("ntok",
-        size(filter(split(lower(col("content")), "[^a-z0-9_]+"), t => t =!= "")))
+      .withColumn("ntok", wordTokenCount(col("content")))
     // subtotal rows are labeled via grouping() (ADVICE r5): a coalesce on
     // the VALUE column would collide a genuinely-NULL lang (or a literal
     // 'ALL') with the subtotal label; grouping() marks the rollup arm
@@ -726,9 +725,8 @@ object TextStats {
     pages
       .select(srcHost.as("src_host"), explode(pairs).as("a"))
       .select(col("src_host"), col("a.dst_host").as("dst_host"),
-        explode(split(lower(col("a.text")), "[^a-z0-9_]+")).as("term"))
-      .filter(col("dst_host") =!= "" && col("dst_host") =!= col("src_host")
-        && col("term") =!= "")
+        explode(wordTokens(col("a.text"))).as("term"))
+      .filter(col("dst_host") =!= "" && col("dst_host") =!= col("src_host"))
       .groupBy("dst_host", "term")
       .agg(count(lit(1)).as("n_refs"))
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 
 import graft.{CodeDoc, CovTok, TokDoc, Token, WinTok, WsidConfig}
 
@@ -65,6 +66,11 @@ object Tokenize {
     buf.toArray
   }
 
+  /** The DuckDB twin of [[tokensOf]] with no stopwords: the token array of
+    * the SQL string expression `arg`, as every oracle query replays it. */
+  def termsSql(arg: String): String =
+    s"list_filter(regexp_split_to_array(lower($arg), '[^a-z0-9_]+'), x -> x <> '')"
+
   @inline def docIdOf(d: CodeDoc): String = s"${d.repo}/${d.path}@${d.commit}"
 
   /** Tokenized-document projection: content is tokenized exactly ONCE and the
@@ -78,10 +84,15 @@ object Tokenize {
     docs.mapPartitions(_.map(d => TokDoc(docIdOf(d), tokensOf(d.content, stop))))
   }
 
-  /** T1+T2: the token stream. */
-  def tokens(docs: Dataset[CodeDoc], cfg: WsidConfig): Dataset[Token] =
-    tokensFrom(tokDocs(docs, cfg))
+  /** The tokenized projection of a `(docid, text)` frame, no stopwords: the
+    * registry queries' corpus form, replayed in SQL by [[termsSql]]. */
+  def tokDocsOfText(df: DataFrame): Dataset[TokDoc] = {
+    import df.sparkSession.implicits._
+    df.select(col("docid"), col("text")).as[(String, String)]
+      .map { case (id, t) => TokDoc(id, tokensOf(t, Set.empty)) }
+  }
 
+  /** T1+T2: the token stream. */
   def tokensFrom(td: Dataset[TokDoc]): Dataset[Token] = {
     import td.sparkSession.implicits._
     td.mapPartitions(_.flatMap { d =>
@@ -92,9 +103,6 @@ object Tokenize {
   /** T3+T4, per-context form: every token inside the ±w window of every
     * mention, mention position itself excluded, multiplicity preserved.
     * Feeds the sense-induction context vectors (ctxid = docid#mpos). */
-  def windowTokens(docs: Dataset[CodeDoc], cfg: WsidConfig): Dataset[WinTok] =
-    windowTokensFrom(tokDocs(docs, cfg), cfg)
-
   def windowTokensFrom(td: Dataset[TokDoc], cfg: WsidConfig): Dataset[WinTok] = {
     import td.sparkSession.implicits._
     val entities = cfg.entities.toSet
@@ -128,10 +136,6 @@ object Tokenize {
     * the ENTIRE ML input is produced with ZERO shuffles, where the
     * long-form ctxvec (SenseInduction.contextVectors) would need a groupBy
     * per context. */
-  def contextRows(docs: Dataset[CodeDoc], cfg: WsidConfig,
-                  dict: Map[String, Map[String, Int]]): Dataset[graft.ml.ThinNMF.Ctx] =
-    contextRowsFrom(tokDocs(docs, cfg), cfg, dict)
-
   def contextRowsFrom(td: Dataset[TokDoc], cfg: WsidConfig,
                       dict: Map[String, Map[String, Int]]): Dataset[graft.ml.ThinNMF.Ctx] = {
     import td.sparkSession.implicits._
@@ -172,10 +176,7 @@ object Tokenize {
     * (entity, doc) — the counting basis for the hypergeometric urn model
     * (k <= min(n,K) and k >= n+K-N hold by construction). Dedup over
     * overlapping windows happens doc-locally in a BitSet: NO shuffle, unlike
-    * a naive windowTokens.distinct(). */
-  def coverage(docs: Dataset[CodeDoc], cfg: WsidConfig): Dataset[CovTok] =
-    coverageFrom(tokDocs(docs, cfg), cfg)
-
+    * a naive `windowTokensFrom(...).distinct()`. */
   def coverageFrom(td: Dataset[TokDoc], cfg: WsidConfig): Dataset[CovTok] = {
     import td.sparkSession.implicits._
     val entitySet = cfg.entities.toSet

@@ -340,7 +340,8 @@ object StreamingOps {
     val applied = appliedVersion(fs, root)
     if (applied.exists(_ >= batchId)) return // replayed batch — already merged
 
-    val counts = graft.operators.Cooc.coocCounts(Tokenize.coverage(batch, cfg), cfg)
+    val counts = graft.operators.Cooc.coocCounts(
+      Tokenize.coverageFrom(Tokenize.tokDocs(batch, cfg), cfg), cfg)
     val merged = applied match {
       case Some(v) => graft.operators.Cooc.mergeCounts(
         spark.read.parquet(new org.apache.hadoop.fs.Path(root, s"v$v").toString), counts)

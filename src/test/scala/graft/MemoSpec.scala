@@ -30,20 +30,19 @@ class MemoSpec extends SparkTestBase {
     withProp("graft.model.root", root) {
       assert(Memo.modelStoreRoot == root)
       val cfg = WsidConfig(entities = Seq("data", "query"), window = 5, topK = 30)
-      val (dict, senseVec) = Memo.modelOf(spark, sfDir, cfg)
-      assert(dict.count() > 0 && senseVec.count() > 0)
+      val (dict, h) = Memo.modelOf(spark, sfDir, cfg)
+      assert(dict.nonEmpty && h.nonEmpty)
       // the checkpointed model landed under the CONFIGURED root, complete
       val kids = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName)
       assert(kids.length == 1 && !kids.head.contains(".build."), s"store contents: ${kids.toSeq}")
       assert(Pipeline.modelExists(spark, s"$root/${kids.head}"))
 
       // a fresh lookup (memo dropped, same store) RESUMES instead of
-      // re-inducing: loadModel path only, identical senseVec
-      val sv1 = senseVec.collect().map(_.toString).sorted.toSeq
+      // re-inducing: loadModel path only, identical dictionary and senses
       Memo.invalidate(spark)
-      val (_, senseVec2) = Memo.modelOf(spark, sfDir, cfg)
-      val sv2 = senseVec2.collect().map(_.toString).sorted.toSeq
-      assert(sv1 == sv2, "model changed across a store round-trip")
+      val (dict2, h2) = Memo.modelOf(spark, sfDir, cfg)
+      def flat(hs: Map[String, ml.ThinNMF.H]) = hs.map { case (e, m) => e -> m.map(_.toSeq).toSeq }
+      assert(dict2 == dict && flat(h2) == flat(h), "model changed across a store round-trip")
       Memo.invalidate(spark)
     }
   }

@@ -40,16 +40,28 @@ class PinnedSpec extends SparkTestBase {
       .toMap
   }
 
+  /** The registry's budget cut at sf0.001, with the pin it returns. */
+  private def budgetCut(): (Seq[String], org.apache.spark.sql.DataFrame) = {
+    val df = ExtraQueries.sparkQueries("q_select_budget")(spark, "/root/testdata/sf0.001")
+    (df.collect().map(_.toString).toSeq, df)
+  }
+
   test("durable checkpoint dir: identical CC clusters and ntile positions, files written") {
     val pairs = Seq(("c", "d"), ("c", "e"), ("a", "d"), ("b", "e"), ("x", "y"), ("s", "s"))
     val ccLocal = ccSet(pairs)
     val ntLocal = ntileMap()
+    val (budgetLocal, _) = budgetCut()
     withDurableDir { dir =>
       assert(Pinned.durableDir(spark).contains(dir.getAbsolutePath))
       val ccDurable = ccSet(pairs)
       val ntDurable = ntileMap()
       assert(ccDurable == ccLocal, s"durable CC diverged: $ccDurable vs $ccLocal")
       assert(ntDurable == ntLocal, "durable two-phase scan diverged")
+      // a registry result pinned at the end of its query is durable too
+      val (budgetDurable, pin) = budgetCut()
+      assert(budgetDurable == budgetLocal, "durable budget cut diverged")
+      assert(org.apache.spark.sql.graft.PinnedPlans.pinnedRelation(pin)
+        .exists(_.rdd.getCheckpointFile.isDefined), "budget cut is not a reliable checkpoint")
       // reliable checkpoints actually landed under the configured root
       // (setCheckpointDir creates a per-app subdir holding rdd-* dirs)
       def files(f: java.io.File): Seq[java.io.File] =

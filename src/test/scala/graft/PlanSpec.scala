@@ -85,7 +85,8 @@ class PlanSpec extends SparkTestBase {
 
   test("salted aggregation produces two exchanges with partial aggregation") {
     import spark.implicits._
-    val toks = operators.Tokenize.tokens(CorpusSynth.fromDocuments(spark, sfDir), Queries.cfg)
+    val toks = operators.Tokenize.tokensFrom(
+      operators.Tokenize.tokDocs(CorpusSynth.fromDocuments(spark, sfDir), Queries.cfg))
     val plan = operators.Cooc.marginals(toks, Queries.cfg).queryExecution.executedPlan.toString
     // phase 1 (term, salt) exchange + phase 2 (term) exchange
     assert("Exchange hashpartitioning".r.findAllIn(plan).size >= 2, plan)
@@ -126,7 +127,8 @@ class PlanSpec extends SparkTestBase {
     import spark.implicits._
     val docs = CorpusSynth.fromDocuments(spark, sfDir)
     val dict = Map("spark" -> Map("data" -> 0, "join" -> 1))
-    val ctx = operators.Tokenize.contextRows(docs, Queries.cfg, dict)
+    val ctx = operators.Tokenize.contextRowsFrom(
+      operators.Tokenize.tokDocs(docs, Queries.cfg), Queries.cfg, dict)
     val plan = ctx.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"doc-local path must not shuffle:\n$plan")
   }

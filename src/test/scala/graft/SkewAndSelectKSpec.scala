@@ -30,7 +30,7 @@ class SkewAndSelectKSpec extends SparkTestBase {
       CodeDoc("r", s"d/$i.txt", "c", "en", toks.mkString(" "))
     }).repartition(8)
     val cfg = WsidConfig(entities = Seq("python"), window = 8, salts = 64)
-    val cov = Tokenize.coverage(docs, cfg)
+    val cov = Tokenize.coverageFrom(Tokenize.tokDocs(docs, cfg), cfg)
 
     // correctness: salted two-phase == plain groupBy
     val salted = operators.Cooc.coocCounts(cov, cfg)
@@ -53,7 +53,7 @@ class SkewAndSelectKSpec extends SparkTestBase {
   test("A2': approximate doc frequency within the configured error bound") {
     val docs = sources.CorpusSynth.plantedDocs(spark, docsPerEntity = 200)
     val cfg = WsidConfig(entities = Seq("python", "java"))
-    val toks = Tokenize.tokens(docs, cfg)
+    val toks = Tokenize.tokensFrom(Tokenize.tokDocs(docs, cfg))
     val exact = operators.Cooc.docFreq(toks).as[(String, Long)].collect().toMap
     val approx = operators.Cooc.docFreqApprox(toks, 0.02).as[(String, Long)].collect().toMap
     exact.foreach { case (t, df) =>
@@ -96,7 +96,7 @@ class SkewAndSelectKSpec extends SparkTestBase {
     val dict = ml.SenseInduction.dictionary(cs.top).collect()
       .groupBy(_.getString(0))
       .map { case (e, rows) => e -> rows.map(r => r.getString(1) -> r.getInt(2)).toMap }
-    val grouped = Tokenize.contextRows(docs, cfg, dict).rdd.cache()
+    val grouped = Tokenize.contextRowsFrom(Tokenize.tokDocs(docs, cfg), cfg, dict).rdd.cache()
     val ks = ml.ThinNMF.selectK(grouped, spark, kMax = 6, iters = 10, seed = 42L)
     info(s"selected k = ${ks("alpha")}")
     assert(ks("alpha") == 3, s"expected k=3, got ${ks("alpha")}")

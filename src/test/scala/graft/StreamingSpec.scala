@@ -291,8 +291,10 @@ class StreamingSpec extends SparkTestBase {
 
     val standing = StreamingOps.standingCounts(spark, stateDir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val full = operators.Cooc.coocCounts(
-        operators.Tokenize.coverage(spark.createDataset(corpus.docs), cfg), cfg)
+    def counts(docs: Seq[CodeDoc]) = operators.Cooc.coocCounts(
+      operators.Tokenize.coverageFrom(operators.Tokenize.tokDocs(spark.createDataset(docs), cfg), cfg),
+      cfg)
+    val full = counts(corpus.docs)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(standing == full, "streamed standing counts != full batch recompute")
 
@@ -313,11 +315,7 @@ class StreamingSpec extends SparkTestBase {
     StreamingOps.mergeBatchIntoStanding(spark.createDataset(b2), 7L, cfg, stateDir)
     val repaired = StreamingOps.standingCounts(spark, stateDir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    val fullPlusB2 = operators.Cooc.mergeCounts(
-        operators.Cooc.coocCounts(
-          operators.Tokenize.coverage(spark.createDataset(corpus.docs), cfg), cfg),
-        operators.Cooc.coocCounts(
-          operators.Tokenize.coverage(spark.createDataset(b2), cfg), cfg))
+    val fullPlusB2 = operators.Cooc.mergeCounts(counts(corpus.docs), counts(b2))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(repaired == fullPlusB2, "crash-replayed batch did not merge over the half-written dir")
   }

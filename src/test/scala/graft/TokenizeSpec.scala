@@ -82,7 +82,8 @@ class TokenizeSpec extends SparkTestBase {
 
   test("T1+T2: positions are assigned after stopword removal") {
     val docs = Seq(CodeDoc("r", "p", "c", "en", "the quick the fox")).toDS()
-    val toks = Tokenize.tokens(docs, cfg.copy(stopwords = Set("the"))).collect().sortBy(_.pos)
+    val toks = Tokenize.tokensFrom(Tokenize.tokDocs(docs, cfg.copy(stopwords = Set("the"))))
+      .collect().sortBy(_.pos)
     assert(toks.map(t => (t.pos, t.term)).toSeq == Seq((0, "quick"), (1, "fox")))
   }
 
@@ -90,37 +91,69 @@ class TokenizeSpec extends SparkTestBase {
     // positions:        0      1        2       3      4
     val content = "python starts python here end"
     val docs = Seq(CodeDoc("r", "p", "c", "en", content)).toDS()
-    val win = Tokenize.windowTokens(docs, cfg).collect()
+    val win = Tokenize.windowTokensFrom(Tokenize.tokDocs(docs, cfg), cfg).collect()
     // mention at 0: window {1, 2}; mention at 2: window {0, 1, 3, 4}
     val byM = win.groupBy(_.mpos).view.mapValues(_.map(_.pos).sorted.toSeq).toMap
     assert(byM(0) == Seq(1, 2))
     assert(byM(2) == Seq(0, 1, 3, 4))
     // coverage = distinct union minus nothing (both mention positions covered
     // by the other mention)
-    val cov = Tokenize.coverage(docs, cfg).collect().map(_.pos).sorted.toSeq
+    val cov = Tokenize.coverageFrom(Tokenize.tokDocs(docs, cfg), cfg)
+      .collect().map(_.pos).sorted.toSeq
     assert(cov == Seq(0, 1, 2, 3, 4))
   }
 
   test("T4: coverage (doc-local BitSet) == relational DISTINCT band-join form") {
     val docs = sources.CorpusSynth.plantedDocs(spark, docsPerEntity = 40)
     val c = cfg.copy(window = 3)
-    val toks = Tokenize.tokens(docs, c).toDF()
+    val toks = Tokenize.tokensFrom(Tokenize.tokDocs(docs, c)).toDF()
     val mentions = toks.filter(col("term").isin(c.entities: _*))
       .select(col("docid"), col("pos").as("mpos"), col("term").as("entity"))
     val joinForm = toks.join(mentions, Seq("docid"))
       .filter(abs(col("pos") - col("mpos")) <= c.window && col("pos") =!= col("mpos"))
       .select("entity", "docid", "pos", "term").distinct()
-    val covForm = Tokenize.coverage(docs, c).toDF()
+    val covForm = Tokenize.coverageFrom(Tokenize.tokDocs(docs, c), c).toDF()
     assert(joinForm.exceptAll(covForm).isEmpty && covForm.exceptAll(joinForm).isEmpty)
   }
 
   test("A3/I1: salted co-occurrence counts == unsalted groupBy counts") {
     val docs = sources.CorpusSynth.plantedDocs(spark, docsPerEntity = 60)
     val c = WsidConfig(entities = Seq("python", "java"), window = 4, salts = 16)
-    val cov = Tokenize.coverage(docs, c)
+    val cov = Tokenize.coverageFrom(Tokenize.tokDocs(docs, c), c)
     val salted = Cooc.coocCounts(cov, c)
     val unsalted = cov.toDF().groupBy("entity", "term").agg(count(lit(1)).as("k"))
     assert(salted.exceptAll(unsalted).isEmpty && unsalted.exceptAll(salted).isEmpty)
+  }
+
+  test("token contract: each engine form's regex is written once in src/main") {
+    // the oracle SQL form lives in Tokenize.termsSql, the Spark column form
+    // in TextStats.wordTokens; every other tokenization calls one of them.
+    // Code lines only: block comments (scaladoc) and // lines are dropped.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val codeLines = files.flatMap { f =>
+      val src = "(?s)/\\*.*?\\*/".r.replaceAllIn(java.nio.file.Files.readString(f),
+        m => "\n" * m.matched.count(_ == '\n'))
+      src.split("\n", -1).toSeq.zipWithIndex.collect {
+        case (line, i) if !line.trim.startsWith("//") => (f, i, line)
+      }
+    }
+    // `literal` must sit on one code line, inside `def fn` of `file`
+    def onlySite(literal: String, file: String, fn: String): Unit = {
+      val hits = codeLines.filter(_._3.contains(literal))
+      val found = hits.map { case (f, i, _) =>
+        val enclosing = codeLines.filter(c => c._1 == f && c._2 <= i).map(_._3)
+          .flatMap("def (\\w+)".r.findFirstMatchIn(_)).lastOption.map(_.group(1))
+        f.getFileName.toString -> enclosing.getOrElse("?")
+      }
+      assert(found == Seq(file -> fn),
+        s"$literal written at ${hits.map(h => s"${h._1.getFileName}:${h._2 + 1}").mkString(", ")}")
+    }
+    onlySite("'[^a-z0-9_]+'", "Tokenize.scala", "termsSql")
+    onlySite("\"[^a-z0-9_]+\"", "TextStats.scala", "wordTokens")
+    assert(Tokenize.termsSql("text || ' zqy'") ==
+      "list_filter(regexp_split_to_array(lower(text || ' zqy'), '[^a-z0-9_]+'), x -> x <> '')")
   }
 
   test("S2: sha256 invariant — Spark sha2 matches JVM MessageDigest") {
