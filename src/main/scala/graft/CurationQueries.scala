@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Tokenize}
+import graft.operators.{Curation, Hashes, Tokenize}
 
 /** Corpus-curation front-door queries on the driver contract: URL-level
   * dedup, DSIR importance weights, and the hashed-LR quality classifier —
@@ -247,13 +247,6 @@ object CurationQueries {
 
   // ------------------------------------------------------------- oracle
 
-  /** FNV-1a over a token's chars as unsigned HUGEINT mod 2^64 — verbatim
-    * the winnowing-fingerprint replay idiom, minus the k-gram padding. */
-  private def fnvHu(tok: String): String =
-    s"""list_reduce(list_prepend(CAST(1469598103934665603 AS HUGEINT),
-       |  list_transform(string_split($tok, ''), c -> CAST(ascii(c) AS HUGEINT))),
-       |  (h, c) -> (xor(h, c) * 1099511628211) % CAST(18446744073709551616 AS HUGEINT))""".stripMargin
-
   /** Shared DSIR oracle chain ending in `wt(docid, n_toks, logw_q_e6)` —
     * the planted-suffix corpus, FNV bucket counts, Laplace-smoothed
     * per-bucket micro-nat deltas, and the exact BIGINT per-doc weight. */
@@ -267,7 +260,7 @@ object CurationQueries {
        |         unnest(${Tokenize.termsSql("text")}) AS tok
        |  FROM aug),
        |bx AS (
-       |  SELECT doc_id, CAST(${fnvHu("tok")} % $DsirB AS BIGINT) AS bucket
+       |  SELECT doc_id, CAST(${Hashes.fnvSql("tok")} % $DsirB AS BIGINT) AS bucket
        |  FROM tok),
        |feat AS (SELECT doc_id, bucket, CAST(count(*) AS BIGINT) AS cnt FROM bx GROUP BY 1, 2),
        |raw AS (SELECT bucket, CAST(sum(cnt) AS BIGINT) AS r FROM feat GROUP BY 1),
@@ -301,7 +294,7 @@ object CurationQueries {
        |  FROM aug),
        |featb AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, y,
-       |         CAST(${fnvHu("tok")} % $LrB AS BIGINT) AS bucket
+       |         CAST(${Hashes.fnvSql("tok")} % $LrB AS BIGINT) AS bucket
        |  FROM tok),
        |ub AS MATERIALIZED (
        |  SELECT doc_id, bucket FROM featb
@@ -504,7 +497,7 @@ object CurationQueries {
          |ky AS (
          |  SELECT docid, logw_q_e6,
          |         logw_q_e6 + CAST(round(-ln(-ln(
-         |           (CAST(${fnvHu("'dsir:' || CAST(docid AS VARCHAR)")} // 2048 AS DOUBLE) + 0.5)
+         |           (CAST(${Hashes.fnvSql("'dsir:' || CAST(docid AS VARCHAR)")} // 2048 AS DOUBLE) + 0.5)
          |             / 9007199254740992.0)) * 1000000) AS BIGINT) AS key_q
          |  FROM wt),
          |top AS (SELECT docid, logw_q_e6, key_q FROM ky ORDER BY key_q DESC, docid LIMIT 100)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, CodeStats, Dedup, Linking, Mixing, Similarity, TextStats, Tokenize}
+import graft.operators.{Bpe, CodeStats, Dedup, Hashes, Linking, Mixing, Similarity, TextStats, Tokenize}
 
 /** Training-data-pipeline operators registered on the driver contract:
   * dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash / embedding),
@@ -1031,9 +1031,7 @@ object ExtraQueries {
        |),
        |pm AS (
        |  SELECT p, d,
-       |    ((xor(h0, h0 // 8589934592) % 4294967296) * 18397679294719823053
-       |     + ((xor(h0, h0 // 8589934592) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-       |    ) % CAST(18446744073709551616 AS HUGEINT) AS h1
+       |    ${Hashes.mulmodSql("xor(h0, h0 // 8589934592)", "18397679294719823053")} AS h1
        |  FROM pd
        |),
        |psign AS (
@@ -1066,28 +1064,18 @@ object ExtraQueries {
     * q_dedup_minhash_lsh detection oracle and the q_dedup_minhash_increment
     * admission oracle, so signature/banding semantics can never silently
     * diverge between detection and admission. */
-  private val minhashChainCte: String =
-    """sh AS (
+  private val minhashChainCte: String = {
+    // a band's signature rows as unsigned HUGEINT, the FNV's 64-bit words
+    val bandWords = "list_transform(sl[band*4+1 : band*4+4],\n" +
+      "    s -> CASE WHEN s < 0 THEN CAST(s AS HUGEINT) + CAST(18446744073709551616 AS HUGEINT)\n" +
+      "              ELSE CAST(s AS HUGEINT) END)"
+    s"""sh AS (
         |  SELECT DISTINCT docid,
         |         unnest(list_transform(generate_series(1, len(arr) - 1), i -> arr[i] || ' ' || arr[i + 1])) AS shingle
         |  FROM t WHERE len(arr) >= 2
         |),
         |shv AS (SELECT DISTINCT shingle FROM sh),
-        |hb AS (
-        |  SELECT shingle, 1 AS pos,
-        |         xor(CAST(42 AS HUGEINT), CAST(11400714819323198485 AS HUGEINT)) AS h
-        |  FROM shv
-        |  UNION ALL
-        |  SELECT shingle, pos + 1,
-        |    xor(
-        |      ((xor(h, CAST(ascii(substr(shingle, pos, 1)) AS HUGEINT)) % 4294967296) * 18397679294719823053
-        |       + ((xor(h, CAST(ascii(substr(shingle, pos, 1)) AS HUGEINT)) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-        |      ) % CAST(18446744073709551616 AS HUGEINT),
-        |      (((xor(h, CAST(ascii(substr(shingle, pos, 1)) AS HUGEINT)) % 4294967296) * 18397679294719823053
-        |       + ((xor(h, CAST(ascii(substr(shingle, pos, 1)) AS HUGEINT)) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-        |      ) % CAST(18446744073709551616 AS HUGEINT)) // 8589934592)
-        |  FROM hb WHERE pos <= len(shingle)
-        |),
+        |${Hashes.h64Sql("hb", "shingle", "shv", seed = 42)},
         |base AS (SELECT shingle, h AS b FROM hb WHERE pos = len(shingle) + 1),
         |idx AS (SELECT unnest(generate_series(0, 63)) AS i),
         |mix0 AS (
@@ -1097,23 +1085,18 @@ object ExtraQueries {
         |),
         |mix1 AS (
         |  SELECT shingle, i,
-        |    ((xor(v, v // 8589934592) % 4294967296) * 18397679294719823053
-        |     + ((xor(v, v // 8589934592) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-        |    ) % CAST(18446744073709551616 AS HUGEINT) AS v
+        |    ${Hashes.mulmodSql("xor(v, v // 8589934592)", "18397679294719823053")} AS v
         |  FROM mix0
         |),
         |mix2 AS (
         |  SELECT shingle, i,
-        |    ((xor(v, v // 536870912) % 4294967296) * 14181476777654086739
-        |     + ((xor(v, v // 536870912) // 4294967296) * 14181476777654086739 % 4294967296) * 4294967296
-        |    ) % CAST(18446744073709551616 AS HUGEINT) AS v
+        |    ${Hashes.mulmodSql("xor(v, v // 536870912)", "14181476777654086739")} AS v
         |  FROM mix1
         |),
         |mix3 AS (SELECT shingle, i, xor(v, v // 4294967296) AS u FROM mix2),
         |sigs AS (
         |  SELECT sh.docid, m.i,
-        |         min(CAST(CASE WHEN m.u >= CAST(9223372036854775808 AS HUGEINT)
-        |             THEN m.u - CAST(18446744073709551616 AS HUGEINT) ELSE m.u END AS BIGINT)) AS sv
+        |         min(${Hashes.signedSql("m.u")}) AS sv
         |  FROM sh JOIN mix3 m USING (shingle)
         |  GROUP BY sh.docid, m.i
         |),
@@ -1121,12 +1104,7 @@ object ExtraQueries {
         |bands AS (SELECT unnest(generate_series(0, 15)) AS band),
         |buckets AS (
         |  SELECT docid, band,
-        |    list_reduce(
-        |      list_prepend(xor(CAST(14695981039346656037 AS HUGEINT), CAST(band AS HUGEINT)),
-        |        list_transform(sl[band*4+1 : band*4+4],
-        |          s -> CASE WHEN s < 0 THEN CAST(s AS HUGEINT) + CAST(18446744073709551616 AS HUGEINT)
-        |                    ELSE CAST(s AS HUGEINT) END)),
-        |      (h, s) -> (xor(h, s) * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS bucket
+        |    ${Hashes.fnvFoldSql("xor(CAST(14695981039346656037 AS HUGEINT), CAST(band AS HUGEINT))", bandWords)} AS bucket
         |  FROM sigl CROSS JOIN bands
         |),
         |ok AS (
@@ -1148,6 +1126,7 @@ object ExtraQueries {
         |  SELECT a, b, i / (sa.sz + sb.sz - i) AS jac
         |  FROM inter JOIN sizes sa ON sa.docid = a JOIN sizes sb ON sb.docid = b
         |),""".stripMargin
+  }
 
   /** Shared SQL prefix replaying the embedding-LSH dedup chain in DuckDB:
     * planted near-dup construction (REAL-rounded exactly like Spark's float
@@ -1305,7 +1284,7 @@ object ExtraQueries {
        |FROM tok JOIN wmap m USING (w)
        |GROUP BY tok.docid ORDER BY tok.docid""".stripMargin
 
-  /** The winnowing-fingerprint replay (FNV-1a over padded k-grams, signed
+  /** The winnowing-fingerprint replay (FNV over padded k-grams, signed
     * reinterpretation BEFORE the window-min, w=4 windows, per-doc DISTINCT)
     * shared by q_text_fingerprint and q_dedup_spans_crossdoc — ends in
     * `fp(docid, fingerprint)`. */
@@ -1319,17 +1298,8 @@ object ExtraQueries {
       |  WHERE len(arr) >= 5
       |),
       |hashes AS (
-      |  SELECT docid, i,
-      |         CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-      |              THEN hu - CAST(18446744073709551616 AS HUGEINT)
-      |              ELSE hu END AS BIGINT) AS h
-      |  FROM (
-      |    SELECT docid, i,
-      |           list_reduce(
-      |             list_prepend(CAST(1469598103934665603 AS HUGEINT),
-      |               list_transform(string_split(g, ''), c -> CAST(ascii(c) AS HUGEINT))),
-      |             (h, c) -> (xor(h, c) * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS hu
-      |    FROM grams)
+      |  SELECT docid, i, ${Hashes.signedSql("hu")} AS h
+      |  FROM (SELECT docid, i, ${Hashes.fnvSql("g")} AS hu FROM grams)
       |),
       |hl AS (SELECT docid, list(h ORDER BY i) AS hs FROM hashes GROUP BY docid),
       |wins AS (
@@ -2009,21 +1979,7 @@ object ExtraQueries {
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |tc AS (SELECT docid, term, count(*) AS c FROM tok GROUP BY docid, term),
         |vocab AS (SELECT DISTINCT term FROM tok),
-        |hh AS (
-        |  SELECT term, 1 AS pos,
-        |         xor(CAST(42 AS HUGEINT), CAST(11400714819323198485 AS HUGEINT)) AS h
-        |  FROM vocab
-        |  UNION ALL
-        |  SELECT term, pos + 1,
-        |    xor(
-        |      ((xor(h, CAST(ascii(substr(term, pos, 1)) AS HUGEINT)) % 4294967296) * 18397679294719823053
-        |       + ((xor(h, CAST(ascii(substr(term, pos, 1)) AS HUGEINT)) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-        |      ) % CAST(18446744073709551616 AS HUGEINT),
-        |      (((xor(h, CAST(ascii(substr(term, pos, 1)) AS HUGEINT)) % 4294967296) * 18397679294719823053
-        |       + ((xor(h, CAST(ascii(substr(term, pos, 1)) AS HUGEINT)) // 4294967296) * 18397679294719823053 % 4294967296) * 4294967296
-        |      ) % CAST(18446744073709551616 AS HUGEINT)) // 8589934592)
-        |  FROM hh WHERE pos <= len(term)
-        |),
+        |${Hashes.h64Sql("hh", "term", "vocab", seed = 42)},
         |th AS (SELECT term, h FROM hh WHERE pos = len(term) + 1),
         |bits AS (SELECT unnest(generate_series(0, 63)) AS i),
         |acc AS (
@@ -2033,9 +1989,7 @@ object ExtraQueries {
         |  GROUP BY tc.docid, b.i
         |),
         |sigs AS (
-        |  SELECT docid,
-        |         CAST(CASE WHEN su >= CAST(9223372036854775808 AS HUGEINT)
-        |              THEN su - CAST(18446744073709551616 AS HUGEINT) ELSE su END AS BIGINT) AS sig
+        |  SELECT docid, ${Hashes.signedSql("su")} AS sig
         |  FROM (
         |    SELECT docid,
         |           COALESCE(sum(CASE WHEN a > 0 THEN CAST(power(2, i) AS HUGEINT) ELSE CAST(0 AS HUGEINT) END),
@@ -2144,7 +2098,7 @@ object ExtraQueries {
         |FROM agg ORDER BY docid""".stripMargin,
 
     // tf-idf keywords: idf quantized per TERM, exact BIGINT scores, ranking
-    // by (score desc, SIGNED FNV-1a term hash asc) — the window form the
+    // by (score desc, SIGNED FNV term hash asc) — the window form the
     // production bounded-heap aggregate replaces
     "q_text_keywords" ->
       s"""WITH t AS (
@@ -2153,17 +2107,8 @@ object ExtraQueries {
         |tok AS (SELECT docid, unnest(arr) AS term FROM t),
         |tf AS (SELECT docid, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY 1, 2),
         |hx AS (
-        |  SELECT term,
-        |         CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-        |              THEN hu - CAST(18446744073709551616 AS HUGEINT)
-        |              ELSE hu END AS BIGINT) AS h64
-        |  FROM (
-        |    SELECT DISTINCT term,
-        |           list_reduce(
-        |             list_prepend(CAST(1469598103934665603 AS HUGEINT),
-        |               list_transform(string_split(term, ''), c -> CAST(ascii(c) AS HUGEINT))),
-        |             (h, c) -> (xor(h, c) * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS hu
-        |    FROM tf)
+        |  SELECT term, ${Hashes.signedSql("hu")} AS h64
+        |  FROM (SELECT DISTINCT term, ${Hashes.fnvSql("term")} AS hu FROM tf)
         |),
         |dfq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
         |nd AS (SELECT CAST(count(DISTINCT docid) AS BIGINT) AS n FROM tf),
@@ -2180,8 +2125,8 @@ object ExtraQueries {
         |SELECT docid, CAST(rnk AS BIGINT) AS rank, term, score_q
         |FROM rk WHERE rnk <= 5 ORDER BY docid, rank""".stripMargin,
 
-    // full oracle for the winnowing fingerprints (VERDICT r2 #6): the FNV-1a
-    // k-gram rolling hash runs in 64-bit wraparound arithmetic emulated with
+    // full oracle for the winnowing fingerprints (VERDICT r2 #6): the FNV
+    // k-gram hash runs in 64-bit wraparound arithmetic emulated with
     // HUGEINT mod 2^64 (tokens are ASCII by the tokenizer contract, so
     // per-char codes come from ascii()). CRITICAL ordering detail: the hash
     // is reinterpreted as a SIGNED 64-bit value BEFORE the winnow, because
@@ -2625,7 +2570,7 @@ object ExtraQueries {
     // oracle too — same table, bit for bit
     "q_vocab_bpe_batched" -> bpeOracleSql(8, bpeMergeTableSelect(8)),
 
-    // duplicate spans: the 5-gram FNV-1a hash is replayed exactly as in the
+    // duplicate spans: the 5-gram FNV hash is replayed exactly as in the
     // fingerprint oracle (64-bit wraparound via HUGEINT mod 2^64 over the
     // space-joined gram string); a hash duplicated across DISTINCT docs
     // marks its positions, and the span math (k + min(k, gap) coverage,
@@ -2638,14 +2583,7 @@ object ExtraQueries {
         |  WHERE len(arr) >= 5
         |),
         |gv AS (SELECT DISTINCT g FROM grams),
-        |gh AS (
-        |  SELECT g,
-        |         list_reduce(
-        |           list_prepend(CAST(1469598103934665603 AS HUGEINT),
-        |             list_transform(string_split(g, ''), c -> CAST(ascii(c) AS HUGEINT))),
-        |           (h, c) -> (xor(h, c) * 1099511628211) % CAST(18446744073709551616 AS HUGEINT)) AS hu
-        |  FROM gv
-        |),
+        |gh AS (SELECT g, ${Hashes.fnvSql("g")} AS hu FROM gv),
         |hs AS (SELECT gr.docid, gr.i, gh.hu AS h FROM grams gr JOIN gh USING (g)),
         |dup AS (
         |  SELECT h FROM (SELECT h, min(docid) AS mn, max(docid) AS mx FROM hs GROUP BY h)

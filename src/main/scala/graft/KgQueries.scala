@@ -826,15 +826,6 @@ object KgQueries {
        |SELECT node, dist FROM d$maxHops ORDER BY node""".stripMargin
   }
 
-  /** The production descriptor total order (scaled logp, term) as a CTE —
-    * rnk <= K is the SQL twin of `Significance.topK(_, cfg.copy(topK = K))`. */
-  private val rankedCte: String =
-    """ranked AS (
-      |  SELECT entity, term,
-      |         row_number() OVER (PARTITION BY entity
-      |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-      |  FROM scored)""".stripMargin
-
   val oracle: Map[String, String] = Map(
     "q_kg_degrees" ->
       s"""${Queries.base},
@@ -913,14 +904,8 @@ object KgQueries {
     // (same total order as q_l3/q_c3) self-joined on the shared term
     "q_kg_bgp" ->
       s"""${Queries.base},
-         |top20 AS (
-         |  SELECT entity, term FROM (
-         |    SELECT entity, term,
-         |           row_number() OVER (PARTITION BY entity
-         |             ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |    FROM scored)
-         |  WHERE rnk <= 20
-         |)
+         |${Queries.rankedSql},
+         |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20)
          |SELECT a.entity AS e1, b.entity AS e2, count(*) AS n_shared
          |FROM top20 a JOIN top20 b ON a.term = b.term AND a.entity < b.entity
          |GROUP BY 1, 2 ORDER BY e1, e2""".stripMargin,
@@ -929,11 +914,7 @@ object KgQueries {
     // total order (scaled logp, term) is the isTopTermOf predicate
     "q_kg_bgp_optional" ->
       s"""${Queries.base},
-         |ranked AS (
-         |  SELECT entity, term,
-         |         row_number() OVER (PARTITION BY entity
-         |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |  FROM scored)
+         |${Queries.rankedSql}
          |SELECT a.entity AS e, b.entity AS e2, a.term AS t
          |FROM (SELECT entity, term FROM ranked WHERE rnk <= 20) a
          |LEFT JOIN (SELECT entity, term FROM ranked WHERE rnk <= 1) b
@@ -943,11 +924,7 @@ object KgQueries {
     // NOT-EXISTS twin via anti-semi-join SQL
     "q_kg_bgp_notexists" ->
       s"""${Queries.base},
-         |ranked AS (
-         |  SELECT entity, term,
-         |         row_number() OVER (PARTITION BY entity
-         |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |  FROM scored)
+         |${Queries.rankedSql}
          |SELECT a.entity AS e, a.term AS t
          |FROM (SELECT entity, term FROM ranked WHERE rnk <= 20) a
          |WHERE NOT EXISTS (
@@ -960,7 +937,7 @@ object KgQueries {
     // no SQL footprint — that absence IS the check)
     "q_kg_minus" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT a.entity AS e, a.term AS t
          |FROM (SELECT entity, term FROM ranked WHERE rnk <= 20) a
          |WHERE NOT EXISTS (
@@ -972,7 +949,7 @@ object KgQueries {
     // GROUP_CONCAT order the SPARQL spec leaves undefined
     "q_kg_agg" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT term AS t, count(*) AS n_entities,
          |       min(entity) AS first_entity,
          |       string_agg(entity, '|' ORDER BY entity) AS entities
@@ -983,7 +960,7 @@ object KgQueries {
     // DELETE-then-INSERT twin, both templates bound from the PRE-state
     "q_kg_update" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |cooc_st AS (SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |            FROM ranked WHERE rnk <= 20),
          |top_st AS (SELECT term AS subj, 'isTopTermOf' AS pred, entity AS obj
@@ -1003,11 +980,7 @@ object KgQueries {
     // set-EXCEPT twin of the one-shuffle tagged-union diff
     "q_kg_diff" ->
       s"""${Queries.base},
-         |ranked AS (
-         |  SELECT entity, term,
-         |         row_number() OVER (PARTITION BY entity
-         |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |  FROM scored),
+         |${Queries.rankedSql},
          |v1 AS (SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |       FROM ranked WHERE rnk <= 20),
          |v2 AS (SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
@@ -1024,11 +997,7 @@ object KgQueries {
     // UNION-DISTINCT twin of the two CONSTRUCT templates over the self-join
     "q_kg_construct" ->
       s"""${Queries.base},
-         |ranked AS (
-         |  SELECT entity, term,
-         |         row_number() OVER (PARTITION BY entity
-         |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |  FROM scored),
+         |${Queries.rankedSql},
          |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20)
          |SELECT DISTINCT subj, pred, obj FROM (
          |  SELECT a.entity AS subj, 'sharesContextWith' AS pred, b.entity AS obj
@@ -1120,7 +1089,7 @@ object KgQueries {
     // variable (Spark asc_nulls_last == DuckDB ASC default NULLS LAST)
     "q_kg_bgp_union" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT entity AS e, term AS t, CAST(NULL AS VARCHAR) AS t2
          |FROM ranked WHERE rnk <= 20
          |UNION ALL
@@ -1132,7 +1101,7 @@ object KgQueries {
     // semantics — a binding compatible with two rows appears twice
     "q_kg_bgp_values" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |vals AS (SELECT * FROM (VALUES
          |  ('spark', CAST(NULL AS VARCHAR)),
          |  ('join', CAST(NULL AS VARCHAR)),
@@ -1145,7 +1114,7 @@ object KgQueries {
 
     "q_kg_ask" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |store AS (
          |  SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |  FROM ranked WHERE rnk <= 20
@@ -1162,7 +1131,7 @@ object KgQueries {
     // cross-graph join == the edges present in BOTH versions
     "q_kg_quads" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT a.entity AS e, a.term AS t
          |FROM (SELECT entity, term FROM ranked WHERE rnk <= 20) a
          |JOIN (SELECT entity, term FROM ranked WHERE rnk <= 15) b
@@ -1174,7 +1143,7 @@ object KgQueries {
     "q_kg_pathexpr" ->
       s"""${Queries.base},
          |$edgesCte,
-         |$rankedCte,
+         |${Queries.rankedSql},
          |e1 AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
          |two AS MATERIALIZED (
          |  SELECT DISTINCT a.src, b.dst FROM e1 a JOIN e1 b ON a.dst = b.src)
@@ -1189,7 +1158,7 @@ object KgQueries {
     "q_kg_pathstar" ->
       s"""${Queries.base},
          |$edgesCte,
-         |$rankedCte,
+         |${Queries.rankedSql},
          |e1 AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
          |two AS MATERIALIZED (
          |  SELECT DISTINCT a.src, b.dst FROM e1 a JOIN e1 b ON a.dst = b.src),
@@ -1208,7 +1177,7 @@ object KgQueries {
     // representative), then the store canonicalizes with set semantics
     "q_kg_sameas" ->
       s"""${Queries.base.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20),
          |pairs AS (
          |  SELECT a.entity AS a, b.entity AS b
@@ -1232,7 +1201,7 @@ object KgQueries {
     // INHERITED relatedTo edge (Entity), rdfs9/11 (Token, Resource)
     "q_kg_rdfs" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |top1 AS (SELECT entity, term FROM ranked WHERE rnk <= 1)
          |SELECT DISTINCT subj, pred, obj FROM (
          |  SELECT term AS subj, 'isTopTermOf' AS pred, entity AS obj FROM top1
@@ -1249,7 +1218,7 @@ object KgQueries {
     // three-predicate store; detail strings byte-identical to the engine's
     "q_kg_shacl" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |t20 AS (SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |        FROM ranked WHERE rnk <= 20),
          |t1 AS (SELECT term AS subj, 'isTopTermOf' AS pred, entity AS obj
@@ -1309,7 +1278,7 @@ object KgQueries {
     // subject is reached
     "q_kg_describe" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |store AS (
          |  SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |  FROM ranked WHERE rnk <= 20
@@ -1327,7 +1296,7 @@ object KgQueries {
     "q_kg_owl" ->
       s"""${Queries.base.replaceFirst("WITH ", "WITH RECURSIVE ")},
          |$edgesCte,
-         |$rankedCte,
+         |${Queries.rankedSql},
          |e1 AS MATERIALIZED (SELECT DISTINCT src, dst FROM edges),
          |clo AS (
          |  SELECT src, dst FROM e1
@@ -1345,7 +1314,7 @@ object KgQueries {
     // same content-addressing replayed: md5 over the chr(1)-joined terms
     "q_kg_reify" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |stmts AS (
          |  SELECT DISTINCT term AS s, 'isTopTermOf' AS p, entity AS o,
          |         'stmt:' || md5(term || chr(1) || 'isTopTermOf' || chr(1) || entity) AS stmt
@@ -1359,7 +1328,7 @@ object KgQueries {
 
     "q_kg_void" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |store AS (
          |  SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |  FROM ranked WHERE rnk <= 20
@@ -1380,7 +1349,7 @@ object KgQueries {
     // positive-EXISTS twin via semi-join SQL (complement of q_kg_bgp_notexists)
     "q_kg_exists" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT a.entity AS e, a.term AS t
          |FROM (SELECT entity, term FROM ranked WHERE rnk <= 20) a
          |WHERE EXISTS (
@@ -1391,7 +1360,7 @@ object KgQueries {
     // BIND/FILTER twin: the same scalar expressions in DuckDB dialect
     "q_kg_bind" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT entity AS e, term AS t,
          |       CAST(length(term) AS BIGINT) AS len,
          |       upper(substr(term, 1, 1)) || substr(term, 2) AS tcap
@@ -1402,7 +1371,7 @@ object KgQueries {
     // ORDER BY / OFFSET / LIMIT twin over the shared-context pair counts
     "q_kg_orderlimit" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20),
          |pairs AS (
          |  SELECT a.entity AS e1, b.entity AS e2, count(*) AS n_shared
@@ -1416,7 +1385,7 @@ object KgQueries {
     // fixed-point discipline, SAMPLE pinned to min
     "q_kg_agg_num" ->
       s"""${Queries.base},
-         |$rankedCte
+         |${Queries.rankedSql}
          |SELECT entity AS e,
          |       CAST(sum(length(term)) AS BIGINT) AS sum_len,
          |       CAST(floor(avg(length(term)) * 10000) AS BIGINT) AS avg_len_e4,
@@ -1427,7 +1396,7 @@ object KgQueries {
     // subquery twin: the nested grouped SELECT joined to the outer scan
     "q_kg_subquery" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20)
          |SELECT a.entity AS e, a.term AS t, sub.n_entities
          |FROM top20 a
@@ -1441,7 +1410,7 @@ object KgQueries {
     // plain strata in SQL — no recursion needed
     "q_kg_owl_chain" ->
       s"""${Queries.base},
-         |$rankedCte,
+         |${Queries.rankedSql},
          |cooc_st AS (SELECT entity AS subj, 'coOccursWith' AS pred, term AS obj
          |            FROM ranked WHERE rnk <= 20),
          |top_st AS (SELECT term AS subj, 'isTopTermOf' AS pred, entity AS obj

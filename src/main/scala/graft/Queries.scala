@@ -231,6 +231,27 @@ object Queries {
        |  FROM stats s JOIN logp p ON s.entity = p.entity AND s.term = p.term
        |)""".stripMargin
 
+  /** The production descriptor total order (scaled logp, term) over
+    * [[base]]'s `scored`, as a CTE `ranked(entity, term, rnk)`: rnk <= K is
+    * the SQL twin of `Significance.topK(_, cfg.copy(topK = K))`. */
+  private[graft] val rankedSql: String =
+    """ranked AS (
+      |  SELECT entity, term,
+      |         row_number() OVER (PARTITION BY entity
+      |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
+      |  FROM scored)""".stripMargin
+
+  /** The L3 co-occurrence triples: each window term of a top-20 descriptor
+    * of its entity, as `(entity@source, coOccursWith, term)`. */
+  private val coocTriplesSql: String =
+    s"""$base,
+       |$rankedSql,
+       |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20)
+       |SELECT DISTINCT w.entity || '@' || regexp_replace(w.docid, '@[^@]*$$', '') AS subj,
+       |       'coOccursWith' AS pred, w.term AS obj
+       |FROM win w JOIN top20 s ON w.entity = s.entity AND w.term = s.term
+       |ORDER BY subj, obj""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q_s1_scan_docs" ->
       s"""$base
@@ -300,55 +321,20 @@ object Queries {
          |GROUP BY entity ORDER BY entity""".stripMargin,
 
     "q_c3_topk" ->
-      s"""$base
-         |SELECT entity, term, rnk FROM (
-         |  SELECT entity, term,
-         |         row_number() OVER (PARTITION BY entity
-         |           ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |  FROM scored)
+      s"""$base,
+         |$rankedSql
+         |SELECT entity, term, rnk FROM ranked
          |WHERE rnk <= 20 ORDER BY entity, rnk""".stripMargin,
 
-    "q_l3_cooc_triples" ->
-      s"""$base,
-         |top20 AS (
-         |  SELECT entity, term FROM (
-         |    SELECT entity, term,
-         |           row_number() OVER (PARTITION BY entity
-         |             ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |    FROM scored)
-         |  WHERE rnk <= 20
-         |)
-         |SELECT DISTINCT w.entity || '@' || regexp_replace(w.docid, '@[^@]*$$', '') AS subj,
-         |       'coOccursWith' AS pred, w.term AS obj
-         |FROM win w JOIN top20 s ON w.entity = s.entity AND w.term = s.term
-         |ORDER BY subj, obj""".stripMargin,
+    "q_l3_cooc_triples" -> coocTriplesSql,
 
-    // parse(serialize(store)) == store: identical SQL to q_l3_cooc_triples
-    "q_kg_ntriples_parse" ->
-      s"""$base,
-         |top20 AS (
-         |  SELECT entity, term FROM (
-         |    SELECT entity, term,
-         |           row_number() OVER (PARTITION BY entity
-         |             ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |    FROM scored)
-         |  WHERE rnk <= 20
-         |)
-         |SELECT DISTINCT w.entity || '@' || regexp_replace(w.docid, '@[^@]*$$', '') AS subj,
-         |       'coOccursWith' AS pred, w.term AS obj
-         |FROM win w JOIN top20 s ON w.entity = s.entity AND w.term = s.term
-         |ORDER BY subj, obj""".stripMargin,
+    // parse(serialize(store)) == store: the same SQL as q_l3_cooc_triples
+    "q_kg_ntriples_parse" -> coocTriplesSql,
 
     "q_l3_ntriples" ->
       s"""$base,
-         |top20 AS (
-         |  SELECT entity, term FROM (
-         |    SELECT entity, term,
-         |           row_number() OVER (PARTITION BY entity
-         |             ORDER BY CAST(round(logp * 10000) AS BIGINT), term) AS rnk
-         |    FROM scored)
-         |  WHERE rnk <= 20
-         |),
+         |$rankedSql,
+         |top20 AS (SELECT entity, term FROM ranked WHERE rnk <= 20),
          |l3 AS (
          |  SELECT DISTINCT w.entity || '@' || regexp_replace(w.docid, '@[^@]*$$', '') AS subj,
          |         w.term AS obj

@@ -31,25 +31,15 @@ import graft.TokDoc
   */
 object Curation {
 
-  // ------------------------------------------------------------ FNV-1a
-  // Same seed/prime as the winnowing fingerprints (TextStats.kgramHashes),
-  // so the existing DuckDB list_reduce replay idiom carries over verbatim;
-  // 64-bit overflow arithmetic replays as HUGEINT mod 2^64. Feature-space
-  // sizes are POWERS OF TWO on purpose: 2^64 ≡ 0 (mod b) makes the signed
-  // Scala `((h % b) + b) % b` equal the oracle's unsigned `hu % b`.
-  private val FnvOffset = 1469598103934665603L
-  private val FnvPrime = 1099511628211L
-
-  private[graft] def fnv64(s: String): Long = {
-    var h = FnvOffset
-    var i = 0
-    while (i < s.length) { h = (h ^ s.charAt(i)) * FnvPrime; i += 1 }
-    h
-  }
+  // ------------------------------------------------------------ FNV
+  // Tokens hash with Hashes.fnv64, whose oracle twin is Hashes.fnvSql.
+  // Feature-space sizes are POWERS OF TWO on purpose: 2^64 ≡ 0 (mod b)
+  // makes the signed Scala `((h % b) + b) % b` equal the oracle's unsigned
+  // `hu % b`.
 
   /** Token → feature bucket in [0, b). */
   private[graft] def bucketOf(tok: String, b: Int): Int =
-    (((fnv64(tok) % b) + b) % b).toInt
+    (((Hashes.fnv64(tok) % b) + b) % b).toInt
 
   // ============================================= URL canonicalization
 
@@ -377,7 +367,7 @@ object Curation {
     * pure deterministic column of the row, reproducible across cluster
     * sizes and replayable in SQL:
     *
-    *   u(d) = (fnv64("seed:docid") >>> 11 + 0.5) / 2^53      (exact double)
+    *   u(d) = (Hashes.fnv64("seed:docid") >>> 11 + 0.5) / 2^53  (exact double)
     *   g_e6(d) = roundAway(−ln(−ln(u)) · 1e6)                 (per-row µ-nats)
     *   key_q(d) = logw_q_e6(d) + g_e6(d)                      (exact BIGINT)
     *
@@ -394,7 +384,7 @@ object Curation {
       .select(col("docid").cast("long").as("docid"), col("logw_q_e6"))
       .as[(Long, Long)]
       .map { case (id, lw) =>
-        val v = fnv64(s"$seed:$id") >>> 11
+        val v = Hashes.fnv64(s"$seed:$id") >>> 11
         val u = (v + 0.5) / 9007199254740992.0
         (id, lw, lw + roundAway(-math.log(-math.log(u)) * 1e6))
       }.toDF("docid", "logw_q_e6", "key_q")

@@ -134,19 +134,6 @@ object Dedup {
 
   // ------------------------------------------------------------- MinHash
 
-  /** Seeded 64-bit hash of a string (xxhash-free, pure JVM, deterministic). */
-  @inline private[graft] def h64(s: String, seed: Long): Long = {
-    var h = seed ^ 0x9e3779b97f4a7c15L
-    var i = 0
-    while (i < s.length) {
-      h ^= s.charAt(i).toLong
-      h *= 0xff51afd7ed558ccdL
-      h ^= h >>> 33
-      i += 1
-    }
-    h
-  }
-
   /** MinHash signature of ONE token sequence, or null when it has no
     * shingles — the doc-local core shared by the batch operators and the
     * streaming admission pre-filter. ONE string pass per shingle; the i-th
@@ -163,7 +150,7 @@ object Dedup {
       val sig = new Array[Long](numHashes)
       java.util.Arrays.fill(sig, Long.MaxValue)
       sh.foreach { s =>
-        val base = h64(s, seed)
+        val base = Hashes.h64(s, seed)
         var i = 0
         while (i < numHashes) {
           var v = base ^ (i.toLong * 0x9e3779b97f4a7c15L)
@@ -182,9 +169,9 @@ object Dedup {
   private[graft] def bandKeysOf(sig: Array[Long], bands: Int): Array[(Int, Long)] = {
     val rows = sig.length / bands
     Array.tabulate(bands) { b =>
-      var h = 0xcbf29ce484222325L ^ b
+      var h = Hashes.FnvBasis ^ b
       var i = b * rows
-      while (i < (b + 1) * rows) { h = (h ^ sig(i)) * 0x100000001b3L; i += 1 }
+      while (i < (b + 1) * rows) { h = Hashes.fnvStep(h, sig(i)); i += 1 }
       (b, h)
     }
   }
@@ -338,7 +325,7 @@ object Dedup {
   private[graft] def simhash64(terms: Array[String], seed: Long = 42L): Long = {
     val acc = new Array[Int](64)
     terms.foreach { t =>
-      val h = h64(t, seed)
+      val h = Hashes.h64(t, seed)
       var i = 0
       while (i < 64) {
         if (((h >>> i) & 1L) == 1L) acc(i) += 1 else acc(i) -= 1
@@ -727,8 +714,8 @@ object Dedup {
     * "Deduplicating Training Data Makes Language Models Better", ACL 2022,
     * public literature; the suffix-array form is single-machine, this is the
     * k-gram relaxation that shards): a token position is duplicated when its
-    * k-token window (FNV-1a rolling hash, the same family as the winnowing
-    * fingerprints) occurs in >= 2 DISTINCT documents; runs of duplicated
+    * k-token window (its FNV hash, `TextStats.kgramHashes`, as in the
+    * winnowing fingerprints) occurs in >= 2 DISTINCT documents; runs of duplicated
     * positions merge into maximal spans. Within-doc repetition alone never
     * counts (that is TextStats.repetition's job).
     *

@@ -445,8 +445,8 @@ object TextStats {
     * with N = docs carrying ≥1 token and df = docs containing t. The idf
     * ln is quantized once per TERM (vocab-sized float exposure), so the
     * per-(doc,term) score is an exact BIGINT product and the ranking is
-    * engine-stable; ties break on the term's FNV-1a hash (the winnowing
-    * hash — replayable in the oracle), ascending.
+    * engine-stable; ties break on the term's [[Hashes.fnv64]] (the
+    * winnowing hash — replayable in the oracle), ascending.
     *
     * Scale shape: tf and the tie hash are computed doc-LOCALLY inside the
     * typed mapPartitions (no (doc,term) instance shuffle — the frame is
@@ -466,7 +466,7 @@ object TextStats {
       else {
         val m = scala.collection.mutable.HashMap.empty[String, Long]
         d.terms.foreach(t => m.update(t, m.getOrElse(t, 0L) + 1L))
-        m.iterator.map { case (t, c) => (d.docid, t, c, Curation.fnv64(t)) }
+        m.iterator.map { case (t, c) => (d.docid, t, c, Hashes.fnv64(t)) }
       }
     }).toDF("docid", "term", "tf", "h64")
     val dfreq = tf.groupBy("term", "h64").agg(count(lit(1)).as("df"))
@@ -731,10 +731,14 @@ object TextStats {
       .agg(count(lit(1)).as("n_refs"))
   }
 
-  /** Winnowing document fingerprints (MOSS-style): rolling polynomial hash
-    * over k-grams of the token stream, then the minimum hash in each sliding
-    * window of size w — a deterministic, position-robust signature set. */
+  /** Winnowing document fingerprints (MOSS-style): the FNV hash of each
+    * k-gram of the token stream ([[kgramHashes]], which hashes every k-gram
+    * afresh, O(n·k) per document, not a rolling hash), then the minimum hash
+    * in each sliding window of w k-grams — a deterministic, position-robust
+    * signature set. */
   def fingerprints(td: Dataset[TokDoc], k: Int = 5, w: Int = 4): DataFrame = {
+    require(k >= 1, s"k-gram length k must be >= 1; got $k")
+    require(w >= 1, s"winnowing window w must be >= 1; got $w")
     import td.sparkSession.implicits._
     // (docid, fp) rows are distinct BY CONSTRUCTION (winnow returns a per-doc
     // Set), so no corpus-wide distinct shuffle — the operator stays narrow
@@ -779,20 +783,16 @@ object TextStats {
       .filter(col("n_shared") >= minShared)
   }
 
+  /** The FNV of each k-gram `terms(i) + " " + ... + terms(i+k-1) + " "`
+    * ([[Hashes.fnv64]] of that string, folded without building it). */
   private[graft] def kgramHashes(terms: Array[String], k: Int): Array[Long] = {
     if (terms.length < k) return Array.empty
     val out = new Array[Long](terms.length - k + 1)
     var i = 0
     while (i <= terms.length - k) {
-      var h = 1469598103934665603L
+      var h = Hashes.FnvStart
       var j = i
-      while (j < i + k) {
-        var t = 0
-        val s = terms(j)
-        while (t < s.length) { h = (h ^ s.charAt(t)) * 1099511628211L; t += 1 }
-        h = (h ^ ' ') * 1099511628211L
-        j += 1
-      }
+      while (j < i + k) { h = Hashes.fnvStep(Hashes.fnvChars(h, terms(j)), ' '); j += 1 }
       out(i) = h
       i += 1
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Curation
+import graft.operators.{Curation, Hashes}
 
 class CurationSpec extends SparkTestBase {
   import spark.implicits._
@@ -223,7 +223,7 @@ class CurationSpec extends SparkTestBase {
     val weights = (0L until 200L).map(id => (id.toString, 10L + id, (id % 37) * 1000L - 18000L))
       .toDF("docid", "n_toks", "logw_q_e6")
     def expectedKey(id: Long, lw: Long): Long = {
-      val u = ((Curation.fnv64(s"dsir:$id") >>> 11) + 0.5) / 9007199254740992.0
+      val u = ((Hashes.fnv64(s"dsir:$id") >>> 11) + 0.5) / 9007199254740992.0
       lw + BigDecimal(-math.log(-math.log(u)) * 1e6)
         .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact
     }

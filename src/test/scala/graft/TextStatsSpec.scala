@@ -375,6 +375,22 @@ class TextStatsSpec extends SparkTestBase {
     assert(TextStats.kgramHashes(Array("a", "b"), 5).isEmpty)
   }
 
+  test("fingerprints and sharedSpanPairs reject k < 1 and w < 1") {
+    import spark.implicits._
+    val docs = Seq(TokDoc("d1", Array("a", "b", "c")), TokDoc("d2", Array("a", "b", "c"))).toDS()
+    // k = 0 used to give every doc one shared fingerprint, w = 0 an
+    // out-of-bounds read inside the task
+    Seq[(String, () => Any)](
+      "k" -> (() => TextStats.fingerprints(docs, k = 0)),
+      "w" -> (() => TextStats.fingerprints(docs, w = 0)),
+      "k" -> (() => TextStats.sharedSpanPairs(docs, k = -1, minShared = 1)),
+      "w" -> (() => TextStats.sharedSpanPairs(docs, w = 0))
+    ).foreach { case (arg, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$arg must be >= 1"), e.getMessage)
+    }
+  }
+
   test("sharedSpanPairs: shared-run pair found with brute-force count; hot fingerprints excluded") {
     import spark.implicits._
     val shared = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Cooc, Linking, Tokenize}
@@ -127,31 +129,9 @@ class TokenizeSpec extends SparkTestBase {
 
   test("token contract: each engine form's regex is written once in src/main") {
     // the oracle SQL form lives in Tokenize.termsSql, the Spark column form
-    // in TextStats.wordTokens; every other tokenization calls one of them.
-    // Code lines only: block comments (scaladoc) and // lines are dropped.
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val codeLines = files.flatMap { f =>
-      val src = "(?s)/\\*.*?\\*/".r.replaceAllIn(java.nio.file.Files.readString(f),
-        m => "\n" * m.matched.count(_ == '\n'))
-      src.split("\n", -1).toSeq.zipWithIndex.collect {
-        case (line, i) if !line.trim.startsWith("//") => (f, i, line)
-      }
-    }
-    // `literal` must sit on one code line, inside `def fn` of `file`
-    def onlySite(literal: String, file: String, fn: String): Unit = {
-      val hits = codeLines.filter(_._3.contains(literal))
-      val found = hits.map { case (f, i, _) =>
-        val enclosing = codeLines.filter(c => c._1 == f && c._2 <= i).map(_._3)
-          .flatMap("def (\\w+)".r.findFirstMatchIn(_)).lastOption.map(_.group(1))
-        f.getFileName.toString -> enclosing.getOrElse("?")
-      }
-      assert(found == Seq(file -> fn),
-        s"$literal written at ${hits.map(h => s"${h._1.getFileName}:${h._2 + 1}").mkString(", ")}")
-    }
-    onlySite("'[^a-z0-9_]+'", "Tokenize.scala", "termsSql")
-    onlySite("\"[^a-z0-9_]+\"", "TextStats.scala", "wordTokens")
+    // in TextStats.wordTokens; every other tokenization calls one of them
+    MainSources.onlySite(Regex.quote("'[^a-z0-9_]+'"), "Tokenize.scala", "termsSql")
+    MainSources.onlySite(Regex.quote("\"[^a-z0-9_]+\""), "TextStats.scala", "wordTokens")
     assert(Tokenize.termsSql("text || ' zqy'") ==
       "list_filter(regexp_split_to_array(lower(text || ' zqy'), '[^a-z0-9_]+'), x -> x <> '')")
   }
